@@ -39,8 +39,9 @@ import os
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from kissmetrics_to_database_spark.session import cache_tables, get_spark  # noqa: E402
 

@@ -331,6 +331,11 @@ def jaccard_pairs(
     those pairs; otherwise all same-token pairs are scored (only safe
     at small scale). Scores are rounded to 6 decimals so cross-engine
     float summation order can't flip a comparison.
+
+    Input invariant: ``candidates`` is canonically oriented, every
+    pair with ``id_a < id_b`` (the LSH and simhash generators emit it
+    so). Nothing here re-orients or filters it, so an unoriented
+    candidate set yields reversed and duplicate pairs.
     """
     sizes = token_df.groupBy(id_col).agg(F.count("*").alias("n"))
     ta = token_df.select(F.col(id_col).alias("id_a"), "token")

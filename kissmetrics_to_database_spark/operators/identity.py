@@ -30,6 +30,7 @@ tie-break (FileImporter.php:107) is replaced by min-id.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -233,7 +234,12 @@ def _connected_components_local(und: DataFrame) -> DataFrame:
             T.StructField("component_id", node_type),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    # a pandas frame goes to the JVM as Arrow batches (session.py
+    # enables Arrow): no Python worker evaluates it, so each of the
+    # callers' reads of the result stays in the JVM
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["member", "component_id"]), schema
+    )
 
 
 def update_components(
@@ -250,10 +256,12 @@ def update_components(
     stream in (KissmetricsToDatabase.php:359-394); the batch-set
     restatement treats the existing ``(member, component_id)`` map as
     edges (each member linked to its label) unioned with the new
-    batch, then re-runs min-label propagation. Because the old map's
-    "chains" are already fully compressed (every member points
-    directly at its component min), convergence is O(log diameter of
-    the NEW batch) — the expensive global history never re-expands.
+    batch, then re-runs connected components over that union. The
+    old map's "chains" are already fully compressed (every member
+    points directly at its component min), so the distributed path
+    converges in O(log diameter of the NEW batch) rounds — but every
+    call still reads, solves and returns the WHOLE map: the cost grows
+    with the identity history, not with the batch.
 
     Declared property (SURVEY §5.3, verified in tests): incremental
     folding over any batch split equals the global rebuild.

@@ -10,9 +10,17 @@ restated as one declarative flow (SURVEY.md §3.1).
   → incremental identity closure from the new batch's alias pairs
   → advance watermark (only after the writes committed)
 
-Everything before the writes is ONE Catalyst plan — scan, repair,
-projection, fingerprint fuse into a single whole-stage-codegen pass
-over the input files.
+Spark actions per batch, each reading the one persisted parse of the
+input lines (scan, repair, key union — see ``sources.json_repair``):
+
+  1. one aggregate: committed/repaired/quarantined counts and the
+     batch's key union; it also fills the parse cache;
+  2. the lake append (the transform fuses into its projection);
+  3. the identity fold: the edge-size probes and collect of
+     ``operators.identity``, the staged map write, its member count,
+     and the final map write;
+  plus one count of the deduplicated rows when
+  ``dedup_on_fingerprint`` is set.
 """
 
 from __future__ import annotations
@@ -20,10 +28,13 @@ from __future__ import annotations
 import shutil
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kissmetrics_to_database_spark.functions import events_transform
 from kissmetrics_to_database_spark.operators import identity
@@ -53,10 +64,53 @@ class PipelineResult:
 def read_events_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
     """Read the evolving events lake with schema merge across batches
     (the read-side half of S8: older files lack newer dynamic keys,
-    which surface as NULL — same as the warehouse after ALTER ADD)."""
-    return spark.read.option("mergeSchema", "true").parquet(
-        str(Path(lake_dir) / "events")
-    )
+    which surface as NULL — same as the warehouse after ALTER ADD).
+
+    Dynamic columns are written as strings. Files written before that
+    hold a dynamic column as its JSON-inferred type (long, double,
+    boolean, struct), which Spark's schema merge rejects against a
+    string. When it does, :func:`_read_mixed_type_lake` reads the
+    files and casts the mixed-type columns to string instead."""
+    events = Path(lake_dir) / "events"
+    try:
+        return spark.read.option("mergeSchema", "true").parquet(str(events))
+    except Exception as e:
+        if "CANNOT_MERGE_SCHEMAS" not in str(e):
+            raise
+    return _read_mixed_type_lake(spark, sorted(events.glob("*.parquet")))
+
+
+def _as_string(col: str, data_type: T.DataType) -> Column:
+    if isinstance(data_type, (T.StructType, T.ArrayType, T.MapType)):
+        return F.to_json(col).alias(col)
+    return F.col(col).cast("string").alias(col)
+
+
+def _read_mixed_type_lake(spark: SparkSession, files: list[Path]) -> DataFrame:
+    """The lake files grouped by schema (parquet footers, read without
+    Spark), one scan per group. A column whose type differs between
+    groups becomes a string in every group (nested values as JSON
+    text), and the groups are unioned by name."""
+    groups: dict[str, list[str]] = {}
+    for f in files:
+        key = pq.read_schema(f).remove_metadata().to_string()
+        groups.setdefault(key, []).append(str(f))
+    frames = [spark.read.parquet(*group) for group in groups.values()]
+    types: dict[str, set[T.DataType]] = {}
+    for df in frames:
+        for fld in df.schema.fields:
+            types.setdefault(fld.name, set()).add(fld.dataType)
+    mixed = {name for name, seen in types.items() if len(seen) > 1}
+    frames = [
+        df.select(
+            *[
+                _as_string(f.name, f.dataType) if f.name in mixed else F.col(f.name)
+                for f in df.schema.fields
+            ]
+        )
+        for df in frames
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 def run_incremental(
@@ -101,22 +155,14 @@ def _run_locked(
     if not files:
         return PipelineResult()
 
-    lines = spark.read.text(files)
-    good, quarantined = read_ndjson_with_repair(spark, lines)
-    # one scan+repair pass feeds counts, the write, and identity
-    # extraction — without the persist each action re-reads and
-    # re-parses every source file
-    good = good.persist()
+    batch = read_ndjson_with_repair(spark, spark.read.text(files))
     transformed = events_transform.transform_events(
-        good.drop("was_repaired"), fixed_date=fixed_date
+        batch.good.drop("was_repaired"), fixed_date=fixed_date
     )
+    n_rows = batch.n_committed
     if dedup_on_fingerprint:
-        transformed = transformed.dropDuplicates(["md5hash"])
-    transformed = transformed.persist()
-
-    n_rows = transformed.count()
-    n_repaired = good.where(F.col("was_repaired")).count()
-    n_quarantined = quarantined.count()
+        transformed = transformed.dropDuplicates(["md5hash"]).persist()
+        n_rows = transformed.count()
 
     try:
         transformed.write.mode("append").parquet(str(Path(lake_dir) / "events"))
@@ -145,13 +191,13 @@ def _run_locked(
         raise
     finally:
         transformed.unpersist()
-        good.unpersist()
+        batch.unpersist()
 
     return PipelineResult(
         files=files,
         n_rows=n_rows,
-        n_repaired=n_repaired,
-        n_quarantined=n_quarantined,
+        n_repaired=batch.n_repaired,
+        n_quarantined=batch.n_quarantined,
         n_identity_members=n_members,
         elapsed_sec=round(time.perf_counter() - t0, 3),
     )

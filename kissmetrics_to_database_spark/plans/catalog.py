@@ -23,6 +23,7 @@ similarity / text / multimodal / analytics windows).
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,7 +39,7 @@ ORACLES: dict[str, str] = {}
 # Fixed load date so `created_at` is reproducible (FIXTURES.md).
 LOAD_DATE = "2024-06-01"
 
-CSV_FIXTURE = "/root/repo/tests/fixtures/book.csv"
+CSV_FIXTURE = str(Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "book.csv")
 
 
 def _register(name: str, fn: QueryFn, oracle: str | None) -> None:

@@ -2347,8 +2347,6 @@ def q_corrupt_json_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently dropped. The oracle replays the Java lookaround regex
     character-by-character with anchored RE2 matches on each quote's
     prefix/suffix (hash-exact since round 4 — previously rows-only)."""
-    from pyspark.sql import types as T
-
     docs = load_table(spark, sf_dir, "documents")
     # synthesize NDJSON lines; every 5th line gets unescaped inner
     # quotes (a→") so clean/repaired/quarantined are all exercised
@@ -2366,12 +2364,12 @@ def q_corrupt_json_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    schema = T.StructType([T.StructField("w", T.StringType())])
-    good, quarantined = json_repair.read_ndjson_with_repair(spark, lines, schema)
-    return good.agg(
-        F.count("*").alias("n_parsed"),
-        F.sum(F.col("was_repaired").cast("long")).alias("n_repaired"),
-    ).crossJoin(quarantined.agg(F.count("*").alias("n_quarantined")))
+    batch = json_repair.read_ndjson_with_repair(spark, lines)
+    batch.unpersist()
+    return spark.createDataFrame(
+        [(batch.n_committed, batch.n_repaired, batch.n_quarantined)],
+        "n_parsed long, n_repaired long, n_quarantined long",
+    )
 
 
 # ---------------------------------------------------------------------------

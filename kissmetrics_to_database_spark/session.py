@@ -96,6 +96,9 @@ def get_spark(
 # of stopped sessions so cached plans don't pin dead JVMs for process
 # lifetime.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# Rows cached so far per application id: the shuffle width follows
+# the whole warm cache, not just the tables one call added.
+_CACHED_ROWS: dict[str, int] = {}
 
 
 def _session_key(spark: SparkSession) -> str:
@@ -103,6 +106,8 @@ def _session_key(spark: SparkSession) -> str:
     stale = [k for k in _TABLE_CACHE if k[0] != app_id]
     for k in stale:
         _TABLE_CACHE.pop(k, None)
+    for k in [k for k in _CACHED_ROWS if k != app_id]:
+        _CACHED_ROWS.pop(k)
     return app_id
 
 
@@ -148,26 +153,30 @@ def cache_tables(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     app_id = _session_key(spark)
-    total_rows = 0
+    added_rows = 0
     for t in tables:
         key = (app_id, sf_dir, t)
         if key in _TABLE_CACHE:
             continue
         df = load_table(spark, sf_dir, t)
         n = df.count()
-        total_rows += n
+        added_rows += n
         parts = min(cpus, max(1, -(-n // rows_per_partition)))
         if parts > 1:
             df = df.repartition(parts)
         df = df.persist()
         df.count()
         _TABLE_CACHE[key] = df
-    if total_rows:
+    if added_rows:
+        total_rows = _CACHED_ROWS.get(app_id, 0) + added_rows
+        _CACHED_ROWS[app_id] = total_rows
         # Scale-adaptive shuffle width (r14, guide §2.2/§5): under AQE
         # every exchange PLANS this many partitions and coalesces down
         # by observed bytes, so per-task hash/sort state shrinks as the
         # data grows instead of being fixed by the core-count constant.
-        # Derived from the observed row total — at sf0.1 (~1.5M rows)
+        # Derived from the row total of every table this session has
+        # cached, so a later call that adds one small table keeps the
+        # width the warm cache needs — at sf0.1 (~1.5M rows)
         # this stays at the core count (bench numbers comparable with
         # prior rounds); at sf1.0 (~8.7M rows) exchanges start ~5×
         # wider, which is what stopped edit_distance_pairs' shuffled-

@@ -6,23 +6,28 @@ skips rows that still fail (reference: helpers.php:10-22
 ``json_decode_sanitize``; failure paths KissmetricsToDatabase.php:
 197-199, ProcessFile.php:34-36).
 
-Spark restatement, strictly layered so the hot path stays built-in:
-1. ``spark.read.json`` PERMISSIVE mode with a corrupt-record column —
-   well-formed rows never touch the repair logic;
-2. corrupt rows only: a ``regexp_replace`` repair pass (Java regex
-   supports the lookarounds the repair needs — this is a column
-   expression, not a UDF), then re-parse;
-3. rows that still fail are counted and quarantined, never dropped
-   silently.
+Spark restatement: every non-blank line is parsed ONCE, to a
+``map<string,string>`` — the reference's all-varchar warehouse row
+(PAPER.md §0 step 3). Spark renders numbers, booleans and nested
+values as their JSON text, keeps the last value of a duplicate key
+(like PHP ``json_decode``) and yields NULL for a line that is not a
+JSON object. Only that NULL reaches the repair: the ``regexp_replace``
+pass (Java regex supports the lookarounds the repair needs — a column
+expression, not a UDF) sits in the second argument of a ``coalesce``,
+which generated code evaluates only when the first argument is NULL,
+so well-formed rows never touch the repair logic. Rows that still
+fail are counted and quarantined, never dropped silently.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-CORRUPT_COL = "_corrupt_record"
+LINE_TYPE = T.MapType(T.StringType(), T.StringType())
 
 # A quote is "inner" (needs escaping) when it is not already escaped
 # and not in a JSON-structural position: not in opening position
@@ -42,66 +47,107 @@ def repair_json_col(col: Column) -> Column:
     return F.regexp_replace(col, _INNER_QUOTE, '\\\\"')
 
 
-def read_ndjson_with_repair(
-    spark, path_or_df, schema: T.StructType | None = None, sample_n: int = 10_000
-) -> tuple[DataFrame, DataFrame]:
-    """Read NDJSON with a repair pass for corrupt rows.
+@dataclass
+class RepairedBatch:
+    """One parsed batch. ``good`` holds the committed rows (clean and
+    repaired, flagged by ``was_repaired``) with one string column per
+    key; ``quarantined`` holds the raw lines that fail even after the
+    repair. Both read the persisted parse: call :meth:`unpersist` once
+    they are consumed."""
 
-    Returns ``(good, quarantined)``: ``good`` has parsed rows (clean +
-    successfully repaired, flagged by ``was_repaired``); ``quarantined``
-    holds the raw lines that still fail. Pass a DataFrame of lines
-    (column ``value``) or a path.
+    good: DataFrame
+    quarantined: DataFrame
+    n_committed: int
+    n_repaired: int
+    n_quarantined: int
+    _parsed: DataFrame
 
-    Schema inference cost model (VERDICT r01 'What's wrong' #2 — no
-    unbounded Python pass anywhere):
-    - path input: Spark's native JSON inference scans the files once
-      entirely JVM-side (same contract as the reference's two-pass
-      scan, KTD:155-226);
-    - DataFrame input: inference reads a BOUNDED ``sample_n``-line
-      sample (one ``limit`` job). Corpora whose dynamic keys appear
-      only past the sample should pass ``schema`` explicitly — the
-      schema_evolution module's union-schema op computes it.
+    def unpersist(self) -> None:
+        self._parsed.unpersist()
+
+
+def _last_value_wins(m: Column) -> Column:
+    """``m`` with one entry per key, the last one. A JSON object with
+    a duplicate key parses to a map that holds both entries, and a
+    lookup returns the first; PHP ``json_decode`` keeps the last.
+    Only lines that carry a duplicate pay for the rebuild."""
+    keys = F.map_keys(m)
+    last = F.map_from_entries(
+        F.filter(
+            F.map_entries(m),
+            lambda e, i: ~F.array_contains(F.slice(keys, i + 2, F.size(m)), e["key"]),
+        )
+    )
+    return F.when(F.size(F.array_distinct(keys)) < F.size(m), last).otherwise(m)
+
+
+def _parse_lines(lines: DataFrame) -> DataFrame:
+    """``(m, was_repaired, value)`` per non-blank line of ``lines``
+    (column ``value``): ``m`` is the parsed object, NULL when the line
+    is quarantined; ``value`` keeps the raw line only then.
+
+    Each projection references the one below it more than once, so
+    Catalyst keeps them apart instead of inlining ``from_json`` into
+    every reference (CollapseProject never duplicates an expensive
+    expression) — the parse runs once per line."""
+    first = lines.where(F.length(F.trim(F.col("value"))) > 0).select(
+        "value", F.from_json("value", LINE_TYPE).alias("_first")
+    )
+    final = first.select(
+        "value",
+        "_first",
+        F.coalesce(
+            F.col("_first"), F.from_json(repair_json_col(F.col("value")), LINE_TYPE)
+        ).alias("_m"),
+    ).select("value", "_first", _last_value_wins(F.col("_m")).alias("m"))
+    return final.select(
+        "m",
+        (F.col("_first").isNull() & F.col("m").isNotNull()).alias("was_repaired"),
+        F.when(F.col("m").isNull(), F.col("value")).alias("value"),
+    )
+
+
+def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
+    """Read NDJSON lines (a path, or a DataFrame with column ``value``)
+    with a repair pass for corrupt rows.
+
+    Cost model: one scan. The parse (:func:`_parse_lines`) is
+    persisted, and ONE aggregate over it — the action that fills the
+    cache — returns the committed, repaired and quarantined counts
+    and the union of the batch's keys over every line, so a key first
+    seen on the last line is a column like any other. The columns
+    are that union sorted by name, each projected as ``m[key]``; all
+    are strings, like the reference's varchar columns.
     """
-    is_df = isinstance(path_or_df, DataFrame)
-    lines = path_or_df if is_df else spark.read.text(str(path_or_df))
-    lines = lines.filter(F.length(F.trim(F.col("value"))) > 0)
-    if schema is None:
-        if is_df:
-            sampled = [r[0] for r in lines.select("value").limit(sample_n).collect()]
-            inferred = spark.read.json(
-                spark.sparkContext.parallelize(sampled or ["{}"])
-            ).schema
-        else:
-            # full-fidelity native inference, zero Python round-trips
-            inferred = spark.read.json(str(path_or_df)).schema
-        schema = T.StructType(
-            [f for f in inferred.fields if f.name != CORRUPT_COL]
+    lines = (
+        path_or_df
+        if isinstance(path_or_df, DataFrame)
+        else spark.read.text(str(path_or_df))
+    )
+    parsed = _parse_lines(lines).persist()
+    first_of_line = F.coalesce(F.col("pos"), F.lit(0)) == 0
+    stats = (
+        parsed.select(
+            F.col("m").isNull().alias("bad"),
+            "was_repaired",
+            F.posexplode_outer(F.map_keys("m")).alias("pos", "key"),
         )
-
-    # Parse with an explicit corrupt-record field so "failed to
-    # parse" is distinguishable from "parsed to all NULLs" (a valid
-    # row like {} or {"a": null} must NOT be quarantined).
-    aug = T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())])
-    opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
-    parsed = lines.select(
-        F.col("value"),
-        F.from_json("value", aug, opts).alias("row"),
-        F.from_json(repair_json_col(F.col("value")), aug, opts).alias("repaired_row"),
-    )
-    ok = F.col("row").isNotNull() & F.col(f"row.{CORRUPT_COL}").isNull()
-    ok_rep = (
-        F.col("repaired_row").isNotNull()
-        & F.col(f"repaired_row.{CORRUPT_COL}").isNull()
-    )
-
-    good = (
-        parsed.where(ok | ok_rep)
-        .select(
-            F.when(ok, F.col("row")).otherwise(F.col("repaired_row")).alias("row"),
-            (~ok & ok_rep).alias("was_repaired"),
+        .agg(
+            F.count_if(first_of_line & ~F.col("bad")).alias("committed"),
+            F.count_if(first_of_line & F.col("was_repaired")).alias("repaired"),
+            F.count_if(first_of_line & F.col("bad")).alias("quarantined"),
+            F.collect_set("key").alias("keys"),
         )
-        .select("row.*", "was_repaired")
-        .drop(CORRUPT_COL)
+        .first()
     )
-    quarantined = parsed.where(~ok & ~ok_rep).select("value")
-    return good, quarantined
+    m = F.col("m")
+    return RepairedBatch(
+        good=parsed.where(m.isNotNull()).select(
+            *[m[k].alias(k) for k in sorted(stats["keys"])], "was_repaired"
+        ),
+        quarantined=parsed.where(m.isNull()).select("value"),
+        n_committed=stats["committed"],
+        n_repaired=stats["repaired"],
+        n_quarantined=stats["quarantined"],
+        _parsed=parsed,
+    )

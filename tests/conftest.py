@@ -1,12 +1,22 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from kissmetrics_to_database_spark.session import get_spark
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_configure(config):
+    # pytest empties --basetemp at the start of a run, so keep it
+    # inside this checkout whatever directory pytest is started from
+    if config.option.basetemp is None:
+        config.option.basetemp = str(ROOT / ".tmp")
 
 
 @pytest.fixture(scope="session")

@@ -9,8 +9,9 @@ synthetic formatted-plan text (no Spark session needed)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from explain_audit import has_unbounded_global_window  # noqa: E402
 

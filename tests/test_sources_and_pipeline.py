@@ -4,6 +4,7 @@ discovery, incremental pipeline idempotency, schema evolution."""
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import types as T
 
@@ -66,16 +67,14 @@ def test_read_ndjson_incremental(spark, tmp_path):
 def test_json_repair_all_null_row_is_not_quarantined(spark):
     # {} and {"a": null} parse fine — "all fields NULL" must not be
     # conflated with "unparseable"
-    from pyspark.sql import types as T2
-
     lines = ['{"a": null, "b": null}', "{}", "garbage"]
     df = spark.createDataFrame([(x,) for x in lines], ["value"])
-    schema = T2.StructType(
-        [T2.StructField("a", T2.StringType()), T2.StructField("b", T2.StringType())]
-    )
-    good, bad = read_ndjson_with_repair(spark, df, schema)
-    assert good.count() == 2
-    assert bad.count() == 1
+    batch = read_ndjson_with_repair(spark, df)
+    assert batch.good.columns == ["a", "b", "was_repaired"]
+    assert batch.good.count() == 2
+    assert batch.quarantined.count() == 1
+    assert (batch.n_committed, batch.n_repaired, batch.n_quarantined) == (2, 0, 1)
+    batch.unpersist()
 
 
 def test_json_repair_layers(spark):
@@ -86,14 +85,56 @@ def test_json_repair_layers(spark):
         "",                                          # blank: dropped
     ]
     df = spark.createDataFrame([(x,) for x in lines], ["value"])
-    schema = T.StructType(
-        [T.StructField("a", T.StringType()), T.StructField("b", T.StringType())]
-    )
-    good, bad = read_ndjson_with_repair(spark, df, schema)
-    rows = {r["b"]: (r["a"], r["was_repaired"]) for r in good.collect()}
+    batch = read_ndjson_with_repair(spark, df)
+    rows = {r["b"]: (r["a"], r["was_repaired"]) for r in batch.good.collect()}
     assert rows["1"] == ("clean", False)
     assert rows["2"] == ('has "inner" quotes', True)
-    assert bad.count() == 1
+    assert batch.quarantined.count() == 1
+    assert (batch.n_committed, batch.n_repaired, batch.n_quarantined) == (2, 1, 1)
+    batch.unpersist()
+
+
+def _lines(spark, lines):
+    return spark.createDataFrame([(x,) for x in lines], ["value"])
+
+
+def test_json_repair_one_object_per_line(spark):
+    lines = [
+        '{"a": "1", "a": "2"}',  # duplicate key: the last value wins
+        "[1,2]",  # valid JSON, but not an object: quarantined
+        "{}",  # an object with no keys: committed
+        '{"b": 1.5, "c": true, "d": {"x": [1, 2]}}',
+    ]
+    batch = read_ndjson_with_repair(spark, _lines(spark, lines))
+    assert (batch.n_committed, batch.n_repaired, batch.n_quarantined) == (3, 0, 1)
+    assert batch.good.columns == ["a", "b", "c", "d", "was_repaired"]
+    assert all(f.dataType == T.StringType() for f in batch.good.schema.fields[:-1])
+    got = {tuple(r)[:4] for r in batch.good.collect()}
+    assert got == {
+        ("2", None, None, None),
+        (None, None, None, None),
+        (None, "1.5", "true", '{"x":[1,2]}'),
+    }
+    assert [r["value"] for r in batch.quarantined.collect()] == ["[1,2]"]
+    batch.unpersist()
+
+
+def test_json_repair_parses_each_line_once(spark):
+    """The plan behind the committed rows: exactly one ``from_json``
+    over the raw line, and the repair regex only inside the
+    ``coalesce`` that runs when that parse is NULL."""
+    batch = read_ndjson_with_repair(spark, _lines(spark, ['{"a": "b"}']))
+    physical = batch.good._jdf.queryExecution().executedPlan().toString()
+    batch.unpersist()
+    assert "InMemoryRelation" in physical
+    raw_parses = re.findall(r"from_json\(\S+, value#\d+,", physical)
+    assert len(raw_parses) == 1, physical
+    assert physical.count("regexp_replace(") == 1, physical
+    assert re.search(
+        r"coalesce\(_first#\d+, from_json\(\S+, regexp_replace\(value#\d+", physical
+    ), physical
+    assert "Filter (length(trim(value" in physical
+    assert physical.count("from_json(") == 2, physical
 
 
 def test_incremental_pipeline_idempotent(spark, tmp_path):
@@ -139,6 +180,73 @@ def test_incremental_pipeline_idempotent(spark, tmp_path):
         for r in spark.read.parquet(str(lake / "identity_components")).collect()
     }
     assert comp == {"u1": "a1", "a1": "a1", "u3": "a1"}
+
+
+def test_pipeline_keeps_a_key_first_seen_on_the_last_line(spark, tmp_path):
+    # past the 10,000-line sample the schema used to be inferred from
+    src = tmp_path / "src"
+    src.mkdir()
+    rows = [{"_p": f"u{i}", "_n": "view", "_t": str(1704067200 + i)} for i in range(10_050)]
+    rows[-1]["late key"] = "x"
+    (src / "1.json").write_text("\n".join(json.dumps(r) for r in rows))
+    lake = tmp_path / "lake"
+    res = pipeline.run_incremental(
+        spark, str(src), str(tmp_path / "state"), str(lake), fixed_date="2024-06-01"
+    )
+    assert res.n_rows == 10_050
+    events = pipeline.read_events_lake(spark, str(lake))
+    assert "late_key" in events.columns
+    assert events.where("late_key = 'x'").count() == 1
+
+
+def test_pipeline_key_changing_json_type_across_batches(spark, tmp_path):
+    # lake columns are strings, so a number in one batch and a string
+    # in the next still merge on read
+    src = tmp_path / "src"
+    src.mkdir()
+    state, lake = str(tmp_path / "state"), str(tmp_path / "lake")
+    (src / "1.json").write_text(json.dumps({"_p": "u1", "_n": "a", "_t": 1704067200, "x": 1}))
+    pipeline.run_incremental(spark, str(src), state, lake, fixed_date="2024-06-01")
+    (src / "2.json").write_text(json.dumps({"_p": "u2", "_n": "b", "_t": 1704067300, "x": "abc"}))
+    pipeline.run_incremental(spark, str(src), state, lake, fixed_date="2024-06-01")
+    events = pipeline.read_events_lake(spark, lake)
+    assert events.count() == 2
+    assert sorted(r["x"] for r in events.select("x").collect()) == ["1", "abc"]
+
+
+def test_pipeline_appends_to_a_lake_with_typed_dynamic_columns(spark, tmp_path):
+    # a lake file from before dynamic columns were strings keeps the
+    # JSON-inferred types; it must still read next to a new batch
+    lake = tmp_path / "lake"
+    spark.createDataFrame(
+        [("u1", "a", 1, 1.5, (2,))], "_p string, _n string, x long, price double, d struct<k:long>"
+    ).write.parquet(str(lake / "events"))
+    src = tmp_path / "src"
+    src.mkdir()
+    row = {"_p": "u2", "_n": "b", "_t": 1704067300, "x": "abc", "price": 2, "d": {"k": 3}}
+    (src / "1.json").write_text(json.dumps(row))
+    pipeline.run_incremental(
+        spark, str(src), str(tmp_path / "state"), str(lake), fixed_date="2024-06-01"
+    )
+    events = pipeline.read_events_lake(spark, str(lake))
+    assert events.count() == 2
+    got = sorted(tuple(r) for r in events.select("_p", "x", "price", "d").collect())
+    assert got == [("u1", "1", "1.5", '{"k":2}'), ("u2", "abc", "2", '{"k":3}')]
+
+
+def test_pipeline_dedup_reports_rows_after_dedup(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    row = json.dumps({"_p": "u1", "_n": "view", "_t": "1704067200"})
+    other = json.dumps({"_p": "u2", "_n": "view", "_t": "1704067200"})
+    (src / "1.json").write_text("\n".join([row, row, other]))
+    lake = str(tmp_path / "lake")
+    res = pipeline.run_incremental(
+        spark, str(src), str(tmp_path / "state"), lake,
+        fixed_date="2024-06-01", dedup_on_fingerprint=True,
+    )
+    assert res.n_rows == 2
+    assert pipeline.read_events_lake(spark, lake).count() == 2
 
 
 def test_union_evolving_and_align(spark):

@@ -19,8 +19,10 @@ import argparse
 import contextlib
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from kissmetrics_to_database_spark.session import get_spark  # noqa: E402
 
@@ -1354,7 +1356,7 @@ def main() -> int:
     for name in ["tpch_q5_local_supplier", "tpch_q1_pricing_summary"]:
         lines.append(f"### {name}\n\n```\n{plans[name]}\n```\n")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     if args.verbose:
         for name, plan in plans.items():

@@ -15,11 +15,12 @@ import argparse
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kissmetrics_to_database_spark.session import TABLES, get_spark  # noqa: E402
 

@@ -20,8 +20,9 @@ import os
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kissmetrics_to_database_spark.session import (  # noqa: E402
     cache_tables,
