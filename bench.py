@@ -20,7 +20,9 @@ state, which is what moved 4.9→5.0→5.6 s across rounds with an
 unchanged plan.  `queries` keeps the historical one-shot numbers
 (comparable to BENCH_r01-r03); `queries_steady` is the median of 3
 subsequent runs — the number that tracks throughput at scale, where
-compilation amortizes to zero.
+compilation amortizes to zero. A query that fails has no
+`queries_steady` entry; its time-to-failure stays in `queries` and its
+error in `errors`.
 
 Stdout contract hardening (r14, VERDICT r13 #5): the REAL stdout is
 reserved at startup for the single JSON result line (fd dup'd before
@@ -39,6 +41,7 @@ import os
 import statistics
 import sys
 import time
+from collections.abc import Callable
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -76,7 +79,6 @@ HEADLINE = [
     "top_spenders_per_type",
     "asof_last_signup",
     "cube_agg",
-    "multimodal_byte_features",
     "nearest_centroid_confusion",
     "pack_training_sequences",
     # round-2 corpus-quality + clustering suite
@@ -120,14 +122,11 @@ HEADLINE = [
     "salted_join_skewed",
     "cdc_dedup_rewrite",
     "bpe_train_merges",
-    "video_frame_sample",
     "winnow_containment",
     "pq_encode",
     "html_extract",
     "identity_communities",
     "ewma_rate_anomalies",
-    "image_dhash_dedup",
-    "image_dhash_near_dups",
     "pq_topk_adc",
     "lsh_recall_eval",
     "burst_exposure_overlap",
@@ -139,26 +138,17 @@ HEADLINE = [
     "bpe_encode_corpus",
     "exact_substring_spans",
     "exact_substring_rewrite",
-    "audio_spectral_features",
     "classifier_train_confusion",
     "url_canonicalize",
     "domain_quota_sample",
-    "audio_stft_segments",
     "exact_substring_ingest_spans",
     "unigram_tokenizer_stats",
     "corpus_snapshot_diff",
-    "audio_silence_segments",
-    "image_sharpness_gate",
     "decontamination_spans",
-    "audio_mel_bands",
-    "image_dup_clusters",
     # round-7 additions
     "unigram_encode_corpus",
-    "audio_mfcc",
     "html_main_content",
-    "image_phash_near_dups",
     "fim_transform",
-    "video_scene_cuts",
     "random_projection_recall",
     "length_bucket_padding",
     "embedding_cosine_near_dups",
@@ -425,56 +415,50 @@ def bench_layout(spark, sf_dir: str) -> dict:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def bench_media() -> dict:
-    """Media-decode tier (VERDICT r5 item 2): single-core MB/s and
-    frames/s for the from-spec JPEG and MJPEG-AVI decode kernels on
-    deterministic payloads. Pure-Python (no Spark) — the kernels run
-    inside mapInPandas workers, so per-core throughput IS the scale
-    number; cluster throughput = this × cores."""
-    import numpy as np
+def time_queries(
+    names: list[str], run: Callable[[str], None]
+) -> tuple[dict[str, float], dict[str, float], dict[str, str]]:
+    """Time ``run(name)`` for each query: the first run, then the
+    median of 3 reruns. Returns ``(timings, steady, errors)``.
 
-    from kissmetrics_to_database_spark.functions import avi, jpeg
-
-    rng = np.random.default_rng(42)
-    gray = np.clip(
-        np.add.outer(np.linspace(0, 255, 128), np.linspace(0, 255, 128)) / 2
-        + rng.normal(0, 8, (128, 128)),
-        0, 255,
-    ).astype(np.uint8)
-    rgb = np.clip(rng.normal(128, 40, (128, 128, 3)), 0, 255).astype(np.uint8)
-    mjpeg_frames = [
-        jpeg.encode_jpeg(
-            np.roll(gray, 3 * i, axis=1).reshape(128, 128, 1), q=4
+    One failing query must not destroy the whole run's output (r14;
+    the contract is ONE stdout JSON line — a mid-run crash used to
+    leave nothing to parse, the exact failure mode the r12 PERF
+    comparison died of). A failed query records its time-to-failure
+    in ``timings`` (entries are never removed) and names its error in
+    ``errors``; it gets no ``steady`` entry, because a time-to-failure
+    is not a steady-state timing."""
+    timings: dict[str, float] = {}
+    steady: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        print(f"bench: {name}", file=sys.stderr, flush=True)
+        t0 = time.perf_counter()
+        try:
+            run(name)
+        except Exception as e:  # noqa: BLE001 — record, keep measuring
+            timings[name] = round(time.perf_counter() - t0, 3)
+            errors[name] = f"{type(e).__name__}: {str(e)[:300]}"
+            print(f"bench: {name} FAILED: {errors[name]}",
+                  file=sys.stderr, flush=True)
+            continue
+        timings[name] = round(time.perf_counter() - t0, 3)
+        reruns = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            run(name)
+            reruns.append(time.perf_counter() - t0)
+        steady[name] = round(statistics.median(reruns), 3)
+        # stream each query's numbers as JSONL to stderr so a killed
+        # run is salvageable (the final stdout JSON is unchanged)
+        print(
+            json.dumps(
+                {"q": name, "first": timings[name], "steady": steady[name]}
+            ),
+            file=sys.stderr,
+            flush=True,
         )
-        for i in range(24)
-    ]
-    cases = {
-        "jpeg_gray_128": (jpeg.decode_jpeg, jpeg.encode_jpeg(gray, q=4), 1),
-        "jpeg_rgb_128": (jpeg.decode_jpeg, jpeg.encode_jpeg(rgb, q=4), 1),
-        "jpeg_prog_rgb_128": (
-            jpeg.decode_jpeg,
-            jpeg.encode_jpeg_progressive(rgb, q=4),
-            1,
-        ),
-        "mjpeg_avi_24f": (
-            lambda b: [jpeg.decode_jpeg(f) for f in avi.parse_avi(b)["frames"]],
-            avi.build_mjpeg_avi(mjpeg_frames, 128, 128),
-            24,
-        ),
-    }
-    out = {}
-    for name, (fn, payload, frames) in cases.items():
-        fn(payload)  # warm (LUT cache, numpy)
-        reps, t0 = 0, time.perf_counter()
-        while time.perf_counter() - t0 < 1.0:
-            fn(payload)
-            reps += 1
-        dt = (time.perf_counter() - t0) / reps
-        out[name] = {
-            "mb_per_s": round(len(payload) / dt / 1e6, 3),
-            "frames_per_s": round(frames / dt, 2),
-        }
-    return out
+    return timings, steady, errors
 
 
 def emit_json_line(obj: dict, fd: int) -> str:
@@ -531,44 +515,11 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     names = [n for n in HEADLINE if not only or n in only.split(",")]
 
-    timings: dict[str, float] = {}
-    steady: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in names:
-        print(f"bench: {name}", file=sys.stderr, flush=True)
+    def run(name: str) -> None:
         fn = catalog.QUERIES[name]
-        # One failing query must not destroy the whole run's output
-        # (r14; the contract is ONE stdout JSON line — a mid-run crash
-        # used to leave nothing to parse, the exact failure mode the
-        # r12 PERF comparison died of). A failed query still records
-        # its time-to-failure so it appears in `queries` (entries are
-        # never removed), and the additive `errors` field names it.
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as e:  # noqa: BLE001 — record, keep measuring
-            timings[name] = round(time.perf_counter() - t0, 3)
-            steady[name] = timings[name]
-            errors[name] = f"{type(e).__name__}: {str(e)[:300]}"
-            print(f"bench: {name} FAILED: {errors[name]}",
-                  file=sys.stderr, flush=True)
-            continue
-        timings[name] = round(time.perf_counter() - t0, 3)
-        reruns = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            reruns.append(time.perf_counter() - t0)
-        steady[name] = round(statistics.median(reruns), 3)
-        # stream each query's numbers as JSONL to stderr so a killed
-        # run is salvageable (the final stdout JSON is unchanged)
-        print(
-            json.dumps(
-                {"q": name, "first": timings[name], "steady": steady[name]}
-            ),
-            file=sys.stderr,
-            flush=True,
-        )
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    timings, steady, errors = time_queries(names, run)
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -586,7 +537,6 @@ def main() -> None:
     if not only:  # the fixed-cost tiers only belong to full runs
         out["trainers"] = bench_trainers(spark, sf_dir)
         out["layout"] = bench_layout(spark, sf_dir)
-        out["media"] = bench_media()
     emit_json_line(out, result_fd)
     spark.stop()
 

@@ -1,8 +1,8 @@
 """Apache Avro object-container codec, from the PUBLIC specification.
 
 Iceberg manifests are Avro files; this container ships no Avro
-library, so — the jpeg.py / warc.py pattern — the format is
-implemented from its open spec (Avro 1.11.1, "Object Container Files"
+library, so — like the WARC reader — the format is implemented
+from its open spec (Avro 1.11.1, "Object Container Files"
 + "Binary Encoding"). Scope is exactly what a metadata reader needs:
 
 - container: magic ``Obj\\x01``, file-metadata map (``avro.schema``
@@ -18,8 +18,8 @@ implemented from its open spec (Avro 1.11.1, "Object Container Files"
 Files are self-describing (the writer schema travels in the header),
 so the decoder returns plain dicts/lists driven by that schema — the
 Iceberg reader never hardcodes manifest schemas. The encoder exists
-so tests and catalog fixtures can round-trip real bytes
-(``build_mjpeg_avi`` pattern); it writes codec ``null``.
+so tests and catalog fixtures can round-trip real bytes instead of
+checking in fixture binaries; it writes codec ``null``.
 
 Raises ValueError on malformed input — the callers' quarantine
 contract.

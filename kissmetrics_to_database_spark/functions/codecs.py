@@ -1,4 +1,4 @@
-"""Pure-Python/numpy media codecs for the multimodal operators.
+"""Pure-Python/numpy still-image and audio codecs.
 
 The container has no PIL/libvips/ffmpeg, but several real formats are
 decodable from public specs with nothing beyond the stdlib and numpy:
@@ -13,14 +13,14 @@ decodable from public specs with nothing beyond the stdlib and numpy:
 - PPM/PGM (netpbm P5/P6 binary, maxval 255);
 - WAV  (stdlib ``wave``, 16-bit PCM).
 
-These make the engine's decode path REAL (pixels/samples out, verified
-round-trip in tests), not a deterministic fake. When PIL is installed
+Every codec decodes real bytes (pixels/samples out, verified
+round-trip in tests). No catalog query calls this module. When PIL is installed
 it is used as a fallback for formats outside this set (WebP/...;
 progressive JPEG decodes natively since r6); see
 :func:`sniff_format` / :func:`decode_image`.
 
-Everything here runs inside Arrow-batched ``mapInPandas`` kernels —
-per-payload numpy work, no Spark-side state.
+Everything here is per-payload numpy work with no Spark-side state,
+so it can run inside an Arrow-batched ``mapInPandas`` kernel.
 """
 
 from __future__ import annotations

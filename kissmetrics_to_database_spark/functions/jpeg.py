@@ -8,8 +8,8 @@ intervals, byte stuffing — AND progressive JPEG (SOF2, T.81 Annex G:
 spectral selection + successive approximation with Huffman coding,
 r6) — so real-world web JPEGs decode, not just this module's own
 output.  Arithmetic coding, hierarchical (SOF3+) and 12-bit
-precision raise ``ValueError`` (quarantine semantics upstream,
-`operators/multimodal.real_decode_kernel`).
+precision raise ``ValueError`` (the quarantine contract: a caller
+catches it and marks the payload undecodable).
 
 The encoders exist primarily so the decoder is testable in a
 container with no image library: they emit spec-valid baseline JFIF
@@ -21,8 +21,8 @@ construction, no Annex-K table transcription to get wrong) with
 optional 4:2:0 subsampling and restart markers, exercising every
 decoder path.  Compression ratio is deliberately not the point.
 
-Like the PNG path, this runs inside Arrow-batched ``mapInPandas``
-kernels — per-payload numpy work, no Spark-side state.  The entropy
+Like the PNG path, this is per-payload numpy work with no
+Spark-side state, so it can run inside a ``mapInPandas`` kernel.  The entropy
 decode is table-driven and batch-vectorized (r5: 16-bit-window
 Huffman LUT cached on DHT bytes, whole-image dequantize/IDCT — ~5×
 over the bit-at-a-time loop; numbers in SCALING.md "Media decode

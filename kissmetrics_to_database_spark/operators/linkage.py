@@ -246,9 +246,10 @@ def agreement_patterns(docs: DataFrame, max_block: int = MAX_BLOCK):
 
 
 def _round_away(x: float, digits: int) -> float:
-    """Round half AWAY from zero on the binary value — DuckDB's
-    round(double) formula (the multimodal._round6 convention; Python's
-    built-in round() is half-to-even and diverges on boundaries)."""
+    """Round half AWAY from zero on the binary value: floor(|x|·10^d
+    + 0.5) / 10^d with x's sign, DuckDB's round(double) formula
+    (Python's built-in round() is half-to-even and diverges on
+    boundaries)."""
     import math
 
     s = 10.0**digits

@@ -17,7 +17,7 @@ Shared determinism rules (FIXTURES.md):
 
 Layout: CORE_* = reference-fidelity operators (SURVEY §2 row ids in
 each docstring); EXT_* = the training-data extension suite (dedup /
-similarity / text / multimodal / analytics windows).
+similarity / text / analytics windows).
 """
 
 from __future__ import annotations
@@ -994,7 +994,6 @@ _VERIFIED_R01 = [
     "embedding_topk_bruteforce", "embedding_topk_lsh", "embedding_topk_ivf",
     "lang_id", "quality_score", "token_counts", "doc_fingerprints",
     "curated_corpus", "hash_split_assignment", "stratified_sample",
-    "multimodal_decode", "multimodal_byte_features",
 ]
 # Round-2 driver-green queries (CORRECTNESS_r02.json): the window
 # rotation worked — all 22 TPC-H + the OLAP suite + 14 ext queries got
@@ -1030,8 +1029,7 @@ _VERIFIED_R02 = [
 # contract (`corrupt_json_repair`, `approx_aggregates`), zero reds.
 _VERIFIED_R03 = [
     "corpus_source_profile", "bm25_search", "stratified_sample",
-    "identity_pagerank", "multimodal_real_decode", "multimodal_audio_stats",
-    "corrupt_json_repair", "pack_training_sequences",
+    "identity_pagerank", "corrupt_json_repair", "pack_training_sequences",
     "chunk_documents_sliding", "gopher_quality", "unigram_logprob",
     "span_dedup", "source_quota_cap", "kmeans_clusters", "semantic_dedup",
     "perplexity_buckets", "embedding_topk_int8", "hashed_ngram_classifier",
@@ -1067,8 +1065,6 @@ _REVERIFY_BEHAVIOR_CHANGED = [
     "exact_substring_rewrite",  # r9: persisted removed-positions artifact
     "bpe_encode_corpus",       # r9: persisted encode artifact
     "tokenizer_fertility_by_source",  # r9: persisted encode artifact + oracle compose
-    "video_frame_sample",      # r9: unified ffmpeg-gated decode path
-    "video_scene_cuts",        # r9: unified ffmpeg-gated decode path
     # r8 carryovers (harmless if unchanged — filtered by `modified`):
     "lsh_recall_eval",
     "ngram_jaccard_pairs",

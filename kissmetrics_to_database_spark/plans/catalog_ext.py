@@ -2,8 +2,8 @@
 
 The beyond-reference surface (BASELINE.json north star): dedup
 (exact / MinHash-LSH / Jaccard / SimHash), embedding similarity
-search, text analysis, multimodal plumbing, plus the TPC-H-style
-joins/aggregations and event-time windows that are the bench surface.
+search, text analysis, plus the TPC-H-style joins/aggregations and
+event-time windows that are the bench surface.
 
 Registered into catalog.QUERIES / catalog.ORACLES via the same
 decorator; imported from catalog.py's tail.
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from kissmetrics_to_database_spark.operators import (
     dedup,
     interval,
-    multimodal,
     packing,
     similarity,
     text,
@@ -1041,31 +1040,19 @@ def _bitext_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BITEXT_HP: dict = {}
-
-
 def _bitext_hyperplanes(spark: SparkSession, sf_dir: str) -> list:
     """First ``b`` corpus vectors as hyperplanes, with ``b`` sized
     from the corpus count by the log-n rule (`_lsh_bits`) — the same
-    computation the oracle's params CTE does.
-
-    Memoized per sf_dir (r14 optimization round, guide §1.2 — the
-    `_ivf_route_centroids` train-once/serve-many precedent): ten
-    ANN-route queries each paid a count job + a collect job to fetch
-    the identical deterministic b-row index parameter. The memo
-    cannot change results."""
-    key = sf_dir
-    if key not in _BITEXT_HP:
-        emb = load_table(spark, sf_dir, "embeddings")
-        b = _lsh_bits(emb.count())
-        rows = (
-            emb.where(F.col("vec_id") < b)
-            .orderBy("vec_id")
-            .select("embedding")
-            .collect()
-        )
-        _BITEXT_HP[key] = [[float(x) for x in r[0]] for r in rows]
-    return _BITEXT_HP[key]
+    computation the oracle's params CTE does."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    b = _lsh_bits(emb.count())
+    rows = (
+        emb.where(F.col("vec_id") < b)
+        .orderBy("vec_id")
+        .select("embedding")
+        .collect()
+    )
+    return [[float(x) for x in r[0]] for r in rows]
 
 
 @query(
@@ -1542,752 +1529,8 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — multimodal plumbing
+# EXT — corrupt NDJSON repair (the ingest read path)
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "multimodal_decode",
-    """
-    SELECT doc_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           CAST(ascii(substr(text, 1, 1)) AS BIGINT) AS first_byte,
-           CAST(64 + octet_length(encode(text)) % 577 AS BIGINT) AS fake_width,
-           CAST(64 + (octet_length(encode(text)) * 31 + ascii(substr(text, 1, 1))) % 421 AS BIGINT) AS fake_height,
-           CASE octet_length(encode(text)) % 3
-                WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'webp' END AS fake_format
-    FROM documents ORDER BY doc_id
-    """,
-)
-def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload column → Arrow-batched
-    mapInPandas decode (deterministic fake kernel — real codecs are
-    not in this container; the Spark-side schema/batching is real)."""
-    docs = load_table(spark, sf_dir, "documents")
-    payload = multimodal.attach_binary_payload(docs)
-    return multimodal.decode_images(payload).orderBy("doc_id")
-
-
-@query(
-    "multimodal_byte_features",
-    """
-    WITH chars AS (
-      SELECT doc_id, ascii(c) // 16 AS bin
-      FROM (SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents)
-    ),
-    hist AS (SELECT doc_id, bin, count(*) AS n FROM chars GROUP BY 1, 2),
-    tot AS (SELECT doc_id, CAST(sum(n) AS DOUBLE) AS t FROM hist GROUP BY 1),
-    ent AS (
-      SELECT h.doc_id,
-             round(-sum((h.n / tot.t) * log2(h.n / tot.t)), 6) AS entropy
-      FROM hist h JOIN tot ON h.doc_id = tot.doc_id
-      GROUP BY h.doc_id
-    ),
-    dom AS (
-      SELECT doc_id, bin AS dominant_bin FROM (
-        SELECT doc_id, bin,
-               row_number() OVER (PARTITION BY doc_id ORDER BY n DESC, bin) AS r
-        FROM hist
-      ) WHERE r = 1
-    )
-    SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS n_bytes,
-           e.entropy, CAST(m.dominant_bin AS BIGINT) AS dominant_bin
-    FROM documents d
-    JOIN ent e ON e.doc_id = d.doc_id
-    JOIN dom m ON m.doc_id = d.doc_id
-    ORDER BY d.doc_id
-    """,
-)
-def q_multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real multimodal feature extraction: byte histogram + Shannon
-    entropy over the binary payload (Arrow-batched mapInPandas with
-    numpy inside). Oracle reconstructs the same stats from chars —
-    valid because the corpus is ASCII, so bytes == characters."""
-    docs = load_table(spark, sf_dir, "documents")
-    payload = multimodal.attach_binary_payload(docs)
-    feats = multimodal.extract_features(payload)
-    dominant = (
-        F.array_position(
-            F.col("byte_hist"), F.array_max(F.col("byte_hist"))
-        ).cast("long")
-        - 1
-    )
-    return (
-        feats.select(
-            "doc_id", "n_bytes", "entropy", dominant.alias("dominant_bin")
-        )
-        .orderBy("doc_id")
-    )
-
-
-@query(
-    "multimodal_real_decode",
-    """
-    SELECT doc_id,
-           CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp'
-                ELSE CASE WHEN doc_id % 2 = 0 THEN 'pgm' ELSE 'ppm' END
-           END AS format,
-           CAST(8 + doc_id % 5 AS BIGINT) AS width,
-           CAST(6 + doc_id % 4 AS BIGINT) AS height,
-           CAST(CASE WHEN doc_id % 3 = 1 THEN 3
-                     WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS BIGINT) AS channels,
-           CAST(doc_id % 256 AS DOUBLE) AS mean_value
-    FROM documents WHERE doc_id <= 200 ORDER BY doc_id
-    """,
-)
-def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode end-to-end: per doc a deterministic
-    constant-value image is PNG/BMP/netpbm-ENCODED (functions/codecs,
-    pure numpy+zlib), then run through the real decode stage
-    (multimodal.decode_media) which parses the actual bytes back to
-    pixels. The oracle knows the generation arithmetic, so format /
-    dimensions / channel count / pixel mean are exact-checkable —
-    a wrong byte anywhere in encoder or decoder breaks the hash.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 6 + d % 4
-                ch = 3 if d % 3 == 1 else (1 if d % 2 == 0 else 3)
-                img = np.full((h, w, ch), d % 256, dtype=np.uint8)
-                if d % 3 == 0:
-                    payloads.append(codecs.encode_png(img, filter_type=d % 3))
-                elif d % 3 == 1:
-                    payloads.append(codecs.encode_bmp(img))
-                else:
-                    payloads.append(codecs.encode_ppm(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    return (
-        multimodal.decode_media(payload)
-        .select("doc_id", "format", "width", "height", "channels", "mean_value")
-        .orderBy("doc_id")
-    )
-
-
-@query(
-    "multimodal_audio_stats",
-    """
-    SELECT doc_id,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 16000 ELSE 8000 END AS BIGINT) AS sample_rate,
-           CAST(1 + doc_id % 2 AS BIGINT) AS channels,
-           CAST(800 + (doc_id % 5) * 160 AS BIGINT) AS n_frames,
-           round(CAST(800 + (doc_id % 5) * 160 AS DOUBLE)
-                 / (CASE WHEN doc_id % 2 = 0 THEN 16000 ELSE 8000 END), 6) AS duration_sec,
-           CAST(abs(doc_id % 1000 - 500) AS DOUBLE) AS rms
-    FROM documents WHERE doc_id <= 200 ORDER BY doc_id
-    """,
-)
-def q_multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode end-to-end: constant-amplitude 16-bit PCM WAV
-    generated per doc (stdlib wave), decoded by the real audio stage
-    (multimodal.decode_audio) back to frames/rate/RMS. Constant
-    amplitude makes RMS exactly |value|, so the oracle is arithmetic
-    while Spark exercises the actual WAV codec."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 800 + (d % 5) * 160
-                rate = 16000 if d % 2 == 0 else 8000
-                ch = 1 + d % 2
-                val = d % 1000 - 500
-                samples = np.full((n, ch), val, dtype=np.int16)
-                payloads.append(codecs.encode_wav(samples, sample_rate=rate))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    return multimodal.decode_audio(payload).orderBy("doc_id")
-
-
-@query(
-    "image_sharpness_gate",
-    """
-    SELECT doc_id,
-           CAST(10 AS BIGINT) AS width, CAST(10 AS BIGINT) AS height,
-           CAST(CASE WHEN doc_id % 3 = 1
-                     THEN 1600.0 * (doc_id % 5 + 1) * (doc_id % 5 + 1)
-                     ELSE 0.0 END AS DOUBLE) AS var_laplacian,
-           (CASE WHEN doc_id % 3 = 1
-                 THEN 1600.0 * (doc_id % 5 + 1) * (doc_id % 5 + 1)
-                 ELSE 0.0 END) < 100.0 AS blurry
-    FROM documents WHERE doc_id <= 200 ORDER BY doc_id
-    """,
-)
-def q_image_sharpness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blur-detection quality gate end-to-end (r6): per doc a 10×10
-    grayscale image — constant (doc_id%3=0), checkerboard of
-    amplitude a=(doc_id%5+1)·10 (doc_id%3=1), or a linear vertical
-    ramp (doc_id%3=2) — is PNG-encoded, decoded by the real codec and
-    scored by multimodal.image_sharpness. The math makes the oracle
-    exact arithmetic: a constant or LINEAR ramp has identically zero
-    Laplacian (the defining property of the focus measure), and the
-    checkerboard's interior Laplacian is ±4a on an even parity split,
-    so var = 16a² exactly. Only checkerboards pass the gate."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        yy, xx = np.mgrid[0:10, 0:10]
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 3 == 0:
-                    img = np.full((10, 10), d % 256, np.uint8)
-                elif d % 3 == 1:
-                    a = (d % 5 + 1) * 10
-                    img = (((yy + xx) % 2 == 0) * a).astype(np.uint8)
-                else:
-                    img = (yy * 5).astype(np.uint8)
-                payloads.append(codecs.encode_png(img[:, :, None]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    return multimodal.image_sharpness(payload).orderBy("doc_id")
-
-
-@query(
-    "audio_spectral_features",
-    """
-    SELECT doc_id,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 16000 ELSE 8000 END AS BIGINT)
-             AS sample_rate,
-           CAST(512 AS BIGINT) AS n_fft,
-           CAST(5 + doc_id % 20 AS BIGINT) AS dominant_bin,
-           round((5 + doc_id % 20)
-                 * (CASE WHEN doc_id % 2 = 0 THEN 16000 ELSE 8000 END)
-                 / 512.0, 6) AS dominant_freq_hz,
-           CAST(1.0 AS DOUBLE) AS peak_share
-    FROM documents WHERE doc_id <= 200 ORDER BY doc_id
-    """,
-)
-def q_audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL spectral analysis end-to-end (r6): per doc a bin-aligned
-    sine tone (bin = 5 + doc_id % 20 of a 512-point window, amplitude
-    8000 + (doc_id % 4) * 1000) is WAV-encoded, decoded by the real
-    codec, and FFT-analyzed by multimodal.audio_spectral. Bin
-    alignment puts ALL tone energy in one bin, so dominant bin/freq
-    are exact arithmetic and peak_share rounds to exactly 1.0 (int16
-    quantization noise is ~90 dB down — 1e-9 of total power, invisible
-    at 6 decimals); a wrong byte anywhere in the WAV codec or a
-    leaky/mis-indexed FFT readout breaks the hash."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 16000 if d % 2 == 0 else 8000
-                k = 5 + d % 20
-                amp = 8000 + (d % 4) * 1000
-                t = np.arange(512)
-                samples = np.rint(
-                    amp * np.sin(2 * np.pi * k * t / 512)
-                ).astype(np.int16)
-                payloads.append(codecs.encode_wav(samples, sample_rate=rate))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    return (
-        multimodal.audio_spectral(payload, n_fft=512)
-        .select(
-            "doc_id", "sample_rate", "n_fft", "dominant_bin",
-            "dominant_freq_hz", "peak_share",
-        )
-        .orderBy("doc_id")
-    )
-
-
-@query(
-    "audio_mel_bands",
-    """
-    WITH g AS (
-      SELECT doc_id,
-             CAST(CASE WHEN doc_id % 2 = 0 THEN 16000 ELSE 8000 END AS DOUBLE)
-               AS rate,
-             CAST(5 + doc_id % 25 AS BIGINT) AS k
-      FROM documents WHERE doc_id <= 200
-    )
-    SELECT doc_id,
-           CAST(8 AS BIGINT) AS n_mels,
-           CAST(least(floor(
-             (2595.0 * log10(1.0 + (k * rate / 512.0) / 700.0))
-             / (2595.0 * log10(1.0 + (rate / 2.0) / 700.0)) * 8
-           ), 7) AS BIGINT) AS dominant_mel,
-           CAST(1.0 AS DOUBLE) AS peak_frac
-    FROM g ORDER BY doc_id
-    """,
-)
-def q_audio_mel_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mel-band audio features end-to-end (r6): per doc a bin-aligned
-    tone (bin 5 + doc_id % 25 of a 512-point window) whose entire
-    energy lands in ONE spectral bin, so the dominant mel band is the
-    closed-form HTK mel of the tone frequency (both engines evaluate
-    the same 2595·log10(1+f/700) arithmetic) and its energy fraction
-    is exactly 1.0. multimodal.audio_mel_bands — the perceptual
-    front-end speech-corpus quality gates run."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        t = np.arange(512)
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 16000 if d % 2 == 0 else 8000
-                k = 5 + d % 25
-                x = np.rint(
-                    9000 * np.sin(2 * np.pi * k * t / 512)
-                ).astype(np.int16)
-                payloads.append(codecs.encode_wav(x, sample_rate=rate))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    mel = multimodal.audio_mel_bands(payload, n_fft=512, n_mels=8)
-    return mel.select(
-        "doc_id",
-        "n_mels",
-        "dominant_mel",
-        F.element_at("mel_energy_frac", F.col("dominant_mel").cast("int") + 1)
-        .alias("peak_frac"),
-    ).orderBy("doc_id")
-
-
-@query(
-    "audio_mfcc",
-    """
-    WITH g AS (
-      SELECT doc_id,
-             CAST(CASE WHEN doc_id % 2 = 0 THEN 16000 ELSE 8000 END AS DOUBLE)
-               AS rate,
-             CAST(5 + doc_id % 25 AS BIGINT) AS k
-      FROM documents WHERE doc_id <= 200
-    ),
-    dom AS (
-      SELECT doc_id,
-             CAST(least(floor(
-               (2595.0 * log10(1.0 + (k * rate / 512.0) / 700.0))
-               / (2595.0 * log10(1.0 + (rate / 2.0) / 700.0)) * 8
-             ), 7) AS BIGINT) AS b
-      FROM g
-    )
-    SELECT doc_id,
-           CAST(4 AS BIGINT) AS n_mfcc,
-           CAST(j AS BIGINT) AS coef_idx,
-           round(list_sum(list_transform(range(0, 8),
-             i -> CASE WHEN i = b THEN 0.0
-                       ELSE -20.0 * cos(pi() * j * (i + 0.5) / 8.0) END
-           )), 6) AS coef
-    FROM dom, unnest(range(0, 4)) AS u(j)
-    ORDER BY doc_id, coef_idx
-    """,
-)
-def q_audio_mfcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MFCC end-to-end (r7, VERDICT r6 item 5): the same bin-aligned
-    tones as `audio_mel_bands` (all energy in one mel band) make the
-    log-mel vector exactly [0 at the dominant band, -20 floor
-    elsewhere], so every DCT-II coefficient is the closed form
-    -20·Σ_{i≠b} cos(πj(i+0.5)/8) — both engines evaluate the same
-    libm cos over the same ascending-i accumulation
-    (multimodal.audio_mfcc builds its cosine table with scalar
-    math.cos for exactly this replay). j=0 degenerates to -140.0
-    (7 floored bands × -20 × cos 0)."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        t = np.arange(512)
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 16000 if d % 2 == 0 else 8000
-                k = 5 + d % 25
-                x = np.rint(
-                    9000 * np.sin(2 * np.pi * k * t / 512)
-                ).astype(np.int16)
-                payloads.append(codecs.encode_wav(x, sample_rate=rate))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    feats = multimodal.audio_mfcc(payload, n_fft=512, n_mels=8, n_mfcc=4)
-    return feats.select(
-        "doc_id",
-        "n_mfcc",
-        F.posexplode("mfcc").alias("coef_idx", "coef"),
-    ).select(
-        "doc_id", "n_mfcc", F.col("coef_idx").cast("long").alias("coef_idx"),
-        "coef",
-    ).orderBy("doc_id", "coef_idx")
-
-
-@query(
-    "audio_stft_segments",
-    """
-    SELECT doc_id,
-           CAST(f AS BIGINT) AS frame_idx,
-           CAST(4 AS BIGINT) AS n_frames,
-           CAST(CASE WHEN f < 2 THEN 4 + doc_id % 10
-                     ELSE 16 + doc_id % 10 END AS BIGINT) AS dominant_bin,
-           round((CASE WHEN f < 2 THEN 4 + doc_id % 10
-                       ELSE 16 + doc_id % 10 END)
-                 * (CASE WHEN doc_id % 2 = 0 THEN 16000 ELSE 8000 END)
-                 / 256.0, 6) AS dominant_freq_hz,
-           CAST(1.0 AS DOUBLE) AS peak_share
-    FROM documents, unnest(range(0, 4)) AS u(f)
-    WHERE doc_id <= 200 ORDER BY doc_id, frame_idx
-    """,
-)
-def q_audio_stft_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-level STFT end-to-end (r6): each doc's clip is TWO
-    back-to-back tones (bin 4+d%10 for the first half, 16+d%10 for
-    the second, both bin-aligned to the 256-sample frame and switching
-    exactly on a frame boundary), so the 4 hop=n_fft frames must
-    report the first tone twice then the second twice, each with
-    peak_share exactly 1.0 — a per-frame readout a whole-clip FFT
-    cannot produce. multimodal.audio_stft_frames; arithmetic oracle."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        n_fft = 256
-        t = np.arange(4 * n_fft)
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 16000 if d % 2 == 0 else 8000
-                k1, k2 = 4 + d % 10, 16 + d % 10
-                k = np.where(t < 2 * n_fft, k1, k2)
-                x = np.rint(
-                    9000 * np.sin(2 * np.pi * k * t / n_fft)
-                ).astype(np.int16)
-                payloads.append(codecs.encode_wav(x, sample_rate=rate))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    return multimodal.audio_stft_frames(payload, n_fft=256).orderBy(
-        "doc_id", "frame_idx"
-    )
-
-
-@query(
-    "audio_silence_segments",
-    """
-    WITH seg AS (
-      SELECT doc_id, s,
-             CASE WHEN doc_id % 2 = 0 THEN
-               CASE s WHEN 0 THEN {'k': 'speech', 'a': 0, 'b': 1, 'n': 2}
-                      WHEN 1 THEN {'k': 'silence', 'a': 2, 'b': 3, 'n': 2}
-                      ELSE {'k': 'speech', 'a': 4, 'b': 5, 'n': 2} END
-             ELSE
-               CASE s WHEN 0 THEN {'k': 'silence', 'a': 0, 'b': 0, 'n': 1}
-                      WHEN 1 THEN {'k': 'speech', 'a': 1, 'b': 3, 'n': 3}
-                      ELSE {'k': 'silence', 'a': 4, 'b': 5, 'n': 2} END
-             END AS v
-      FROM documents, unnest(range(0, 3)) AS u(s)
-      WHERE doc_id <= 200
-    )
-    SELECT doc_id, CAST(s AS BIGINT) AS seg_idx, v.k AS kind,
-           CAST(v.a AS BIGINT) AS frame_start,
-           CAST(v.b AS BIGINT) AS frame_end,
-           CAST(v.n AS BIGINT) AS n_frames
-    FROM seg ORDER BY doc_id, seg_idx
-    """,
-)
-def q_audio_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Voice-activity segmentation end-to-end (r6): each doc's clip is
-    six 256-sample frames with tone/zero segments on exact frame
-    boundaries (even doc_ids: tone,tone,zero,zero,tone,tone; odd:
-    zero,tone,tone,tone,zero,zero), decoded, frame-RMS'd
-    (multimodal.audio_frame_energy) and merged to maximal
-    speech/silence segments (multimodal.silence_segments —
-    gaps-and-islands per kind). A tone frame's RMS ≈ 6364 ≫ the 100
-    threshold, zero frames are exactly 0, so segment boundaries are
-    arithmetic — the oracle enumerates them."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        n = 256
-        t = np.arange(6 * n)
-        frame = t // n
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    active = np.isin(frame, (0, 1, 4, 5))
-                else:
-                    active = np.isin(frame, (1, 2, 3))
-                tone = np.rint(9000 * np.sin(2 * np.pi * (8 + d % 8) * t / n))
-                x = np.where(active, tone, 0.0).astype(np.int16)
-                payloads.append(codecs.encode_wav(x, sample_rate=8000))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 200)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    frames = multimodal.audio_frame_energy(payload, n_fft=256)
-    return multimodal.silence_segments(frames, threshold=100.0).orderBy(
-        "doc_id", "seg_idx"
-    )
-
-
-@query(
-    "video_frame_sample",
-    """
-    SELECT d.doc_id,
-           CAST(f.i AS BIGINT) AS frame_idx,
-           CAST(16 + 8 * (d.doc_id % 3) AS BIGINT) AS width,
-           CAST(16 + 8 * (d.doc_id % 2) AS BIGINT) AS height,
-           CAST((d.doc_id * 7 + f.i * 13) % 256 AS DOUBLE) AS mean_value
-    FROM documents d
-    CROSS JOIN (SELECT * FROM range(0, 8)) f(i)
-    WHERE d.doc_id <= 120
-      AND f.i < 3 + d.doc_id % 4
-      AND f.i % 2 = 0
-    ORDER BY d.doc_id, frame_idx
-    """,
-)
-def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame sampling end-to-end (VERDICT r4 item 1): per
-    doc a deterministic video is BUILT — even doc_ids as MJPEG-AVI
-    (grayscale constant frames, flat quant step 1: the constant
-    DC-only block survives quantization exactly) and odd doc_ids as
-    Y4M C444 (constant gray RGB: the BT.601 round trip is exact at
-    Cb=Cr=128) — then every 2nd frame is sampled through the real
-    container walk + decoders (functions/avi.py + functions/jpeg.py
-    via multimodal.frame_sample). Constant frame value
-    (7*doc_id + 13*frame_idx) % 256 makes the decoded per-frame mean
-    pure arithmetic, so the DuckDB oracle is hash-exact: one wrong
-    byte anywhere in the RIFF walk, Huffman tables, IDCT, or YCbCr
-    math breaks the value hash.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import avi, jpeg
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + 8 * (d % 3), 16 + 8 * (d % 2)
-                n_frames = 3 + d % 4
-                vals = [(d * 7 + i * 13) % 256 for i in range(n_frames)]
-                if d % 2 == 0:
-                    frames = [
-                        jpeg.encode_jpeg(
-                            np.full((h, w, 1), v, dtype=np.uint8), q=1
-                        )
-                        for v in vals
-                    ]
-                    payloads.append(avi.build_mjpeg_avi(frames, w, h))
-                else:
-                    frames = [
-                        np.full((h, w, 3), v, dtype=np.uint8) for v in vals
-                    ]
-                    payloads.append(avi.build_y4m(frames, colorspace="444"))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 120)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    return (
-        multimodal.frame_sample(payload, every_n=2)
-        .select("doc_id", "frame_idx", "width", "height", "mean_value")
-        .orderBy("doc_id", "frame_idx")
-    )
-
-
-@query(
-    "video_scene_cuts",
-    """
-    WITH g AS (
-      SELECT doc_id,
-             6 + doc_id % 3 AS n,
-             2 + doc_id % 3 AS s,
-             CASE WHEN doc_id % 7 = 0 THEN 10
-                  ELSE 30 + (doc_id % 5) * 5 END AS delta
-      FROM documents WHERE doc_id <= 120
-    )
-    SELECT doc_id,
-           CAST(i AS BIGINT) AS frame_idx,
-           CAST(n AS BIGINT) AS n_frames,
-           CAST(CASE WHEN i = s THEN delta ELSE 0 END AS DOUBLE)
-             AS mean_diff,
-           (CASE WHEN i = s THEN delta ELSE 0 END) > 15.0 AS is_cut
-    FROM g, unnest(range(1, 9)) AS u(i)
-    WHERE i < n
-    ORDER BY doc_id, frame_idx
-    """,
-)
-def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scene-cut detection end-to-end (r7): per doc a two-scene Y4M
-    video is BUILT — constant gray v1 before frame s = 2+d%3, then
-    v1+delta after, where delta is sub-threshold (10) for d%7=0 docs
-    and 30..50 otherwise — and run through
-    multimodal.video_scene_cuts. The lossless C444 round trip keeps
-    constant frames exact, so every transition's mean abs diff is
-    pure arithmetic: 0 within scenes, exactly delta at the boundary,
-    and only supra-threshold deltas flag is_cut. The video-curation
-    keyframe primitive (sample at cuts, not blind strides)."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import avi
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n, s = 6 + d % 3, 2 + d % 3
-                v1 = (11 * d) % 200
-                delta = 10 if d % 7 == 0 else 30 + (d % 5) * 5
-                frames = [
-                    np.full(
-                        (16, 16, 3),
-                        v1 if i < s else v1 + delta,
-                        dtype=np.uint8,
-                    )
-                    for i in range(n)
-                ]
-                payloads.append(avi.build_y4m(frames, colorspace="444"))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 120)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    return multimodal.video_scene_cuts(payload, threshold=15.0).orderBy(
-        "doc_id", "frame_idx"
-    )
 
 
 @query(
@@ -7444,528 +6687,6 @@ def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.kmeans_cluster_quality for the scale shape."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.kmeans_cluster_quality(emb, k=8, iters=2)
-
-
-@query(
-    "image_dhash_dedup",
-    """
-    WITH dims AS (
-      SELECT doc_id,
-             16 + (doc_id % 5) * 4 AS h,
-             16 + (doc_id % 3) * 4 AS w
-      FROM documents WHERE doc_id <= 300
-    ),
-    bits AS (
-      SELECT d.doc_id, i.i, j.j,
-             CASE WHEN (3 * ((j.j + 1) * d.w // 9) + 7 * (i.i * d.h // 8)
-                        + d.doc_id) % 256
-                     > (3 * (j.j * d.w // 9) + 7 * (i.i * d.h // 8)
-                        + d.doc_id) % 256
-                  THEN '1' ELSE '0' END AS b
-      FROM dims d
-      CROSS JOIN (SELECT unnest(range(0, 8)) AS i) i
-      CROSS JOIN (SELECT unnest(range(0, 8)) AS j) j
-    ),
-    hashes AS (
-      SELECT doc_id, string_agg(b, '' ORDER BY i, j) AS dhash
-      FROM bits GROUP BY doc_id
-    )
-    SELECT doc_id, dhash,
-           CAST(count(*) OVER (PARTITION BY dhash) AS BIGINT) AS group_size
-    FROM hashes ORDER BY doc_id
-    """,
-)
-def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup dedup via perceptual difference-hash over REAL
-    decoded pixels (r5): per doc a deterministic gradient PGM
-    ((3x + 7y + doc_id) mod 256 at doc-dependent dimensions) is
-    ENCODED, decoded back by the from-spec codec, grayscale-resampled
-    and dHashed (multimodal.image_dhash); corpus-wide hash groups are
-    the duplicate clusters. The oracle replays the generation + the
-    nearest-neighbor index arithmetic + the comparison bits exactly —
-    one wrong pixel anywhere in the netpbm codec, the resampler, or
-    the hash breaks the value hash. The visual counterpart of SimHash
-    closes the dedup story for multimodal corpora."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 300)
-        .select("doc_id")
-    )
-
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = 16 + (d % 5) * 4, 16 + (d % 3) * 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((3 * xx + 7 * yy + d) % 256).astype(np.uint8)
-                payloads.append(codecs.encode_ppm(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    hashes = multimodal.image_dhash(payload)
-    return hashes.select(
-        "doc_id",
-        "dhash",
-        F.count("*")
-        .over(Window.partitionBy("dhash"))
-        .cast("long")
-        .alias("group_size"),
-    ).orderBy("doc_id")
-
-
-@query(
-    "image_dup_clusters",
-    """
-    WITH RECURSIVE dims AS (
-      SELECT doc_id,
-             16 + (doc_id % 5) * 4 AS h,
-             16 + (doc_id % 3) * 4 AS w
-      FROM documents WHERE doc_id <= 150
-    ),
-    bits AS (
-      SELECT d.doc_id, i.i, j.j,
-             CASE WHEN (3 * ((j.j + 1) * d.w // 9) + 7 * (i.i * d.h // 8)
-                        + d.doc_id) % 256
-                     > (3 * (j.j * d.w // 9) + 7 * (i.i * d.h // 8)
-                        + d.doc_id) % 256
-                  THEN '1' ELSE '0' END AS b
-      FROM dims d
-      CROSS JOIN (SELECT unnest(range(0, 8)) AS i) i
-      CROSS JOIN (SELECT unnest(range(0, 8)) AS j) j
-    ),
-    hashes AS (
-      SELECT doc_id, string_agg(b, '' ORDER BY i, j) AS dhash
-      FROM bits GROUP BY doc_id
-    ),
-    blocks AS (
-      SELECT doc_id, dhash, blk,
-             substr(dhash, blk * 16 + 1, 16) AS bkey
-      FROM hashes, (SELECT unnest(range(0, 4)) AS blk) t
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.dhash AS ha, b.dhash AS hb
-      FROM blocks a JOIN blocks b
-        ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ),
-    pairs AS (
-      SELECT id_a, id_b FROM cand
-      WHERE (SELECT count(*) FROM unnest(range(1, 65)) AS u(p)
-             WHERE substr(ha, CAST(p AS INTEGER), 1)
-                <> substr(hb, CAST(p AS INTEGER), 1)) <= 1
-    ),
-    und AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ),
-    reach(node, r) AS (
-      SELECT s AS node, s AS r FROM und
-      UNION
-      SELECT und.s AS node, reach.r FROM und JOIN reach ON und.d = reach.node
-    ),
-    comp AS (SELECT node, min(r) AS cid FROM reach GROUP BY node),
-    assigned AS (
-      SELECT h.doc_id, coalesce(c.cid, h.doc_id) AS cluster_id
-      FROM hashes h LEFT JOIN comp c ON c.node = h.doc_id
-    )
-    SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-           CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-             AS cluster_size
-    FROM assigned ORDER BY doc_id
-    """,
-)
-def q_image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image duplicate CLUSTERS (r6): the dedup ACTION on the dHash
-    pairs — connected components over the Hamming ≤ 1 pair graph
-    (identity.connected_components — the same adaptive CC the alias
-    graph uses), cluster id = min member, singletons kept as their
-    own cluster. The per-cluster canonical/"keep one" rule every
-    image corpus applies after near-dup detection; the oracle replays
-    generation + hashing + blocking + a recursive-CTE closure."""
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    from kissmetrics_to_database_spark.operators import identity
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = 16 + (d % 5) * 4, 16 + (d % 3) * 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((3 * xx + 7 * yy + d) % 256).astype(np.uint8)
-                payloads.append(codecs.encode_ppm(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 150)
-        .select("doc_id")
-    )
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    hashes = multimodal.image_dhash(payload)
-    blocks = hashes.select(
-        "doc_id",
-        "dhash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("blk"),
-    ).withColumn("bkey", F.expr("substring(dhash, blk * 16 + 1, 16)"))
-    a = blocks.select(
-        F.col("doc_id").alias("id_a"), F.col("dhash").alias("ha"),
-        "blk", "bkey",
-    )
-    b = blocks.select(
-        F.col("doc_id").alias("id_b"), F.col("dhash").alias("hb"),
-        "blk", "bkey",
-    )
-    hamming = F.size(
-        F.filter(
-            F.zip_with(
-                F.split("ha", ""), F.split("hb", ""), lambda x, y: x != y
-            ),
-            lambda v: v,
-        )
-    )
-    pairs = (
-        a.join(b, ["blk", "bkey"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-        .where(hamming <= 1)
-    )
-    # CC compares ids as STRINGS (min member) — zero-pad so the
-    # string min equals the numeric min the oracle computes
-    edges = pairs.select(
-        F.lpad(F.col("id_a").cast("string"), 8, "0").alias("src"),
-        F.lpad(F.col("id_b").cast("string"), 8, "0").alias("dst"),
-    )
-    comp = identity.connected_components(edges)
-    assigned = hashes.join(
-        comp,
-        F.lpad(F.col("doc_id").cast("string"), 8, "0") == F.col("member"),
-        "left",
-    ).select(
-        "doc_id",
-        F.coalesce(
-            F.col("component_id").cast("long"), F.col("doc_id")
-        ).alias("cluster_id"),
-    )
-    return assigned.select(
-        "doc_id",
-        "cluster_id",
-        F.count("*")
-        .over(Window.partitionBy("cluster_id"))
-        .cast("long")
-        .alias("cluster_size"),
-    ).orderBy("doc_id")
-
-
-@query(
-    "image_phash_near_dups",
-    """
-    WITH g AS (
-      SELECT doc_id, doc_id // 4 AS grp, doc_id % 4 AS var
-      FROM documents WHERE doc_id <= 120
-    ),
-    pix AS (
-      SELECT doc_id, r, c,
-             CAST((3 * c + 7 * r + 5 * grp
-                   + (r * 13 + c * 29 + grp) * 2654435761 % 97) % 180
-                  + CASE WHEN var = 1 THEN 40
-                         WHEN var = 3 AND r < 4 AND c < 4 THEN 60
-                         ELSE 0 END AS DOUBLE) AS p
-      FROM g,
-           unnest(range(0, 32)) AS t1(r),
-           unnest(range(0, 32)) AS t2(c)
-    ),
-    coef AS (
-      SELECT doc_id, u, vv,
-             sum(p * cos(pi() * u * (2 * r + 1) / 64.0)
-                   * cos(pi() * vv * (2 * c + 1) / 64.0)) AS cval
-      FROM pix,
-           unnest(range(0, 8)) AS tu(u),
-           unnest(range(0, 8)) AS tv(vv)
-      GROUP BY doc_id, u, vv
-    ),
-    ranked AS (
-      SELECT doc_id, cval,
-             row_number() OVER (PARTITION BY doc_id
-                                ORDER BY cval, u, vv) AS rn
-      FROM coef
-    ),
-    med AS (
-      SELECT doc_id, avg(cval) AS m
-      FROM ranked WHERE rn IN (32, 33) GROUP BY doc_id
-    ),
-    hashes AS (
-      SELECT c.doc_id,
-             string_agg(CASE WHEN c.cval > m.m THEN '1' ELSE '0' END,
-                        '' ORDER BY c.u, c.vv) AS phash
-      FROM coef c JOIN med m USING (doc_id)
-      GROUP BY c.doc_id
-    ),
-    blocks AS (
-      SELECT doc_id, phash, blk,
-             substr(phash, blk * 16 + 1, 16) AS bkey
-      FROM hashes, (SELECT unnest(range(0, 4)) AS blk) t
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.phash AS ha, b.phash AS hb
-      FROM blocks a JOIN blocks b
-        ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ),
-    scored AS (
-      SELECT id_a, id_b,
-             CAST((SELECT count(*) FROM unnest(range(1, 65)) AS u(p)
-                   WHERE substr(ha, CAST(p AS INTEGER), 1)
-                      <> substr(hb, CAST(p AS INTEGER), 1)) AS BIGINT)
-               AS hamming
-      FROM cand
-    )
-    SELECT id_a, id_b, hamming FROM scored
-    WHERE hamming <= 2 ORDER BY id_a, id_b
-    """,
-)
-def q_image_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dups over DCT perceptual hashes (r7, VERDICT r6
-    item 7): groups of four variants — base 32×32 sawtooth, +40
-    brightness (must collide: only the DC moves), the SAME pattern
-    authored at 64×64 (must collide after the nearest resample:
-    2r//2 = r exactly), and a corner-perturbed copy (small Hamming
-    distance) — hashed by multimodal.image_phash and paired via the
-    dHash pigeonhole block join at Hamming ≤ 2. The oracle replays
-    the closed-form resized pixels, the full 8×8 DCT-II term sums
-    (same libm cos), the two-middle median, the bit string, and the
-    block join — pHash catches the recompression/resize variants
-    dHash's gradient bits miss."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 120)
-        .select("doc_id")
-    )
-
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                grp, var = d // 4, d % 4
-                # integer texture keeps every DCT coefficient O(1)
-                # away from the median (measured margin 0.52 vs the
-                # ~1e-12 cross-engine summation-order noise; the
-                # untextured sawtooth had ties at 9e-13)
-                def tex(yy, xx):
-                    return (
-                        3 * xx + 7 * yy + 5 * grp
-                        + (yy * 13 + xx * 29 + grp) * 2654435761 % 97
-                    ) % 180
-
-                if var == 2:
-                    # authored at 2x: nearest resize back to 32 picks
-                    # pixels (2r, 2c) -> exactly the base pattern
-                    yy, xx = np.mgrid[0:64, 0:64]
-                    img = tex(yy // 2, xx // 2).astype(np.uint8)
-                else:
-                    yy, xx = np.mgrid[0:32, 0:32]
-                    img = tex(yy, xx).astype(np.int64)
-                    if var == 1:
-                        img = img + 40
-                    elif var == 3:
-                        img = img + np.where(
-                            (yy < 4) & (xx < 4), 60, 0
-                        )
-                    img = img.astype(np.uint8)
-                payloads.append(codecs.encode_ppm(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    hashes = multimodal.image_phash(payload)
-    blocks = hashes.select(
-        "doc_id",
-        "phash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("blk"),
-    ).withColumn(
-        "bkey", F.expr("substring(phash, blk * 16 + 1, 16)")
-    )
-    a = blocks.select(
-        F.col("doc_id").alias("id_a"), F.col("phash").alias("ha"),
-        "blk", "bkey",
-    )
-    b = blocks.select(
-        F.col("doc_id").alias("id_b"), F.col("phash").alias("hb"),
-        "blk", "bkey",
-    )
-    cand = (
-        a.join(b, ["blk", "bkey"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-    )
-    ham = F.aggregate(
-        F.zip_with(
-            F.split(F.col("ha"), ""),
-            F.split(F.col("hb"), ""),
-            lambda x, y: (x != y).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ).cast("long")
-    return (
-        cand.withColumn("hamming", ham)
-        .where(F.col("hamming") <= 2)
-        .select("id_a", "id_b", "hamming")
-        .orderBy("id_a", "id_b")
-    )
-
-
-@query(
-    "image_dhash_near_dups",
-    """
-    WITH dims AS (
-      SELECT doc_id,
-             16 + (doc_id % 5) * 4 AS h,
-             16 + (doc_id % 3) * 4 AS w
-      FROM documents WHERE doc_id <= 150
-    ),
-    bits AS (
-      SELECT d.doc_id, i.i, j.j,
-             CASE WHEN (3 * ((j.j + 1) * d.w // 9) + 7 * (i.i * d.h // 8)
-                        + d.doc_id) % 256
-                     > (3 * (j.j * d.w // 9) + 7 * (i.i * d.h // 8)
-                        + d.doc_id) % 256
-                  THEN '1' ELSE '0' END AS b
-      FROM dims d
-      CROSS JOIN (SELECT unnest(range(0, 8)) AS i) i
-      CROSS JOIN (SELECT unnest(range(0, 8)) AS j) j
-    ),
-    hashes AS (
-      SELECT doc_id, string_agg(b, '' ORDER BY i, j) AS dhash
-      FROM bits GROUP BY doc_id
-    ),
-    blocks AS (
-      SELECT doc_id, dhash, blk,
-             substr(dhash, blk * 16 + 1, 16) AS bkey
-      FROM hashes, (SELECT unnest(range(0, 4)) AS blk) t
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.dhash AS ha, b.dhash AS hb
-      FROM blocks a JOIN blocks b
-        ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ),
-    scored AS (
-      SELECT id_a, id_b,
-             CAST((SELECT count(*) FROM unnest(range(1, 65)) AS u(p)
-                   WHERE substr(ha, CAST(p AS INTEGER), 1)
-                      <> substr(hb, CAST(p AS INTEGER), 1)) AS BIGINT)
-               AS hamming
-      FROM cand
-    )
-    SELECT id_a, id_b, hamming FROM scored
-    WHERE hamming <= 1 ORDER BY id_a, id_b
-    """,
-)
-def q_image_dhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image NEAR-dup pairs at Hamming ≤ 1 over the perceptual
-    dHashes (r5): the SimHash pigeonhole argument on the 64-bit
-    signature — ≤3 differing bits cannot touch all 4 of its 16-bit
-    blocks, so candidates come from 4 equi-joins on block keys with
-    exact recall, and the Hamming verify runs only on candidates.
-    Same generated corpus as image_dhash_dedup; oracle replays the
-    block join + positional Hamming count exactly."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") <= 150)
-        .select("doc_id")
-    )
-
-    from collections.abc import Iterator
-
-    import pandas as pd  # noqa: F811
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from kissmetrics_to_database_spark.functions import codecs
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = 16 + (d % 5) * 4, 16 + (d % 3) * 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((3 * xx + 7 * yy + d) % 256).astype(np.uint8)
-                payloads.append(codecs.encode_ppm(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    payload = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    hashes = multimodal.image_dhash(payload)
-    blocks = hashes.select(
-        "doc_id",
-        "dhash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("blk"),
-    ).withColumn(
-        "bkey", F.expr("substring(dhash, blk * 16 + 1, 16)")
-    )
-    a = blocks.select(
-        F.col("doc_id").alias("id_a"), F.col("dhash").alias("ha"),
-        "blk", "bkey",
-    )
-    b = blocks.select(
-        F.col("doc_id").alias("id_b"), F.col("dhash").alias("hb"),
-        "blk", "bkey",
-    )
-    cand = (
-        a.join(b, ["blk", "bkey"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-    )
-    hamming = F.size(
-        F.filter(
-            F.zip_with(
-                F.split("ha", ""), F.split("hb", ""), lambda x, y: x != y
-            ),
-            lambda v: v,
-        )
-    ).cast("long")
-    return (
-        cand.select("id_a", "id_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= 1)
-        .orderBy("id_a", "id_b")
-    )
 
 
 # ---------------------------------------------------------------------------

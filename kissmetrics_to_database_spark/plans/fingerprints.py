@@ -78,8 +78,9 @@ def _transitive_closure(
     """Expand a query's direct module references to their full
     dependency cone: each referenced module's own source is scanned
     against the package module set, unioned until fixpoint (ADVICE
-    r4 — one-level scanning missed e.g. codecs → jpeg, letting a
-    jpeg.py edit leave the decode queries' fingerprints unchanged).
+    r4 — one-level scanning let an edit to a module reached only
+    through another leave the dependent queries' fingerprints
+    unchanged).
     ``module_deps`` caches the per-module scan across queries."""
     seen: set[str] = set()
     frontier = list(direct)

@@ -27,9 +27,8 @@ This module implements exactly that replay, read-only:
   tuple, each group gets literal columns cast per the table schema,
   groups union by name).
 - ``DeltaFixtureWriter`` — a minimal commit writer so tests and the
-  catalog query can round-trip real protocol bytes (the
-  ``build_mjpeg_avi`` pattern: generator + from-spec reader, no
-  fixture binaries). It is NOT a production writer: no conflict
+  catalog query can round-trip real protocol bytes (a generator
+  paired with the from-spec reader, so no fixture binaries). It is NOT a production writer: no conflict
   detection, single process only.
 
 Column mapping (r10, VERDICT r9 #4): tables with

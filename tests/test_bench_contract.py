@@ -59,3 +59,20 @@ def test_emit_rejects_non_roundtripping():
     finally:
         os.close(w)
         os.close(r)
+
+
+def test_failed_query_has_no_steady_timing():
+    calls = []
+
+    def run(name):
+        calls.append(name)
+        if name == "bad":
+            raise RuntimeError("boom")
+
+    timings, steady, errors = bench.time_queries(["ok", "bad"], run)
+    assert set(timings) == {"ok", "bad"}
+    assert set(steady) == {"ok"}
+    assert errors == {"bad": "RuntimeError: boom"}
+    # the good query is rerun 3 times for its median; the failed one
+    # is not retried
+    assert calls == ["ok"] * 4 + ["bad"]

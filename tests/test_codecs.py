@@ -1,9 +1,6 @@
 """Real-codec tests: PNG/BMP/PPM/WAV round-trips through the pure
-numpy+stdlib decoders, then the Spark decode/resize/audio stages
-end-to-end over binary payload columns.
-
-These prove the multimodal decode path is real (pixels/samples out),
-not a deterministic fake — VERDICT r01 'What's wrong' #3.
+numpy+stdlib decoders, and the decoders' quarantine contract
+(success or ValueError) on fuzzed payloads.
 """
 
 from __future__ import annotations
@@ -139,72 +136,6 @@ def test_png_decoder_matches_pil():
     assert (np.asarray(Image.open(io.BytesIO(blob))) == img).all()
 
 
-# ---------------------------------------------------------------------------
-# Spark stages over the real codecs
-# ---------------------------------------------------------------------------
-
-
-def _payload_df(spark):
-    img_png = random_image(12, 10, 3)
-    img_bmp = random_image(5, 8, 3)
-    wav = codecs.encode_wav(
-        (np.sin(np.linspace(0, 60, 1600)) * 20000).astype(np.int16), 16000
-    )
-    rows = [
-        (1, bytearray(codecs.encode_png(img_png))),
-        (2, bytearray(codecs.encode_bmp(img_bmp))),
-        (3, bytearray(codecs.encode_ppm(img_bmp))),
-        (4, bytearray(wav)),
-        (5, bytearray(b"not an image at all")),
-    ]
-    return (
-        spark.createDataFrame(rows, "doc_id long, payload binary"),
-        {"png": img_png, "bmp": img_bmp},
-    )
-
-
-def test_decode_media_real(spark):
-    from kissmetrics_to_database_spark.operators import multimodal
-
-    df, imgs = _payload_df(spark)
-    out = {r["doc_id"]: r.asDict() for r in multimodal.decode_media(df).collect()}
-    assert out[1]["format"] == "png"
-    assert (out[1]["width"], out[1]["height"], out[1]["channels"]) == (10, 12, 3)
-    assert out[1]["mean_value"] == round(float(imgs["png"].mean()), 6)
-    assert out[2]["format"] == "bmp"
-    assert (out[2]["width"], out[2]["height"]) == (8, 5)
-    assert out[3]["format"] == "ppm"
-    # wav is not a still image → quarantined, not crashed
-    assert out[4]["format"] == "unknown" and out[4]["width"] is None
-    assert out[5]["format"] == "unknown"
-
-
-def test_resize_images_real(spark):
-    from kissmetrics_to_database_spark.operators import multimodal
-
-    df, imgs = _payload_df(spark)
-    out = {
-        r["doc_id"]: r["payload"]
-        for r in multimodal.resize_images(df, 6, 4).collect()
-    }
-    resized = codecs.decode_png(bytes(out[1]))
-    assert resized.shape == (4, 6, 3)
-    assert (resized == codecs.resize_nearest(imgs["png"], 6, 4)).all()
-    assert out[5] is None  # undecodable → null passthrough
-
-
-def test_decode_audio_real(spark):
-    from kissmetrics_to_database_spark.operators import multimodal
-
-    df, _ = _payload_df(spark)
-    out = {r["doc_id"]: r.asDict() for r in multimodal.decode_audio(df).collect()}
-    assert out[4]["sample_rate"] == 16000
-    assert out[4]["n_frames"] == 1600
-    assert out[4]["duration_sec"] == 0.1
-    assert out[4]["rms"] > 10000
-    assert out[1]["sample_rate"] is None  # png is not audio
-
-
 def test_decoder_fuzz_quarantine_contract():
     """The quarantine contract, fuzzed: EVERY decode entry point
     either succeeds or raises ValueError on arbitrary byte garbage —
@@ -214,7 +145,7 @@ def test_decoder_fuzz_quarantine_contract():
     parser, plus mutated valid payloads."""
     import numpy as np
 
-    from kissmetrics_to_database_spark.functions import avi, codecs, jpeg
+    from kissmetrics_to_database_spark.functions import codecs, jpeg
 
     rng = np.random.default_rng(1234)
     img = rng.integers(0, 256, (12, 14, 3)).astype(np.uint8)
@@ -224,8 +155,6 @@ def test_decoder_fuzz_quarantine_contract():
         codecs.encode_bmp(img),
         codecs.encode_ppm(img),
         codecs.encode_wav(rng.integers(-500, 500, (300, 1)).astype("<i2")),
-        avi.build_mjpeg_avi([jpeg.encode_jpeg(img, q=4)], 14, 12),
-        avi.build_y4m([img]),
     ]
     magics = [
         b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"BM", b"P6\n", b"P5\n",
@@ -234,7 +163,6 @@ def test_decoder_fuzz_quarantine_contract():
     decoders = [
         codecs.decode_image, codecs.decode_png, codecs.decode_bmp,
         codecs.decode_ppm, codecs.decode_wav, jpeg.decode_jpeg,
-        avi.parse_avi, avi.parse_y4m,
     ]
     payloads = []
     for _ in range(40):

@@ -35,9 +35,9 @@ def test_transitive_closure_reaches_indirect_modules():
     assert fp._transitive_closure(["a"], srcs2, {}) == ["a", "b"]
 
 
-def test_live_closure_includes_jpeg_for_multimodal_queries():
-    # the real repo shape: multimodal → codecs → jpeg
+def test_live_closure_reaches_modules_two_levels_down():
+    # the real repo shape: web → text → dedup → identity
     srcs = fp._module_source_cache()
-    cache: dict = {}
-    cone = fp._transitive_closure(["multimodal"], srcs, cache)
-    assert "codecs" in cone and "jpeg" in cone and "avi" in cone
+    assert fp._referenced_modules(srcs["web"], srcs) == ["text"]
+    cone = fp._transitive_closure(["web"], srcs, {})
+    assert "dedup" in cone and "identity" in cone

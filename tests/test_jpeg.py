@@ -180,19 +180,6 @@ def test_invalid_streams_raise():
         jpeg.decode_jpeg(b"not a jpeg")
 
 
-def test_decode_media_quarantines_and_decodes_jpeg(spark):
-    from kissmetrics_to_database_spark.operators import multimodal
-
-    img = _gradient(16, 16, 3)
-    good = jpeg.encode_jpeg(img, q=2)
-    rows = [(1, bytearray(good)), (2, bytearray(b"\xff\xd8\xffgarbage"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r.doc_id: r for r in multimodal.decode_media(df).collect()}
-    assert out[1].format == "jpg"
-    assert (out[1].width, out[1].height, out[1].channels) == (16, 16, 3)
-    assert out[2].format == "unknown" and out[2].width is None
-
-
 # ---------------------------------------------------------------------------
 # progressive (SOF2) decode — r6
 # ---------------------------------------------------------------------------

@@ -583,22 +583,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["rangepartitioning"],
         ["Join", "hashpartitioning", "CartesianProduct"],
     ),
-    # MFCC: one Arrow kernel + posexplode readout — no joins
-    "audio_mfcc": (
-        ["MapInPandas"],
-        ["Join", "CartesianProduct"],
-    ),
-    # scene cuts: one Arrow kernel, flat-map shape — no joins
-    "video_scene_cuts": (
-        ["MapInPandas"],
-        ["Join", "CartesianProduct"],
-    ),
-    # pHash near-dups: pigeonhole block EQUI-join (never all-pairs),
-    # hash-partitioned candidates, no single-partition funnels
-    "image_phash_near_dups": (
-        ["hashpartitioning"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "SinglePartition"],
-    ),
     # JL projection recall: probes broadcast into the two brute-force
     # rankings (the declared cross shape) — no unbroadcast cartesian
     "random_projection_recall": (
