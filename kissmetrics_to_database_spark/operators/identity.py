@@ -30,7 +30,14 @@ tie-break (FileImporter.php:107) is replaced by min-id.
 
 from __future__ import annotations
 
+import os
+import shutil
+from pathlib import Path
+from typing import NamedTuple
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -204,10 +211,12 @@ def connected_components(
     return comp
 
 
-def _connected_components_local(und: DataFrame) -> DataFrame:
-    """Driver-side union-find over a small undirected edge set."""
-    spark = und.sparkSession
-    parent: dict = {}
+def _union_by_min(parent: dict, pairs) -> list:
+    """Union-find of ``pairs`` into ``parent`` (member → parent, roots
+    point at themselves), returning the root of every member of
+    ``parent`` in its order. Union by min keeps each root the least
+    member of its component. A pair with a null end or a self-loop adds
+    nothing, the edge rule of :func:`undirect_edges`."""
 
     def find(x):
         root = x
@@ -217,16 +226,23 @@ def _connected_components_local(und: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in und.collect():
+    for a, b in pairs:
+        if a is None or b is None or a == b:
+            continue
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
-            # union by min so roots are already canonical
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
+    return [find(m) for m in parent]
 
-    rows = [(m, find(m)) for m in parent]
+
+def _connected_components_local(und: DataFrame) -> DataFrame:
+    """Driver-side union-find over a small undirected edge set."""
+    spark = und.sparkSession
+    parent: dict = {}
+    roots = _union_by_min(parent, und.collect())
     node_type = und.schema["src"].dataType
     schema = T.StructType(
         [
@@ -238,7 +254,7 @@ def _connected_components_local(und: DataFrame) -> DataFrame:
     # enables Arrow): no Python worker evaluates it, so each of the
     # callers' reads of the result stays in the JVM
     return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["member", "component_id"]), schema
+        pd.DataFrame({"member": list(parent), "component_id": roots}), schema
     )
 
 
@@ -249,8 +265,10 @@ def update_components(
     dst: str = "dst",
     max_iterations: int = 50,
 ) -> DataFrame:
-    """Incremental identity update: fold a new edge batch into an
-    existing component map.
+    """Incremental identity update in Spark: fold a new edge batch into
+    an existing component map. This is the large-map path of
+    :func:`fold_into_map`, which folds a map within the driver limits
+    of :func:`connected_components` in Arrow instead.
 
     The reference updates its identity clusters per event as rows
     stream in (KissmetricsToDatabase.php:359-394); the batch-set
@@ -278,6 +296,142 @@ def update_components(
     # them, their old mapping is still correct — carry it over.
     untouched = existing.join(merged, "member", "left_anti")
     return merged.union(untouched.select("member", "component_id"))
+
+
+class Fold(NamedTuple):
+    """What :func:`fold_into_map` did."""
+
+    members: int  # rows of the new map
+    edges: int  # edge rows of the batch
+    path: str  # "arrow" (on the driver) or "distributed" (Spark)
+
+
+_MAP_FILE = "part-00000.parquet"
+
+
+def fold_into_map(
+    edges: DataFrame,
+    map_dir: str,
+    local_threshold: int = 1_000_000,
+    local_byte_budget: int = 256 << 20,
+) -> Fold:
+    """Fold a batch of ``(src, dst)`` alias edges into the
+    ``(member, component_id)`` parquet map at ``map_dir``, in place.
+
+    The reference keeps its identity clusters in driver memory and
+    updates them per event (KissmetricsToDatabase.php:359-394). While
+    the map and the batch fit the driver limits of
+    :func:`connected_components` (``local_threshold`` rows,
+    ``local_byte_budget`` raw bytes, priced from the map's parquet
+    footers), the fold runs on the driver too, with one Spark job: the
+    edge collect.
+    The map is read with pyarrow and seeds the union-find directly
+    (``parent[member] = component_id``: the map is fully compressed),
+    the edges are applied, and the new map is written as one file.
+    Above the limits the batch folds in Spark with
+    :func:`update_components`. Both paths give the same map.
+
+    A reader sees the old map or the new one, never a partial one: the
+    one-file map is replaced by ``os.replace`` of a dot-prefixed file
+    beside it (Spark and pyarrow skip such names), and any other
+    layout, such as a multi-part map Spark wrote, is built in a
+    sibling directory and swapped in by renames.
+    """
+    path = Path(map_dir)
+    _recover_swap(path)
+    files = _map_files(path)
+    footers = [pq.read_metadata(f) for f in files]
+    rows = sum(m.num_rows for m in footers)
+    raw_bytes = sum(
+        m.row_group(i).total_byte_size for m in footers for i in range(m.num_row_groups)
+    )
+    room = local_threshold - rows
+    if room >= 0:
+        new = edges.limit(room + 1).toArrow()
+        if new.num_rows <= room and raw_bytes + new.nbytes <= local_byte_budget:
+            return Fold(_fold_arrow(path, files, new), new.num_rows, "arrow")
+
+    n_edges = edges.count()
+    if files:
+        existing = edges.sparkSession.read.parquet(str(path))
+        comp = update_components(existing, edges)
+    else:
+        comp = connected_components(edges)
+    staged = _sibling(path, "new")
+    comp.write.parquet(str(staged))
+    members = sum(pq.read_metadata(f).num_rows for f in _map_files(staged))
+    _swap(path, staged)
+    return Fold(members, n_edges, "distributed")
+
+
+def _fold_arrow(path: Path, files: list[Path], new: pa.Table) -> int:
+    """Union-find of the Arrow edges ``new`` seeded with the map in
+    ``files``; writes the new map and returns its row count."""
+    if files:
+        old = pa.concat_tables(
+            pq.read_table(f, columns=["member", "component_id"]) for f in files
+        )
+        node_type = old.schema.field("member").type
+        parent = dict(
+            zip(old.column("member").to_pylist(), old.column("component_id").to_pylist())
+        )
+    else:
+        node_type = new.schema.field("src").type
+        parent = {}
+    roots = _union_by_min(
+        parent, zip(new.column("src").to_pylist(), new.column("dst").to_pylist())
+    )
+    table = pa.table(
+        {
+            "member": pa.array(list(parent), node_type),
+            "component_id": pa.array(roots, node_type),
+        }
+    )
+    if [f.name for f in files] == [_MAP_FILE]:
+        tmp = path / f".{_MAP_FILE}.tmp"
+        pq.write_table(table, tmp)
+        os.replace(tmp, path / _MAP_FILE)
+    else:
+        staged = _sibling(path, "new")
+        staged.mkdir(parents=True)
+        pq.write_table(table, staged / _MAP_FILE)
+        _swap(path, staged)
+    return table.num_rows
+
+
+def _map_files(path: Path) -> list[Path]:
+    """The data files Spark and pyarrow read from a map directory:
+    both skip names that start with ``.`` or ``_``."""
+    if not path.is_dir():
+        return []
+    return sorted(
+        f for f in path.iterdir() if f.is_file() and not f.name.startswith((".", "_"))
+    )
+
+
+def _sibling(path: Path, tag: str) -> Path:
+    return path.parent / f".{path.name}.{tag}"
+
+
+def _swap(path: Path, staged: Path) -> None:
+    """Put the directory ``staged`` at ``path`` by renames. The old map
+    is parked beside it until the new one is in place."""
+    old = _sibling(path, "old")
+    if path.exists():
+        os.replace(path, old)
+    os.replace(staged, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _recover_swap(path: Path) -> None:
+    """Clear what a crash during a fold left beside the map: put a
+    parked old map back if the swap did not finish, and drop a staged
+    map."""
+    old, staged = _sibling(path, "old"), _sibling(path, "new")
+    if old.exists() and not path.exists():
+        os.replace(old, path)
+    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(staged, ignore_errors=True)
 
 
 def canonical_map(components: DataFrame) -> DataFrame:

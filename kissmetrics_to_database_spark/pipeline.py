@@ -16,16 +16,16 @@ input lines (scan, repair, key union — see ``sources.json_repair``):
   1. one aggregate: committed/repaired/quarantined counts and the
      batch's key union; it also fills the parse cache;
   2. the lake append (the transform fuses into its projection);
-  3. the identity fold: the edge-size probes and collect of
-     ``operators.identity``, the staged map write, its member count,
-     and the final map write;
+  3. one collect of the batch's alias edges as Arrow: the identity
+     map is read, folded and rewritten on the driver without Spark
+     (``operators.identity.fold_into_map``; a map beyond its driver
+     limits folds in Spark instead);
   plus one count of the deduplicated rows when
   ``dedup_on_fingerprint`` is set.
 """
 
 from __future__ import annotations
 
-import shutil
 import time
 from dataclasses import dataclass, field
 from functools import reduce
@@ -54,6 +54,8 @@ class PipelineResult:
     n_repaired: int = 0
     n_quarantined: int = 0
     n_identity_members: int = 0
+    n_identity_edges: int = 0
+    identity_path: str | None = None  # "arrow" | "distributed"
     elapsed_sec: float = 0.0
 
     @property
@@ -164,27 +166,26 @@ def _run_locked(
         transformed = transformed.dropDuplicates(["md5hash"]).persist()
         n_rows = transformed.count()
 
+    result = PipelineResult(
+        files=files,
+        n_rows=n_rows,
+        n_repaired=batch.n_repaired,
+        n_quarantined=batch.n_quarantined,
+    )
     try:
         transformed.write.mode("append").parquet(str(Path(lake_dir) / "events"))
-        n_members = 0
         if process_identities and "_p" in transformed.columns:
-            edges = identity.alias_edges_kissmetrics(transformed)
-            comp_path = Path(lake_dir) / "identity_components"
-            if comp_path.exists():
-                # fold the new batch into the existing map — alias
-                # chains that span runs must merge (the reference's
-                # incremental path KTD:359-394)
-                existing = spark.read.parquet(str(comp_path))
-                comp = identity.update_components(existing, edges)
-            else:
-                comp = identity.connected_components(edges)
-            # stage to a temp dir: comp's lineage may read comp_path
-            tmp = str(comp_path) + ".staging"
-            comp.write.mode("overwrite").parquet(tmp)
-            staged = spark.read.parquet(tmp)
-            n_members = staged.count()
-            staged.write.mode("overwrite").parquet(str(comp_path))
-            shutil.rmtree(tmp, ignore_errors=True)
+            # fold the new batch into the existing map — alias chains
+            # that span runs must merge (the reference's incremental
+            # path KTD:359-394)
+            (
+                result.n_identity_members,
+                result.n_identity_edges,
+                result.identity_path,
+            ) = identity.fold_into_map(
+                identity.alias_edges_kissmetrics(transformed),
+                str(Path(lake_dir) / "identity_components"),
+            )
         wm.advance(files[-1])
     except Exception:
         wm.rollback(session_start)
@@ -193,11 +194,5 @@ def _run_locked(
         transformed.unpersist()
         batch.unpersist()
 
-    return PipelineResult(
-        files=files,
-        n_rows=n_rows,
-        n_repaired=batch.n_repaired,
-        n_quarantined=batch.n_quarantined,
-        n_identity_members=n_members,
-        elapsed_sec=round(time.perf_counter() - t0, 3),
-    )
+    result.elapsed_sec = round(time.perf_counter() - t0, 3)
+    return result

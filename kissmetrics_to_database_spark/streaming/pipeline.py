@@ -100,11 +100,12 @@ def stream_with_identity(
     Streaming: NDJSON file stream → per-row transform → lake append +
     **incremental identity closure folded per micro-batch**
     (KissmetricsToDatabase.php:359-394's per-event identity update,
-    batch-set restated via ``identity.update_components``).
+    batch-set restated via ``identity.fold_into_map``).
 
     The component map lives in parquet under ``lake_dir`` and is
     folded forward each batch — the growing identity state the
-    reference kept in driver memory, now bounded by storage not RAM.
+    reference kept in driver memory. It is folded on the driver while
+    it fits ``fold_into_map``'s limits and in Spark beyond them.
     """
     return stream_ndjson_pipeline(
         spark,
@@ -121,7 +122,6 @@ def identity_lake_sink(lake_dir: str) -> Callable[[DataFrame, int], None]:
     exposed so the exactly-once replay contract is directly
     testable: epoch-partitioned idempotent event append + identity
     component fold."""
-    import shutil
     from pathlib import Path
 
     from kissmetrics_to_database_spark.operators import identity
@@ -143,20 +143,11 @@ def identity_lake_sink(lake_dir: str) -> Callable[[DataFrame, int], None]:
             batch_df.write.mode("overwrite").parquet(
                 f"{events_path}/epoch={int(epoch_id)}"
             )
-            edges = identity.alias_edges_kissmetrics(batch_df)
-            if Path(comp_path).exists():
-                existing = batch_df.sparkSession.read.parquet(comp_path)
-                comp = identity.update_components(existing, edges)
-            else:
-                comp = identity.connected_components(edges)
-            # stage to a temp dir first: comp's lineage reads the
-            # current comp_path, so overwriting it in place would be
-            # a read-under-write conflict
-            tmp = comp_path + f".epoch{epoch_id}"
-            comp.write.mode("overwrite").parquet(tmp)
-            final = batch_df.sparkSession.read.parquet(tmp)
-            final.write.mode("overwrite").parquet(comp_path)
-            shutil.rmtree(tmp, ignore_errors=True)
+            # a replayed epoch folds the same edges again: union-find
+            # is idempotent, so the map does not change
+            identity.fold_into_map(
+                identity.alias_edges_kissmetrics(batch_df), comp_path
+            )
         finally:
             batch_df.unpersist()
 

@@ -137,6 +137,83 @@ def test_incremental_merges_two_components(spark):
     assert got == {"a": "a", "b": "a", "x": "a", "y": "a"}
 
 
+def _spark_map(spark, map_dir) -> dict:
+    return {
+        r["member"]: r["component_id"]
+        for r in spark.read.parquet(str(map_dir)).collect()
+    }
+
+
+# a small local_threshold forces fold_into_map's Spark fallback
+FOLD_PATHS = pytest.mark.parametrize(
+    "local_threshold,path", [(1_000_000, "arrow"), (0, "distributed")]
+)
+
+
+@FOLD_PATHS
+@pytest.mark.parametrize("seed", [3, 11])
+def test_fold_into_map_equals_union_find_and_spark_fold(
+    spark, tmp_path, seed, local_threshold, path
+):
+    # random batches, self-loops included, folded one at a time: the
+    # map on disk equals the union-find closure of every edge so far
+    # and the update_components fold, after every batch
+    rng = random.Random(seed)
+    nodes = [f"n{i}" for i in range(30)]
+    map_dir = tmp_path / "identity_components"
+    seen: list[tuple[str, str]] = []
+    comp = None
+    for _ in range(4):
+        batch = [
+            (rng.choice(nodes), rng.choice(nodes))
+            for _ in range(rng.randint(1, 12))
+        ]
+        df = spark.createDataFrame(batch, "src string, dst string")
+        fold = identity.fold_into_map(
+            df, str(map_dir), local_threshold=local_threshold
+        )
+        seen += batch
+        comp = (
+            identity.connected_components(df)
+            if comp is None
+            else identity.update_components(comp, df)
+        )
+        got = _spark_map(spark, map_dir)
+        assert got == _cc_python([(a, b) for a, b in seen if a != b])
+        assert got == {r["member"]: r["component_id"] for r in comp.collect()}
+        assert fold == (len(got), len(batch), path)
+    # nothing is left beside the map
+    assert [p.name for p in tmp_path.iterdir()] == ["identity_components"]
+
+
+@FOLD_PATHS
+def test_fold_into_map_over_a_spark_written_map(
+    spark, tmp_path, local_threshold, path
+):
+    # a map from before fold_into_map: several part files and
+    # _SUCCESS; the batch's bridging edge b—y merges two old components
+    start = [("a", "b"), ("x", "y"), ("p", "q"), ("q", "r")]
+    map_dir = tmp_path / "identity_components"
+    identity.connected_components(
+        spark.createDataFrame(start, "src string, dst string")
+    ).repartition(3).write.parquet(str(map_dir))
+    assert (map_dir / "_SUCCESS").exists()
+    assert len(list(map_dir.glob("part-*.parquet"))) > 1
+    bridge = [("b", "y")]
+    fold = identity.fold_into_map(
+        spark.createDataFrame(bridge, "src string, dst string"),
+        str(map_dir),
+        local_threshold=local_threshold,
+    )
+    got = _spark_map(spark, map_dir)
+    assert got == _cc_python(start + bridge)
+    assert got["x"] == got["y"] == "a" and got["r"] == "p"
+    assert fold == (7, 1, path)
+    if path == "arrow":
+        assert [p.name for p in map_dir.iterdir()] == ["part-00000.parquet"]
+    assert [p.name for p in tmp_path.iterdir()] == ["identity_components"]
+
+
 def test_resolve_events_fallback(spark):
     # FileImporter.php:95-118 — unknown identity falls back to raw id
     events = spark.createDataFrame([("a", 1), ("z", 2)], ["_p", "v"])

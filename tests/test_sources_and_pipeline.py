@@ -4,8 +4,10 @@ discovery, incremental pipeline idempotency, schema evolution."""
 from __future__ import annotations
 
 import json
+import os
 import re
 
+import pytest
 from pyspark.sql import types as T
 
 from kissmetrics_to_database_spark import pipeline
@@ -153,6 +155,7 @@ def test_incremental_pipeline_idempotent(spark, tmp_path):
     )
     assert res1.n_rows == 2 and res1.n_quarantined == 0
     assert res1.n_identity_members == 2  # u1—a1
+    assert (res1.n_identity_edges, res1.identity_path) == (1, "arrow")
 
     # idempotent rerun: no new files → nothing happens
     res2 = pipeline.run_incremental(
@@ -168,6 +171,8 @@ def test_incremental_pipeline_idempotent(spark, tmp_path):
     )
     assert res3.n_rows == 1
     assert [f.split("/")[-1] for f in res3.files] == ["2.json"]
+    assert (res3.n_identity_members, res3.n_identity_edges) == (3, 1)
+    assert res3.identity_path == "arrow"
 
     lake_events = pipeline.read_events_lake(spark, str(lake))
     assert lake_events.count() == 3
@@ -180,6 +185,50 @@ def test_incremental_pipeline_idempotent(spark, tmp_path):
         for r in spark.read.parquet(str(lake / "identity_components")).collect()
     }
     assert comp == {"u1": "a1", "a1": "a1", "u3": "a1"}
+
+
+def test_failed_identity_fold_keeps_the_old_map(spark, tmp_path, monkeypatch):
+    # the fold's write fails after the new map is written beside the
+    # old one, before it replaces it
+    src = tmp_path / "src"
+    src.mkdir()
+    state, lake = str(tmp_path / "state"), tmp_path / "lake"
+    comp_path = str(lake / "identity_components")
+    alias = {"_n": "alias", "_t": "1704067207"}
+    (src / "1.json").write_text(json.dumps({"_p": "u1", "_p2": "a1", **alias}))
+    pipeline.run_incremental(spark, str(src), state, str(lake), fixed_date="2024-06-01")
+    (src / "2.json").write_text(
+        "\n".join(
+            json.dumps(r)
+            for r in [{"_p": "u3", "_p2": "a1", **alias}, {"_p": "u4", "_p2": "b1", **alias}]
+        )
+    )
+
+    replace = os.replace
+
+    def failing_replace(src_path, dst_path, *args, **kwargs):
+        if "identity_components" in str(dst_path):
+            raise OSError("injected fold failure")
+        return replace(src_path, dst_path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="injected fold failure"):
+        pipeline.run_incremental(spark, str(src), state, str(lake), fixed_date="2024-06-01")
+    monkeypatch.undo()
+
+    assert ndjson.Watermark(tmp_path / "state" / "watermark.json").read() == "1.json"
+    old = {r["member"]: r["component_id"] for r in spark.read.parquet(comp_path).collect()}
+    assert old == {"u1": "a1", "a1": "a1"}
+
+    # The rerun folds batch 2 again and ends at the union-find closure
+    # of all three alias edges. It also appends batch 2's events to the
+    # lake a second time: the append is not yet part of one commit with
+    # the map and the watermark (ROADMAP item 2), so the lake is not
+    # checked here.
+    res = pipeline.run_incremental(spark, str(src), state, str(lake), fixed_date="2024-06-01")
+    assert [f.split("/")[-1] for f in res.files] == ["2.json"]
+    comp = {r["member"]: r["component_id"] for r in spark.read.parquet(comp_path).collect()}
+    assert comp == {"u1": "a1", "a1": "a1", "u3": "a1", "u4": "b1", "b1": "b1"}
 
 
 def test_pipeline_keeps_a_key_first_seen_on_the_last_line(spark, tmp_path):
