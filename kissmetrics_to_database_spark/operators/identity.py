@@ -37,10 +37,17 @@ from typing import NamedTuple
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Driver limits of the union-find paths, in distinct undirected edge
+# rows and in raw id chars over those rows (256 MB of chars is a few
+# hundred MB of Python objects after boxing).
+_LOCAL_THRESHOLD = 1_000_000
+_LOCAL_BYTE_BUDGET = 256 << 20
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -76,8 +83,8 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    local_threshold: int = 1_000_000,
-    local_byte_budget: int = 256 << 20,
+    local_threshold: int = _LOCAL_THRESHOLD,
+    local_byte_budget: int = _LOCAL_BYTE_BUDGET,
     stats: dict | None = None,
 ) -> DataFrame:
     """Return ``(member, component_id)`` with component_id = min member.
@@ -312,22 +319,24 @@ _MAP_FILE = "part-00000.parquet"
 def fold_into_map(
     edges: DataFrame,
     map_dir: str,
-    local_threshold: int = 1_000_000,
-    local_byte_budget: int = 256 << 20,
+    local_threshold: int = _LOCAL_THRESHOLD,
 ) -> Fold:
     """Fold a batch of ``(src, dst)`` alias edges into the
     ``(member, component_id)`` parquet map at ``map_dir``, in place.
 
     The reference keeps its identity clusters in driver memory and
     updates them per event (KissmetricsToDatabase.php:359-394). While
-    the map and the batch fit the driver limits of
-    :func:`connected_components` (``local_threshold`` rows,
-    ``local_byte_budget`` raw bytes, priced from the map's parquet
-    footers), the fold runs on the driver too, with one Spark job: the
-    edge collect.
-    The map is read with pyarrow and seeds the union-find directly
-    (``parent[member] = component_id``: the map is fully compressed),
-    the edges are applied, and the new map is written as one file.
+    the fold stays within the driver limits of
+    :func:`connected_components` (``local_threshold`` rows and
+    ``_LOCAL_BYTE_BUDGET`` id chars over the undirected edge set
+    :func:`update_components` would build, priced as upper bounds:
+    every map row and batch edge counts both ways), it runs on the
+    driver too, with one Spark job: the edge collect. The map's rows
+    come from its parquet footers; the map is read, as Arrow, only once
+    they fit, and its chars are summed from the Arrow buffers.
+    The map then seeds the union-find directly (``parent[member] =
+    component_id``: the map is fully compressed), the edges are
+    applied, and the new map is written as one file.
     Above the limits the batch folds in Spark with
     :func:`update_components`. Both paths give the same map.
 
@@ -335,21 +344,28 @@ def fold_into_map(
     one-file map is replaced by ``os.replace`` of a dot-prefixed file
     beside it (Spark and pyarrow skip such names), and any other
     layout, such as a multi-part map Spark wrote, is built in a
-    sibling directory and swapped in by renames.
+    sibling directory and swapped in by renames. New files and the
+    renames are fsynced, so this holds after an OS crash too, on a
+    filesystem that honours fsync.
     """
     path = Path(map_dir)
     _recover_swap(path)
     files = _map_files(path)
-    footers = [pq.read_metadata(f) for f in files]
-    rows = sum(m.num_rows for m in footers)
-    raw_bytes = sum(
-        m.row_group(i).total_byte_size for m in footers for i in range(m.num_row_groups)
-    )
-    room = local_threshold - rows
+    room = local_threshold // 2 - sum(pq.read_metadata(f).num_rows for f in files)
     if room >= 0:
         new = edges.limit(room + 1).toArrow()
-        if new.num_rows <= room and raw_bytes + new.nbytes <= local_byte_budget:
-            return Fold(_fold_arrow(path, files, new), new.num_rows, "arrow")
+        if new.num_rows <= room:
+            old = (
+                pa.concat_tables(
+                    pq.read_table(f, columns=["member", "component_id"]) for f in files
+                )
+                if files
+                else None
+            )
+            chars = _chars(new) + (_chars(old) if old is not None else 0)
+            if 2 * chars <= _LOCAL_BYTE_BUDGET:
+                members = _fold_arrow(path, files, old, new)
+                return Fold(members, new.num_rows, "arrow")
 
     n_edges = edges.count()
     if files:
@@ -364,13 +380,22 @@ def fold_into_map(
     return Fold(members, n_edges, "distributed")
 
 
-def _fold_arrow(path: Path, files: list[Path], new: pa.Table) -> int:
-    """Union-find of the Arrow edges ``new`` seeded with the map in
-    ``files``; writes the new map and returns its row count."""
-    if files:
-        old = pa.concat_tables(
-            pq.read_table(f, columns=["member", "component_id"]) for f in files
-        )
+def _chars(table: pa.Table) -> int:
+    """Raw chars of the ids in ``table``, counted as ``F.length``
+    counts them."""
+    return sum(
+        pc.sum(pc.utf8_length(c.cast(pa.string()))).as_py() or 0
+        for c in table.columns
+    )
+
+
+def _fold_arrow(
+    path: Path, files: list[Path], old: pa.Table | None, new: pa.Table
+) -> int:
+    """Union-find of the Arrow edges ``new`` seeded with the map
+    ``old`` read from ``files``; writes the new map and returns its
+    row count."""
+    if old is not None:
         node_type = old.schema.field("member").type
         parent = dict(
             zip(old.column("member").to_pylist(), old.column("component_id").to_pylist())
@@ -390,7 +415,9 @@ def _fold_arrow(path: Path, files: list[Path], new: pa.Table) -> int:
     if [f.name for f in files] == [_MAP_FILE]:
         tmp = path / f".{_MAP_FILE}.tmp"
         pq.write_table(table, tmp)
+        _fsync(tmp)
         os.replace(tmp, path / _MAP_FILE)
+        _fsync(path)
     else:
         staged = _sibling(path, "new")
         staged.mkdir(parents=True)
@@ -413,13 +440,27 @@ def _sibling(path: Path, tag: str) -> Path:
     return path.parent / f".{path.name}.{tag}"
 
 
+def _fsync(path: Path) -> None:
+    """Flush a file's data, or a directory's entries, to disk."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def _swap(path: Path, staged: Path) -> None:
-    """Put the directory ``staged`` at ``path`` by renames. The old map
-    is parked beside it until the new one is in place."""
+    """Put the directory ``staged`` at ``path`` by renames, once its
+    files are on disk. The old map is parked beside it until the new
+    one is in place."""
+    for f in staged.iterdir():
+        _fsync(f)
+    _fsync(staged)
     old = _sibling(path, "old")
     if path.exists():
         os.replace(path, old)
     os.replace(staged, path)
+    _fsync(path.parent)
     shutil.rmtree(old, ignore_errors=True)
 
 
@@ -430,6 +471,7 @@ def _recover_swap(path: Path) -> None:
     old, staged = _sibling(path, "old"), _sibling(path, "new")
     if old.exists() and not path.exists():
         os.replace(old, path)
+        _fsync(path.parent)
     shutil.rmtree(old, ignore_errors=True)
     shutil.rmtree(staged, ignore_errors=True)
 

@@ -214,6 +214,39 @@ def test_fold_into_map_over_a_spark_written_map(
     assert [p.name for p in tmp_path.iterdir()] == ["identity_components"]
 
 
+@pytest.mark.parametrize(
+    "limits,paths",
+    [
+        # (local_threshold, byte budget) for each batch. Batch 1 folds
+        # one edge of 2 chars into an empty map; batch 2 folds one edge
+        # of 2 chars into a map of 2 rows and 4 chars. Every row counts
+        # in both directions.
+        ([(2, 4), (6, 12)], ["arrow", "arrow"]),
+        ([(1, 4), (5, 12)], ["distributed", "distributed"]),
+        ([(2, 3), (6, 11)], ["distributed", "distributed"]),
+    ],
+)
+def test_fold_into_map_prices_in_connected_components_units(
+    spark, tmp_path, monkeypatch, limits, paths
+):
+    # rows and id chars are priced as upper bounds of what
+    # connected_components counts over the undirected edge set
+    # update_components builds, so the fold stays on the driver only
+    # within the same limits; one past either limit takes the fallback
+    map_dir = tmp_path / "identity_components"
+    seen: list[tuple[str, str]] = []
+    for batch, (rows, chars), path in zip(([("a", "b")], [("b", "c")]), limits, paths):
+        monkeypatch.setattr(identity, "_LOCAL_BYTE_BUDGET", chars)
+        fold = identity.fold_into_map(
+            spark.createDataFrame(batch, "src string, dst string"),
+            str(map_dir),
+            local_threshold=rows,
+        )
+        seen += batch
+        assert _spark_map(spark, map_dir) == _cc_python(seen)
+        assert fold.path == path
+
+
 def test_resolve_events_fallback(spark):
     # FileImporter.php:95-118 — unknown identity falls back to raw id
     events = spark.createDataFrame([("a", 1), ("z", 2)], ["_p", "v"])
