@@ -319,10 +319,13 @@ _MAP_FILE = "part-00000.parquet"
 def fold_into_map(
     edges: DataFrame,
     map_dir: str,
+    max_edges: int,
     local_threshold: int = _LOCAL_THRESHOLD,
 ) -> Fold:
     """Fold a batch of ``(src, dst)`` alias edges into the
     ``(member, component_id)`` parquet map at ``map_dir``, in place.
+    ``max_edges`` is the caller's upper bound on the rows of ``edges``,
+    such as its input rows times :data:`MAX_EDGES_PER_ROW`.
 
     The reference keeps its identity clusters in driver memory and
     updates them per event (KissmetricsToDatabase.php:359-394). While
@@ -340,6 +343,17 @@ def fold_into_map(
     Above the limits the batch folds in Spark with
     :func:`update_components`. Both paths give the same map.
 
+    The edge collect has no ``LIMIT``: a limit's literal would change
+    with every batch as the map grows, and each limit operator gets a
+    fresh generated-code variable, so its classes would be compiled
+    again on every batch; a global limit also adds a single-partition
+    stage. Instead ``max_edges`` tells whether the batch can fit: when
+    it is above the map's room, the edges are counted first (the Spark
+    path needs that count anyway), so the driver path reaches exactly
+    as far as a limited collect. A bound that undercounts lets every
+    edge be collected, but no more than the room is folded on the
+    driver: the fold checks the collected rows again.
+
     A reader sees the old map or the new one, never a partial one: the
     one-file map is replaced by ``os.replace`` of a dot-prefixed file
     beside it (Spark and pyarrow skip such names), and any other
@@ -352,9 +366,11 @@ def fold_into_map(
     _recover_swap(path)
     files = _map_files(path)
     room = local_threshold // 2 - sum(pq.read_metadata(f).num_rows for f in files)
-    if room >= 0:
-        new = edges.limit(room + 1).toArrow()
-        if new.num_rows <= room:
+    n_edges = edges.count() if 0 <= room < max_edges else None
+    if 0 <= room and (max_edges if n_edges is None else n_edges) <= room:
+        new = edges.toArrow()
+        n_edges = new.num_rows
+        if n_edges <= room:
             old = (
                 pa.concat_tables(
                     pq.read_table(f, columns=["member", "component_id"]) for f in files
@@ -365,9 +381,10 @@ def fold_into_map(
             chars = _chars(new) + (_chars(old) if old is not None else 0)
             if 2 * chars <= _LOCAL_BYTE_BUDGET:
                 members = _fold_arrow(path, files, old, new)
-                return Fold(members, new.num_rows, "arrow")
+                return Fold(members, n_edges, "arrow")
 
-    n_edges = edges.count()
+    if n_edges is None:
+        n_edges = edges.count()
     if files:
         existing = edges.sparkSession.read.parquet(str(path))
         comp = update_components(existing, edges)
@@ -524,6 +541,11 @@ def resolve_events(
     return events.join(m, person_col, "left").withColumn(
         "canonical", F.coalesce(F.col("canonical"), F.col(person_col))
     )
+
+
+# The most edges alias_edges_kissmetrics yields for one event row: one
+# ``_p2`` edge plus the two edges of an "updated email" event.
+MAX_EDGES_PER_ROW = 3
 
 
 def alias_edges_kissmetrics(events: DataFrame) -> DataFrame:

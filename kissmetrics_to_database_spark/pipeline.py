@@ -14,12 +14,16 @@ Spark actions per batch, each reading the one persisted parse of the
 input lines (scan, repair, key union — see ``sources.json_repair``):
 
   1. one aggregate: committed/repaired/quarantined counts and the
-     batch's key union; it also fills the parse cache;
+     batch's key union; it also fills the parse cache. Under AQE it
+     runs as three jobs: the cache fill, the shuffle map stage and the
+     result;
   2. the lake append (the transform fuses into its projection);
-  3. one collect of the batch's alias edges as Arrow: the identity
-     map is read, folded and rewritten on the driver without Spark
-     (``operators.identity.fold_into_map``; a map beyond its driver
-     limits folds in Spark instead);
+  3. one collect of the batch's alias edges as Arrow, one stage with no
+     limit: the identity map is read, folded and rewritten on the
+     driver without Spark (``operators.identity.fold_into_map``; a map
+     beyond its driver limits folds in Spark instead, and the edges are
+     counted first when their bound, ``MAX_EDGES_PER_ROW`` per
+     committed row, is above the room the map leaves under the limits);
   plus one count of the deduplicated rows when
   ``dedup_on_fingerprint`` is set.
 """
@@ -185,6 +189,7 @@ def _run_locked(
             ) = identity.fold_into_map(
                 identity.alias_edges_kissmetrics(transformed),
                 str(Path(lake_dir) / "identity_components"),
+                batch.n_committed * identity.MAX_EDGES_PER_ROW,
             )
         wm.advance(files[-1])
     except Exception:

@@ -144,9 +144,12 @@ def identity_lake_sink(lake_dir: str) -> Callable[[DataFrame, int], None]:
                 f"{events_path}/epoch={int(epoch_id)}"
             )
             # a replayed epoch folds the same edges again: union-find
-            # is idempotent, so the map does not change
+            # is idempotent, so the map does not change. The bound is
+            # counted from the persisted micro-batch the append filled.
             identity.fold_into_map(
-                identity.alias_edges_kissmetrics(batch_df), comp_path
+                identity.alias_edges_kissmetrics(batch_df),
+                comp_path,
+                batch_df.count() * identity.MAX_EDGES_PER_ROW,
             )
         finally:
             batch_df.unpersist()

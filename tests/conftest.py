@@ -24,3 +24,11 @@ def spark():
     s = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
     s.stop()
+
+
+@pytest.fixture
+def compiles(spark):
+    """Returns the number of classes Spark's code generator has
+    compiled so far in this JVM."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount

@@ -170,7 +170,7 @@ def test_fold_into_map_equals_union_find_and_spark_fold(
         ]
         df = spark.createDataFrame(batch, "src string, dst string")
         fold = identity.fold_into_map(
-            df, str(map_dir), local_threshold=local_threshold
+            df, str(map_dir), len(batch), local_threshold=local_threshold
         )
         seen += batch
         comp = (
@@ -203,6 +203,7 @@ def test_fold_into_map_over_a_spark_written_map(
     fold = identity.fold_into_map(
         spark.createDataFrame(bridge, "src string, dst string"),
         str(map_dir),
+        len(bridge),
         local_threshold=local_threshold,
     )
     got = _spark_map(spark, map_dir)
@@ -217,13 +218,17 @@ def test_fold_into_map_over_a_spark_written_map(
 @pytest.mark.parametrize(
     "limits,paths",
     [
-        # (local_threshold, byte budget) for each batch. Batch 1 folds
-        # one edge of 2 chars into an empty map; batch 2 folds one edge
-        # of 2 chars into a map of 2 rows and 4 chars. Every row counts
-        # in both directions.
-        ([(2, 4), (6, 12)], ["arrow", "arrow"]),
-        ([(1, 4), (5, 12)], ["distributed", "distributed"]),
-        ([(2, 3), (6, 11)], ["distributed", "distributed"]),
+        # (local_threshold, byte budget, the caller's bound on edge
+        # rows) for each batch. Batch 1 folds one edge of 2 chars into
+        # an empty map; batch 2 folds one edge of 2 chars into a map of
+        # 2 rows and 4 chars. Every row counts in both directions.
+        ([(2, 4, 1), (6, 12, 1)], ["arrow", "arrow"]),
+        ([(1, 4, 1), (5, 12, 1)], ["distributed", "distributed"]),
+        ([(2, 3, 1), (6, 11, 1)], ["distributed", "distributed"]),
+        # a bound above the room: the counted edge fits
+        ([(2, 4, 5), (6, 12, 5)], ["arrow", "arrow"]),
+        # a bound that undercounts: the collected edge is past the room
+        ([(1, 4, 0), (5, 12, 0)], ["distributed", "distributed"]),
     ],
 )
 def test_fold_into_map_prices_in_connected_components_units(
@@ -232,19 +237,23 @@ def test_fold_into_map_prices_in_connected_components_units(
     # rows and id chars are priced as upper bounds of what
     # connected_components counts over the undirected edge set
     # update_components builds, so the fold stays on the driver only
-    # within the same limits; one past either limit takes the fallback
+    # within the same limits; one past either limit takes the fallback,
+    # whatever bound on the edge rows the caller gives
     map_dir = tmp_path / "identity_components"
     seen: list[tuple[str, str]] = []
-    for batch, (rows, chars), path in zip(([("a", "b")], [("b", "c")]), limits, paths):
+    for batch, (rows, chars, bound), path in zip(
+        ([("a", "b")], [("b", "c")]), limits, paths
+    ):
         monkeypatch.setattr(identity, "_LOCAL_BYTE_BUDGET", chars)
         fold = identity.fold_into_map(
             spark.createDataFrame(batch, "src string, dst string"),
             str(map_dir),
+            bound,
             local_threshold=rows,
         )
         seen += batch
         assert _spark_map(spark, map_dir) == _cc_python(seen)
-        assert fold.path == path
+        assert (fold.edges, fold.path) == (1, path)
 
 
 def test_resolve_events_fallback(spark):

@@ -1,9 +1,11 @@
-"""Warm-cache tests (session.cache_tables)."""
+"""Session tests: the warm table cache (session.cache_tables) and the
+generated-code cache size."""
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from kissmetrics_to_database_spark import session
 
@@ -36,3 +38,14 @@ def test_cache_tables_width_follows_the_whole_cache(spark, tmp_path, monkeypatch
             spark.conf.unset(IPN)
         else:
             spark.conf.set(IPN, before)
+
+
+def test_codegen_cache_holds_more_than_100_classes(spark, compiles):
+    # each plan inlines its own long literal, so each compiles its own
+    # class; the first must still be cached after 150 others
+    plans = [spark.range(4).select(F.col("id") * F.lit(i)) for i in range(150)]
+    for df in plans:
+        df.collect()
+    before = compiles()
+    assert plans[0].collect() == [(0,)] * 4
+    assert compiles() == before

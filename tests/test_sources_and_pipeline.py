@@ -231,6 +231,27 @@ def test_failed_identity_fold_keeps_the_old_map(spark, tmp_path, monkeypatch):
     assert comp == {"u1": "a1", "a1": "a1", "u3": "a1", "u4": "b1", "b1": "b1"}
 
 
+def test_warm_ingest_batch_compiles_no_class(spark, tmp_path, compiles):
+    # a batch with the key shape of the one before it reuses every
+    # class generated for that one: no plan of a batch carries a value
+    # that changes from batch to batch into generated code
+    src = tmp_path / "src"
+    src.mkdir()
+    state, lake = str(tmp_path / "state"), str(tmp_path / "lake")
+    email = {"_n": "updated email", "new_email": "n@e.com", "previous_email": "o@e.com"}
+    for i in (1, 2):
+        rows = [
+            {"_p": f"u{i}", "_p2": f"a{i}", "_n": "signup", "_t": str(1704067200 + i)},
+            {"_p": f"v{i}", "_t": str(1704067300 + i), **email},
+        ]
+        (src / f"{i}.json").write_text("\n".join(json.dumps(r) for r in rows))
+        before = compiles()
+        res = pipeline.run_incremental(spark, str(src), state, lake, fixed_date="2024-06-01")
+        assert res.identity_path == "arrow"
+    assert res.n_identity_edges == 3
+    assert compiles() == before
+
+
 def test_pipeline_keeps_a_key_first_seen_on_the_last_line(spark, tmp_path):
     # past the 10,000-line sample the schema used to be inferred from
     src = tmp_path / "src"
