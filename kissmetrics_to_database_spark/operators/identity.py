@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import reduce
 from pathlib import Path
 from typing import NamedTuple
 
@@ -39,7 +40,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -316,16 +317,31 @@ class Fold(NamedTuple):
 _MAP_FILE = "part-00000.parquet"
 
 
+def map_room(map_dir: str, local_threshold: int = _LOCAL_THRESHOLD) -> int:
+    """The edge rows a batch may bring for :func:`fold_into_map` to
+    fold it on the driver into the map at ``map_dir``: half of
+    ``local_threshold`` less the map's rows, read from its parquet
+    footers. Negative when the map alone is past the limit. Clears
+    what a crashed fold left beside the map first."""
+    path = Path(map_dir)
+    _recover_swap(path)
+    return local_threshold // 2 - sum(
+        pq.read_metadata(f).num_rows for f in _map_files(path)
+    )
+
+
 def fold_into_map(
-    edges: DataFrame,
+    edges: DataFrame | pa.Table,
     map_dir: str,
     max_edges: int,
     local_threshold: int = _LOCAL_THRESHOLD,
 ) -> Fold:
     """Fold a batch of ``(src, dst)`` alias edges into the
     ``(member, component_id)`` parquet map at ``map_dir``, in place.
-    ``max_edges`` is the caller's upper bound on the rows of ``edges``,
-    such as its input rows times :data:`MAX_EDGES_PER_ROW`.
+    ``edges`` is a DataFrame, or an Arrow table the caller already
+    holds on the driver (see :func:`edge_list`). ``max_edges`` is the
+    caller's upper bound on the rows of a DataFrame ``edges``, such as
+    its input rows times :data:`MAX_EDGES_PER_ROW`.
 
     The reference keeps its identity clusters in driver memory and
     updates them per event (KissmetricsToDatabase.php:359-394). While
@@ -334,8 +350,9 @@ def fold_into_map(
     ``_LOCAL_BYTE_BUDGET`` id chars over the undirected edge set
     :func:`update_components` would build, priced as upper bounds:
     every map row and batch edge counts both ways), it runs on the
-    driver too, with one Spark job: the edge collect. The map's rows
-    come from its parquet footers; the map is read, as Arrow, only once
+    driver too, with at most one Spark job: the edge collect, none
+    when the edges come as Arrow. The map's rows come from its parquet
+    footers (:func:`map_room`); the map is read, as Arrow, only once
     they fit, and its chars are summed from the Arrow buffers.
     The map then seeds the union-find directly (``parent[member] =
     component_id``: the map is fully compressed), the edges are
@@ -352,7 +369,9 @@ def fold_into_map(
     path needs that count anyway), so the driver path reaches exactly
     as far as a limited collect. A bound that undercounts lets every
     edge be collected, but no more than the room is folded on the
-    driver: the fold checks the collected rows again.
+    driver: the fold checks the collected rows again. A caller that
+    passes Arrow edges keeps the same reach by collecting them only
+    when its bound fits :func:`map_room`.
 
     A reader sees the old map or the new one, never a partial one: the
     one-file map is replaced by ``os.replace`` of a dot-prefixed file
@@ -363,12 +382,16 @@ def fold_into_map(
     filesystem that honours fsync.
     """
     path = Path(map_dir)
-    _recover_swap(path)
+    room = map_room(map_dir, local_threshold)
     files = _map_files(path)
-    room = local_threshold // 2 - sum(pq.read_metadata(f).num_rows for f in files)
-    n_edges = edges.count() if 0 <= room < max_edges else None
-    if 0 <= room and (max_edges if n_edges is None else n_edges) <= room:
-        new = edges.toArrow()
+    n_edges = new = None
+    if isinstance(edges, pa.Table):
+        new = edges
+    elif 0 <= room:
+        n_edges = edges.count() if room < max_edges else None
+        if (max_edges if n_edges is None else n_edges) <= room:
+            new = edges.toArrow()
+    if new is not None:
         n_edges = new.num_rows
         if n_edges <= room:
             old = (
@@ -383,6 +406,8 @@ def fold_into_map(
                 members = _fold_arrow(path, files, old, new)
                 return Fold(members, n_edges, "arrow")
 
+    if isinstance(edges, pa.Table):
+        edges = SparkSession.active().createDataFrame(edges)
     if n_edges is None:
         n_edges = edges.count()
     if files:
@@ -547,47 +572,83 @@ def resolve_events(
 # ``_p2`` edge plus the two edges of an "updated email" event.
 MAX_EDGES_PER_ROW = 3
 
+_EDGE = T.StructType(
+    [T.StructField("src", T.StringType()), T.StructField("dst", T.StringType())]
+)
 
-def alias_edges_kissmetrics(events: DataFrame) -> DataFrame:
-    """Extract identity edges from raw Kissmetrics rows (P9-P11).
 
-    Two edge sources, per KissmetricsToDatabase.php:401-436:
+def edge_columns(columns: list[str]) -> list[Column]:
+    """The alias-edge rule of Kissmetrics rows (P9-P11), as one
+    nullable ``struct<src, dst>`` column per edge source, NULL when the
+    row yields no edge from that source. Per
+    KissmetricsToDatabase.php:401-436:
     - alias records: ``_p2 != ''`` → edge (_p, _p2), skipping pairs
       whose first identity contains '@' (:414-416);
     - 'updated email' events → edges (_p, new_email) and
-      (_p, previous_email) (:427-436).
+      (_p, previous_email) (:427-436), each only when its email is not
+      empty.
 
     Schema-aware: the event schema is dynamic (S8), so each edge
-    source only applies when its columns exist in this batch.
+    source only applies when its columns exist among ``columns``.
     """
-    cols = set(events.columns)
-    parts = []
+    cols = set(columns)
+    out = []
     if "_p2" in cols:
-        parts.append(
-            events.where(F.col("_p2").isNotNull() & (F.col("_p2") != ""))
-            .select(F.col("_p").alias("src"), F.col("_p2").alias("dst"))
-            .where(~F.col("src").contains("@"))
+        p2 = F.col("_p2")
+        out.append(
+            F.when(
+                p2.isNotNull() & (p2 != "") & ~F.col("_p").contains("@"),
+                F.struct(F.col("_p").alias("src"), p2.alias("dst")),
+            )
         )
     if {"_n_not_null", "new_email", "previous_email"} <= cols:
-        email_recs = events.where(F.col("_n_not_null") == "updated email")
-        parts.append(
-            email_recs.select(
-                F.col("_p").alias("src"), F.col("new_email").alias("dst")
-            )
-            .union(
-                email_recs.select(
-                    F.col("_p").alias("src"), F.col("previous_email").alias("dst")
+        for name in ("new_email", "previous_email"):
+            email = F.col(name)
+            out.append(
+                F.when(
+                    (F.col("_n_not_null") == "updated email")
+                    & email.isNotNull()
+                    & (email != ""),
+                    F.struct(F.col("_p").alias("src"), email.alias("dst")),
                 )
             )
-            .where(F.col("dst").isNotNull() & (F.col("dst") != ""))
-        )
-    if not parts:
-        schema = "src string, dst string"
-        return events.sparkSession.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
     return out
+
+
+def alias_edges_kissmetrics(events: DataFrame) -> DataFrame:
+    """The ``(src, dst)`` identity edges of raw Kissmetrics rows, one
+    row per non-NULL value of each :func:`edge_columns` column."""
+    parts = [
+        events.select(c.alias("e")).where(F.col("e").isNotNull()).select("e.*")
+        for c in edge_columns(events.columns)
+    ]
+    if not parts:
+        return events.sparkSession.createDataFrame([], _EDGE)
+    return reduce(DataFrame.union, parts)
+
+
+def edge_list(columns: list[str]) -> Column:
+    """An aggregate for ``DataFrame.observe``: every edge that rows with
+    ``columns`` yield, the ``collect_list`` of each :func:`edge_columns`
+    column. Observed on the write of those rows, it collects the edges
+    with no job of their own; :func:`edges_table` turns the observed
+    value into the Arrow edges :func:`fold_into_map` takes. It holds
+    every edge on the driver, so observe it only when the rows' bound,
+    ``MAX_EDGES_PER_ROW`` each, fits :func:`map_room`."""
+    lists = [F.collect_list(c) for c in edge_columns(columns)]
+    if not lists:
+        return F.array().cast(T.ArrayType(_EDGE))
+    return F.concat(*lists)
+
+
+def edges_table(rows: list) -> pa.Table:
+    """The observed value of :func:`edge_list` as an Arrow table."""
+    return pa.table(
+        {
+            "src": pa.array([r[0] for r in rows], pa.string()),
+            "dst": pa.array([r[1] for r in rows], pa.string()),
+        }
+    )
 
 
 def pagerank(

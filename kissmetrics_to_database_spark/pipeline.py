@@ -13,19 +13,21 @@ restated as one declarative flow (SURVEY.md §3.1).
 Spark actions per batch, each reading the one persisted parse of the
 input lines (scan, repair, key union — see ``sources.json_repair``):
 
-  1. one aggregate: committed/repaired/quarantined counts and the
-     batch's key union; it also fills the parse cache. Under AQE it
-     runs as three jobs: the cache fill, the shuffle map stage and the
-     result;
-  2. the lake append (the transform fuses into its projection);
-  3. one collect of the batch's alias edges as Arrow, one stage with no
-     limit: the identity map is read, folded and rewritten on the
-     driver without Spark (``operators.identity.fold_into_map``; a map
-     beyond its driver limits folds in Spark instead, and the edges are
-     counted first when their bound, ``MAX_EDGES_PER_ROW`` per
-     committed row, is above the room the map leaves under the limits);
-  plus one count of the deduplicated rows when
-  ``dedup_on_fingerprint`` is set.
+  1. one ``noop`` write that fills the parse cache; an ``Observation``
+     on it takes the committed/repaired/quarantined counts and the
+     batch's key union. One job, no shuffle;
+  2. the lake append (the transform fuses into its projection). An
+     ``Observation`` on it collects the batch's alias edges
+     (``operators.identity.edge_list``), and the deduplicated row
+     count when ``dedup_on_fingerprint`` is set. The identity map is
+     then read, folded and rewritten on the driver without Spark
+     (``operators.identity.fold_into_map``).
+
+The edges are observed only while their bound, ``MAX_EDGES_PER_ROW``
+per committed row, fits the room the map leaves under the fold's
+driver limits (read from the map's parquet footers before the
+append). Otherwise the fold takes the edges as a DataFrame: it counts
+them, then collects them when they fit, or folds in Spark.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ from functools import reduce
 from pathlib import Path
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -165,20 +167,31 @@ def _run_locked(
     transformed = events_transform.transform_events(
         batch.good.drop("was_repaired"), fixed_date=fixed_date
     )
-    n_rows = batch.n_committed
     if dedup_on_fingerprint:
-        transformed = transformed.dropDuplicates(["md5hash"]).persist()
-        n_rows = transformed.count()
+        transformed = transformed.dropDuplicates(["md5hash"])
+    map_dir = str(Path(lake_dir) / "identity_components")
+    fold = process_identities and "_p" in transformed.columns
+    max_edges = batch.n_committed * identity.MAX_EDGES_PER_ROW
+    observe_edges = fold and max_edges <= identity.map_room(map_dir)
+    metrics = []
+    if observe_edges:
+        metrics.append(identity.edge_list(transformed.columns).alias("edges"))
+    if dedup_on_fingerprint:
+        metrics.append(F.count(F.lit(1)).alias("rows"))
+    observed = Observation()
+    appended = transformed.observe(observed, *metrics) if metrics else transformed
 
     result = PipelineResult(
         files=files,
-        n_rows=n_rows,
+        n_rows=batch.n_committed,
         n_repaired=batch.n_repaired,
         n_quarantined=batch.n_quarantined,
     )
     try:
-        transformed.write.mode("append").parquet(str(Path(lake_dir) / "events"))
-        if process_identities and "_p" in transformed.columns:
+        appended.write.mode("append").parquet(str(Path(lake_dir) / "events"))
+        seen = observed.get if metrics else {}
+        result.n_rows = seen.get("rows", result.n_rows)
+        if fold:
             # fold the new batch into the existing map — alias chains
             # that span runs must merge (the reference's incremental
             # path KTD:359-394)
@@ -187,16 +200,17 @@ def _run_locked(
                 result.n_identity_edges,
                 result.identity_path,
             ) = identity.fold_into_map(
-                identity.alias_edges_kissmetrics(transformed),
-                str(Path(lake_dir) / "identity_components"),
-                batch.n_committed * identity.MAX_EDGES_PER_ROW,
+                identity.edges_table(seen["edges"])
+                if observe_edges
+                else identity.alias_edges_kissmetrics(transformed),
+                map_dir,
+                max_edges,
             )
         wm.advance(files[-1])
     except Exception:
         wm.rollback(session_start)
         raise
     finally:
-        transformed.unpersist()
         batch.unpersist()
 
     result.elapsed_sec = round(time.perf_counter() - t0, 3)

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -111,13 +111,15 @@ def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
     """Read NDJSON lines (a path, or a DataFrame with column ``value``)
     with a repair pass for corrupt rows.
 
-    Cost model: one scan. The parse (:func:`_parse_lines`) is
-    persisted, and ONE aggregate over it — the action that fills the
-    cache — returns the committed, repaired and quarantined counts
-    and the union of the batch's keys over every line, so a key first
-    seen on the last line is a column like any other. The columns
-    are that union sorted by name, each projected as ``m[key]``; all
-    are strings, like the reference's varchar columns.
+    Cost model: one scan, one Spark job, no shuffle. The parse
+    (:func:`_parse_lines`) is persisted, and a ``noop`` write of one
+    row per key of each line fills the cache. An unnamed
+    ``Observation`` on that write takes the committed, repaired and
+    quarantined counts and the union of the batch's keys over every
+    line, so a key first seen on the last line is a column like any
+    other. The columns are that union sorted by name, each projected
+    as ``m[key]``; all are strings, like the reference's varchar
+    columns.
     """
     lines = (
         path_or_df
@@ -126,20 +128,19 @@ def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
     )
     parsed = _parse_lines(lines).persist()
     first_of_line = F.coalesce(F.col("pos"), F.lit(0)) == 0
-    stats = (
-        parsed.select(
-            F.col("m").isNull().alias("bad"),
-            "was_repaired",
-            F.posexplode_outer(F.map_keys("m")).alias("pos", "key"),
-        )
-        .agg(
-            F.count_if(first_of_line & ~F.col("bad")).alias("committed"),
-            F.count_if(first_of_line & F.col("was_repaired")).alias("repaired"),
-            F.count_if(first_of_line & F.col("bad")).alias("quarantined"),
-            F.collect_set("key").alias("keys"),
-        )
-        .first()
-    )
+    observed = Observation()
+    parsed.select(
+        F.col("m").isNull().alias("bad"),
+        "was_repaired",
+        F.posexplode_outer(F.map_keys("m")).alias("pos", "key"),
+    ).observe(
+        observed,
+        F.count_if(first_of_line & ~F.col("bad")).alias("committed"),
+        F.count_if(first_of_line & F.col("was_repaired")).alias("repaired"),
+        F.count_if(first_of_line & F.col("bad")).alias("quarantined"),
+        F.collect_set("key").alias("keys"),
+    ).write.format("noop").mode("overwrite").save()
+    stats = observed.get
     m = F.col("m")
     return RepairedBatch(
         good=parsed.where(m.isNotNull()).select(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -140,16 +140,20 @@ def identity_lake_sink(lake_dir: str) -> Callable[[DataFrame, int], None]:
             # sinks use. Readers see one `epoch` partition column;
             # at 100 TB the per-epoch dirs are also the natural
             # compaction / retention unit.
-            batch_df.write.mode("overwrite").parquet(
-                f"{events_path}/epoch={int(epoch_id)}"
-            )
+            observed = Observation()
+            batch_df.observe(observed, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(f"{events_path}/epoch={int(epoch_id)}")
             # a replayed epoch folds the same edges again: union-find
             # is idempotent, so the map does not change. The bound is
-            # counted from the persisted micro-batch the append filled.
+            # the micro-batch's rows, observed on the append. The edges
+            # are not observed there: nothing bounds a micro-batch's
+            # rows before its append, so a huge one would hold every
+            # edge on the driver.
             identity.fold_into_map(
                 identity.alias_edges_kissmetrics(batch_df),
                 comp_path,
-                batch_df.count() * identity.MAX_EDGES_PER_ROW,
+                observed.get["rows"] * identity.MAX_EDGES_PER_ROW,
             )
         finally:
             batch_df.unpersist()

@@ -289,6 +289,69 @@ def test_alias_edges_kissmetrics(spark):
     }
 
 
+_EMAIL = {"_n": "updated email", "new_email": "n@e.com", "previous_email": "o@e.com"}
+
+
+@pytest.mark.parametrize(
+    "rows,expected",
+    [
+        (
+            [
+                {"_p": "u1", "_p2": "a1", "_n": "alias"},
+                {"_p2": "a0", "_n": "alias"},  # NULL _p: no _p2 edge
+                {"_p": "x@y.z", "_p2": "a2", "_n": "alias"},  # '@' in _p
+                {"_p": "u3", "_p2": "", "_n": "click"},  # empty _p2
+                {"_p": "u4", **_EMAIL, "previous_email": " "},  # a blank is an id
+                {"_p": "u5", **_EMAIL, "previous_email": ""},  # empty: no edge
+                {"_p": "u6", "_p2": "a6", **_EMAIL},  # MAX_EDGES_PER_ROW edges
+                _EMAIL,  # NULL _p: email edges from NULL
+            ],
+            [
+                ("u1", "a1"),
+                ("u4", "n@e.com"), ("u4", " "),
+                ("u5", "n@e.com"),
+                ("u6", "a6"), ("u6", "n@e.com"), ("u6", "o@e.com"),
+                (None, "n@e.com"), (None, "o@e.com"),
+            ],
+        ),
+        (
+            [{"_p": "u1", **_EMAIL}, {"_p": "u2", "_n": "click"}],  # no _p2
+            [("u1", "n@e.com"), ("u1", "o@e.com")],
+        ),
+        (
+            [{"_p": "u1", "_p2": "a1", "_n": "updated email"}],  # no email columns
+            [("u1", "a1")],
+        ),
+        ([{"_p": "u1", "_n": "click"}], []),
+    ],
+    ids=["every-source", "no-p2", "no-email-columns", "no-edge-source"],
+)
+def test_observed_edges_equal_alias_edges(spark, rows, expected):
+    # the edges edge_list observes on a write of the transformed rows
+    # are the rows alias_edges_kissmetrics yields for them
+    from collections import Counter
+
+    from kissmetrics_to_database_spark.functions import events_transform
+    from pyspark.sql import Observation
+    from pyspark.sql import types as T
+
+    keys = sorted({k for r in rows for k in r})
+    schema = T.StructType([T.StructField(k, T.StringType()) for k in keys])
+    transformed = events_transform.transform_events(
+        spark.createDataFrame([tuple(r.get(k) for k in keys) for r in rows], schema),
+        fixed_date="2024-06-01",
+    )
+    observed = Observation()
+    edges = identity.edge_list(transformed.columns).alias("edges")
+    transformed.observe(observed, edges).write.format("noop").mode("overwrite").save()
+    table = identity.edges_table(observed.get["edges"])
+    got = Counter(zip(table.column("src").to_pylist(), table.column("dst").to_pylist()))
+    collected = identity.alias_edges_kissmetrics(transformed).toArrow()
+    assert got == Counter(zip(*(collected.column(c).to_pylist() for c in ("src", "dst"))))
+    assert got == Counter(expected)
+    assert table.schema == collected.schema
+
+
 def test_pagerank_star_graph_matches_python(spark):
     # star: hub h — leaves l1..l3 (undirected). Replicate the rounded
     # fixed-point schedule in pure Python. Spark's F.round is

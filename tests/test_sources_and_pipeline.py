@@ -121,6 +121,21 @@ def test_json_repair_one_object_per_line(spark):
     batch.unpersist()
 
 
+@pytest.mark.parametrize(
+    "lines,counts",
+    [([], (0, 0, 0)), (["", "   "], (0, 0, 0)), (["garbage"], (0, 0, 1))],
+    ids=["empty", "blank-only", "all-garbage"],
+)
+def test_json_repair_with_no_committed_line(spark, lines, counts):
+    # the observed stats of an input with no line to commit
+    lines = spark.createDataFrame([(x,) for x in lines], "value string")
+    batch = read_ndjson_with_repair(spark, lines)
+    assert (batch.n_committed, batch.n_repaired, batch.n_quarantined) == counts
+    assert batch.good.columns == ["was_repaired"]
+    assert (batch.good.count(), batch.quarantined.count()) == (0, counts[2])
+    batch.unpersist()
+
+
 def test_json_repair_parses_each_line_once(spark):
     """The plan behind the committed rows: exactly one ``from_json``
     over the raw line, and the repair regex only inside the
@@ -250,6 +265,73 @@ def test_warm_ingest_batch_compiles_no_class(spark, tmp_path, compiles):
         assert res.identity_path == "arrow"
     assert res.n_identity_edges == 3
     assert compiles() == before
+
+
+def test_warm_ingest_batch_runs_two_spark_jobs(spark, tmp_path):
+    # the noop write that fills the parse cache and observes the batch
+    # stats, and the lake append that observes the alias edges
+    src = tmp_path / "src"
+    src.mkdir()
+    state, lake = str(tmp_path / "state"), str(tmp_path / "lake")
+    email = {"_n": "updated email", "new_email": "n@e.com", "previous_email": "o@e.com"}
+    sc = spark.sparkContext
+    groups = [f"ingest-{tmp_path.name}-{i}" for i in (1, 2)]
+    for i, group in enumerate(groups, 1):
+        rows = [
+            {"_p": f"u{i}", "_p2": f"a{i}", "_n": "signup", "_t": str(1704067200 + i)},
+            {"_p": f"v{i}", "_t": str(1704067300 + i), **email},
+        ]
+        (src / f"{i}.json").write_text("\n".join(json.dumps(r) for r in rows))
+        sc.setJobGroup(group, "ingest")
+        try:
+            res = pipeline.run_incremental(spark, str(src), state, lake, fixed_date="2024-06-01")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert (res.n_rows, res.n_identity_edges, res.identity_path) == (2, 3, "arrow")
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(groups[1])) == 2
+    comp = dict(spark.read.parquet(f"{lake}/identity_components").collect())
+    assert comp == {
+        "u1": "a1", "a1": "a1", "v1": "n@e.com", "n@e.com": "n@e.com", "o@e.com": "n@e.com",
+        "u2": "a2", "a2": "a2", "v2": "n@e.com",
+    }
+
+
+@pytest.mark.parametrize(
+    "room,observed,path",
+    [(6, True, "arrow"), (5, False, "arrow"), (-1, False, "distributed")],
+)
+def test_ingest_observes_edges_only_within_the_map_room(
+    spark, tmp_path, monkeypatch, room, observed, path
+):
+    # a batch of 2 rows may yield 2 * MAX_EDGES_PER_ROW = 6 edges: they
+    # are observed on the append only when the map leaves room for 6;
+    # otherwise the fold counts them first (3 fit a room of 5) or folds
+    # in Spark (no room)
+    from kissmetrics_to_database_spark.operators import identity
+
+    src = tmp_path / "src"
+    src.mkdir()
+    email = {"_n": "updated email", "new_email": "n@e.com", "previous_email": "o@e.com"}
+    rows = [{"_p": "u1", "_p2": "a1", "_n": "signup"}, {"_p": "v1", **email}]
+    (src / "1.json").write_text("\n".join(json.dumps(r) for r in rows))
+    monkeypatch.setattr(identity, "map_room", lambda map_dir, local_threshold=0: room)
+    from_frame = []
+    alias_edges = identity.alias_edges_kissmetrics
+    monkeypatch.setattr(
+        identity, "alias_edges_kissmetrics", lambda df: from_frame.append(1) or alias_edges(df)
+    )
+    lake = tmp_path / "lake"
+    res = pipeline.run_incremental(
+        spark, str(src), str(tmp_path / "state"), str(lake), fixed_date="2024-06-01"
+    )
+    assert (res.n_identity_edges, res.identity_path) == (3, path)
+    assert from_frame == ([] if observed else [1])
+    comp = dict(spark.read.parquet(str(lake / "identity_components")).collect())
+    assert comp == {
+        "u1": "a1", "a1": "a1", "v1": "n@e.com", "n@e.com": "n@e.com", "o@e.com": "n@e.com",
+    }
 
 
 def test_pipeline_keeps_a_key_first_seen_on_the_last_line(spark, tmp_path):
