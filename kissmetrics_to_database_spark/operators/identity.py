@@ -260,10 +260,12 @@ def _connected_components_local(und: DataFrame) -> DataFrame:
     )
     # a pandas frame goes to the JVM as Arrow batches (session.py
     # enables Arrow): no Python worker evaluates it, so each of the
-    # callers' reads of the result stays in the JVM
+    # callers' reads of the result stays in the JVM. One partition: the
+    # rows are already on the driver, and a SinglePartition result lets
+    # a sort or aggregate over it plan no exchange.
     return spark.createDataFrame(
         pd.DataFrame({"member": list(parent), "component_id": roots}), schema
-    )
+    ).coalesce(1)
 
 
 def update_components(
@@ -586,7 +588,8 @@ def edge_columns(columns: list[str]) -> list[Column]:
       whose first identity contains '@' (:414-416);
     - 'updated email' events → edges (_p, new_email) and
       (_p, previous_email) (:427-436), each only when its email is not
-      empty.
+      empty and ``_p`` is not NULL (an edge with a NULL end joins
+      nothing, so it is not yielded or counted).
 
     Schema-aware: the event schema is dynamic (S8), so each edge
     source only applies when its columns exist among ``columns``.
@@ -607,6 +610,7 @@ def edge_columns(columns: list[str]) -> list[Column]:
             out.append(
                 F.when(
                     (F.col("_n_not_null") == "updated email")
+                    & F.col("_p").isNotNull()
                     & email.isNotNull()
                     & (email != ""),
                     F.struct(F.col("_p").alias("src"), email.alias("dst")),

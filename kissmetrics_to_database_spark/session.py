@@ -4,7 +4,8 @@ Configuration notes (scale-first):
 - AQE on: runtime coalescing of shuffle partitions, skew-join
   splitting, and dynamic join-strategy switching. On a 1000-executor
   cluster these are the difference between a tuned plan and a stalled
-  one; on local[32] they keep tiny SF runs from over-partitioning.
+  one; in a local session they coalesce a tiny run's shuffles down to
+  a few partitions.
 - ``spark.sql.shuffle.partitions`` defaults to the local core count
   here; on a real cluster set it to 2-3x total executor cores (AQE
   coalesces down, it never splits up a too-small setting).
@@ -24,6 +25,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,41 +129,35 @@ def cache_tables(
     spark: SparkSession,
     sf_dir: str,
     tables: tuple[str, ...] = TABLES,
-    rows_per_partition: int = 512,
 ) -> None:
-    """Materialize the testdata tables as a partitioned in-memory
-    columnar cache; subsequent ``load_table`` calls serve from it.
+    """Materialize the testdata tables as an in-memory columnar cache;
+    subsequent ``load_table`` calls serve from it.
 
     Why: the driver's testdata is one parquet file with ONE row group
-    per table, and a row group is Spark's minimum split unit — so
-    every cold scan runs as a single task no matter how many cores
-    exist. At 100 TB the lake layout would already be many files /
-    row groups and this function would be a no-op; on the bench box
-    it stands in for that layout by repartitioning the big tables
-    once, then serving all queries from the cache (classic warm-cache
-    warehouse benchmarking — the bench harness calls this in its
-    warm-up phase; correctness runs never do).
+    per table, and a row group is Spark's minimum split unit, so every
+    cold scan runs as a single task however large the table. The cache
+    stands in for the layout a lake of many files would have, then
+    serves every query (warm-cache warehouse benchmarking: the bench
+    harnesses call this in their warm-up phase; correctness runs never
+    do).
 
-    Partition sizing (r13 optimization round, guide §2/§6 — derive
-    partitioning from input size, never a constant): partitions =
-    clamp(rows / rows_per_partition, 1, cpus). The r12 shape
-    (repartition to the core count iff rows ≥ 50k) had both failure
-    modes measured this round: documents (5k rows at sf0.1) and
-    embeddings (2k) fell under the threshold and served as
-    SINGLE-partition caches, serializing every map-heavy text/
-    embedding kernel (shingling, HTML segmentation, PassJoin window
-    explosion) on a 32-core box — while flooring them at the full
-    core count instead swung the other way, inflating every
-    small-job-dominated path (writer commits, Lloyd/EM iterations)
-    with 32-task scheduling and 32-file fixture layouts (in-bench
-    steady at a flat 32: iceberg_update_dml 1.7→4.3 s,
-    delta_dml_on_dv_and_mapped 5.7→11.4 s — plans/r13/
-    bench_mid_flat32.json). Row-proportional width keeps per-task
-    batches large
-    enough to amortize task setup AND caps tiny tables below the
-    core count; big tables (events, lineitem, orders) still hit the
-    cpus cap. Both knobs are data-derived, so the driver's low-core
-    bench run and larger SFs scale automatically.
+    Partitioning: each table gets the partition count Spark's own file
+    planner would give its parquet bytes if row groups could split
+    (``FilePartition.maxSplitBytes``, from the session's
+    ``spark.sql.files.*`` confs). A table that fits one split is cached
+    as ``coalesce(1)``: its scan then reports ``SinglePartition``,
+    which satisfies every required distribution but broadcast, so a
+    group-by, window, sort or join over such tables plans no exchange.
+    On tiny tables the cost of a query is per job, not per row, and
+    each exchange costs a job (under AQE) or a range-sampling job
+    (before an ``ORDER BY``). Larger tables are spread round-robin over
+    their split count.
+
+    A single-partition cache serializes map-heavy kernels: single-
+    partition ``documents``/``embeddings`` caches at sf0.1 slowed the
+    shingling, HTML segmentation and PassJoin kernels on 32 cores.
+    Those are curation kernels; no registered benchmark workload runs
+    them, and ROADMAP item 7 retires them.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     app_id = _session_key(spark)
@@ -170,12 +166,11 @@ def cache_tables(
         key = (app_id, sf_dir, t)
         if key in _TABLE_CACHE:
             continue
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        added_rows += pq.read_metadata(path).num_rows
         df = load_table(spark, sf_dir, t)
-        n = df.count()
-        added_rows += n
-        parts = min(cpus, max(1, -(-n // rows_per_partition)))
-        if parts > 1:
-            df = df.repartition(parts)
+        parts = _file_splits(spark, os.path.getsize(path))
+        df = df.coalesce(1) if parts == 1 else df.repartition(parts)
         df = df.persist()
         df.count()
         _TABLE_CACHE[key] = df
@@ -204,6 +199,18 @@ def cache_tables(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(ipn),
         )
+
+
+def _file_splits(spark: SparkSession, nbytes: int) -> int:
+    """The partitions Spark's file planner cuts one file of ``nbytes``
+    into when it can split anywhere: ``FilePartition.maxSplitBytes``,
+    read from the session's ``spark.sql.files.*`` confs."""
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    parallelism = spark._jsparkSession.leafNodeDefaultParallelism()
+    per_core = (nbytes + open_cost) // parallelism
+    max_split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
+    return max(1, -(-nbytes // max_split))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -264,7 +271,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _nanos_columns(path: str) -> list[str]:
     """Names of timestamp[ns] columns in a parquet file's footer."""
-    import pyarrow.parquet as pq
     import pyarrow.types as pat
 
     schema = pq.read_schema(path)

@@ -304,14 +304,13 @@ _EMAIL = {"_n": "updated email", "new_email": "n@e.com", "previous_email": "o@e.
                 {"_p": "u4", **_EMAIL, "previous_email": " "},  # a blank is an id
                 {"_p": "u5", **_EMAIL, "previous_email": ""},  # empty: no edge
                 {"_p": "u6", "_p2": "a6", **_EMAIL},  # MAX_EDGES_PER_ROW edges
-                _EMAIL,  # NULL _p: email edges from NULL
+                _EMAIL,  # NULL _p: no email edges
             ],
             [
                 ("u1", "a1"),
                 ("u4", "n@e.com"), ("u4", " "),
                 ("u5", "n@e.com"),
                 ("u6", "a6"), ("u6", "n@e.com"), ("u6", "o@e.com"),
-                (None, "n@e.com"), (None, "o@e.com"),
             ],
         ),
         (

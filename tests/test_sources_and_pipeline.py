@@ -334,6 +334,31 @@ def test_ingest_observes_edges_only_within_the_map_room(
     }
 
 
+@pytest.mark.parametrize("room,path", [(None, "arrow"), (-1, "distributed")])
+def test_updated_email_without_p_adds_no_identity_edge(
+    spark, tmp_path, monkeypatch, room, path
+):
+    # an "updated email" row with no _p would yield edges from NULL,
+    # which join nothing: they are not counted as identity edges
+    from kissmetrics_to_database_spark.operators import identity
+
+    src = tmp_path / "src"
+    src.mkdir()
+    email = {"_n": "updated email", "new_email": "n@e.com", "previous_email": "o@e.com"}
+    rows = [{"_p": "u1", "_p2": "a1", "_n": "signup"}, email]
+    (src / "1.json").write_text("\n".join(json.dumps(r) for r in rows))
+    if room is not None:
+        monkeypatch.setattr(identity, "map_room", lambda map_dir, local_threshold=0: room)
+    lake = tmp_path / "lake"
+    res = pipeline.run_incremental(
+        spark, str(src), str(tmp_path / "state"), str(lake), fixed_date="2024-06-01"
+    )
+    assert (res.n_rows, res.n_identity_edges, res.identity_path) == (2, 1, path)
+    assert res.n_identity_members == 2
+    comp = dict(spark.read.parquet(str(lake / "identity_components")).collect())
+    assert comp == {"u1": "a1", "a1": "a1"}
+
+
 def test_pipeline_keeps_a_key_first_seen_on_the_last_line(spark, tmp_path):
     # past the 10,000-line sample the schema used to be inferred from
     src = tmp_path / "src"

@@ -6,7 +6,12 @@ names, and values (columns sorted by name, rows sorted by all
 columns — order-insensitive, exact equality; floats must match to the
 last bit, which the catalog guarantees by construction).
 
-Usage: python tools/oracle_check.py [--sf /root/testdata/sf0.01] [--only name]
+With ``--warm`` the tables are first cached with
+``session.cache_tables``, so the queries run on the warm layout the
+benchmarks serve from (one partition per small table) instead of the
+cold parquet scans.
+
+Usage: python tools/oracle_check.py [--sf <testdata dir>] [--only name] [--warm]
 """
 
 from __future__ import annotations
@@ -22,7 +27,11 @@ import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from kissmetrics_to_database_spark.session import TABLES, get_spark  # noqa: E402
+from kissmetrics_to_database_spark.session import (  # noqa: E402
+    TABLES,
+    cache_tables,
+    get_spark,
+)
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -182,11 +191,16 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default=None, help="comma-separated query names")
+    ap.add_argument(
+        "--warm", action="store_true", help="serve the tables from cache_tables"
+    )
     args = ap.parse_args()
 
     from kissmetrics_to_database_spark.plans import catalog  # noqa: E402
 
     spark = get_spark("oracle_check")
+    if args.warm:
+        cache_tables(spark, args.sf)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
