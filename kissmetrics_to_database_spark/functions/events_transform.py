@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Reserved Kissmetrics keys (SURVEY.md §1.3).
@@ -41,50 +41,75 @@ def sanitize_key(name: str) -> str:
     return re.sub(r"[- _]", "_", name)
 
 
-def sanitize_columns(df: DataFrame) -> DataFrame:
-    """Apply :func:`sanitize_key` to every column, deduping collisions.
-
-    The monolith keeps the first occurrence when two raw keys sanitize
-    to the same name (KissmetricsToDatabase.php:204-210); we do the
-    same, dropping later duplicates.
-    """
-    seen: set[str] = set()
-    keep: list[Column] = []
-    for c in df.columns:
-        s = sanitize_key(c)
-        if s in seen:
-            continue
-        seen.add(s)
-        keep.append(F.col(f"`{c}`").alias(s))
-    return df.select(*keep)
+# The transform is built as SQL text and applied with one ``selectExpr``
+# per projection: one analysis on the JVM and one py4j call each,
+# where a ``Column`` object per column and per operator costs a call
+# apiece. Every name a batch brings is dynamic, so each goes through
+# ``ident`` or ``sql_string``, never into the text as it is.
 
 
-def with_n_not_null(df: DataFrame, event_name_col: str = EVENT_NAME_KEY) -> DataFrame:
-    """P2+P3: preserve the raw event name, then NULL out empties.
-
-    Reference: ProcessFile.php:40 (``_n_not_null``),
-    KissmetricsToDatabase.php:281-286 (``_n = '' → NULL``).
-    """
-    c = F.col(f"`{event_name_col}`")
-    return df.withColumn("_n_not_null", F.coalesce(c, F.lit(""))).withColumn(
-        event_name_col, F.when(c == "", None).otherwise(c)
-    )
+def ident(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, inner backticks
+    doubled, so dots, quotes and backticks are part of the name."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def epoch_to_timestamp_str(col: Column) -> Column:
+def sql_string(value: str) -> str:
+    """``value`` as a SQL string literal (backslashes and quotes
+    escaped)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _with_columns(select: dict[str, str], new: dict[str, str]) -> dict[str, str]:
+    """``select`` (output name → SQL expression) after ``withColumn``
+    of each ``new`` entry: a column of that name (matched without
+    case, as Spark resolves it) is replaced in place, others are
+    appended. The ``new`` expressions read the input columns, not each
+    other."""
+    out = {}
+    for name, expr in select.items():
+        hit = next((n for n in new if n.lower() == name.lower()), None)
+        out[hit or name] = new[hit] if hit else expr
+    return out | {n: e for n, e in new.items() if n not in out}
+
+
+def _select(df: DataFrame, select: dict[str, str]) -> DataFrame:
+    return df.selectExpr(*[f"{e} AS {ident(n)}" for n, e in select.items()])
+
+
+def _with(df: DataFrame, new: dict[str, str]) -> DataFrame:
+    """``df.withColumns`` of SQL-text columns, in one ``selectExpr``."""
+    return _select(df, _with_columns({c: ident(c) for c in df.columns}, new))
+
+
+def _sanitized(columns: list[str]) -> dict[str, str]:
+    """P1: each sanitized name → the first raw column that sanitizes to
+    it. The monolith keeps the first occurrence when two raw keys
+    sanitize to the same name (KissmetricsToDatabase.php:204-210)."""
+    out: dict[str, str] = {}
+    for c in columns:
+        out.setdefault(sanitize_key(c), ident(c))
+    return out
+
+
+def _event_name(name: str, e: str) -> dict[str, str]:
+    """P2+P3: the raw event name ``e`` kept as ``_n_not_null``, then
+    empties NULLed in column ``name``. Reference: ProcessFile.php:40
+    (``_n_not_null``), KissmetricsToDatabase.php:281-286
+    (``_n = '' → NULL``)."""
+    return {
+        "_n_not_null": f"coalesce({e}, '')",
+        name: f"CASE WHEN {e} = '' THEN NULL ELSE {e} END",
+    }
+
+
+def _formatted_epoch(e: str) -> str:
     """P4/F9: unix-seconds → ``yyyy-MM-dd HH:mm:ss`` string, UTC.
-
-    Reference: KissmetricsToDatabase.php:289-291 (``date('Y-m-d H:i:s', $_t)``).
-    """
-    return F.date_format(F.from_unixtime(col.cast("long")), "yyyy-MM-dd HH:mm:ss")
+    Reference: KissmetricsToDatabase.php:289-291 (``date('Y-m-d H:i:s', $_t)``)."""
+    return f"date_format(from_unixtime(CAST({e} AS BIGINT)), 'yyyy-MM-dd HH:mm:ss')"
 
 
-def with_formatted_t(df: DataFrame, epoch_col: str = EPOCH_KEY) -> DataFrame:
-    """Replace the raw epoch column with its formatted form (P4)."""
-    return df.withColumn(epoch_col, epoch_to_timestamp_str(F.col(f"`{epoch_col}`")))
-
-
-def row_fingerprint(cols: list[Column | str], separator: str = "") -> Column:
+def _fingerprint(exprs: list[str]) -> str:
     """P5/F1/F3: md5 of all values concatenated in declared order.
 
     Reference: KissmetricsToDatabase.php:293 —
@@ -93,25 +118,42 @@ def row_fingerprint(cols: list[Column | str], separator: str = "") -> Column:
     reference uses no separator (collision-prone but kept for
     fidelity). ``concat_ws`` skips NULLs, which matches.
     """
-    exprs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.md5(F.concat_ws(separator, *[e.cast("string") for e in exprs]))
+    return "md5(concat_ws(''" + "".join(f", CAST({e} AS STRING)" for e in exprs) + "))"
+
+
+def _load_date(fixed_date: str | None) -> str:
+    """P6/F10: ``created_at`` load date. Reference: FileImporter.php:82-85
+    (``date('Y-m-d')`` at insert time). ``fixed_date`` pins it for
+    tests (FIXTURES.md determinism)."""
+    return f"to_date({sql_string(fixed_date)})" if fixed_date else "current_date()"
+
+
+def sanitize_columns(df: DataFrame) -> DataFrame:
+    """Rename every column by :func:`sanitize_key`, keeping the first
+    of two raw columns that sanitize to the same name."""
+    return _select(df, _sanitized(df.columns))
+
+
+def with_n_not_null(df: DataFrame, event_name_col: str = EVENT_NAME_KEY) -> DataFrame:
+    """Add ``_n_not_null`` and NULL out empty event names (P2+P3)."""
+    return _with(df, _event_name(event_name_col, ident(event_name_col)))
+
+
+def with_formatted_t(df: DataFrame, epoch_col: str = EPOCH_KEY) -> DataFrame:
+    """Replace the raw epoch column with its formatted form (P4)."""
+    return _with(df, {epoch_col: _formatted_epoch(ident(epoch_col))})
 
 
 def with_fingerprint(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Add the ``md5hash`` fingerprint over ``cols`` (default: all, in
     schema order — the declared ingest order)."""
     cols = cols if cols is not None else list(df.columns)
-    return df.withColumn("md5hash", row_fingerprint(cols))
+    return _with(df, {"md5hash": _fingerprint([ident(c) for c in cols])})
 
 
 def with_load_date(df: DataFrame, fixed_date: str | None = None) -> DataFrame:
-    """P6/F10: ``created_at`` load-date column.
-
-    Reference: FileImporter.php:82-85 (``date('Y-m-d')`` at insert
-    time). ``fixed_date`` pins it for tests (FIXTURES.md determinism).
-    """
-    d = F.to_date(F.lit(fixed_date)) if fixed_date else F.current_date()
-    return df.withColumn("created_at", d)
+    """Add the ``created_at`` load-date column (P6)."""
+    return _with(df, {"created_at": _load_date(fixed_date)})
 
 
 def non_blank_lines(df: DataFrame, col: str = "value") -> DataFrame:
@@ -119,7 +161,7 @@ def non_blank_lines(df: DataFrame, col: str = "value") -> DataFrame:
 
     Reference: ProcessFile.php:28-31, KissmetricsToDatabase.php:188-190.
     """
-    return df.filter(F.length(F.trim(F.col(col))) > 0)
+    return df.where(f"length(trim({ident(col)})) > 0")
 
 
 def transform_events(
@@ -129,17 +171,25 @@ def transform_events(
 ) -> DataFrame:
     """The full per-row transform pipeline (§3.1 restated in Spark).
 
-    sanitize keys → _n_not_null/_n-null → _t format → md5hash →
-    created_at. One narrow projection, no shuffle; Catalyst collapses
-    it into the scan.
+    sanitize keys → _n_not_null/_n-null → _t format, in one projection
+    of ``df``; then md5hash over its output (the transformed values)
+    and created_at, in a second. Narrow, no shuffle; Catalyst collapses
+    both into the scan.
     """
-    out = sanitize_columns(df)
-    if EVENT_NAME_KEY in out.columns:
-        out = with_n_not_null(out)
-    if EPOCH_KEY in out.columns:
-        out = with_formatted_t(out)
-    out = with_fingerprint(out, fingerprint_cols)
-    return with_load_date(out, fixed_date)
+    out = _sanitized(df.columns)
+    if EVENT_NAME_KEY in out:
+        out = _with_columns(out, _event_name(EVENT_NAME_KEY, out[EVENT_NAME_KEY]))
+    if EPOCH_KEY in out:
+        out = _with_columns(out, {EPOCH_KEY: _formatted_epoch(out[EPOCH_KEY])})
+    out = _select(df, out)
+    cols = fingerprint_cols if fingerprint_cols is not None else out.columns
+    return _with(
+        out,
+        {
+            "md5hash": _fingerprint([ident(c) for c in cols]),
+            "created_at": _load_date(fixed_date),
+        },
+    )
 
 
 def decayed_user_features(

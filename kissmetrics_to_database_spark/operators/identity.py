@@ -579,10 +579,10 @@ _EDGE = T.StructType(
 )
 
 
-def edge_columns(columns: list[str]) -> list[Column]:
-    """The alias-edge rule of Kissmetrics rows (P9-P11), as one
-    nullable ``struct<src, dst>`` column per edge source, NULL when the
-    row yields no edge from that source. Per
+def edge_columns(columns: list[str]) -> list[str]:
+    """The alias-edge rule of Kissmetrics rows (P9-P11), as SQL text:
+    one nullable ``struct<src, dst>`` expression per edge source, NULL
+    when the row yields no edge from that source. Per
     KissmetricsToDatabase.php:401-436:
     - alias records: ``_p2 != ''`` → edge (_p, _p2), skipping pairs
       whose first identity contains '@' (:414-416);
@@ -597,33 +597,25 @@ def edge_columns(columns: list[str]) -> list[Column]:
     cols = set(columns)
     out = []
     if "_p2" in cols:
-        p2 = F.col("_p2")
         out.append(
-            F.when(
-                p2.isNotNull() & (p2 != "") & ~F.col("_p").contains("@"),
-                F.struct(F.col("_p").alias("src"), p2.alias("dst")),
-            )
+            "CASE WHEN _p2 IS NOT NULL AND _p2 != '' AND NOT contains(_p, '@') "
+            "THEN named_struct('src', _p, 'dst', _p2) END"
         )
     if {"_n_not_null", "new_email", "previous_email"} <= cols:
         for name in ("new_email", "previous_email"):
-            email = F.col(name)
             out.append(
-                F.when(
-                    (F.col("_n_not_null") == "updated email")
-                    & F.col("_p").isNotNull()
-                    & email.isNotNull()
-                    & (email != ""),
-                    F.struct(F.col("_p").alias("src"), email.alias("dst")),
-                )
+                f"CASE WHEN _n_not_null = 'updated email' AND _p IS NOT NULL "
+                f"AND {name} IS NOT NULL AND {name} != '' "
+                f"THEN named_struct('src', _p, 'dst', {name}) END"
             )
     return out
 
 
 def alias_edges_kissmetrics(events: DataFrame) -> DataFrame:
     """The ``(src, dst)`` identity edges of raw Kissmetrics rows, one
-    row per non-NULL value of each :func:`edge_columns` column."""
+    row per non-NULL value of each :func:`edge_columns` expression."""
     parts = [
-        events.select(c.alias("e")).where(F.col("e").isNotNull()).select("e.*")
+        events.selectExpr(f"{c} AS e").where("e IS NOT NULL").select("e.*")
         for c in edge_columns(events.columns)
     ]
     if not parts:
@@ -634,15 +626,15 @@ def alias_edges_kissmetrics(events: DataFrame) -> DataFrame:
 def edge_list(columns: list[str]) -> Column:
     """An aggregate for ``DataFrame.observe``: every edge that rows with
     ``columns`` yield, the ``collect_list`` of each :func:`edge_columns`
-    column. Observed on the write of those rows, it collects the edges
-    with no job of their own; :func:`edges_table` turns the observed
-    value into the Arrow edges :func:`fold_into_map` takes. It holds
-    every edge on the driver, so observe it only when the rows' bound,
-    ``MAX_EDGES_PER_ROW`` each, fits :func:`map_room`."""
-    lists = [F.collect_list(c) for c in edge_columns(columns)]
+    expression. Observed on the write of those rows, it collects the
+    edges with no job of their own; :func:`edges_table` turns the
+    observed value into the Arrow edges :func:`fold_into_map` takes. It
+    holds every edge on the driver, so observe it only when the rows'
+    bound, ``MAX_EDGES_PER_ROW`` each, fits :func:`map_room`."""
+    lists = [f"collect_list({c})" for c in edge_columns(columns)]
     if not lists:
-        return F.array().cast(T.ArrayType(_EDGE))
-    return F.concat(*lists)
+        return F.expr(f"CAST(array() AS array<{_EDGE.simpleString()}>)")
+    return F.expr(f"concat({', '.join(lists)})")
 
 
 def edges_table(rows: list) -> pa.Table:

@@ -28,6 +28,16 @@ per committed row, fits the room the map leaves under the fold's
 driver limits (read from the map's parquet footers before the
 append). Otherwise the fold takes the edges as a DataFrame: it counts
 them, then collects them when they fit, or folds in Spark.
+
+The data of a batch is small, so the driver's cost of building those
+plans counts. Each call from Python into the JVM is a py4j socket
+round trip, which the JVM serves by reflection. A warm batch makes
+about 200 of them (perfbench's 20k-line batches): the parse, the
+batch's columns, the transform and the edge rule are SQL text, one
+``selectExpr`` per projection, and ``session.get_spark`` turns off
+PySpark's DataFrame debugging, which added about ten round trips to
+every ``Column`` call. Built from one ``Column`` per column and per
+operator with the debugging on, the same batch made about 2,800.
 """
 
 from __future__ import annotations
@@ -164,30 +174,29 @@ def _run_locked(
         return PipelineResult()
 
     batch = read_ndjson_with_repair(spark, spark.read.text(files))
-    transformed = events_transform.transform_events(
-        batch.good.drop("was_repaired"), fixed_date=fixed_date
-    )
-    if dedup_on_fingerprint:
-        transformed = transformed.dropDuplicates(["md5hash"])
-    map_dir = str(Path(lake_dir) / "identity_components")
-    fold = process_identities and "_p" in transformed.columns
-    max_edges = batch.n_committed * identity.MAX_EDGES_PER_ROW
-    observe_edges = fold and max_edges <= identity.map_room(map_dir)
-    metrics = []
-    if observe_edges:
-        metrics.append(identity.edge_list(transformed.columns).alias("edges"))
-    if dedup_on_fingerprint:
-        metrics.append(F.count(F.lit(1)).alias("rows"))
-    observed = Observation()
-    appended = transformed.observe(observed, *metrics) if metrics else transformed
-
     result = PipelineResult(
         files=files,
         n_rows=batch.n_committed,
         n_repaired=batch.n_repaired,
         n_quarantined=batch.n_quarantined,
     )
+    # from here on the parse is cached: whatever fails, release it, or
+    # a later read of the same path is answered from the stale cache
     try:
+        transformed = events_transform.transform_events(batch.rows(), fixed_date=fixed_date)
+        if dedup_on_fingerprint:
+            transformed = transformed.dropDuplicates(["md5hash"])
+        map_dir = str(Path(lake_dir) / "identity_components")
+        fold = process_identities and "_p" in transformed.columns
+        max_edges = batch.n_committed * identity.MAX_EDGES_PER_ROW
+        observe_edges = fold and max_edges <= identity.map_room(map_dir)
+        metrics = []
+        if observe_edges:
+            metrics.append(identity.edge_list(transformed.columns).alias("edges"))
+        if dedup_on_fingerprint:
+            metrics.append(F.count(F.lit(1)).alias("rows"))
+        observed = Observation()
+        appended = transformed.observe(observed, *metrics) if metrics else transformed
         appended.write.mode("append").parquet(str(Path(lake_dir) / "events"))
         seen = observed.get if metrics else {}
         result.n_rows = seen.get("rows", result.n_rows)

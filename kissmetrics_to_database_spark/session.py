@@ -19,6 +19,19 @@ Configuration notes (scale-first):
   default every pass evicted and recompiled them all (about 390 Janino
   compiles per pass). A long-lived session serving repeated queries
   should compile each class once.
+- PySpark's DataFrame debugging off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). When on,
+  every ``F.col`` and classic ``Column`` method call records its
+  Python call site in the JVM: two ``getActiveSession`` calls, a
+  ``conf.get``, a class lookup and a set/clear of
+  ``PySparkCurrentOrigin``: about ten py4j round trips on top of the
+  call's own one to three, plus a walk of the Python stack. That was
+  about two thirds of the ~2,800 round trips an ingest batch made.
+  What it gives up: an error's query context no longer names the
+  Python ``file:line`` that built the failing expression; Spark's
+  error condition and message stay.
+  PySpark reads the key once per Python process, at the first wrapped
+  call made with an active session.
 """
 
 from __future__ import annotations
@@ -81,6 +94,11 @@ def get_spark(
         # a pass compiles only what is new to it. A static conf: only
         # the first session of the process sets it.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Each Column call otherwise costs about ten more py4j round
+        # trips and a Python stack walk to record its call site; errors
+        # lose the Python file:line of the failing expression, not
+        # their condition or message (see the module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Local-mode driver heap: Spark's 1g default eventually OOMs a
         # long-lived session (the full test suite accumulates ~1.5k
         # stages of cached/checkpointed blocks before the 2M-edge CC

@@ -23,11 +23,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-LINE_TYPE = T.MapType(T.StringType(), T.StringType())
+from kissmetrics_to_database_spark.functions.events_transform import (
+    ident,
+    non_blank_lines,
+    sql_string,
+)
+
+LINE_TYPE = "map<string,string>"
 
 # A quote is "inner" (needs escaping) when it is not already escaped
 # and not in a JSON-structural position: not in opening position
@@ -42,43 +47,57 @@ LINE_TYPE = T.MapType(T.StringType(), T.StringType())
 _INNER_QUOTE = r'(?<!\\)(?<![{\[,:] {0,8})"(?!\s*[}\],:])'
 
 
-def repair_json_col(col: Column) -> Column:
-    """Escape unescaped inner quotes so the value parses."""
-    return F.regexp_replace(col, _INNER_QUOTE, '\\\\"')
+# The line with its inner quotes escaped (an escaped quote is the
+# replacement), as SQL over the raw line ``value``.
+_REPAIRED = "regexp_replace(value, {}, {})".format(
+    sql_string(_INNER_QUOTE), sql_string('\\\\"')
+)
 
 
 @dataclass
 class RepairedBatch:
-    """One parsed batch. ``good`` holds the committed rows (clean and
-    repaired, flagged by ``was_repaired``) with one string column per
-    key; ``quarantined`` holds the raw lines that fail even after the
-    repair. Both read the persisted parse: call :meth:`unpersist` once
-    they are consumed."""
+    """One parsed batch: its keys (sorted) and counts. :meth:`rows`
+    and ``good`` hold the committed rows (clean and repaired) with one
+    string column per key; ``quarantined`` holds the raw lines that
+    fail even after the repair. All read the persisted parse: call
+    :meth:`unpersist` once they are consumed."""
 
-    good: DataFrame
-    quarantined: DataFrame
+    keys: list[str]
     n_committed: int
     n_repaired: int
     n_quarantined: int
     _parsed: DataFrame
 
+    def rows(self, *extra: str) -> DataFrame:
+        """The committed rows, ``m[key]`` for each key in one
+        ``selectExpr``, then the ``extra`` columns of the parse."""
+        return self._parsed.where("m IS NOT NULL").selectExpr(
+            *[f"m[{sql_string(k)}] AS {ident(k)}" for k in self.keys], *extra
+        )
+
+    @property
+    def good(self) -> DataFrame:
+        """:meth:`rows` flagged by ``was_repaired``."""
+        return self.rows("was_repaired")
+
+    @property
+    def quarantined(self) -> DataFrame:
+        return self._parsed.where("m IS NULL").select("value")
+
     def unpersist(self) -> None:
         self._parsed.unpersist()
 
 
-def _last_value_wins(m: Column) -> Column:
-    """``m`` with one entry per key, the last one. A JSON object with
-    a duplicate key parses to a map that holds both entries, and a
-    lookup returns the first; PHP ``json_decode`` keeps the last.
-    Only lines that carry a duplicate pay for the rebuild."""
-    keys = F.map_keys(m)
-    last = F.map_from_entries(
-        F.filter(
-            F.map_entries(m),
-            lambda e, i: ~F.array_contains(F.slice(keys, i + 2, F.size(m)), e["key"]),
-        )
+def _last_value_wins(m: str) -> str:
+    """The map ``m`` with one entry per key, the last one. A JSON
+    object with a duplicate key parses to a map that holds both
+    entries, and a lookup returns the first; PHP ``json_decode`` keeps
+    the last. Only lines that carry a duplicate pay for the rebuild."""
+    last = (
+        f"map_from_entries(filter(map_entries({m}), (e, i) -> "
+        f"NOT array_contains(slice(map_keys({m}), i + 2, size({m})), e.key)))"
     )
-    return F.when(F.size(F.array_distinct(keys)) < F.size(m), last).otherwise(m)
+    return f"CASE WHEN size(array_distinct(map_keys({m}))) < size({m}) THEN {last} ELSE {m} END"
 
 
 def _parse_lines(lines: DataFrame) -> DataFrame:
@@ -90,20 +109,20 @@ def _parse_lines(lines: DataFrame) -> DataFrame:
     Catalyst keeps them apart instead of inlining ``from_json`` into
     every reference (CollapseProject never duplicates an expensive
     expression) — the parse runs once per line."""
-    first = lines.where(F.length(F.trim(F.col("value"))) > 0).select(
-        "value", F.from_json("value", LINE_TYPE).alias("_first")
-    )
-    final = first.select(
-        "value",
-        "_first",
-        F.coalesce(
-            F.col("_first"), F.from_json(repair_json_col(F.col("value")), LINE_TYPE)
-        ).alias("_m"),
-    ).select("value", "_first", _last_value_wins(F.col("_m")).alias("m"))
-    return final.select(
-        "m",
-        (F.col("_first").isNull() & F.col("m").isNotNull()).alias("was_repaired"),
-        F.when(F.col("m").isNull(), F.col("value")).alias("value"),
+    return (
+        non_blank_lines(lines)
+        .selectExpr("value", f"from_json(value, '{LINE_TYPE}') AS _first")
+        .selectExpr(
+            "value",
+            "_first",
+            f"coalesce(_first, from_json({_REPAIRED}, '{LINE_TYPE}')) AS _m",
+        )
+        .selectExpr("value", "_first", f"{_last_value_wins('_m')} AS m")
+        .selectExpr(
+            "m",
+            "_first IS NULL AND m IS NOT NULL AS was_repaired",
+            "CASE WHEN m IS NULL THEN value END AS value",
+        )
     )
 
 
@@ -117,9 +136,9 @@ def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
     ``Observation`` on that write takes the committed, repaired and
     quarantined counts and the union of the batch's keys over every
     line, so a key first seen on the last line is a column like any
-    other. The columns are that union sorted by name, each projected
-    as ``m[key]``; all are strings, like the reference's varchar
-    columns.
+    other. The columns are that union sorted by name (see
+    :meth:`RepairedBatch.rows`); all are strings, like the reference's
+    varchar columns.
     """
     lines = (
         path_or_df
@@ -127,26 +146,26 @@ def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
         else spark.read.text(str(path_or_df))
     )
     parsed = _parse_lines(lines).persist()
-    first_of_line = F.coalesce(F.col("pos"), F.lit(0)) == 0
+    first_of_line = "coalesce(pos, 0) = 0"
     observed = Observation()
-    parsed.select(
-        F.col("m").isNull().alias("bad"),
-        "was_repaired",
-        F.posexplode_outer(F.map_keys("m")).alias("pos", "key"),
-    ).observe(
-        observed,
-        F.count_if(first_of_line & ~F.col("bad")).alias("committed"),
-        F.count_if(first_of_line & F.col("was_repaired")).alias("repaired"),
-        F.count_if(first_of_line & F.col("bad")).alias("quarantined"),
-        F.collect_set("key").alias("keys"),
-    ).write.format("noop").mode("overwrite").save()
+    try:
+        parsed.selectExpr(
+            "m IS NULL AS bad",
+            "was_repaired",
+            "posexplode_outer(map_keys(m)) AS (pos, key)",
+        ).observe(
+            observed,
+            F.expr(f"count_if({first_of_line} AND NOT bad) AS committed"),
+            F.expr(f"count_if({first_of_line} AND was_repaired) AS repaired"),
+            F.expr(f"count_if({first_of_line} AND bad) AS quarantined"),
+            F.expr("collect_set(key) AS keys"),
+        ).write.format("noop").mode("overwrite").save()
+    except Exception:
+        parsed.unpersist()
+        raise
     stats = observed.get
-    m = F.col("m")
     return RepairedBatch(
-        good=parsed.where(m.isNotNull()).select(
-            *[m[k].alias(k) for k in sorted(stats["keys"])], "was_repaired"
-        ),
-        quarantined=parsed.where(m.isNull()).select("value"),
+        keys=sorted(stats["keys"]),
         n_committed=stats["committed"],
         n_repaired=stats["repaired"],
         n_quarantined=stats["quarantined"],

@@ -32,3 +32,22 @@ def compiles(spark):
     compiled so far in this JVM."""
     jvm = spark._jvm
     return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
+
+
+@pytest.fixture
+def round_trips(monkeypatch):
+    """Returns the number of py4j commands Python has sent to the JVM
+    since the fixture started, each one socket round trip: calls,
+    attribute lookups and the deletes of collected proxies."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = 0
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        nonlocal sent
+        sent += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    return lambda: sent

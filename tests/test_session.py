@@ -1,5 +1,5 @@
-"""Session tests: the warm table cache (session.cache_tables) and the
-generated-code cache size."""
+"""Session tests: the warm table cache (session.cache_tables), the
+generated-code cache size and PySpark's DataFrame debugging switch."""
 
 from __future__ import annotations
 
@@ -7,6 +7,9 @@ import contextlib
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.errors import utils as pyspark_errors_utils
 from pyspark.sql import functions as F
 
 from kissmetrics_to_database_spark import session
@@ -142,3 +145,12 @@ def test_codegen_cache_holds_more_than_100_classes(spark, compiles):
     before = compiles()
     assert plans[0].collect() == [(0,)] * 4
     assert compiles() == before
+
+
+def test_dataframe_debugging_is_off_and_errors_keep_their_condition(spark, monkeypatch):
+    # PySpark reads the setting once per process; make it read again
+    monkeypatch.setattr(pyspark_errors_utils, "_enable_debugging_cache", None)
+    assert pyspark_errors_utils.is_debugging_enabled() is False
+    with pytest.raises(AnalysisException) as err:
+        spark.range(1).select("missing")
+    assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
