@@ -121,20 +121,16 @@ def connected_components(
     if stats is None:
         stats = {}
     if local_threshold:
-        # size probe via limit+count: ships zero rows to the driver
-        # and does bounded work on huge graphs (a bare take() would
-        # deserialize up to threshold rows driver-side just to learn
-        # "too big", and pin them for the whole iterative loop)
-        if und.limit(local_threshold + 1).count() <= local_threshold:
-            # byte-budget guard (r8): row count alone doesn't bound
-            # driver heap — 1M edges of 200-char ids is ~400 MB of
-            # raw chars before Python boxing. One skinny aggregation
-            # prices the collect first.
-            raw_bytes = und.agg(
-                F.sum(
-                    F.length(F.col("src")) + F.length(F.col("dst"))
-                ).alias("b")
-            ).collect()[0]["b"]
+        # size probe: one aggregate prices the collect in rows and in
+        # id chars (row count alone doesn't bound driver heap — 1M
+        # edges of 200-char ids is ~400 MB of raw chars before Python
+        # boxing) and ships one row to the driver. It fills the
+        # persisted ``und``, which the distributed path scans anyway.
+        n_edges, raw_bytes = und.agg(
+            F.count(F.lit(1)),
+            F.sum(F.length(F.col("src")) + F.length(F.col("dst"))),
+        ).first()
+        if n_edges <= local_threshold:
             if raw_bytes is None or raw_bytes <= local_byte_budget:
                 try:
                     stats["path"] = "local"

@@ -24,7 +24,7 @@ broadcast-cross-joined, never collected through the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kissmetrics_to_database_spark.plans.catalog import query
@@ -626,10 +626,11 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 (suppliers who kept orders waiting), adapted:
     lateness := shipdate > orderdate + 60d on finalized ('F') orders;
     count per supplier of orders where they were late while some
-    co-supplier on the same order was on time. The EXISTS is a
-    left-semi self-join of the per-(order, supplier) lateness rollup
-    on the order key — both sides already share that partitioning
-    from the rollup shuffle."""
+    co-supplier on the same order was on time. The per-(order,
+    supplier) lateness rollup has one row per supplier of an order,
+    so an on-time row in a late row's order is always a co-supplier:
+    the EXISTS is ``min(late) = 0`` over a window on the order key,
+    the key the rollup is already partitioned by — no self-join."""
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
@@ -638,14 +639,11 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.max(F.when(_late(), 1).otherwise(0)).alias("late"))
     )
-    ontime = per.where(F.col("late") == 0).select(
-        F.col("l_orderkey").alias("_ok"), F.col("l_suppkey").alias("_sk")
-    )
-    waited = per.where(F.col("late") == 1).join(
-        ontime,
-        (F.col("l_orderkey") == F.col("_ok")) & (F.col("l_suppkey") != F.col("_sk")),
-        "left_semi",
-    )
+    # a NULL supplier is no co-supplier (``<>`` is never true for it)
+    ontime = F.min(F.when(F.col("l_suppkey").isNotNull(), F.col("late")))
+    waited = per.withColumn(
+        "_ontime", ontime.over(Window.partitionBy("l_orderkey"))
+    ).where((F.col("late") == 1) & (F.col("_ontime") == 0))
     return (
         waited.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from kissmetrics_to_database_spark.functions.events_transform import (
     ident,
     non_blank_lines,
+    sanitize_key,
     sql_string,
 )
 
@@ -56,23 +57,30 @@ _REPAIRED = "regexp_replace(value, {}, {})".format(
 
 @dataclass
 class RepairedBatch:
-    """One parsed batch: its keys (sorted) and counts. :meth:`rows`
-    and ``good`` hold the committed rows (clean and repaired) with one
-    string column per key; ``quarantined`` holds the raw lines that
-    fail even after the repair. All read the persisted parse: call
-    :meth:`unpersist` once they are consumed."""
+    """One parsed batch: its columns (sorted, each with the keys that
+    land in it) and counts. :meth:`rows` and ``good`` hold the
+    committed rows (clean and repaired) with one string column per
+    column; ``quarantined`` holds the raw lines that fail even after
+    the repair. All read the persisted parse: call :meth:`unpersist`
+    once they are consumed."""
 
-    keys: list[str]
+    columns: dict[str, list[str]]
     n_committed: int
     n_repaired: int
     n_quarantined: int
     _parsed: DataFrame
 
     def rows(self, *extra: str) -> DataFrame:
-        """The committed rows, ``m[key]`` for each key in one
+        """The committed rows, one column per name in one
         ``selectExpr``, then the ``extra`` columns of the parse."""
+
+        def value(keys: list[str]) -> str:
+            refs = ", ".join(f"m[{sql_string(k)}]" for k in keys)
+            return f"coalesce({refs})" if len(keys) > 1 else refs
+
         return self._parsed.where("m IS NOT NULL").selectExpr(
-            *[f"m[{sql_string(k)}] AS {ident(k)}" for k in self.keys], *extra
+            *[f"{value(keys)} AS {ident(name)}" for name, keys in self.columns.items()],
+            *extra,
         )
 
     @property
@@ -136,9 +144,8 @@ def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
     ``Observation`` on that write takes the committed, repaired and
     quarantined counts and the union of the batch's keys over every
     line, so a key first seen on the last line is a column like any
-    other. The columns are that union sorted by name (see
-    :meth:`RepairedBatch.rows`); all are strings, like the reference's
-    varchar columns.
+    other. The columns are that union sorted by name; all are
+    strings, like the reference's varchar columns.
     """
     lines = (
         path_or_df
@@ -164,8 +171,16 @@ def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
         parsed.unpersist()
         raise
     stats = observed.get
+    # Keys that name one lake column land in one column: equal after
+    # the P1 sanitize and without case, as Spark resolves names and the
+    # reference's MySQL columns compare them. The first in sorted order
+    # names it; its value is the first non-NULL of them in that order,
+    # row by row. Keys are matched within this batch, not with the lake.
+    variants: dict[str, list[str]] = {}
+    for k in sorted(stats["keys"]):
+        variants.setdefault(sanitize_key(k).lower(), []).append(k)
     return RepairedBatch(
-        keys=sorted(stats["keys"]),
+        columns={keys[0]: keys for keys in variants.values()},
         n_committed=stats["committed"],
         n_repaired=stats["repaired"],
         n_quarantined=stats["quarantined"],

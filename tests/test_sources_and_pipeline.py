@@ -350,6 +350,29 @@ def test_property_keys_with_dots_backticks_and_quotes_land_as_columns(spark, tmp
     assert got["md5hash"] == hashlib.md5("".join(values).encode()).hexdigest()
 
 
+def test_keys_of_one_lake_column_land_in_one_column(spark, tmp_path):
+    # Spark resolves names without case, like the reference's MySQL
+    # columns, so keys equal after sanitizing and without case are one
+    # column: the first key in sorted order names it, and each row's
+    # value is the first non-NULL of the keys in that order
+    rows = [
+        {"_p": "x", "_n": "e", "_t": 1, "A": "1", "a": "2", "a-b": "3", "A_B": "4"},
+        {"_p": "y", "_n": "e", "_t": 2, "a": "5", "a_b": "6"},
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "1.json").write_text("\n".join(json.dumps(r) for r in rows))
+    lake = str(tmp_path / "lake")
+    res = pipeline.run_incremental(
+        spark, str(src), str(tmp_path / "state"), lake, fixed_date="2024-06-01"
+    )
+    assert res.n_rows == 2
+    events = pipeline.read_events_lake(spark, lake)
+    assert [c for c in events.columns if c.lower() in ("a", "a_b")] == ["A", "A_B"]
+    got = {r["_p"]: (r["A"], r["A_B"]) for r in events.collect()}
+    assert got == {"x": ("1", "4"), "y": ("5", "6")}
+
+
 def test_failed_transform_releases_the_parse_and_keeps_the_watermark(
     spark, tmp_path, monkeypatch
 ):

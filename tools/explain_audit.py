@@ -77,8 +77,9 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     # Q11/Q15: scalar threshold via broadcast nested-loop (1-row side), not cartesian
     "tpch_q11_important_parts": (["BroadcastNestedLoopJoin"], ["CartesianProduct"]),
     "tpch_q15_top_supplier": (["BroadcastHashJoin Cross"], ["CartesianProduct"]),
-    # Q21: EXISTS compiles to left-semi
-    "tpch_q21_waiting_suppliers": (["LeftSemi"], ["CartesianProduct"]),
+    # Q21: the EXISTS is a min(late) window over the order key, no
+    # left-semi self-join
+    "tpch_q21_waiting_suppliers": (["Window"], ["LeftSemi", "CartesianProduct"]),
     # Q22: NOT EXISTS compiles to left-anti; date filter pushed to orders scan
     "tpch_q22_dormant_customers": (
         ["LeftAnti", "GreaterThanOrEqual(o_orderdate,"],
@@ -613,18 +614,20 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["BroadcastNestedLoopJoin", "hashpartitioning"],
         ["CartesianProduct"],
     ),
-    # retention cohorts: user-keyed aggregates/joins + a broadcast
-    # calendar-scale cohort-size join; no single-partition funnels
+    # retention cohorts: the cohort week is a user-keyed window, the
+    # cohort size a cohort-keyed window over the cells; no join, no
+    # single-partition funnels
     "retention_cohorts": (
-        ["hashpartitioning", "BroadcastHashJoin"],
-        ["CartesianProduct", "SinglePartition"],
+        ["hashpartitioning(user_id", "Window"],
+        ["Join", "CartesianProduct", "SinglePartition"],
     ),
     # attribution: touch join is a user-keyed equi-join with the 7-day
     # window as residual (SMJ/SHJ is the correct 100-TB plan — neither
-    # side broadcasts); the only SinglePartition is the 1-row 'direct'
-    # global aggregate, so it is allowed
+    # side broadcasts); the per-purchase touch count is a purchase-keyed
+    # window; the only SinglePartition is the 1-row global credit
+    # aggregate, so it is allowed
     "attribution_linear": (
-        ["hashpartitioning"],
+        ["hashpartitioning(event_id", "Window"],
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
     # --- round-10 additions ---
@@ -688,16 +691,18 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["hashpartitioning"],
         ["CartesianProduct"],
     ),
-    # funnel: chained user-keyed aggregates/joins; the only window is
-    # the 4-row readout (allowlisted below)
+    # funnel: the step timestamps are user-keyed windows, no join; the
+    # only unpartitioned window is the 4-row readout (allowlisted below)
     "funnel_conversion": (
-        ["hashpartitioning"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
+        ["hashpartitioning(user_id", "Window"],
+        ["Join", "CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
-    # DAU/MAU: two hash-partitioned distinct aggregates + month join
+    # DAU/MAU: one distinct projection, day- and (month, user)-keyed
+    # row_number windows and one month-keyed aggregate; no join, and no
+    # Expand (three countDistincts in one aggregate would plan one)
     "dau_mau_stickiness": (
-        ["hashpartitioning"],
-        ["CartesianProduct", "SinglePartition"],
+        ["hashpartitioning(month", "Window"],
+        ["Join", "Expand", "CartesianProduct", "SinglePartition"],
     ),
     # deletion vectors: the decoded (file, row-index) set broadcasts
     # into a LeftAnti against the metadata-tagged scan
