@@ -99,7 +99,6 @@ HEADLINE = [
     "event_burst_triangles",
     "weighted_doc_sample",
     "identity_pagerank",
-    "embedding_topk_int8",
     # round-2 tokenizer / sequence-assembly / incremental-ingest suite
     "bpe_pair_counts",
     "behavior_sequences",
@@ -123,16 +122,13 @@ HEADLINE = [
     "cdc_dedup_rewrite",
     "bpe_train_merges",
     "winnow_containment",
-    "pq_encode",
     "html_extract",
     "identity_communities",
     "ewma_rate_anomalies",
-    "pq_topk_adc",
     "lsh_recall_eval",
     "burst_exposure_overlap",
     "temporal_split_audit",
     "key_skew_report",
-    "ivfpq_topk",
     "bpe_segmentation_stats",
     # round-6 additions
     "bpe_encode_corpus",
@@ -257,8 +253,6 @@ def bench_trainers(spark, sf_dir: str) -> dict:
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    probes = emb.where(F.col("vec_id") < 2)
-    cents = emb.where(F.col("vec_id") < 8)
 
     def _occ_stats(segmented):
         # materialize before exploding — Generate re-evaluates the
@@ -287,25 +281,6 @@ def bench_trainers(spark, sf_dir: str) -> dict:
         "kmeans_clusters": (
             lambda: similarity.kmeans_train_centroids(emb, k=8, iters=2),
             lambda a: similarity.kmeans_lloyd(emb, k=8, iters=2, centroids=a),
-        ),
-        "pq_encode": (
-            lambda: similarity.pq_train_codebooks(emb, m=4, k_codes=8, iters=2),
-            lambda a: similarity.pq_encode(emb, m=4, k=8, iters=2, codebooks=a),
-        ),
-        "pq_topk_adc": (
-            lambda: similarity.pq_train_codebooks(emb, m=4, k_codes=8, iters=2),
-            lambda a: similarity.pq_topk(
-                emb, probes, m=4, k_codes=8, iters=2, k=5, codebooks=a
-            ),
-        ),
-        "ivfpq_topk": (
-            lambda: similarity.ivfpq_train_codebooks(
-                emb, cents, m=4, k_codes=8, iters=2
-            ),
-            lambda a: similarity.ivfpq_topk(
-                emb, probes, cents, m=4, k_codes=8, iters=2, k=5, nprobe=2,
-                codebooks=a,
-            ),
         ),
         "bpe_train_merges": (
             lambda: text.bpe_train_merges_local(docs, n_merges=4),

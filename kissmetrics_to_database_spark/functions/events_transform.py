@@ -30,6 +30,9 @@ ALIAS_KEY = "_p2"
 EVENT_NAME_KEY = "_n"
 EPOCH_KEY = "_t"
 
+# The columns the transform derives for every row (P2, P5, P6).
+DERIVED_COLUMNS = ("_n_not_null", "md5hash", "created_at")
+
 
 def sanitize_key(name: str) -> str:
     """P1/F7: column-name sanitize — ``-``, space, ``_`` → ``_``.

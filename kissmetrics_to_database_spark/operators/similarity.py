@@ -728,11 +728,8 @@ def _kmeans_iterate(
             ).alias("_c")
         )
     # materialize the (k-row) result: every consumer — the final
-    # assignment pass, quality metrics, PQ distance tables — would
-    # otherwise re-evaluate the whole iteration lineage per use, and
-    # with m subspace codebooks (PQ/IVF-PQ) the combined lazy tree
-    # grows multiplicatively. Lineage truncation here cut ivfpq_topk
-    # ~40% at sf0.1 with identical results (deterministic math).
+    # assignment pass, quality metrics — would otherwise re-evaluate
+    # the whole iteration lineage per use.
     # Collect-and-recreate rather than localCheckpoint: the table is
     # k rows (driver-scale), and localCheckpoint pins blocks to
     # executors with lineage severed — on a real cluster an executor
@@ -917,135 +914,6 @@ def semantic_dedup(
     )
 
 
-def scalar_quantize_int8(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 6,
-) -> tuple[DataFrame, DataFrame]:
-    """Symmetric per-dimension int8 scalar quantization — the standard
-    4× memory shrink that lets a 100 TB float corpus serve ANN from
-    hot storage.
-
-    Pass 1 finds each dimension's corpus-wide absolute maximum as a
-    skinny (pos, absmax) aggregation, collapsed to ONE row holding the
-    scale array ``round(absmax_d / 127, ndigits)``. Pass 2 broadcasts
-    that row and encodes map-only:
-    ``q_d = clamp(round(v_d / s_d), -127, 127)`` (0 where a dimension
-    is identically zero). The vectors are never shuffled; rounding the
-    scales before use makes the codes engine-reproducible.
-
-    Returns ``(encoded, scales)``: encoded = (id, _v original float
-    vec, _q int codes); scales = the 1-row (_s array) DataFrame for
-    downstream score math.
-    """
-    scales = (
-        emb.select(F.posexplode(vec_col).alias("pos", "val"))
-        .groupBy("pos")
-        .agg(
-            F.round(
-                F.max(F.abs(F.col("val").cast("double"))) / 127.0, ndigits
-            ).alias("s")
-        )
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "s"))),
-                lambda x: x["s"],
-            ).alias("_s")
-        )
-    )
-    q = F.zip_with(
-        F.col("_v"),
-        F.col("_s"),
-        lambda x, s: F.when(s == 0, F.lit(0)).otherwise(
-            F.greatest(
-                F.lit(-127),
-                F.least(F.lit(127), F.round(x.cast("double") / s, 0).cast("int")),
-            )
-        ),
-    )
-    encoded = (
-        emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
-        .crossJoin(F.broadcast(scales))
-        .select(id_col, "_v", q.alias("_q"))
-    )
-    return encoded, scales
-
-
-def int8_topk(
-    corpus: DataFrame,
-    probe_ids: DataFrame,
-    k: int = 5,
-    rerank: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 6,
-) -> DataFrame:
-    """ANN top-k over int8-quantized vectors with exact re-rank.
-
-    Stage 1 ranks candidates per probe by the quantized dot product
-    ``Σ q_a[d]·q_b[d]·s_d²`` — small-int multiplies over codes ¼ the
-    bytes of the floats, folded in-expression with the squared scales
-    from one broadcast row — and keeps the top ``rerank`` per probe.
-    Stage 2 re-scores only those with exact float cosine and keeps the
-    top ``k``: quantization error only costs recall for true
-    neighbors the coarse pass ranks below ``rerank``.
-
-    Deterministic: scales and both scores round to ``ndigits`` before
-    ranking; ties break on neighbor id. ``probe_ids`` is a DataFrame
-    of ids (joined against the encoded corpus so probes quantize with
-    corpus scales, exactly once).
-    """
-    encoded, scales = scalar_quantize_int8(corpus, id_col, vec_col, ndigits)
-    probes = encoded.join(
-        probe_ids.select(id_col), id_col
-    ).select(
-        F.col(id_col).alias("probe_id"),
-        F.col("_v").alias("_pv"),
-        F.col("_q").alias("_pq"),
-    )
-    s2 = scales.select(F.transform("_s", lambda s: s * s).alias("_s2"))
-    prod = F.zip_with(
-        F.col("_q"), F.col("_pq"), lambda a, b: (a * b).cast("double")
-    )
-    adot = F.aggregate(
-        F.zip_with(prod, F.col("_s2"), lambda p, s: p * s),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        encoded.crossJoin(F.broadcast(probes))
-        .crossJoin(F.broadcast(s2))
-        .where(F.col(id_col) != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.col("_v"),
-            F.col("_pv"),
-            F.round(adot, ndigits).alias("_qscore"),
-        )
-    )
-    wq = Window.partitionBy("probe_id").orderBy(
-        F.col("_qscore").desc(), F.col("neighbor_id")
-    )
-    cand = scored.withColumn("_qr", F.row_number().over(wq)).where(
-        F.col("_qr") <= rerank
-    )
-    exact = cand.select(
-        "probe_id",
-        "neighbor_id",
-        F.round(cosine(F.col("_v"), F.col("_pv")), 6).alias("score"),
-    )
-    wr = Window.partitionBy("probe_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "score", "rank")
-    )
-
-
 def random_project(
     df: DataFrame,
     m: int = 16,
@@ -1153,451 +1021,6 @@ def hard_negative_mining(
     )
 
 
-
-def _pq_code_columns(
-    df: DataFrame,
-    vec_col: str,
-    all_cents: list[DataFrame],
-    sub: int,
-    ndigits: int,
-) -> DataFrame:
-    """Append ``code_j`` / ``_d{j}`` columns for every subspace in ONE
-    map-only pass: each k-row codebook collapses to a single broadcast
-    row holding its cluster-sorted centroid array, and the per-vector
-    argmin folds in-expression (the :func:`kmeans_assign` shape,
-    generalized to m subspaces).
-
-    This replaces the r5 shape — m per-subspace ``kmeans_assign``
-    passes re-JOINED on the id — which at toy SF compiled to broadcast
-    joins but at 100 TB would be m full-corpus hash shuffles and m+1
-    corpus scans. Here the corpus is scanned ONCE and never exchanged;
-    ties and rounding are identical (round before argmin, smaller
-    cluster id wins via struct ordering on the cluster-ascending
-    array), so results are bit-equal to the join formulation.
-    """
-    out = df
-    for j, cents in enumerate(all_cents):
-        packed = cents.agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("cluster").alias("k"), F.col("_c").alias("c"))
-                )
-            ).alias(f"_cs{j}")
-        )
-        out = out.crossJoin(F.broadcast(packed))
-    m = len(all_cents)
-
-    def scorer(sv):
-        # single-arg lambda factory: a default-arg closure would make
-        # transform() treat the extra parameter as the element INDEX
-        return lambda cc: F.struct(
-            F.round(_l2_dist(sv, cc["c"]), ndigits).alias("d"),
-            cc["k"].alias("k"),
-        )
-
-    for j in range(m):
-        sv = F.slice(F.col(vec_col), j * sub + 1, sub)
-        best = F.array_min(F.transform(F.col(f"_cs{j}"), scorer(sv)))
-        out = out.withColumn(f"code_{j}", best["k"]).withColumn(
-            f"_d{j}", best["d"]
-        )
-    return out.drop(*[f"_cs{j}" for j in range(m)])
-
-
-def pq_encode(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 6,
-    codebooks: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Product quantization (Jégou et al., PAMI 2011): split each
-    vector into ``m`` contiguous subvectors, train an independent
-    k-means codebook per subspace (the same deterministic Lloyd
-    schedule as :func:`kmeans_lloyd`), and encode every vector as its
-    m nearest-codeword ids — the compression tier between int8 scalar
-    quantization (4×) and raw floats: m·log2(k) bits per vector
-    (here 12 bits vs 2048) while preserving approximate distances via
-    per-subspace lookup tables.
-
-    Returns (id, code_0..code_{m-1}, q_err) where q_err is the total
-    quantization error sqrt(Σ d_j²) over the subspace distances —
-    the reconstruction-quality number that decides m/k sizing.
-
-    Scale shape (r6): m concurrent codebook trainings, each over a
-    SLICED projection (subvectors never materialize as new tables —
-    the slice fuses into the scan); encoding is then ONE map-only
-    corpus pass — every codebook collapses to a single broadcast row
-    and all m argmins fold in-expression (``_pq_code_columns``), so
-    the corpus is scanned once and NEVER shuffled or re-joined.
-    """
-    dim = _probe_dim(emb, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    # train-once / serve-many: pass pre-trained ``codebooks`` (from
-    # :func:`pq_train_codebooks`) to skip training — the production
-    # split, and what bench.py times separately (VERDICT r5 item 4)
-    if codebooks is not None and len(codebooks) != m:
-        raise ValueError(f"expected {m} codebooks, got {len(codebooks)}")
-    all_cents = (
-        codebooks
-        if codebooks is not None
-        else _train_subspace_codebooks(
-            emb, vec_col, m, sub, k, iters, id_col, ndigits
-        )
-    )
-    out = _pq_code_columns(emb, vec_col, all_cents, sub, ndigits)
-    q_err = F.round(
-        F.sqrt(sum(F.col(f"_d{j}") * F.col(f"_d{j}") for j in range(m))),
-        ndigits,
-    )
-    return out.select(
-        id_col, *[f"code_{j}" for j in range(m)], q_err.alias("q_err")
-    )
-
-
-def pq_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    m: int = 4,
-    k_codes: int = 8,
-    iters: int = 2,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 6,
-    codebooks: list[DataFrame] | None = None,
-) -> DataFrame:
-    """PQ serving path: asymmetric distance computation (ADC) top-k.
-
-    The probe stays un-quantized; per subspace it computes a k_codes-
-    entry DISTANCE TABLE against the codebook, and every corpus
-    vector's approximate distance is the table lookups at its codes:
-    ``sqrt(Σ_j d_j(probe_subvec, codeword[code_j])²)``. The expensive
-    part per (probe, vector) pair is therefore m integer lookups, not
-    a dim-length float scan — the reason PQ serves billion-vector ANN
-    from RAM.
-
-    Plan shape: codebook training + encoding as :func:`pq_encode`;
-    the m distance tables are probes × k_codes rows (driver-scale,
-    broadcast); scoring is a chain of m broadcast equi-joins on the
-    code columns — the corpus vectors themselves never enter the
-    scoring join. Returns (probe_id, neighbor_id, adist, rank),
-    rank 1..k ascending approximate distance, ties on neighbor id,
-    self-matches excluded.
-    """
-    dim = _probe_dim(corpus, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-
-    if codebooks is not None and len(codebooks) != m:
-        raise ValueError(f"expected {m} codebooks, got {len(codebooks)}")
-    all_cents = (
-        codebooks
-        if codebooks is not None
-        else _train_subspace_codebooks(
-            corpus, vec_col, m, sub, k_codes, iters, id_col, ndigits
-        )
-    )
-    codes = _pq_code_columns(
-        corpus, vec_col, all_cents, sub, ndigits
-    ).select(id_col, *[f"code_{j}" for j in range(m)])
-    # ADC distance tables as ONE broadcast per-probe MAP (r13
-    # optimization round, guide §2.4/§3): the former shape built m
-    # separate (probe × k_codes) tables and chained m+1 broadcast
-    # hash joins through the corpus — m+1 BroadcastExchanges, each
-    # re-deriving the probe subtree. Here each probe row carries m
-    # code→distance maps (k_codes entries each, driver-scale by
-    # construction) and scoring is a SINGLE broadcast join with
-    # in-expression map lookups — the textbook ADC lookup-table
-    # layout. Distances are rounded identically inside the map
-    # build, so adist/rank are bit-equal to the join formulation.
-    pdt = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pvf")
-    )
-    for j in range(m):
-        packed = all_cents[j].agg(
-            F.collect_list(
-                F.struct(F.col("cluster").alias("k"), F.col("_c").alias("c"))
-            ).alias(f"_cb{j}")
-        )
-        pdt = pdt.crossJoin(F.broadcast(packed))
-
-    def _dmap(sv):
-        # single-arg lambda factory (see _pq_code_columns): a
-        # default-arg closure would make transform() pass the index
-        return lambda cc: F.struct(
-            cc["k"].alias("key"),
-            F.round(_l2_dist(sv, cc["c"]), ndigits).alias("value"),
-        )
-
-    pdt = pdt.select(
-        "probe_id",
-        *[
-            F.map_from_entries(
-                F.transform(
-                    F.col(f"_cb{j}"),
-                    _dmap(F.slice(F.col("_pvf"), j * sub + 1, sub)),
-                )
-            ).alias(f"_mt{j}")
-            for j in range(m)
-        ],
-    )
-    scored = codes.crossJoin(F.broadcast(pdt))
-    dists = [
-        F.element_at(F.col(f"_mt{j}"), F.col(f"code_{j}"))
-        for j in range(m)
-    ]
-    adist = F.round(
-        F.sqrt(sum(d * d for d in dists)),
-        ndigits,
-    )
-    ranked = (
-        scored.where(F.col(id_col) != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col(id_col).alias("neighbor_id"),
-            adist.alias("adist"),
-        )
-        # degenerate-codebook guard (r14, ADVICE r13 #1): a code with
-        # no map entry yields a NULL lookup; the pre-r13 inner joins
-        # DROPPED such rows, so drop them here too instead of letting
-        # NULL adist enter the rank window. No-op on trained
-        # codebooks (every code has an entry by construction).
-        .where(F.col("adist").isNotNull())
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("probe_id").orderBy(
-                    "adist", "neighbor_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= k)
-    )
-    return ranked
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    centroids: DataFrame,
-    m: int = 4,
-    k_codes: int = 8,
-    iters: int = 2,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 6,
-    codebooks: list[DataFrame] | None = None,
-) -> DataFrame:
-    """IVF-PQ: the production billion-vector ANN shape (FAISS IVFPQ) —
-    a coarse inverted file prunes the corpus to ``nprobe`` cells, and
-    within them candidates score by product-quantized RESIDUALS
-    (vector − cell centroid), which PQ encodes far more accurately
-    than raw vectors because residual magnitudes are a cell-diameter,
-    not a corpus-diameter.
-
-    Pipeline: (1) coarse assignment (:func:`ivf_assign`, broadcast
-    centroids); (2) residuals as a zip_with subtraction fused into the
-    scan; (3) ONE shared PQ codebook set trained on all residuals
-    (the standard IVFPQ layout) via the deterministic Lloyd schedule;
-    (4) per (probe, probed-cell) ADC distance tables — the probe's
-    OWN residual differs per cell, so tables are (probes × nprobe ×
-    k_codes) rows per subspace, still driver-scale, broadcast; (5)
-    scoring = candidate codes in probed cells joined through the m
-    tables — corpus vectors never enter the scoring join.
-
-    Returns (probe_id, neighbor_id, cell, adist, rank), rank 1..k
-    ascending approximate distance, deterministic ties, self-matches
-    excluded.
-    """
-    dim = _probe_dim(corpus, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-
-    c = centroids.select(
-        F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
-    )
-    # persist the residuals: every subspace training job would
-    # otherwise re-evaluate the coarse assignment (corpus x centroids
-    # cosine argmax) through this lineage — m x iters x 2 times
-    resid = _ivf_residuals(corpus, c, id_col, vec_col).persist()
-
-    if codebooks is not None and len(codebooks) != m:
-        raise ValueError(f"expected {m} codebooks, got {len(codebooks)}")
-    cents_by_sub = (
-        codebooks
-        if codebooks is not None
-        else _train_subspace_codebooks(
-            resid, "rv", m, sub, k_codes, iters, id_col, ndigits
-        )
-    )
-    # ONE map-only encoding pass over the residuals (packed broadcast
-    # codebooks) — the residual table is never re-scanned per subspace
-    # nor re-joined on the id (r6; see _pq_code_columns)
-    codes = _pq_code_columns(resid, "rv", cents_by_sub, sub, ndigits).select(
-        id_col, "cell", *[f"code_{j}" for j in range(m)]
-    )
-
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    )
-    pc_scored = p.join(F.broadcast(c)).select(
-        "probe_id",
-        "probe_vec",
-        F.col("cent_id").alias("cell"),
-        F.col("cent_vec"),
-        F.round(cosine(F.col("probe_vec"), F.col("cent_vec")), ndigits).alias(
-            "_s"
-        ),
-    )
-    wpc = Window.partitionBy("probe_id").orderBy(F.desc("_s"), "cell")
-    probe_cells = (
-        pc_scored.withColumn("_r", F.row_number().over(wpc))
-        .where(F.col("_r") <= nprobe)
-        .select(
-            "probe_id",
-            "cell",
-            F.zip_with(
-                F.col("probe_vec"), F.col("cent_vec"),
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("prv"),
-        )
-    )
-    # ADC distance tables as ONE broadcast (probe, cell) MAP table
-    # (r13 optimization round, guide §2.4/§3): the former shape
-    # chained m+1 broadcast hash joins (one per subspace table plus
-    # the probed-cell semi-restriction), re-deriving the probe_cells
-    # subtree m+1 times. Each (probe, probed-cell) row now carries m
-    # code→distance maps over the probe's per-cell RESIDUAL — still
-    # (probes × nprobe × k_codes) driver-scale entries — and scoring
-    # is a single broadcast join on the cell with in-expression map
-    # lookups. Rounding is identical inside the map build, so
-    # adist/rank are bit-equal to the join formulation.
-    pdt = probe_cells
-    for j in range(m):
-        packed = cents_by_sub[j].agg(
-            F.collect_list(
-                F.struct(F.col("cluster").alias("k"), F.col("_c").alias("c"))
-            ).alias(f"_cb{j}")
-        )
-        pdt = pdt.crossJoin(F.broadcast(packed))
-
-    def _dmap(sv):
-        # single-arg lambda factory (see _pq_code_columns)
-        return lambda cc: F.struct(
-            cc["k"].alias("key"),
-            F.round(_l2_dist(sv, cc["c"]), ndigits).alias("value"),
-        )
-
-    pdt = pdt.select(
-        "probe_id",
-        "cell",
-        *[
-            F.map_from_entries(
-                F.transform(
-                    F.col(f"_cb{j}"),
-                    _dmap(F.slice(F.col("prv"), j * sub + 1, sub)),
-                )
-            ).alias(f"_mt{j}")
-            for j in range(m)
-        ],
-    )
-    scored = codes.join(F.broadcast(pdt), "cell")
-    dists = [
-        F.element_at(F.col(f"_mt{j}"), F.col(f"code_{j}"))
-        for j in range(m)
-    ]
-    adist = F.round(
-        F.sqrt(sum(d * d for d in dists)),
-        ndigits,
-    )
-    ranked = (
-        scored.where(F.col(id_col) != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col(id_col).alias("neighbor_id"),
-            "cell",
-            adist.alias("adist"),
-        )
-        # degenerate-codebook guard (r14, ADVICE r13 #1) — see pq_topk
-        .where(F.col("adist").isNotNull())
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("probe_id").orderBy(
-                    "adist", "neighbor_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= k)
-    )
-    # materialize the (tiny) result so the residual cache can be
-    # released immediately (same pattern as minhash_lsh_dedup_pairs)
-    result = ranked.localCheckpoint(eager=True)
-    resid.unpersist()
-    return result
-
-
-def _train_subspace_codebooks(
-    src: DataFrame,
-    vec_col: str,
-    m: int,
-    sub: int,
-    k_codes: int,
-    iters: int,
-    id_col: str,
-    ndigits: int,
-) -> list[DataFrame]:
-    """Train the m per-subspace PQ codebooks CONCURRENTLY: each
-    training is an independent chain of Spark jobs, and submitting
-    them from worker threads lets the scheduler overlap their (small,
-    latency-bound at toy SF) stages — the standard multi-job Spark
-    pattern. Results are eagerly materialized k-row tables
-    (``_kmeans_iterate`` checkpoints), so ordering is deterministic
-    and thread-independent."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def train(j: int) -> DataFrame:
-        s = src.select(
-            id_col, F.slice(F.col(vec_col), j * sub + 1, sub).alias("_sv")
-        )
-        return _kmeans_iterate(
-            s, k=k_codes, iters=iters, id_col=id_col, vec_col="_sv",
-            ndigits=ndigits,
-        )
-
-    with ThreadPoolExecutor(max_workers=m) as ex:
-        return list(ex.map(train, range(m)))
-
-
-def _ivf_residuals(
-    corpus: DataFrame, c: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, cell, rv): coarse cell assignment + element-wise residual
-    vector (vector − cell centroid). ``c`` is the centroid table
-    aliased to (cent_id, cent_vec). Broadcast map-only."""
-    assigned = ivf_assign(corpus, c, id_col, vec_col)
-    return assigned.join(
-        F.broadcast(c), assigned["cell"] == c["cent_id"]
-    ).select(
-        id_col,
-        "cell",
-        F.zip_with(
-            F.col(vec_col), F.col("cent_vec"),
-            lambda x, y: x.cast("double") - y.cast("double"),
-        ).alias("rv"),
-    )
-
-
 def kmeans_train_centroids(
     emb: DataFrame,
     k: int = 8,
@@ -1614,57 +1037,6 @@ def kmeans_train_centroids(
         emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
         ndigits=ndigits,
     )
-
-
-def pq_train_codebooks(
-    emb: DataFrame,
-    m: int = 4,
-    k_codes: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 6,
-) -> list[DataFrame]:
-    """TRAIN phase of :func:`pq_encode` / :func:`pq_topk`: the m
-    per-subspace codebooks, eagerly materialized (k-row tables).
-    The shipped index artifact — encode/serve with
-    ``pq_encode(..., codebooks=...)`` / ``pq_topk(..., codebooks=...)``."""
-    dim = _probe_dim(emb, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    return _train_subspace_codebooks(
-        emb, vec_col, m, dim // m, k_codes, iters, id_col, ndigits
-    )
-
-
-def ivfpq_train_codebooks(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    m: int = 4,
-    k_codes: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 6,
-) -> list[DataFrame]:
-    """TRAIN phase of :func:`ivfpq_topk`: residual-subspace codebooks
-    (the FAISS IVFPQ artifact). The residual table is transient here —
-    serving recomputes it as part of corpus encoding (a broadcast
-    map-only pass), matching the production build/serve split where
-    codebooks persist and encodings stream."""
-    dim = _probe_dim(corpus, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    c = centroids.select(
-        F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
-    )
-    resid = _ivf_residuals(corpus, c, id_col, vec_col).persist()
-    try:
-        return _train_subspace_codebooks(
-            resid, "rv", m, dim // m, k_codes, iters, id_col, ndigits
-        )
-    finally:
-        resid.unpersist()
 
 
 def kcenter_coreset(
@@ -1882,8 +1254,8 @@ def margin_bitext_mining(
     ``applyInPandas`` BLAS kernel that emits only the skinny mutual
     candidates — pairs never enter a shuffle, the semantic_dedup
     recipe. At 100 TB the per-language matmul tiles like the
-    SemDeDup kernel, or both k-NN directions come from the IVF/PQ
-    index family with the margin arithmetic unchanged.
+    SemDeDup kernel, or both k-NN directions come from the IVF
+    index with the margin arithmetic unchanged.
     """
     dv = df.select(
         F.col(id_col).alias("id"), F.col(lang_col).alias("lang"),

@@ -28,7 +28,13 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kissmetrics_to_database_spark.operators import dedup, identity, similarity, text
+from kissmetrics_to_database_spark.operators import (
+    dedup,
+    identity,
+    schema_evolution,
+    similarity,
+    text,
+)
 from kissmetrics_to_database_spark.session import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -821,7 +827,7 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.get_json_object("props", "$.k").cast("long").alias("prop_k"),
     )
-    unioned = batch_a.unionByName(batch_b, allowMissingColumns=True)
+    unioned = schema_evolution.union_evolving([batch_a, batch_b])
     return (
         unioned.groupBy("event_type")
         .agg(
@@ -1032,7 +1038,7 @@ _VERIFIED_R03 = [
     "identity_pagerank", "corrupt_json_repair", "pack_training_sequences",
     "chunk_documents_sliding", "gopher_quality", "unigram_logprob",
     "span_dedup", "source_quota_cap", "kmeans_clusters", "semantic_dedup",
-    "perplexity_buckets", "embedding_topk_int8", "hashed_ngram_classifier",
+    "perplexity_buckets", "hashed_ngram_classifier",
     "cms_heavy_hitters", "hll_event_users", "bloom_novel_docs",
     "weighted_doc_sample", "histogram_quantiles", "zorder_layout",
     "event_burst_triangles", "hard_negative_mining", "vocab_zipf_fit",

@@ -3122,280 +3122,6 @@ SQL_KMEANS_CTES = """
 """
 
 
-def _pq_oracle(m: int = 4, sub: int = 16) -> str:
-    """Generate the unrolled product-quantization oracle: one copy of
-    the shared Lloyd CTE block per subspace, retargeted at the sliced
-    vector ``(embedding::DOUBLE[])[lo:hi]`` with suffixed CTE names,
-    then an m-way join of the per-subspace final assignments. The
-    total quantization error combines the per-subspace rounded
-    distances exactly as similarity.pq_encode does."""
-    import re as _re
-
-    blocks = []
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        block = SQL_KMEANS_CTES.replace(
-            "embedding::DOUBLE[]", f"(embedding::DOUBLE[])[{lo}:{hi}]"
-        )
-        for name in ("final", "c0", "a1", "c1", "a2", "c2", "e"):
-            block = _re.sub(rf"\b{name}\b", f"{name}_{j}", block)
-        blocks.append(block)
-    joins = " ".join(
-        f"JOIN final_{j} f{j} ON f0.vec_id = f{j}.vec_id"
-        for j in range(1, m)
-    )
-    codes = ", ".join(f"f{j}.cluster AS code_{j}" for j in range(m))
-    err = " + ".join(f"f{j}.d * f{j}.d" for j in range(m))
-    return (
-        "WITH " + ",".join(blocks)
-        + f"""
-    SELECT f0.vec_id, {codes}, round(sqrt({err}), 6) AS q_err
-    FROM final_0 f0 {joins}
-    ORDER BY f0.vec_id
-    """
-    )
-
-
-def _pq_topk_oracle(
-    m: int = 4, sub: int = 16, n_probes: int = 2, k: int = 5
-) -> str:
-    """Unrolled ADC oracle: the per-subspace Lloyd blocks from
-    :func:`_pq_oracle` plus probe distance tables (probes × codebook,
-    per subspace) and the m-way code-lookup join, ranked ascending by
-    approximate distance."""
-    import re as _re
-
-    blocks = []
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        block = SQL_KMEANS_CTES.replace(
-            "embedding::DOUBLE[]", f"(embedding::DOUBLE[])[{lo}:{hi}]"
-        )
-        for name in ("final", "c0", "a1", "c1", "a2", "c2", "e"):
-            block = _re.sub(rf"\b{name}\b", f"{name}_{j}", block)
-        blocks.append(block)
-    dtabs = []
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        dtabs.append(f"""
-    dtab_{j} AS (
-      SELECT p.probe_id, c.cluster AS code_{j},
-             round(list_distance(p.pv[{lo}:{hi}], c.c), 6) AS d_{j}
-      FROM probes p CROSS JOIN c2_{j} c
-    )""")
-    fjoins = " ".join(
-        f"JOIN final_{j} f{j} ON f0.vec_id = f{j}.vec_id"
-        for j in range(1, m)
-    )
-    djoins = "JOIN dtab_0 d0 ON d0.code_0 = f0.cluster " + " ".join(
-        f"JOIN dtab_{j} d{j} ON d{j}.probe_id = d0.probe_id "
-        f"AND d{j}.code_{j} = f{j}.cluster"
-        for j in range(1, m)
-    )
-    err = " + ".join(f"d{j}.d_{j} * d{j}.d_{j}" for j in range(m))
-    return (
-        "WITH " + ",".join(blocks)
-        + f""",
-    probes AS (
-      SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pv
-      FROM embeddings WHERE vec_id < {n_probes}
-    ),{",".join(dtabs)},
-    scored AS (
-      SELECT d0.probe_id, f0.vec_id AS neighbor_id,
-             round(sqrt({err}), 6) AS adist
-      FROM final_0 f0 {fjoins} {djoins}
-      WHERE f0.vec_id <> d0.probe_id
-    )
-    SELECT probe_id, neighbor_id, adist, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT probe_id, neighbor_id, adist,
-             row_number() OVER (
-               PARTITION BY probe_id ORDER BY adist, neighbor_id
-             ) AS rank
-      FROM scored
-    ) WHERE rank <= {k}
-    ORDER BY probe_id, rank
-    """
-    )
-
-
-_PQ_ARTIFACTS: dict[tuple, list] = {}
-
-
-def _pq_codebooks_cached(spark, sf_dir: str, m=4, k=8, iters=2):
-    """Train-once/serve-many for the PQ family (r8, classifier-memo
-    precedent): pq_encode and pq_topk_adc share one trained codebook
-    set per sf_dir. Training is deterministic, so the memo cannot
-    change results — it removes the repeated Lloyd schedules a model
-    registry would remove in production."""
-    key = ("pq", sf_dir, m, k, iters)
-    if key not in _PQ_ARTIFACTS:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _PQ_ARTIFACTS[key] = similarity.pq_train_codebooks(
-            emb, m=m, k_codes=k, iters=iters
-        )
-    return _PQ_ARTIFACTS[key]
-
-
-def _ivfpq_codebooks_cached(spark, sf_dir: str, m=4, k=8, iters=2):
-    key = ("ivfpq", sf_dir, m, k, iters)
-    if key not in _PQ_ARTIFACTS:
-        emb = load_table(spark, sf_dir, "embeddings")
-        centroids = emb.where(F.col("vec_id") < 8)
-        _PQ_ARTIFACTS[key] = similarity.ivfpq_train_codebooks(
-            emb, centroids, m=m, k_codes=k, iters=iters
-        )
-    return _PQ_ARTIFACTS[key]
-
-
-@query("pq_topk_adc", _pq_topk_oracle(4, 16, 2, 5))
-def q_pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ serving path: asymmetric distance computation top-k — the
-    probe stays float, per-subspace distance tables against the
-    trained codebooks are broadcast, and every corpus vector scores
-    via m code lookups instead of a dim-length scan. See
-    similarity.pq_topk; ranked ascending approximate distance,
-    self-matches excluded, k=5 for the first 2 vectors as probes."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < 2)
-    out = similarity.pq_topk(
-        emb, probes, m=4, k_codes=8, iters=2, k=5,
-        codebooks=_pq_codebooks_cached(spark, sf_dir),
-    )
-    return out.select(
-        "probe_id", "neighbor_id", "adist", F.col("rank").cast("long").alias("rank")
-    ).orderBy("probe_id", "rank")
-
-
-def _ivfpq_oracle(
-    m: int = 4, sub: int = 16, n_probes: int = 2, k: int = 5,
-    nprobe: int = 2, n_cents: int = 8,
-) -> str:
-    """Unrolled IVF-PQ oracle: coarse cosine cell assignment (the
-    embedding_topk_ivf pattern), element-wise residuals, the shared
-    per-subspace Lloyd blocks retargeted at residual slices, per
-    (probe, probed-cell) distance tables, and the cell-restricted
-    code-lookup scoring."""
-    import re as _re
-
-    dim = m * sub
-    blocks = []
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        block = SQL_KMEANS_CTES.replace(
-            "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings",
-            f"SELECT vec_id, rv[{lo}:{hi}] AS v FROM resid",
-        )
-        for name in ("final", "c0", "a1", "c1", "a2", "c2", "e"):
-            block = _re.sub(rf"\b{name}\b", f"{name}_{j}", block)
-        blocks.append(block)
-    dtabs = []
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        dtabs.append(f"""
-    dtab_{j} AS (
-      SELECT pc.probe_id, pc.cell, cj.cluster AS code_{j},
-             round(list_distance(pc.prv[{lo}:{hi}], cj.c), 6) AS d_{j}
-      FROM probe_cells pc CROSS JOIN c2_{j} cj
-    )""")
-    fjoins = " ".join(
-        f"JOIN final_{j} f{j} ON f{j}.vec_id = a.vec_id" for j in range(m)
-    )
-    djoins = " ".join(
-        f"JOIN dtab_{j} d{j} ON d{j}.probe_id = pc.probe_id "
-        f"AND d{j}.cell = a.cell AND d{j}.code_{j} = f{j}.cluster"
-        for j in range(m)
-    )
-    err = " + ".join(f"d{j}.d_{j} * d{j}.d_{j}" for j in range(m))
-    cos = _sql_cosine("p.embedding", "c.cvec")
-    return f"""
-    WITH cent AS (
-      SELECT vec_id AS cent_id, embedding AS cvec
-      FROM embeddings WHERE vec_id < {n_cents}
-    ),
-    assigned AS (
-      SELECT vec_id, embedding, cell FROM (
-        SELECT e.vec_id, e.embedding, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_sql_cosine("e.embedding", "c.cvec")} DESC,
-                          c.cent_id) AS r
-        FROM embeddings e CROSS JOIN cent c
-      ) WHERE r = 1
-    ),
-    resid AS (
-      SELECT a.vec_id, a.cell,
-             list_transform(range(1, {dim} + 1),
-               i -> (a.embedding::DOUBLE[])[i] - (c.cvec::DOUBLE[])[i]) AS rv
-      FROM assigned a JOIN cent c ON a.cell = c.cent_id
-    ),{",".join(blocks)},
-    probe_cells AS (
-      SELECT probe_id, cell, prv FROM (
-        SELECT p.vec_id AS probe_id, c.cent_id AS cell,
-               list_transform(range(1, {dim} + 1),
-                 i -> (p.embedding::DOUBLE[])[i] - (c.cvec::DOUBLE[])[i])
-                 AS prv,
-               row_number() OVER (PARTITION BY p.vec_id
-                 ORDER BY {cos} DESC, c.cent_id) AS r
-        FROM embeddings p CROSS JOIN cent c WHERE p.vec_id < {n_probes}
-      ) WHERE r <= {nprobe}
-    ),{",".join(dtabs)},
-    scored AS (
-      SELECT pc.probe_id, a.vec_id AS neighbor_id, a.cell,
-             round(sqrt({err}), 6) AS adist
-      FROM assigned a
-      JOIN probe_cells pc ON pc.cell = a.cell
-      {fjoins}
-      {djoins}
-      WHERE a.vec_id <> pc.probe_id
-    )
-    SELECT probe_id, neighbor_id, cell, adist, CAST(rnk AS BIGINT) AS rank
-    FROM (
-      SELECT *, row_number() OVER (
-               PARTITION BY probe_id ORDER BY adist, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= {k}
-    ORDER BY probe_id, rank
-    """
-
-
-@query("ivfpq_topk", _ivfpq_oracle(4, 16, 2, 5, 2, 8))
-def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ top-k (r5): the production billion-vector ANN shape —
-    coarse inverted-file pruning to nprobe=2 cells, candidates scored
-    by product-quantized RESIDUALS through per-(probe, cell) ADC
-    tables (residual magnitudes are cell-diameter, so the same code
-    budget quantizes far tighter than raw-vector PQ). See
-    similarity.ivfpq_topk; the oracle unrolls cell assignment,
-    residuals, four residual-slice Lloyd schedules, and the
-    cell-restricted code-lookup scoring — hash-exact end-to-end."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.where(F.col("vec_id") < 8)
-    probes = emb.where(F.col("vec_id") < 2)
-    out = similarity.ivfpq_topk(
-        emb, probes, centroids, m=4, k_codes=8, iters=2, k=5, nprobe=2,
-        codebooks=_ivfpq_codebooks_cached(spark, sf_dir),
-    )
-    return out.select(
-        "probe_id", "neighbor_id", "cell", "adist",
-        F.col("rank").cast("long").alias("rank"),
-    ).orderBy("probe_id", "rank")
-
-
-@query("pq_encode", _pq_oracle(4, 16))
-def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product quantization (Jégou et al. 2011): 4 independent
-    deterministic k-means codebooks over 16-dim subvector slices,
-    every vector encoded as its 4 nearest-codeword ids (12 bits vs
-    2048) plus the total quantization error — the compression tier
-    between int8 scalar quantization and raw floats. The oracle
-    unrolls the identical 4 Lloyd schedules over sliced lists. See
-    similarity.pq_encode for the no-full-vector-shuffle plan shape."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.pq_encode(
-        emb, m=4, k=8, iters=2,
-        codebooks=_pq_codebooks_cached(spark, sf_dir),
-    ).orderBy("vec_id")
-
-
 @query(
     "kmeans_clusters",
     f"""
@@ -3486,75 +3212,8 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — int8-quantized ANN (round 2)
+# EXT — n-gram classifiers, snapshot diff, URL canonicalization (round 2)
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "embedding_topk_int8",
-    f"""
-    WITH dims AS (
-      SELECT unnest(range(1, len(embedding) + 1)) AS pos,
-             unnest(embedding) AS val
-      FROM embeddings
-    ),
-    sc AS (
-      SELECT array_agg(s ORDER BY pos) AS s FROM (
-        SELECT pos, round(max(abs(val::DOUBLE)) / 127.0, 6) AS s
-        FROM dims GROUP BY pos
-      )
-    ),
-    s2 AS (SELECT list_transform(s, x -> x * x) AS s2 FROM sc),
-    enc AS (
-      SELECT vec_id, embedding AS v,
-             list_transform(
-               range(1, len(embedding) + 1),
-               i -> CASE WHEN s[i] = 0 THEN 0
-                    ELSE greatest(-127, least(127,
-                         CAST(round(embedding[i]::DOUBLE / s[i], 0) AS INT)))
-                    END
-             ) AS q
-      FROM embeddings CROSS JOIN sc
-    ),
-    pe AS (SELECT vec_id AS probe_id, v AS pv, q AS pq FROM enc WHERE vec_id < 8),
-    qs AS (
-      SELECT p.probe_id, e.vec_id AS neighbor_id, e.v, p.pv,
-             round(list_sum(list_transform(
-               range(1, len(e.q) + 1),
-               i -> e.q[i]::DOUBLE * p.pq[i]::DOUBLE * s2[i]
-             )), 6) AS qscore
-      FROM enc e CROSS JOIN pe p CROSS JOIN s2
-      WHERE e.vec_id <> p.probe_id
-    ),
-    cand AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY probe_id ORDER BY qscore DESC, neighbor_id) AS qr
-        FROM qs
-      ) WHERE qr <= 20
-    )
-    SELECT probe_id, neighbor_id, score, CAST(rnk AS BIGINT) AS rank FROM (
-      SELECT probe_id, neighbor_id,
-             {_sql_cosine('v', 'pv')} AS score,
-             row_number() OVER (
-               PARTITION BY probe_id
-               ORDER BY {_sql_cosine('v', 'pv')} DESC, neighbor_id) AS rnk
-      FROM cand
-    ) WHERE rnk <= 5
-    ORDER BY probe_id, rank
-    """,
-)
-def q_embedding_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-5 for 8 probes via symmetric int8 scalar quantization
-    (corpus-absmax scales) with a top-20 quantized-dot candidate pass
-    and exact float-cosine re-rank. The memory-bound scale play: codes
-    are ¼ the bytes of the floats, the coarse pass never touches a
-    float vector, and recall loss is confined to true neighbors the
-    quantized ranking pushes below the re-rank window."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe_ids = emb.where(F.col("vec_id") < 8).select("vec_id")
-    out = similarity.int8_topk(emb, probe_ids, k=5, rerank=20)
-    return out.orderBy("probe_id", "rank")
 
 
 @query(
@@ -3841,7 +3500,7 @@ _CLASSIFIER_WEIGHTS: dict[str, list[float]] = {}
 
 def _trained_classifier_weights(spark, sf_dir: str) -> list[float]:
     """Train-once/serve-many for the quality classifier (r8, the r6
-    kmeans/PQ precedent): the three classifier queries (confusion,
+    k-means precedent): the three classifier queries (confusion,
     calibration bins, threshold sweep) share one trained artifact per
     sf_dir instead of re-running identical 3-iteration GD three
     times. Training is deterministic (integer micro-unit GD), so the
@@ -9602,7 +9261,7 @@ def _ivf_route_centroids(
     spark: SparkSession, sf_dir: str, k: int = 8
 ) -> DataFrame:
     """Train-once/serve-many centroids for the IVF candidate routes
-    (the _pq_codebooks_cached precedent): one kmeans_train_centroids
+    (the classifier-weights memo precedent): one kmeans_train_centroids
     (iters=2 — the exact Lloyd schedule the shared SQL replays) per
     (sf_dir, k), shared across the IVF-route queries. The one-sided
     decontamination route keeps k=8 (its cost |eval|·n/K is LINEAR

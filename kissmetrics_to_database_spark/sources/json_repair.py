@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kissmetrics_to_database_spark.functions.events_transform import (
+    DERIVED_COLUMNS,
     ident,
     non_blank_lines,
     sanitize_key,
@@ -176,11 +177,17 @@ def read_ndjson_with_repair(spark, path_or_df) -> RepairedBatch:
     # reference's MySQL columns compare them. The first in sorted order
     # names it; its value is the first non-NULL of them in that order,
     # row by row. Keys are matched within this batch, not with the lake.
+    # A key that names a column the transform derives would lose its
+    # values to it, so it lands in ``prop_<that column>`` instead.
+    def column(key: str) -> str:
+        name = sanitize_key(key).lower()
+        return f"prop_{name}" if name in DERIVED_COLUMNS else key
+
     variants: dict[str, list[str]] = {}
-    for k in sorted(stats["keys"]):
-        variants.setdefault(sanitize_key(k).lower(), []).append(k)
+    for k in sorted(stats["keys"], key=lambda k: (column(k), k)):
+        variants.setdefault(sanitize_key(column(k)).lower(), []).append(k)
     return RepairedBatch(
-        columns={keys[0]: keys for keys in variants.values()},
+        columns={column(keys[0]): keys for keys in variants.values()},
         n_committed=stats["committed"],
         n_repaired=stats["repaired"],
         n_quarantined=stats["quarantined"],

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -11,12 +13,30 @@ sys.path.insert(0, str(ROOT))
 from kissmetrics_to_database_spark.session import get_spark
 
 
+def _running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
 @pytest.hookimpl(tryfirst=True)
 def pytest_configure(config):
-    # pytest empties --basetemp at the start of a run, so keep it
-    # inside this checkout whatever directory pytest is started from
+    # pytest empties --basetemp at the start of a run. Each run gets its
+    # own directory inside this checkout, whatever directory pytest is
+    # started from, so a second run does not delete the files of one in
+    # progress; the directories of runs that have ended are removed.
     if config.option.basetemp is None:
-        config.option.basetemp = str(ROOT / ".tmp")
+        runs = ROOT / ".tmp"
+        runs.mkdir(exist_ok=True)
+        for old in runs.glob("run-*"):
+            pid = old.name.removeprefix("run-")
+            if pid.isdigit() and not _running(int(pid)):
+                shutil.rmtree(old, ignore_errors=True)
+        config.option.basetemp = str(runs / f"run-{os.getpid()}")
 
 
 @pytest.fixture(scope="session")

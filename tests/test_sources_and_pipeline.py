@@ -3,6 +3,7 @@ discovery, incremental pipeline idempotency, schema evolution."""
 
 from __future__ import annotations
 
+import datetime
 import gc
 import hashlib
 import json
@@ -371,6 +372,40 @@ def test_keys_of_one_lake_column_land_in_one_column(spark, tmp_path):
     assert [c for c in events.columns if c.lower() in ("a", "a_b")] == ["A", "A_B"]
     got = {r["_p"]: (r["A"], r["A_B"]) for r in events.collect()}
     assert got == {"x": ("1", "4"), "y": ("5", "6")}
+
+
+def test_keys_named_like_derived_columns_keep_their_values(spark, tmp_path):
+    # the transform derives created_at, md5hash and _n_not_null for
+    # every row: a key that names one of them keeps its values in
+    # prop_<that column>, and a prop_<that column> key joins it
+    rows = [
+        {"_p": "x", "_n": "e", "_t": 1, "created-at": "mine", "MD5hash": "h",
+         "_n not null": "n"},
+        {"_p": "y", "_n": "e", "_t": 2, "prop_created_at": "p"},
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "1.json").write_text("\n".join(json.dumps(r) for r in rows))
+    lake = str(tmp_path / "lake")
+    res = pipeline.run_incremental(
+        spark, str(src), str(tmp_path / "state"), lake, fixed_date="2024-06-01"
+    )
+    assert res.n_rows == 2
+    events = pipeline.read_events_lake(spark, lake)
+    assert sorted(events.columns) == [
+        "_n", "_n_not_null", "_p", "_t", "created_at", "md5hash",
+        "prop__n_not_null", "prop_created_at", "prop_md5hash",
+    ]
+    got = {r["_p"]: r.asDict() for r in events.collect()}
+    assert [
+        (got[p]["prop_created_at"], got[p]["prop_md5hash"], got[p]["prop__n_not_null"])
+        for p in ("x", "y")
+    ] == [("mine", "h", "n"), ("p", None, None)]
+    assert {(r["created_at"], r["_n_not_null"]) for r in got.values()} == {
+        (datetime.date(2024, 6, 1), "e")
+    }
+    values = [got["x"][c] for c in events.columns if c not in ("md5hash", "created_at")]
+    assert got["x"]["md5hash"] == hashlib.md5("".join(values).encode()).hexdigest()
 
 
 def test_failed_transform_releases_the_parse_and_keeps_the_watermark(

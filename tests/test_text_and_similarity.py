@@ -372,37 +372,6 @@ def test_perplexity_buckets_order_and_cutoffs(spark):
     assert ranks == sorted(ranks, reverse=True)
 
 
-def test_scalar_quantize_int8_codes_and_error_bound(spark):
-    rows = [(0, [1.0, -0.5]), (1, [0.5, 0.25]), (2, [-1.0, 0.5]), (3, [0.0, 0.0])]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    encoded, scales = similarity.scalar_quantize_int8(df)
-    s = scales.collect()[0]["_s"]
-    # per-dim scale = round(absmax/127, 6)
-    assert s == [round(1.0 / 127, 6), round(0.5 / 127, 6)]
-    out = {r["vec_id"]: r["_q"] for r in encoded.collect()}
-    for vid, vec in rows:
-        for d, (x, code) in enumerate(zip(vec, out[vid])):
-            assert -127 <= code <= 127
-            # reconstruction error bounded by half a quantization step
-            assert abs(code * s[d] - x) <= s[d] / 2 + 1e-9
-    # absmax element hits ±127 exactly
-    assert out[0][0] == 127 and out[2][0] == -127
-
-
-def test_int8_topk_full_rerank_matches_brute_force(spark):
-    # deterministic pseudo-random corpus; rerank >= corpus size makes
-    # stage 2 exhaustive, so the result must equal exact brute force
-    rows = [
-        (i, [((i * 7 + d * 13) % 19 - 9) / 9.0 for d in range(8)])
-        for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    probes = df.where("vec_id < 4")
-    exact = similarity.brute_force_topk(df, probes, k=3)
-    quant = similarity.int8_topk(df, probes.select("vec_id"), k=3, rerank=30)
-    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, quant.collect()))
-
-
 def test_hashed_ngram_classifier_matches_python(spark):
     rows = [(0, "the quick brown fox"), (1, "hello"), (2, "a b a b")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -533,41 +502,6 @@ def test_bpe_fold_handles_self_overlap(spark):
     assert got[1] == (1, "aa", "a", "aaa")
 
 
-def test_pq_encode_exact_on_codebook_vectors(spark):
-    # corpus = 8 distinct vectors repeated: with k=8 codewords per
-    # subspace, every vector IS a codeword after convergence, so the
-    # quantization error is exactly 0 and codes are consistent for
-    # identical vectors
-    from kissmetrics_to_database_spark.operators import similarity as sim
-
-    base = [[float((i * 7 + d) % 9) for d in range(8)] for i in range(8)]
-    # ids 0..7 are the 8 distinct vectors (the deterministic first-k
-    # init picks exactly them as codewords); higher ids are repeats
-    rows = [(i, base[i]) for i in range(8)] + [
-        (100 + i * 10 + r, base[i]) for i in range(8) for r in range(2)
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = sim.pq_encode(df, m=2, k=8, iters=2).collect()
-    assert len(out) == 24
-    codes = {}
-    for r in out:
-        assert r["q_err"] == 0.0
-        assert 0 <= r["code_0"] < 8 and 0 <= r["code_1"] < 8
-        i = r["vec_id"] if r["vec_id"] < 8 else (r["vec_id"] - 100) // 10
-        code = (r["code_0"], r["code_1"])
-        assert codes.setdefault(tuple(base[i]), code) == code
-
-
-def test_pq_encode_rejects_indivisible_dim(spark):
-    import pytest
-
-    from kissmetrics_to_database_spark.operators import similarity as sim
-
-    df = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], ["vec_id", "embedding"])
-    with pytest.raises(ValueError, match="not divisible"):
-        sim.pq_encode(df, m=2)
-
-
 def test_html_to_text_ground_truth(spark):
     from kissmetrics_to_database_spark.operators.text import html_to_text
 
@@ -585,56 +519,6 @@ def test_html_to_text_ground_truth(spark):
     out = {r["doc_id"]: r["text_clean"] for r in html_to_text(df).collect()}
     for i, _, want in cases:
         assert out[i] == want, (i, out[i])
-
-
-def test_pq_topk_adc_exact_on_codebook_corpus(spark):
-    # when every vector IS a codeword (zero quantization error), the
-    # ADC distance equals the true subspace-decomposed distance, so
-    # the top-1 neighbor of any probe is an exact duplicate at 0.0
-    from kissmetrics_to_database_spark.operators import similarity as sim
-
-    base = [[float((i * 7 + d) % 9) for d in range(8)] for i in range(8)]
-    rows = [(i, base[i]) for i in range(8)] + [
-        (100 + i, base[i]) for i in range(8)
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    probes = df.where("vec_id < 2")
-    out = sim.pq_topk(df, probes, m=2, k_codes=8, iters=2, k=3).collect()
-    by_probe = {}
-    for r in out:
-        by_probe.setdefault(r["probe_id"], []).append(r)
-    for pid, rs in by_probe.items():
-        rs.sort(key=lambda r: r["rank"])
-        # rank 1 = the duplicate at distance exactly 0
-        assert rs[0]["neighbor_id"] == 100 + pid and rs[0]["adist"] == 0.0
-        assert [r["rank"] for r in rs] == [1, 2, 3]
-        assert all(a["adist"] <= b["adist"] for a, b in zip(rs, rs[1:]))
-
-
-def test_ivfpq_zero_residual_corpus(spark):
-    # every vector sits exactly ON its cell centroid: residuals are
-    # all-zero, so every candidate in a probed cell scores adist 0.0
-    # and ranking falls back to the deterministic id tie-break
-    from kissmetrics_to_database_spark.operators import similarity as sim
-
-    c0 = [1.0, 0.0] * 4
-    c1 = [0.0, 1.0] * 4
-    rows = [(0, c0), (1, c1)] + [
-        (10 + i, c0 if i % 2 == 0 else c1) for i in range(8)
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = df.where("vec_id < 2")
-    probes = df.where("vec_id = 0")
-    out = sorted(
-        sim.ivfpq_topk(
-            df, probes, cents, m=2, k_codes=4, iters=1, k=3, nprobe=1
-        ).collect(),
-        key=lambda r: r["rank"],
-    )
-    assert [r["adist"] for r in out] == [0.0, 0.0, 0.0]
-    # cell 0 members sorted by id after the self-exclusion
-    assert [r["neighbor_id"] for r in out] == [10, 12, 14]
-    assert all(r["cell"] == 0 for r in out)
 
 
 def test_bpe_apply_merges_matches_training_segmentation(spark):
@@ -774,7 +658,7 @@ def test_probe_dim_empty_input_raises(spark):
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty embedding input"):
-        sim.pq_encode(empty, m=2, k=2, iters=1)
+        sim.random_project(empty)
 
 
 def test_train_serve_split_matches_end_to_end(spark):
@@ -785,30 +669,9 @@ def test_train_serve_split_matches_end_to_end(spark):
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
-    probes = emb.where("vec_id < 2")
-    cents = emb.where("vec_id < 8")
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
-
-    cb = sim.pq_train_codebooks(emb, m=4, k_codes=8, iters=2)
-    assert rows(sim.pq_encode(emb, m=4, k=8, iters=2, codebooks=cb)) == rows(
-        sim.pq_encode(emb, m=4, k=8, iters=2)
-    )
-    assert rows(
-        sim.pq_topk(emb, probes, m=4, k_codes=8, iters=2, k=5, codebooks=cb)
-    ) == rows(sim.pq_topk(emb, probes, m=4, k_codes=8, iters=2, k=5))
-
-    icb = sim.ivfpq_train_codebooks(emb, cents, m=4, k_codes=8, iters=2)
-    assert rows(
-        sim.ivfpq_topk(
-            emb, probes, cents, m=4, k_codes=8, iters=2, k=5, nprobe=2,
-            codebooks=icb,
-        )
-    ) == rows(
-        sim.ivfpq_topk(emb, probes, cents, m=4, k_codes=8, iters=2, k=5,
-                       nprobe=2)
-    )
 
     kc = sim.kmeans_train_centroids(emb, k=8, iters=2)
     assert rows(sim.kmeans_lloyd(emb, k=8, iters=2, centroids=kc)) == rows(

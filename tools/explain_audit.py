@@ -283,12 +283,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["BroadcastHashJoin"],
         ["Window", "SortMergeJoin", "CartesianProduct"],
     ),
-    # int8 ANN: probes + squared scales broadcast into the coarse
-    # pass (NLJ on 1-row/8-row sides); the corpus never sort-merges
-    "embedding_topk_int8": (
-        ["BroadcastNestedLoopJoin"],
-        ["SortMergeJoin", "CartesianProduct"],
-    ),
     # filtered ANN: the (cell, label) predicate joins the inverted
     # list to BROADCAST probe-cells as a hash join — the label filter
     # is part of the join key, never a post-filter; the corpus never
@@ -877,14 +871,6 @@ def main() -> int:
             .agg(F.round(F.avg(F.col("val").cast("double")), 6).alias("m"))
         )
 
-    def _pq_encode_serve_plan():
-        from kissmetrics_to_database_spark.operators import similarity
-        from kissmetrics_to_database_spark.session import load_table
-
-        emb = load_table(spark, args.sf, "embeddings")
-        cb = similarity.pq_train_codebooks(emb, m=4, k_codes=8, iters=2)
-        return similarity.pq_encode(emb, m=4, k=8, iters=2, codebooks=cb)
-
     # r9: the artifact BUILD plans (catalog queries now serve these
     # from parquet — the scale-critical shapes live in the builders)
     def _cosine_pairs_build_plan():
@@ -1140,13 +1126,6 @@ def main() -> int:
             _kmeans_update_plan,
             ["hashpartitioning(cluster"],
             ["hashpartitioning(vec_id", "SortMergeJoin", "CartesianProduct"],
-        ),
-        # PQ serve path: encoding must be ONE corpus scan with packed
-        # broadcast codebooks — no id re-join, no corpus exchange (r6)
-        "op:pq_encode_serve": (
-            _pq_encode_serve_plan,
-            ["BroadcastNestedLoopJoin"],
-            ["SortMergeJoin", "hashpartitioning(vec_id", "CartesianProduct"],
         ),
         "op:ivf_layout_prune": (
             _ivf_layout_plan,
