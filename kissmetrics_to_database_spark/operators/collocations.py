@@ -6,8 +6,8 @@ Training-pipeline uses:
   vocabularies for retrieval and tokenizer training.
 - Kneser-Ney inputs (count-of-counts, continuation counts) are the
   sufficient statistics for the classic smoothed n-gram LM used to
-  perplexity-filter web corpora (CCNet-style; the unigram variant is
-  `text.unigram_logprob_scores` — this adds the bigram layer).
+  perplexity-filter web corpora (CCNet-style; this module scores
+  documents under a bigram model).
 
 Scale shape (100 TB): everything reduces the token stream with
 map-side-combinable groupBys before any join. Bigram extraction is a
@@ -34,9 +34,9 @@ def bigrams_long(
 ) -> DataFrame:
     """(id, a, b) rows — one per ADJACENT token pair occurrence.
 
-    Tokens are the shared lowercase-whitespace family used by every
-    text operator (`text.tokens_long`), so the oracle SQL and the
-    other token consumers agree on the universe. Pairs never cross a
+    Tokens are the trimmed, lowercased text split on whitespace runs,
+    empty tokens dropped; the oracle SQL splits the same way, so both
+    sides agree on the token universe. Pairs never cross a
     document boundary (the window is per-doc); docs with one token
     contribute nothing.
     """
@@ -128,8 +128,7 @@ def kn_bigram_logprob_scores(
     ndigits: int = 6,
 ) -> DataFrame:
     """Per-document fluency score under an interpolated Kneser-Ney
-    bigram LM trained on the corpus itself — the bigram-order upgrade
-    of `text.unigram_logprob_scores` (CCNet-style perplexity
+    bigram LM trained on the corpus itself (CCNet-style perplexity
     filtering).
 
     P_KN(b|a) = max(c(a,b) − D, 0) / c(a·)

@@ -209,8 +209,8 @@ def minhash_wide_tokens(
     band buckets over-collide — candidate-pair volume (and hence the
     exact-Jaccard verify join) inflates, though correctness is
     unaffected because the verify step filters false candidates.
-    Pipelines over very long documents should chunk first (see
-    packing.chunk_documents) or widen the slices at the cost of
+    Pipelines over very long documents should split them into
+    fixed-length chunks first or widen the slices at the cost of
     oracle-portability of the hash family.
     """
     assert num_hashes * 4 <= 32

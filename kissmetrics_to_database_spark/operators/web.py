@@ -6,8 +6,7 @@ codegen'd column expressions (regexp_extract + array ops — no UDF,
 zero shuffle for parse/canonicalize; one domain-keyed window for the
 quota), RE2-safe so the DuckDB oracles replay them byte-exactly.
 
-The reference has no web surface; this extends the curation suite
-(same rationale as operators/text.py).
+The reference has no web surface; these serve the curation queries.
 """
 
 from __future__ import annotations

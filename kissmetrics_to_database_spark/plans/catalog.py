@@ -17,7 +17,7 @@ Shared determinism rules (FIXTURES.md):
 
 Layout: CORE_* = reference-fidelity operators (SURVEY §2 row ids in
 each docstring); EXT_* = the training-data extension suite (dedup /
-similarity / text / analytics windows).
+similarity / analytics windows).
 """
 
 from __future__ import annotations
@@ -32,8 +32,6 @@ from kissmetrics_to_database_spark.operators import (
     dedup,
     identity,
     schema_evolution,
-    similarity,
-    text,
 )
 from kissmetrics_to_database_spark.session import load_table
 
@@ -998,8 +996,7 @@ _VERIFIED_R01 = [
     "minhash_signatures", "minhash_lsh_near_dups", "ngram_jaccard_pairs",
     "simhash_signatures", "simhash_near_dups", "embedding_cosine_near_dups",
     "embedding_topk_bruteforce", "embedding_topk_lsh", "embedding_topk_ivf",
-    "lang_id", "quality_score", "token_counts", "doc_fingerprints",
-    "curated_corpus", "hash_split_assignment", "stratified_sample",
+    "hash_split_assignment", "stratified_sample",
 ]
 # Round-2 driver-green queries (CORRECTNESS_r02.json): the window
 # rotation worked — all 22 TPC-H + the OLAP suite + 14 ext queries got
@@ -1010,11 +1007,10 @@ _VERIFIED_R02 = [
     "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
     "tpch_q5_local_supplier", "sessionization", "session_window_agg",
     "tumbling_window_hourly", "funnel_signup_purchase",
-    "top_spenders_per_type", "near_dup_clusters", "tfidf_top_terms",
-    "bm25_search", "repetition_quality", "time_proximity_pairs",
-    "pii_mask", "decontaminate_against_eval",
+    "top_spenders_per_type", "near_dup_clusters", "time_proximity_pairs",
+    "decontaminate_against_eval",
     "nearest_centroid_confusion", "knn_label_vote",
-    "source_temperature_mix", "tpch_q6_forecast_revenue",
+    "tpch_q6_forecast_revenue",
     "correlated_subquery_above_avg", "intersect_users",
     "tpch_q2_min_cost_supplier", "tpch_q14_promo_revenue",
     "tpch_q17_small_quantity", "tpch_q18_large_orders", "rollup_agg",
@@ -1034,17 +1030,15 @@ _VERIFIED_R02 = [
 # names — 48 rows+schema+hash green, 2 `no_oracle` rows-only by declared
 # contract (`corrupt_json_repair`, `approx_aggregates`), zero reds.
 _VERIFIED_R03 = [
-    "corpus_source_profile", "bm25_search", "stratified_sample",
-    "identity_pagerank", "corrupt_json_repair", "pack_training_sequences",
-    "chunk_documents_sliding", "gopher_quality", "unigram_logprob",
+    "corpus_source_profile", "stratified_sample",
+    "identity_pagerank", "corrupt_json_repair",
     "span_dedup", "source_quota_cap", "kmeans_clusters", "semantic_dedup",
-    "perplexity_buckets", "hashed_ngram_classifier",
     "cms_heavy_hitters", "hll_event_users", "bloom_novel_docs",
     "weighted_doc_sample", "histogram_quantiles", "zorder_layout",
-    "event_burst_triangles", "hard_negative_mining", "vocab_zipf_fit",
+    "event_burst_triangles", "hard_negative_mining",
     "user_decay_features", "tombstone_scrub", "leakage_safe_split",
     "source_overlap_matrix", "behavior_sequences", "bpe_pair_counts",
-    "event_transition_matrix", "epoch_shuffle", "quality_quantile_gate",
+    "event_transition_matrix", "epoch_shuffle",
     "incremental_ingest_dedup", "ann_recall_at_k", "cluster_quality",
     "approx_aggregates",
 ]
@@ -1063,14 +1057,11 @@ _REVERIFY_BEHAVIOR_CHANGED = [
     "dbscan_clusters",         # r9: consumes the shared ε-graph
     "minhash_lsh_near_dups",   # r9: pair memo → persisted parquet artifact
     "dup_cluster_representatives",  # r9: persisted pair artifact
-    "curated_corpus",          # r9: persisted pair artifact
     "near_dup_clusters",       # r9: persisted pair artifact
     "leakage_safe_split",      # r9: persisted pair artifact
     "tombstone_cluster_scrub",  # r9: persisted pair artifact
     "exact_substring_spans",   # r9: persisted removed-positions artifact
     "exact_substring_rewrite",  # r9: persisted removed-positions artifact
-    "bpe_encode_corpus",       # r9: persisted encode artifact
-    "tokenizer_fertility_by_source",  # r9: persisted encode artifact + oracle compose
     # r8 carryovers (harmless if unchanged — filtered by `modified`):
     "lsh_recall_eval",
     "ngram_jaccard_pairs",

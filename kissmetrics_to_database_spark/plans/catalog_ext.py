@@ -2,7 +2,7 @@
 
 The beyond-reference surface (BASELINE.json north star): dedup
 (exact / MinHash-LSH / Jaccard / SimHash), embedding similarity
-search, text analysis, plus the TPC-H-style joins/aggregations and
+search, plus the TPC-H-style joins/aggregations and
 event-time windows that are the bench surface.
 
 Registered into catalog.QUERIES / catalog.ORACLES via the same
@@ -17,9 +17,7 @@ from pyspark.sql import functions as F
 from kissmetrics_to_database_spark.operators import (
     dedup,
     interval,
-    packing,
     similarity,
-    text,
 )
 from kissmetrics_to_database_spark.plans.catalog import query
 from kissmetrics_to_database_spark.session import load_table
@@ -142,7 +140,6 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sig.select(
         "doc_id", F.col("seed").cast("long").alias("seed"), "minhash"
     ).orderBy("doc_id", "seed")
-
 
 
 _ARTIFACTS: dict = {}
@@ -1221,222 +1218,8 @@ def q_bitext_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — text analysis
+# EXT — deterministic hash splits + stratified sampling
 # ---------------------------------------------------------------------------
-
-_SQL_STOPHITS = " + ".join(
-    f"len(list_filter(t, x -> x = '{w}'))" for w in text.LANG_MARKERS["en"]
-)
-
-
-def _sql_lang_score(lang: str) -> str:
-    return " + ".join(
-        f"len(list_filter(t, x -> x = '{w}'))" for w in text.LANG_MARKERS[lang]
-    )
-
-
-@query(
-    "lang_id",
-    f"""
-    SELECT doc_id,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
-                WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                ELSE 'zh' END AS lang_pred
-    FROM (
-      SELECT doc_id,
-             {_sql_lang_score('de')} AS s_de,
-             {_sql_lang_score('en')} AS s_en,
-             {_sql_lang_score('es')} AS s_es,
-             {_sql_lang_score('fr')} AS s_fr,
-             {_sql_lang_score('zh')} AS s_zh
-      FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t FROM documents)
-    )
-    ORDER BY doc_id
-    """,
-)
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language ID by marker-token voting; argmax with smallest-code
-    tie-break, 'und' on zero hits."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.with_lang_id(docs).select("doc_id", "lang_pred").orderBy("doc_id")
-
-
-@query(
-    "lang_id_confusion",
-    f"""
-    WITH pred AS (
-      SELECT doc_id,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                  WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
-                  WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                  WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                  WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                  ELSE 'zh' END AS lang_pred
-      FROM (
-        SELECT doc_id,
-               {_sql_lang_score('de')} AS s_de,
-               {_sql_lang_score('en')} AS s_en,
-               {_sql_lang_score('es')} AS s_es,
-               {_sql_lang_score('fr')} AS s_fr,
-               {_sql_lang_score('zh')} AS s_zh
-        FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t FROM documents)
-      )
-    )
-    SELECT d.lang AS gold, p.lang_pred AS pred,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           round(count(*) / CAST(sum(count(*)) OVER (PARTITION BY d.lang) AS DOUBLE), 6)
-             AS frac_of_gold
-    FROM documents d JOIN pred p USING (doc_id)
-    GROUP BY d.lang, p.lang_pred
-    ORDER BY gold, pred
-    """,
-)
-def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID quality eval (r8): confusion matrix of the
-    marker-voting classifier against the corpus's GOLD lang labels —
-    per (gold, pred) cell, doc count and fraction of that gold
-    class. The eval that tells a curation team where the cheap
-    classifier is safe to gate on and where it confuses siblings
-    (es↔fr share romance markers) or falls back to 'und'. One
-    corpus scan + a lang-keyed aggregate; the window normalizer
-    partitions by gold lang (5 rows), never corpus-global."""
-    docs = load_table(spark, sf_dir, "documents")
-    pred = text.with_lang_id(docs).select("doc_id", "lang", "lang_pred")
-    counts = pred.groupBy(
-        F.col("lang").alias("gold"), F.col("lang_pred").alias("pred")
-    ).agg(F.count("*").cast("long").alias("n_docs"))
-    w = Window.partitionBy("gold")
-    return (
-        counts.withColumn(
-            "frac_of_gold",
-            F.round(F.col("n_docs") / F.sum("n_docs").over(w), 6),
-        )
-        .orderBy("gold", "pred")
-    )
-
-
-@query(
-    "quality_score",
-    f"""
-    SELECT doc_id,
-           round((len_score + alpha_ratio + stop_score + wl_score) / 4.0, 6) AS quality
-    FROM (
-      SELECT doc_id,
-             least(CAST(1.0 AS DOUBLE), length(text) / CAST(500.0 AS DOUBLE)) AS len_score,
-             length(regexp_replace(text, '[^A-Za-z ]', '', 'g'))
-               / CAST(greatest(length(text), 1) AS DOUBLE) AS alpha_ratio,
-             least(CAST(1.0 AS DOUBLE),
-                   CAST(5.0 AS DOUBLE) * ({_SQL_STOPHITS}) / CAST(greatest(len(t), 1) AS DOUBLE)) AS stop_score,
-             CASE WHEN length(regexp_replace(text, '\\s+', '', 'g'))
-                         / CAST(greatest(len(t), 1) AS DOUBLE) BETWEEN 3 AND 12
-                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS wl_score
-      FROM (SELECT doc_id, text, string_split_regex(trim(lower(text)), '\\s+') AS t FROM documents)
-    )
-    ORDER BY doc_id
-    """,
-)
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic quality score in [0,1]: length, alpha ratio, stopword
-    density, mean-word-length sanity — equally weighted."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.with_quality_score(docs).select("doc_id", "quality").orderBy("doc_id")
-
-
-@query(
-    "token_counts",
-    f"""
-    SELECT doc_id,
-           CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens_ws,
-           CAST(len(regexp_extract_all(text, '{text.BPE_ISH_RE}')) AS BIGINT) AS n_tokens_bpe
-    FROM documents ORDER BY doc_id
-    """,
-)
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace tokens + BPE-ish pretokens."""
-    docs = load_table(spark, sf_dir, "documents")
-    out = text.with_token_counts(docs)
-    return out.select(
-        "doc_id",
-        F.col("n_tokens_ws").cast("long").alias("n_tokens_ws"),
-        F.col("n_tokens_bpe").cast("long").alias("n_tokens_bpe"),
-    ).orderBy("doc_id")
-
-
-@query(
-    "doc_fingerprints",
-    """
-    SELECT doc_id,
-           md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS norm_fingerprint,
-           CASE WHEN length(text) = 0 THEN 0
-                ELSE list_reduce(
-                  list_prepend(CAST(0 AS BIGINT),
-                    list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-                  (a, b) -> (a * 31 + b) % 1000000007)
-           END AS rolling_hash
-    FROM documents ORDER BY doc_id
-    """,
-)
-def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprints: normalization md5 + polynomial rolling
-    hash (base 31 mod 1e9+7) over raw characters."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        text.with_fingerprints(docs)
-        .select("doc_id", "norm_fingerprint", "rolling_hash")
-        .orderBy("doc_id")
-    )
-
-
-@query(
-    "curated_corpus",
-    f"""
-    WITH cand AS ({SQL_LSH_CANDIDATES}),
-    jac AS ({SQL_JACCARD}),
-    dup_losers AS (
-      SELECT DISTINCT j.id_b AS doc_id
-      FROM jac j JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
-      WHERE j.jaccard >= 0.5
-    ),
-    scored AS (
-      SELECT doc_id,
-             round((least(CAST(1.0 AS DOUBLE), length(text) / CAST(500.0 AS DOUBLE))
-               + length(regexp_replace(text, '[^A-Za-z ]', '', 'g'))
-                 / CAST(greatest(length(text), 1) AS DOUBLE)
-               + least(CAST(1.0 AS DOUBLE), CAST(5.0 AS DOUBLE) * ({_SQL_STOPHITS})
-                 / CAST(greatest(len(t), 1) AS DOUBLE))
-               + CASE WHEN length(regexp_replace(text, '\\s+', '', 'g'))
-                        / CAST(greatest(len(t), 1) AS DOUBLE) BETWEEN 3 AND 12
-                      THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) / 4.0,
-               6) AS quality
-      FROM (SELECT doc_id, text, string_split_regex(trim(lower(text)), '\\s+') AS t
-            FROM documents)
-    )
-    SELECT s.doc_id, s.quality
-    FROM scored s
-    WHERE s.quality >= 0.7
-      AND s.doc_id NOT IN (SELECT doc_id FROM dup_losers)
-    ORDER BY s.doc_id
-    """,
-)
-def q_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The north-star composition: corpus curation in one declarative
-    plan — quality scoring × near-dup removal (MinHash-LSH verified
-    pairs; the higher doc_id of each pair is dropped, keeping one
-    representative per duplicate cluster) × threshold selection.
-    Exactly the selection step of a 100 TB training-data pipeline."""
-    docs = load_table(spark, sf_dir, "documents")
-    dup_pairs = _lsh_pairs_cached(spark, sf_dir)
-    losers = dup_pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    scored = text.with_quality_score(docs).select("doc_id", "quality")
-    return (
-        scored.where(F.col("quality") >= 0.7)
-        .join(losers, "doc_id", "left_anti")
-        .orderBy("doc_id")
-    )
 
 
 # A doc's hash bucket (0..255) from the first two hex digits of
@@ -1929,16 +1712,8 @@ def q_top_spenders_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — near-dup clustering, TF-IDF / BM25, repetition quality,
-# banded time-proximity join
+# EXT — near-dup clustering, banded time-proximity join
 # ---------------------------------------------------------------------------
-
-SQL_TOKENS_LONG = """
-  SELECT doc_id, t AS term
-  FROM (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
-        FROM documents)
-  WHERE t <> ''
-"""
 
 
 @query(
@@ -1977,119 +1752,6 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "tfidf_top_terms",
-    f"""
-    WITH tok AS ({SQL_TOKENS_LONG}),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-    dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-    n AS (SELECT count(*) AS n_docs FROM documents)
-    SELECT doc_id, term, tf, df, score, CAST(rnk AS BIGINT) AS rank FROM (
-      SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-             round(tf.tf * ln((n.n_docs + 1) / (dfreq.df + 1)), 6) AS score,
-             row_number() OVER (
-               PARTITION BY tf.doc_id
-               ORDER BY round(tf.tf * ln((n.n_docs + 1) / (dfreq.df + 1)), 6) DESC,
-                        tf.term
-             ) AS rnk
-      FROM tf JOIN dfreq USING (term) CROSS JOIN n
-    ) WHERE rnk <= 3
-    ORDER BY doc_id, rank
-    """,
-)
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 terms per document by smoothed tf-idf; ranking on the
-    rounded score (engine-portable), ties on term. Corpus df is
-    aggregated from the already-reduced (doc, term) table, never the
-    raw token stream."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.tfidf_top_terms(docs, "doc_id", "text", k=3).orderBy(
-        "doc_id", "rank"
-    )
-
-
-BM25_TERMS = ("shuffle", "join", "window")
-
-
-def _sql_bm25_contrib(i: int, term: str) -> str:
-    return (
-        f"ln(1 + (n.n_docs - s.df{i} + 0.5) / (s.df{i} + 0.5))"
-        f" * (d.tf{i} * 2.2)"
-        f" / (d.tf{i} + 1.2 * (0.25 + 0.75 * d.dl / (s.tot / n.n_docs)))"
-    )
-
-
-@query(
-    "bm25_search",
-    f"""
-    WITH tok AS ({SQL_TOKENS_LONG}),
-    per_doc AS (
-      SELECT doc_id, count(*) AS dl,
-             {", ".join(f"sum(CASE WHEN term = '{t}' THEN 1 ELSE 0 END) AS tf{i}" for i, t in enumerate(BM25_TERMS))}
-      FROM tok GROUP BY 1
-    ),
-    s AS (
-      SELECT CAST(sum(dl) AS DOUBLE) AS tot,
-             {", ".join(f"CAST(sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df{i}" for i in range(len(BM25_TERMS)))}
-      FROM per_doc
-    ),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-    scored AS (
-      SELECT d.doc_id,
-             round({" + ".join(_sql_bm25_contrib(i, t) for i, t in enumerate(BM25_TERMS))}, 6) AS score
-      FROM per_doc d CROSS JOIN s CROSS JOIN n
-    )
-    SELECT doc_id, score, CAST(rnk AS BIGINT) AS rank FROM (
-      SELECT doc_id, score,
-             row_number() OVER (ORDER BY score DESC, doc_id) AS rnk
-      FROM scored WHERE score > 0
-    ) WHERE rnk <= 10
-    ORDER BY rank
-    """,
-)
-def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-10 docs for a 3-term query (k1=1.2, b=0.75) —
-    two aggregations total (per-doc tf/dl wide row + one corpus-stats
-    scalar broadcast); per-term contributions summed in declared term
-    order so the float score is bit-identical across engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.bm25_search(docs, BM25_TERMS, "doc_id", "text").orderBy("rank")
-
-
-@query(
-    "repetition_quality",
-    """
-    SELECT doc_id, n_tokens, n_distinct,
-           round(CASE WHEN n_tokens = 0 THEN 0
-                      ELSE 1 - n_distinct / CAST(n_tokens AS DOUBLE) END, 6)
-             AS repetition_ratio,
-           round(CASE WHEN n_bigrams = 0 THEN 0
-                      ELSE 1 - n_distinct_bigrams / CAST(n_bigrams AS DOUBLE) END, 6)
-             AS dup_bigram_frac
-    FROM (
-      SELECT doc_id,
-             len(t) AS n_tokens, len(list_distinct(t)) AS n_distinct,
-             len(bg) AS n_bigrams, len(list_distinct(bg)) AS n_distinct_bigrams
-      FROM (
-        SELECT doc_id, t,
-               list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1]) AS bg
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                 x -> x <> '') AS t
-              FROM documents)
-      )
-    )
-    ORDER BY doc_id
-    """,
-)
-def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signals (repeated-token and
-    duplicate-bigram fractions) as pure per-row array expressions —
-    zero shuffle, embarrassingly parallel at any corpus size."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.with_repetition_stats(docs, "doc_id", "text").orderBy("doc_id")
-
-
-@query(
     "time_proximity_pairs",
     """
     SELECT a.event_id AS id_a, b.event_id AS id_b,
@@ -2113,73 +1775,8 @@ def q_time_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — PII masking, source profiling, decontamination
+# EXT — source profiling, decontamination
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "pii_mask",
-    """
-    WITH pii AS (
-      SELECT doc_id,
-             text || CASE WHEN doc_id % 7 = 0
-                          THEN ' contact user' || doc_id || '@example.com'
-                          ELSE '' END
-                  || CASE WHEN doc_id % 11 = 0
-                          THEN ' call +1415555' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                          ELSE '' END AS text
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS INTEGER) AS n_emails,
-           CAST(len(regexp_extract_all(text, '\\+[0-9]{7,15}')) AS INTEGER) AS n_phones,
-           md5(regexp_replace(
-                 regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                 '\\+[0-9]{7,15}', '<PHONE>', 'g')) AS masked_md5
-    FROM pii
-    WHERE doc_id % 7 = 0 OR doc_id % 11 = 0
-    ORDER BY doc_id
-    """,
-)
-def q_pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub before corpus release: email/phone redaction with
-    audit counts. The testdata carries no PII, so deterministic
-    addresses are injected from doc_id (same synthesis-from-real-rows
-    pattern as corrupt_json_repair), then masked and verified by
-    masked-text digest."""
-    docs = load_table(spark, sf_dir, "documents")
-    with_pii = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 11 == 0,
-                F.concat(
-                    F.lit(" call +1415555"),
-                    F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                ),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    masked = text.mask_pii(with_pii, "text")
-    return (
-        masked.where((F.col("doc_id") % 7 == 0) | (F.col("doc_id") % 11 == 0))
-        .select(
-            "doc_id",
-            "n_emails",
-            "n_phones",
-            F.md5("masked").alias("masked_md5"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 @query(
@@ -2672,305 +2269,8 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — training-sequence packing + source mixing (corpus → data loader)
+# EXT — global span dedup + per-source quota cap (round 2)
 # ---------------------------------------------------------------------------
-
-SQL_WS_TOKENS = """
-  SELECT doc_id, source,
-         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
-  FROM documents
-"""
-
-
-@query(
-    "length_bucket_padding",
-    f"""
-    WITH t AS ({SQL_WS_TOKENS}),
-    b AS (
-      SELECT greatest(n_tokens, 1) AS n,
-             length(bin(greatest(n_tokens, 1))) AS bits
-      FROM t
-    ),
-    assigned AS (
-      SELECT n,
-             greatest(16, least(
-               CASE WHEN n = (1 << (bits - 1)) THEN n
-                    ELSE 1 << bits END,
-               4096)) AS bucket_len,
-             least(n, 4096) AS eff,
-             CASE WHEN n > 4096 THEN 1 ELSE 0 END AS tr,
-             greatest(n - 4096, 0) AS trtok
-      FROM b
-    )
-    SELECT CAST(bucket_len AS BIGINT) AS bucket_len,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(eff) AS BIGINT) AS sum_tokens,
-           CAST(bucket_len * count(*) AS BIGINT) AS padded_tokens,
-           round(1 - sum(eff) / CAST(bucket_len * count(*) AS DOUBLE), 6)
-             AS waste_ratio,
-           CAST(sum(tr) AS BIGINT) AS n_truncated,
-           CAST(sum(trtok) AS BIGINT) AS trunc_tokens
-    FROM assigned GROUP BY bucket_len ORDER BY bucket_len
-    """,
-)
-def q_length_bucket_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-bucketed batching audit (r7): per power-of-two sequence
-    bucket, the padding a bucketed loader pays vs the token mass —
-    packing.length_bucket_padding over whitespace token counts. The
-    bucket is INTEGER bit-length arithmetic (no float log2), so the
-    oracle replays exactly; one tiny-key groupBy, map-side
-    combinable."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = text.with_token_counts(docs).select(
-        "doc_id", F.col("n_tokens_ws").cast("long").alias("n_tokens")
-    )
-    return packing.length_bucket_padding(t).orderBy("bucket_len")
-
-
-@query(
-    "pack_training_sequences",
-    f"""
-    WITH t AS ({SQL_WS_TOKENS}),
-    b AS (SELECT doc_id, n_tokens, CAST(({_SQL_DOC_BUCKET}) % 8 AS BIGINT) AS bucket FROM t),
-    packed AS (
-      SELECT doc_id, bucket, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (
-               PARTITION BY bucket ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-      FROM b
-    )
-    SELECT bucket, cum // 512 AS seq_id,
-           count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS seq_tokens
-    FROM packed GROUP BY bucket, cum // 512
-    ORDER BY bucket, seq_id
-    """,
-)
-def q_pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk sequence packing: docs hashed into 8 packing
-    buckets, concatenated in doc_id order, chunked into 512-token
-    training sequences; output = per-sequence doc/token summary.
-    One shuffle on the bucket key, then codegen'd window sums — the
-    bucket count is the parallelism knob at 100 TB."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = text.with_token_counts(docs).select(
-        "doc_id",
-        F.col("n_tokens_ws").cast("long").alias("n_tokens"),
-        (_doc_bucket() % 8).cast("long").alias("bucket"),
-    )
-    packed = packing.pack_sequences(
-        t, id_col="doc_id", token_col="n_tokens", bucket_col="bucket", budget=512
-    )
-    return packing.sequence_stats(packed).orderBy("bucket", "seq_id")
-
-
-@query(
-    "source_temperature_mix",
-    f"""
-    WITH t AS ({SQL_WS_TOKENS}),
-    s AS (
-      SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-             power(sum(n_tokens), 0.3) AS w
-      FROM t GROUP BY source
-    )
-    SELECT source, n_docs, n_tokens,
-           round(w / sum(w) OVER (), 6) AS weight
-    FROM s ORDER BY source
-    """,
-)
-def q_source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled (alpha=0.3) multinomial source-mixing
-    weights — the corpus-balancing rule for multi-source pretraining.
-    Per-source aggregate is tiny at any scale; the normalizer is a
-    broadcast cross join."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = text.with_token_counts(docs).select(
-        "doc_id", "source", F.col("n_tokens_ws").alias("n_tokens")
-    )
-    return packing.source_temperature_weights(t, alpha=0.3).orderBy("source")
-
-
-@query(
-    "chunk_documents_sliding",
-    f"""
-    WITH t AS ({SQL_WS_TOKENS}),
-    chunks AS (
-      SELECT doc_id, s // 96 AS chunk_id, s AS start_tok,
-             least(128, n_tokens - s) AS chunk_len
-      FROM t, unnest(range(0, n_tokens, 96)) AS u(s)
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-           CAST(sum(chunk_len) AS BIGINT) AS covered_tokens,
-           CAST(max(start_tok + chunk_len) AS BIGINT) AS last_tok
-    FROM chunks GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def q_chunk_documents_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunking (128-token chunks, stride 96 → 32
-    overlap), rolled up per doc: chunk count, covered token mass,
-    and the end of the last chunk (= doc length, proving full
-    coverage). Per-row sequence+explode — shuffle-free until the
-    final per-doc rollup."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = text.with_token_counts(docs).select(
-        "doc_id", F.col("n_tokens_ws").cast("long").alias("n_tokens")
-    )
-    ch = packing.chunk_documents(t, chunk_size=128, stride=96)
-    return (
-        ch.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_chunks"),
-            F.sum("chunk_len").cast("long").alias("covered_tokens"),
-            F.max(F.col("start_tok") + F.col("chunk_len")).cast("long").alias("last_tok"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# EXT — corpus quality gates + LM scoring + global span dedup (round 2)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "gopher_quality",
-    """
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                         x -> x <> '') AS words,
-             length(regexp_replace(lower(trim(text)), '\\s', '', 'g')) AS n_chars
-      FROM documents
-    ),
-    sig AS (
-      SELECT doc_id,
-             CAST(len(words) AS BIGINT) AS n_words,
-             round(CASE WHEN len(words) = 0 THEN 0.0
-                        ELSE n_chars / CAST(len(words) AS DOUBLE) END, 6) AS mean_word_len,
-             round(CASE WHEN len(words) = 0 THEN 0.0
-                        ELSE len(list_filter(words, x -> regexp_matches(x, '[a-z]')))
-                             / CAST(len(words) AS DOUBLE) END, 6) AS alpha_frac,
-             CAST(len(list_intersect(list_distinct(words),
-                  ['the','a','of','to','and','in','be','that'])) AS BIGINT) AS n_stopwords
-      FROM w
-    )
-    SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stopwords,
-           (n_words BETWEEN 20 AND 100000)
-           AND (mean_word_len BETWEEN 2.0 AND 10.0)
-           AND (alpha_frac >= 0.8)
-           AND (n_stopwords >= 2) AS keep
-    FROM sig ORDER BY doc_id
-    """,
-)
-def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style multi-rule document quality gate (word-count,
-    mean-word-length, alpha-fraction, stopword-presence bounds) with
-    per-signal outputs — zero-shuffle corpus cleaning."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.gopher_quality_flags(docs).orderBy("doc_id")
-
-
-@query(
-    "unigram_logprob",
-    """
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                                x -> x <> '')) AS token
-      FROM documents
-    ),
-    cnt AS (SELECT token, count(*) AS c FROM tok GROUP BY token),
-    tot AS (SELECT CAST(sum(c) AS DOUBLE) AS t FROM cnt)
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_tokens,
-           round(avg(ln(c / t)), 6) AS mean_logprob
-    FROM tok JOIN cnt USING (token) CROSS JOIN tot
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM fluency scoring: token frequencies trained over the
-    corpus (pass 1), docs scored by mean token log-probability with
-    the vocab-sized model broadcast (pass 2) — the corpus is never
-    reshuffled."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.unigram_logprob_scores(docs).orderBy("doc_id")
-
-
-@query(
-    "blocklist_filter",
-    """
-    WITH tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                         x -> x <> '') AS ws
-      FROM documents
-    ),
-    hits AS (
-      SELECT doc_id, ws,
-             list_filter(ws, x -> list_contains(['dup', 'spam', 'casino'], x)) AS h
-      FROM tok
-    )
-    SELECT doc_id,
-           CAST(len(ws) AS BIGINT) AS n_tokens,
-           CAST(len(h) AS BIGINT) AS n_flagged,
-           CAST(len(list_distinct(h)) AS BIGINT) AS n_flagged_terms,
-           round(len(h) / CAST(greatest(len(ws), 1) AS DOUBLE), 6) AS flagged_ratio,
-           len(h) > 0 AS dropped
-    FROM hits ORDER BY doc_id
-    """,
-)
-def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style badword blocklist gate (r8; Raffel et al. 2020 §2.2:
-    any blocklisted token drops the page) with per-doc audit counts.
-    The list is probed per token inside one codegen'd higher-order
-    filter — no explode, no join, no shuffle; see
-    text.blocklist_gate for the 10^5-term broadcast-join variant."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.blocklist_gate(docs).orderBy("doc_id")
-
-
-@query(
-    "phrase_blocklist_spans",
-    """
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS ws
-      FROM documents
-    ),
-    m2 AS (
-      SELECT doc_id, i AS start_token,
-             array_to_string(list_slice(ws, i, i + 1), ' ') AS phrase
-      FROM w, unnest(range(1, greatest(len(ws) - 1, 0) + 1)) AS u(i)
-    ),
-    m3 AS (
-      SELECT doc_id, i AS start_token,
-             array_to_string(list_slice(ws, i, i + 2), ' ') AS phrase
-      FROM w, unnest(range(1, greatest(len(ws) - 2, 0) + 1)) AS u(i)
-    ),
-    hits AS (
-      SELECT * FROM m2
-      WHERE phrase IN ('slow query', 'table scan', 'dup dup')
-      UNION ALL
-      SELECT * FROM m3 WHERE phrase = 'slow hash batch'
-    )
-    SELECT doc_id, CAST(start_token AS BIGINT) AS start_token, phrase
-    FROM hits ORDER BY doc_id, start_token, phrase
-    """,
-)
-def q_phrase_blocklist_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-token PHRASE blocklist scan with span positions (r8) —
-    what single-token gates cannot catch (boilerplate calls-to-
-    action, banned multiword expressions). One codegen'd n-gram
-    stream per phrase length, filtered against the broadcast-literal
-    phrase array: no join, no shuffle, match-sized output with
-    1-based token offsets for span-level excision. See
-    text.phrase_blocklist_spans."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.phrase_blocklist_spans(docs).orderBy(
-        "doc_id", "start_token", "phrase"
-    )
 
 
 @query(
@@ -3057,7 +2357,7 @@ def q_source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — k-means clustering + SemDeDup + perplexity bucketing (round 2)
+# EXT — k-means clustering + SemDeDup (round 2)
 # ---------------------------------------------------------------------------
 
 # Unrolled Lloyd iterations (k=8, iters=2) shared by the kmeans and
@@ -3168,107 +2468,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "perplexity_buckets",
-    """
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                                x -> x <> '')) AS token
-      FROM documents
-    ),
-    cnt AS (SELECT token, count(*) AS c FROM tok GROUP BY token),
-    tot AS (SELECT CAST(sum(c) AS DOUBLE) AS t FROM cnt),
-    score AS (
-      SELECT doc_id, round(avg(ln(c / t)), 6) AS mean_logprob
-      FROM tok JOIN cnt USING (token) CROSS JOIN tot GROUP BY doc_id
-    ),
-    j AS (
-      SELECT d.doc_id, d.lang, s.mean_logprob
-      FROM documents d JOIN score s USING (doc_id)
-    ),
-    cuts AS (
-      SELECT lang,
-             quantile_cont(mean_logprob, 1.0/3) AS cut_lo,
-             quantile_cont(mean_logprob, 2.0/3) AS cut_hi
-      FROM j GROUP BY lang
-    )
-    SELECT j.doc_id, j.lang, j.mean_logprob,
-           CASE WHEN j.mean_logprob >= c.cut_hi THEN 'head'
-                WHEN j.mean_logprob >= c.cut_lo THEN 'middle'
-                ELSE 'tail' END AS bucket
-    FROM j JOIN cuts c USING (lang) ORDER BY j.doc_id
-    """,
-)
-def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style head/middle/tail fluency bucketing: unigram-LM
-    mean log-prob per doc, exact per-language tercile cutoffs
-    (broadcast, CCNet ships them as constants), bucket by comparison.
-    No per-lang window sort — the corpus never total-orders, so the
-    plan survives a billion docs per language (swap the exact
-    percentile for percentile_approx at that point, same shape)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.perplexity_buckets(docs).orderBy("doc_id")
-
-
 # ---------------------------------------------------------------------------
-# EXT — n-gram classifiers, snapshot diff, URL canonicalization (round 2)
+# EXT — snapshot diff, URL canonicalization (round 2)
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "hashed_ngram_classifier",
-    """
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                         x -> x <> '') AS ws
-      FROM documents
-    ),
-    uni AS (SELECT doc_id, unnest(ws) AS token FROM w),
-    bi_l AS (
-      SELECT doc_id,
-             list_transform(
-               range(1, greatest(len(ws) - 1, 1) + 1),
-               i -> array_to_string(list_slice(ws, i, least(i + 1, len(ws))), ' ')
-             ) AS sl
-      FROM w WHERE len(ws) > 0
-    ),
-    bi AS (SELECT doc_id, unnest(sl) AS token FROM bi_l),
-    feats AS (
-      SELECT doc_id,
-             (strpos('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 256
-             + (strpos('0123456789abcdef', substr(md5(token), 2, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(md5(token), 3, 1)) - 1)
-               AS bucket
-      FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi WHERE token <> '')
-      WHERE token <> ''
-    ),
-    wt AS (
-      SELECT b AS bucket,
-             round(((b * 2654435761) % 4093) / 4093.0 - 0.5, 6) AS wgt
-      FROM range(0, 4096) t(b)
-    ),
-    agg AS (
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_features,
-             round(avg(wgt), 6) AS mean_w
-      FROM feats JOIN wt USING (bucket) GROUP BY doc_id
-    )
-    SELECT doc_id, n_features, mean_w,
-           round(1 / (1 + exp(-4.0 * mean_w)), 6) AS prob,
-           round(1 / (1 + exp(-4.0 * mean_w)), 6) >= 0.5 AS label
-    FROM agg ORDER BY doc_id
-    """,
-)
-def q_hashed_ngram_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FastText-style hashed uni+bigram linear classifier inference
-    with a broadcast (bucket, weight) model table — the quality/topic
-    gate shape every production corpus pipeline runs at ingest. The
-    deterministic weight table stands in for a trained artifact; the
-    plan (hash features in-expression, broadcast model join, one
-    per-doc shuffle) is the deployable one."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.hashed_ngram_classifier(docs).orderBy("doc_id")
 
 
 @query(
@@ -3493,250 +2695,6 @@ def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     parsed = web.canonicalize_urls(_gen_urls_spark(docs))
     return web.domain_quota_cap(parsed, cap=60).orderBy("registered_domain")
-
-
-_CLASSIFIER_WEIGHTS: dict[str, list[float]] = {}
-
-
-def _trained_classifier_weights(spark, sf_dir: str) -> list[float]:
-    """Train-once/serve-many for the quality classifier (r8, the r6
-    k-means precedent): the three classifier queries (confusion,
-    calibration bins, threshold sweep) share one trained artifact per
-    sf_dir instead of re-running identical 3-iteration GD three
-    times. Training is deterministic (integer micro-unit GD), so the
-    memo cannot change any result — it only removes repeated work,
-    exactly what a production pipeline does with a model registry."""
-    w = _CLASSIFIER_WEIGHTS.get(sf_dir)
-    if w is None:
-        docs = load_table(spark, sf_dir, "documents")
-        labeled = docs.withColumn(
-            "y",
-            F.array_contains(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "spark"
-            ).cast("double"),
-        )
-        w = text.train_hashed_classifier(
-            labeled, "y", buckets=4096, iters=3, lr=10.0
-        )
-        _CLASSIFIER_WEIGHTS[sf_dir] = w
-    return w
-
-
-def _classifier_train_oracle(iters: int = 3, lr: float = 1.0) -> str:
-    """Unrolled full-batch GD for the hashed logistic classifier: the
-    same featurization CTEs as the inference oracle, then one
-    (score → residual → gradient → weight-update) block per
-    iteration — replaying text.train_hashed_classifier hash-exactly.
-
-    r8: every aggregated quantity is an exact BIGINT in micro-units
-    (1e-6), mirroring the Spark trainer — integer sums are
-    summation-order-independent, so the replay can never flake at a
-    6-dp half boundary regardless of either engine's partial-agg
-    order (the r7 classifier_calibration_bins driver failure)."""
-    head = """
-    WITH w AS MATERIALIZED (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                         x -> x <> '') AS ws
-      FROM documents
-    ),
-    lab AS (
-      SELECT doc_id,
-             CASE WHEN list_contains(ws, 'spark')
-                  THEN CAST(1000000 AS BIGINT) ELSE CAST(0 AS BIGINT)
-             END AS y_micro
-      FROM w
-    ),
-    uni AS (SELECT doc_id, unnest(ws) AS token FROM w),
-    bi_l AS (
-      SELECT doc_id,
-             list_transform(
-               range(1, greatest(len(ws) - 1, 1) + 1),
-               i -> array_to_string(list_slice(ws, i, least(i + 1, len(ws))), ' ')
-             ) AS sl
-      FROM w WHERE len(ws) > 0
-    ),
-    bi AS (SELECT doc_id, unnest(sl) AS token FROM bi_l),
-    fr AS (
-      SELECT doc_id,
-             (strpos('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 256
-             + (strpos('0123456789abcdef', substr(md5(token), 2, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(md5(token), 3, 1)) - 1)
-               AS bucket
-      FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi WHERE token <> '')
-      WHERE token <> ''
-    ),
-    feats AS (
-      SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS cnt
-      FROM fr GROUP BY doc_id, bucket
-    ),
-    nf AS (SELECT doc_id, sum(cnt) AS n_d FROM feats GROUP BY doc_id),
-    base AS MATERIALIZED (
-      SELECT f.doc_id, f.bucket, f.cnt, nf.n_d, lab.y_micro
-      FROM feats f JOIN nf USING (doc_id) JOIN lab USING (doc_id)
-    ),
-    w0 AS (SELECT b AS bucket, CAST(0 AS BIGINT) AS wm
-           FROM range(0, 4096) t(b))"""
-    blocks = []
-    for k in range(iters):
-        blocks.append(f""",
-    score{k} AS (
-      SELECT doc_id, y_micro, n_d,
-             CAST(round(CAST(sum(cnt * wm) AS DOUBLE) / n_d, 0) AS BIGINT)
-               AS s_micro
-      FROM base JOIN w{k} USING (bucket) GROUP BY doc_id, y_micro, n_d
-    ),
-    resid{k} AS (
-      SELECT doc_id,
-             CAST(round(1000000.0 / (1 + exp(-(s_micro / 1000000.0))), 0)
-                  AS BIGINT) - y_micro AS r_micro
-      FROM score{k}
-    ),
-    grad{k} AS (
-      SELECT bucket,
-             sum(CAST(round(CAST(cnt * r_micro AS DOUBLE) / n_d, 0)
-                      AS BIGINT)) AS g_micro
-      FROM base JOIN resid{k} USING (doc_id) GROUP BY bucket
-    ),
-    w{k + 1} AS MATERIALIZED (
-      SELECT w.bucket,
-             w.wm - CAST(round({lr} * coalesce(g.g_micro, 0), 0) AS BIGINT)
-               AS wm
-      FROM w{k} w LEFT JOIN grad{k} g USING (bucket)
-    )""")
-    tail = f""",
-    final AS (
-      SELECT doc_id, y_micro,
-             CAST(round(CAST(sum(cnt * wm) AS DOUBLE) / n_d, 0) AS BIGINT)
-               AS s_micro
-      FROM base JOIN w{iters} USING (bucket) GROUP BY doc_id, y_micro, n_d
-    ),
-    probs AS (
-      SELECT doc_id, y_micro,
-             CAST(round(1000000.0 / (1 + exp(-(s_micro / 1000000.0))), 0)
-                  AS BIGINT) AS p_micro
-      FROM final
-    )
-    SELECT CAST(y_micro / 1000000 AS BIGINT) AS label,
-           (p_micro >= 500000) AS pred,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(p_micro) AS DOUBLE) / (count(*) * 1000000) AS avg_prob
-    FROM probs GROUP BY 1, 2 ORDER BY 1, 2
-    """
-    return head + "".join(blocks) + tail
-
-
-@query("classifier_train_confusion", _classifier_train_oracle(3, 10.0))
-def q_classifier_train_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL classifier TRAINING end-to-end (r6): logistic regression
-    over mean-pooled hashed uni+bigram features, 3 full-batch GD
-    iterations (text.train_hashed_classifier — data distributed,
-    4096-float model on the driver, every step rounded for
-    engine-exact replay), then scored on the corpus
-    (text.hashed_classifier_score) and read out as the per-(label,
-    pred) confusion matrix with mean probability. Labels are
-    self-contained: y = document contains the token 'spark'. With no
-    bias term and heavily shared vocabulary the tiny corpus separates
-    only partially — the readout shows what the math guarantees:
-    negative docs average p≈0.19 and never cross 0.5, positive docs
-    average far higher with a large True cell. The correctness claim
-    is the hash-exact GD replay, not benchmark accuracy."""
-    docs = load_table(spark, sf_dir, "documents")
-    labeled = docs.withColumn(
-        "y",
-        F.array_contains(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "spark"
-        ).cast("double"),
-    )
-    weights = _trained_classifier_weights(spark, sf_dir)
-    scored = text.hashed_classifier_score(docs, weights)
-    joined = scored.join(labeled.select("doc_id", "y"), "doc_id")
-    # r8: avg over exact integer micro-units (prob is p_micro/1e6 by
-    # construction, so round(prob*1e6) is lossless) — the sum is
-    # order-independent and the single final division is bit-identical
-    # across engines; no 6-dp round that could flip with partitioning.
-    p_micro = F.round(F.col("prob") * 1e6, 0).cast("long")
-    return (
-        joined.groupBy(
-            F.col("y").cast("long").alias("label"), F.col("pred")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            (
-                F.sum(p_micro).cast("double")
-                / (F.count("*") * F.lit(1000000))
-            ).alias("avg_prob"),
-        )
-        .orderBy("label", "pred")
-    )
-
-
-def _classifier_calibration_oracle(iters: int = 3, lr: float = 10.0) -> str:
-    """Calibration-bin readout over the SAME unrolled GD replay as
-    :func:`_classifier_train_oracle` — only the final SELECT changes:
-    probabilities bin into deciles and each bin reports its mean
-    predicted probability against its observed positive rate."""
-    base = _classifier_train_oracle(iters, lr)
-    cut = base.rindex("\n    SELECT CAST(y_micro / 1000000 AS BIGINT)")
-    return base[:cut] + """
-    SELECT CAST(least(p_micro // 100000, 9) AS BIGINT) AS bin,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(p_micro) AS DOUBLE) / (count(*) * 1000000) AS mean_prob,
-           CAST(sum(y_micro) AS DOUBLE) / (count(*) * 1000000) AS frac_pos,
-           CAST(abs(sum(p_micro) - sum(y_micro)) AS DOUBLE)
-             / (count(*) * 1000000) AS gap
-    FROM probs GROUP BY 1 ORDER BY 1
-    """
-
-
-@query("classifier_calibration_bins", _classifier_calibration_oracle(3, 10.0))
-def q_classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classifier CALIBRATION audit (r7): decile reliability bins over
-    the trained quality classifier — per predicted-probability bin,
-    the mean prediction vs the observed positive rate and their gap
-    (the reliability-diagram rows whose weighted sum is ECE). A
-    quality gate that thresholds on p ≥ 0.5 is only as good as its
-    calibration; this is the eval every production filter runs before
-    picking the cut. Same hash-exact unrolled-GD oracle as
-    classifier_train_confusion — only the readout changes."""
-    docs = load_table(spark, sf_dir, "documents")
-    labeled = docs.withColumn(
-        "y",
-        F.array_contains(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "spark"
-        ).cast("double"),
-    )
-    weights = _trained_classifier_weights(spark, sf_dir)
-    scored = text.hashed_classifier_score(docs, weights)
-    joined = scored.join(labeled.select("doc_id", "y"), "doc_id")
-    # r8: all bin stats from exact integer micro-unit sums — the r7
-    # driver red was round(avg(double)) flipping at a 6-dp half
-    # boundary with partition order; integer sums + one final division
-    # are order-independent and bit-identical across engines.
-    binned = joined.select(
-        F.round(F.col("prob") * 1e6, 0).cast("long").alias("p_micro"),
-        (F.col("y") * 1e6).cast("long").alias("y_micro"),
-    ).select(
-        F.least(F.floor(F.col("p_micro") / 100000), F.lit(9))
-        .cast("long")
-        .alias("bin"),
-        "p_micro",
-        "y_micro",
-    )
-    denom = F.count("*") * F.lit(1000000)
-    return (
-        binned.groupBy("bin")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            (F.sum("p_micro").cast("double") / denom).alias("mean_prob"),
-            (F.sum("y_micro").cast("double") / denom).alias("frac_pos"),
-            (
-                F.abs(F.sum("p_micro") - F.sum("y_micro")).cast("double")
-                / denom
-            ).alias("gap"),
-        )
-        .orderBy("bin")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -4269,7 +3227,7 @@ def q_event_burst_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — hard-negative mining + Zipf corpus profile (round 2)
+# EXT — hard-negative mining (round 2)
 # ---------------------------------------------------------------------------
 
 
@@ -4308,45 +3266,6 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.hard_negative_mining(emb, probe_ids, k=3).orderBy(
         "probe_id", "rank"
     )
-
-
-@query(
-    "vocab_zipf_fit",
-    """
-    WITH tok AS (
-      SELECT unnest(list_filter(
-               string_split_regex(trim(lower(text)), '\\s+'), x -> x <> ''
-             )) AS token
-      FROM documents
-    ),
-    counts AS (
-      SELECT token, CAST(count(*) AS BIGINT) AS freq
-      FROM tok GROUP BY token
-      ORDER BY freq DESC, token LIMIT 1000
-    ),
-    ranked AS (
-      SELECT ln(CAST(row_number() OVER (ORDER BY freq DESC, token) AS DOUBLE)) AS x,
-             ln(CAST(freq AS DOUBLE)) AS y
-      FROM counts
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_terms,
-           round(covar_pop(x, y) / nullif(var_pop(x), 0), 6) AS slope,
-           round(avg(y) - covar_pop(x, y) / nullif(var_pop(x), 0) * avg(x), 6)
-             AS intercept,
-           round(CASE WHEN var_pop(y) = 0 THEN NULL
-                 ELSE covar_pop(x, y) * covar_pop(x, y)
-                      / (var_pop(x) * var_pop(y)) END, 6) AS r2
-    FROM ranked
-    """,
-)
-def q_vocab_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law corpus profile: least-squares ln(freq) ~ ln(rank)
-    over the top-1000 vocabulary. Natural text sits near slope -1;
-    drift flags boilerplate floods or templated spam — a one-row
-    corpus gate. One map-combined token shuffle + a TakeOrdered;
-    regression is closed-form aggregation, nothing iterative."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.zipf_fit(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -4402,8 +3321,7 @@ def q_tombstone_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone scrub vs. rows the scrub would remove (tombstone set =
     user_id % 97 — the deletion-request table stand-in). At scale the
     tombstone list broadcasts and the scrub is a map-only anti-join —
-    no shuffle of the fact table; pairs with `pii_mask` for the
-    in-place redaction variant."""
+    no shuffle of the fact table."""
     ev = load_table(spark, sf_dir, "events")
     tomb = (
         ev.where(F.col("user_id") % 97 == 0)
@@ -4704,8 +3622,8 @@ def q_behavior_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — tokenizer training, behavior modeling, training-order shuffle,
-# quantile quality gating, incremental-ingest dedup (round 2)
+# EXT — BPE pair counts, substring dedup, behavior modeling,
+# training-order shuffle, incremental-ingest dedup (round 2)
 # ---------------------------------------------------------------------------
 
 
@@ -4758,312 +3676,6 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("wc").cast("long").alias("cnt"))
         .orderBy(F.desc("cnt"), "pair")
         .limit(50)
-    )
-
-
-def _bpe_oracle(n_merges: int) -> str:
-    """Generate the unrolled DuckDB oracle for ``bpe_train_merges``:
-    one CTE block per iteration — pair counts over the current
-    segmentation, argmax (ties lexicographic), then greedy
-    non-overlapping merge application in ROW form: a match is active
-    iff its offset within its run of consecutive matches is even
-    (run-parity — the only overlap case is left==right), the matched
-    right symbol is absorbed, positions re-index. This replays the
-    Spark fold's left-to-right greedy semantics exactly, so the merge
-    table is hash-comparable."""
-    sql = ["""
-    WITH words AS MATERIALIZED (
-      SELECT w, CAST(count(*) AS BIGINT) AS wc
-      FROM (SELECT unnest(string_split_regex(trim(lower(text)), '[^a-z]+')) AS w
-            FROM documents)
-      WHERE w <> '' GROUP BY w
-    ),
-    state0 AS MATERIALIZED (
-      SELECT w, wc, CAST(i AS BIGINT) AS pos,
-             substr(w, CAST(i AS INTEGER), 1) AS sym
-      FROM words, unnest(range(1, length(w) + 1)) AS u(i)
-    )"""]
-    for k in range(n_merges):
-        sql.append(f""",
-    pairs{k} AS (
-      SELECT a, b, CAST(sum(wc) AS BIGINT) AS cnt FROM (
-        SELECT wc, sym AS a,
-               lead(sym) OVER (PARTITION BY w ORDER BY pos) AS b
-        FROM state{k}
-      ) WHERE b IS NOT NULL GROUP BY a, b
-    ),
-    best{k} AS MATERIALIZED (SELECT a, b, cnt FROM pairs{k} ORDER BY cnt DESC, a, b LIMIT 1),
-    flag{k} AS (
-      SELECT s.w, s.wc, s.pos, s.sym,
-             CASE WHEN s.sym = t.a
-                   AND lead(s.sym) OVER (PARTITION BY s.w ORDER BY s.pos) = t.b
-                  THEN 1 ELSE 0 END AS f
-      FROM state{k} s CROSS JOIN best{k} t
-    ),
-    runs{k} AS (
-      SELECT w, wc, pos, sym, f,
-             CASE WHEN f = 1
-                  THEN pos - row_number() OVER (PARTITION BY w, f ORDER BY pos)
-             END AS run_id
-      FROM flag{k}
-    ),
-    act{k} AS (
-      SELECT w, wc, pos, sym,
-             CASE WHEN f = 1
-                   AND (pos - min(pos) OVER (PARTITION BY w, run_id)) % 2 = 0
-                  THEN 1 ELSE 0 END AS act
-      FROM runs{k}
-    ),
-    state{k + 1} AS MATERIALIZED (
-      SELECT w, wc,
-             CAST(row_number() OVER (PARTITION BY w ORDER BY pos) AS BIGINT)
-               AS pos,
-             CASE WHEN act = 1 THEN sym || nxt ELSE sym END AS sym
-      FROM (
-        SELECT w, wc, pos, sym, act,
-               lead(sym) OVER (PARTITION BY w ORDER BY pos) AS nxt,
-               lag(act) OVER (PARTITION BY w ORDER BY pos) AS prev_act
-        FROM act{k}
-      )
-      WHERE coalesce(prev_act, 0) = 0
-    )""")
-    selects = " UNION ALL ".join(
-        f"SELECT CAST({k} AS BIGINT) AS merge_idx, a AS left_sym, "
-        f"b AS right_sym, cnt AS pair_count, a || b AS new_sym FROM best{k}"
-        for k in range(n_merges)
-    )
-    sql.append(f"\n    SELECT * FROM ({selects}) ORDER BY merge_idx")
-    return "".join(sql)
-
-
-@query(
-    "html_extract",
-    r"""
-    WITH wrapped AS (
-      SELECT doc_id,
-             '<html><head><style>.x{color:red}</style>'
-             || '<script type="text/javascript">var a = "<p>ignored</p>";'
-             || '</script></head><body><h1>Doc ' || doc_id
-             || '</h1>  <p class="b">' || text
-             || '</p><br/><div>&amp; tail &lt;' || doc_id
-             || '&gt;&nbsp;&quot;q&quot;&#39;s</div></body></html>' AS html
-      FROM documents
-    )
-    SELECT doc_id,
-           trim(regexp_replace(
-             replace(replace(replace(replace(replace(replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(html, '(?is)<script\b[^>]*>.*?</script>',
-                                  ' ', 'g'),
-                   '(?is)<style\b[^>]*>.*?</style>', ' ', 'g'),
-                 '<[^>]*>', ' ', 'g'),
-               '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-               '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-             '\s+', ' ', 'g')) AS text_clean
-    FROM wrapped ORDER BY doc_id
-    """,
-)
-def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML → text extraction (r5): each document wrapped in
-    deterministic HTML (script/style subtrees, nested-tag bait inside
-    the script string, entities) and run through text.html_to_text —
-    a pure codegen'd regexp_replace chain (RE2-safe: no lookaround,
-    no backreferences) that both engines replay byte-identically.
-    The ingestion primitive for web-corpus pipelines; production
-    swaps trafilatura behind the same column contract."""
-    docs = load_table(spark, sf_dir, "documents")
-    html = F.concat(
-        F.lit(
-            '<html><head><style>.x{color:red}</style>'
-            '<script type="text/javascript">var a = "<p>ignored</p>";'
-            "</script></head><body><h1>Doc "
-        ),
-        F.col("doc_id"),
-        F.lit('</h1>  <p class="b">'),
-        F.col("text"),
-        F.lit("</p><br/><div>&amp; tail &lt;"),
-        F.col("doc_id"),
-        F.lit("&gt;&nbsp;&quot;q&quot;&#39;s</div></body></html>"),
-    )
-    wrapped = docs.select("doc_id", html.alias("html"))
-    return (
-        text.html_to_text(wrapped)
-        .select("doc_id", "text_clean")
-        .orderBy("doc_id")
-    )
-
-
-@query(
-    "fim_transform",
-    """
-    WITH base AS (
-      SELECT doc_id,
-             doc_id % 2147483648 AS did,
-             coalesce(text, '') AS t,
-             CAST(length(coalesce(text, '')) AS BIGINT) AS n,
-             (doc_id % 2147483648 * 1103515245 + 12345) % 100 < 50
-               AS transformed
-      FROM documents
-    ),
-    splits AS (
-      SELECT doc_id, did, t, n, transformed,
-             (did * 2654435761) % (n + 1) AS a
-      FROM base
-    ),
-    spans AS (
-      SELECT doc_id, t, n, transformed, a,
-             a + (did * 40503 + 7) % (n - a + 1) AS b
-      FROM splits
-    )
-    SELECT doc_id,
-           transformed,
-           CASE WHEN transformed THEN a END AS split_a,
-           CASE WHEN transformed THEN b END AS split_b,
-           CASE WHEN transformed
-                THEN '<|fim_pre|>' || substr(t, 1, CAST(a AS INTEGER))
-                  || '<|fim_suf|>' || substr(t, CAST(b + 1 AS INTEGER))
-                  || '<|fim_mid|>'
-                  || substr(t, CAST(a + 1 AS INTEGER), CAST(b - a AS INTEGER))
-                ELSE t END AS fim_text
-    FROM spans ORDER BY doc_id
-    """,
-)
-def q_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill-in-the-middle augmentation (r7, arXiv:2207.14255): 50% of
-    documents rewritten to PSM order with id-hash-deterministic split
-    points, the rest passed through — text.fim_transform, the
-    code-model data-prep step next to packing/chunking. Byte-exact
-    oracle over the substring arithmetic."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.fim_transform(docs).orderBy("doc_id")
-
-
-@query(
-    "html_main_content",
-    r"""
-    WITH wrapped AS (
-      SELECT doc_id,
-             '<html><head><title>t</title><style>.n{display:none}</style>'
-             || '</head><body>'
-             || '<nav><ul><li><a href="/">Home</a></li>'
-             || '<li><a href="/a">Archive</a></li>'
-             || '<li><a href="/c">Contact</a></li></ul></nav>'
-             || '<header><h1>Site ' || CAST(doc_id % 7 AS VARCHAR)
-             || '</h1></header>'
-             || '<article><p>' || text || '</p>'
-             || '<p>Related reading includes <a href="/r">one link</a>'
-             || ' inside mostly prose text here.</p></article>'
-             || '<aside><a href="/x">Sponsored</a> <a href="/y">More</a>'
-             || ' <a href="/z">Links</a></aside>'
-             || '<footer><a href="/p">Privacy</a> | '
-             || '<a href="/t">Terms</a></footer>'
-             || '</body></html>' AS html
-      FROM documents
-    ),
-    segs AS (
-      SELECT doc_id,
-             string_split_regex(
-               regexp_replace(
-                 regexp_replace(html, '(?is)<script\b[^>]*>.*?</script>',
-                                ' ', 'g'),
-                 '(?is)<style\b[^>]*>.*?</style>', ' ', 'g'),
-               '(?i)</?(?:p|div|h[1-6]|li|ul|ol|dl|dt|dd|table|thead|tbody|tr|td|th|section|article|header|footer|nav|aside|blockquote|pre|form|fieldset|figure|figcaption|main|br|hr)\b[^>]*>'
-             ) AS segs
-      FROM wrapped
-    ),
-    blk AS (
-      SELECT doc_id,
-             list_filter(
-               list_transform(segs, b -> struct_pack(
-                 txt := trim(regexp_replace(
-                   replace(replace(replace(replace(replace(replace(
-                     regexp_replace(b, '<[^>]*>', ' ', 'g'),
-                     '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                     '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-                   '\s+', ' ', 'g')),
-                 link_chars := length(trim(regexp_replace(
-                   replace(replace(replace(replace(replace(replace(
-                     regexp_replace(
-                       coalesce(array_to_string(
-                         regexp_extract_all(b, '(?is)<a\b[^>]*>(.*?)</a>', 1),
-                         ' '), ''),
-                       '<[^>]*>', ' ', 'g'),
-                     '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                     '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-                   '\s+', ' ', 'g')))
-               )),
-               s -> s.txt <> ''
-             ) AS blocks
-      FROM segs
-    ),
-    scored AS (
-      SELECT doc_id,
-             blocks,
-             list_filter(blocks, s ->
-               len(list_filter(string_split(s.txt, ' '), x -> x <> '')) >= 5
-               AND s.link_chars * 3 <= length(s.txt)) AS content
-      FROM blk
-    )
-    SELECT doc_id,
-           array_to_string(list_transform(content, s -> s.txt), ' ')
-             AS main_text,
-           CAST(len(blocks) AS BIGINT) AS n_blocks,
-           CAST(len(content) AS BIGINT) AS n_content_blocks,
-           CASE WHEN list_sum(list_transform(blocks, s -> length(s.txt))) > 0
-                THEN round(
-                  (list_sum(list_transform(blocks, s -> length(s.txt)))
-                   - coalesce(list_sum(list_transform(content,
-                                                      s -> length(s.txt))), 0))
-                  / CAST(list_sum(list_transform(blocks, s -> length(s.txt)))
-                         AS DOUBLE), 6)
-                ELSE 0.0 END AS boilerplate_ratio
-    FROM scored ORDER BY doc_id
-    """,
-)
-def q_html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Main-content extraction (r7, VERDICT r6 item 3): each document
-    wrapped in a fixture page with the full boilerplate anatomy — nav
-    link list, site header, an article with prose + a link-bearing
-    prose paragraph, a link-saturated aside, a footer — and run
-    through text.html_main_content (block segmentation at block-tag
-    boundaries + the boilerpipe link-density/word-count rule). The
-    article blocks must survive, every nav/aside/footer block must
-    classify boilerplate, and the link-bearing prose paragraph must
-    survive (link density below ⅓ — the case a pure 'has links' rule
-    gets wrong). Byte-exact oracle: both engines replay the same
-    RE2-safe segmentation, entity decode, and integer predicate."""
-    docs = load_table(spark, sf_dir, "documents")
-    html = F.concat(
-        F.lit(
-            "<html><head><title>t</title><style>.n{display:none}</style>"
-            "</head><body>"
-            '<nav><ul><li><a href="/">Home</a></li>'
-            '<li><a href="/a">Archive</a></li>'
-            '<li><a href="/c">Contact</a></li></ul></nav>'
-            "<header><h1>Site "
-        ),
-        (F.col("doc_id") % 7).cast("string"),
-        F.lit("</h1></header><article><p>"),
-        F.col("text"),
-        F.lit(
-            "</p><p>Related reading includes <a href=\"/r\">one link</a>"
-            " inside mostly prose text here.</p></article>"
-            '<aside><a href="/x">Sponsored</a> <a href="/y">More</a>'
-            ' <a href="/z">Links</a></aside>'
-            '<footer><a href="/p">Privacy</a> | '
-            '<a href="/t">Terms</a></footer>'
-            "</body></html>"
-        ),
-    )
-    wrapped = docs.select("doc_id", html.alias("html"))
-    return (
-        text.html_main_content(wrapped)
-        .select(
-            "doc_id", "main_text", "n_blocks", "n_content_blocks",
-            "boilerplate_ratio",
-        )
-        .orderBy("doc_id")
     )
 
 
@@ -5149,70 +3761,6 @@ def q_winnow_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_stats_oracle(n_merges: int = 4, topk: int = 10) -> str:
-    """Post-apply segmentation stats oracle: the same unrolled merge
-    iterations as :func:`_bpe_oracle`, read out at state{n} — top
-    symbols by corpus-weighted frequency with their share of all
-    symbol occurrences."""
-    base = _bpe_oracle(n_merges)
-    # keep everything up to (and including) the last state CTE; swap
-    # the final SELECT for the stats readout
-    cut = base.rindex("\n    SELECT * FROM (")
-    return base[:cut] + f""",
-    occ AS (
-      SELECT sym, CAST(sum(wc) AS BIGINT) AS n_occ
-      FROM state{n_merges} GROUP BY sym
-    ),
-    tot AS (SELECT CAST(sum(n_occ) AS DOUBLE) AS t FROM occ)
-    SELECT sym, n_occ, round(n_occ / t, 6) AS share
-    FROM occ CROSS JOIN tot
-    ORDER BY n_occ DESC, sym LIMIT {topk}
-    """
-
-
-@query("bpe_segmentation_stats", _bpe_stats_oracle(4, 10))
-def q_bpe_segmentation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train → apply → evaluate for the BPE tokenizer (r5): the 4
-    learned merges re-segment the corpus vocabulary
-    (text.bpe_apply_merges — the same greedy fold the trainer uses,
-    in training order), and the readout is the top-10 symbols by
-    corpus-weighted occurrence with their share of all symbol
-    occurrences — the vocabulary-coverage signal that decides whether
-    the merge budget is spent well. Oracle reuses the trainer's
-    unrolled iterations read out at the final segmentation state.
-    r6: trains via the driver-side trainer (test-proven identical to
-    the distributed loop, ~6 s faster at sf0.1 — the distributed loop
-    itself stays oracle-covered by `bpe_train_merges`)."""
-    docs = load_table(spark, sf_dir, "documents")
-    merges = [
-        (m[1], m[2]) for m in text.bpe_train_merges_local(docs, n_merges=4)
-    ]
-    # materialize the (vocab-bounded) segmented table once: the occ /
-    # total / readout branches below would otherwise each re-evaluate
-    # the 4-level nested fold through projection collapse — measured
-    # 5.7 s vs 0.8 s at sf0.1 (r6)
-    segmented = text.bpe_apply_merges(docs, merges).localCheckpoint(
-        eager=True
-    )
-    occ = (
-        segmented.select(
-            F.explode("syms").alias("sym"), F.col("wc")
-        )
-        .groupBy("sym")
-        .agg(F.sum("wc").cast("long").alias("n_occ"))
-    )
-    total = occ.agg(F.sum("n_occ").cast("double").alias("t"))
-    return (
-        occ.crossJoin(F.broadcast(total))
-        .select(
-            "sym", "n_occ",
-            F.round(F.col("n_occ") / F.col("t"), 6).alias("share"),
-        )
-        .orderBy(F.desc("n_occ"), "sym")
-        .limit(10)
-    )
-
-
 # Shared CTE chain for the exact-substring dedup oracle (k=5):
 # strict positional 5-grams → first-occurrence rank per gram →
 # removable occurrences (rank > 1) → covered positions. Mirrors
@@ -5249,7 +3797,6 @@ SQL_EXACT_SUB_COV = """
       FROM rem, unnest(range(0, 5)) AS u(d)
     )
 """
-
 
 
 def _ss_covered_cached(spark, sf_dir: str, k: int = 5):
@@ -5479,367 +4026,6 @@ def q_decontamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_encode_oracle_prefix(n_merges: int) -> str:
-    """Shared CTE prefix for the corpus-encode oracles: the unrolled
-    training iterations of :func:`_bpe_oracle` plus the per-doc token
-    accounting CTE ``per_doc``, WITHOUT a final SELECT. Both
-    :func:`_bpe_encode_oracle` and :func:`_fertility_oracle` append
-    their own readout to this string (ADVICE r8: compose from shared
-    parts, don't pattern-match rendered SQL)."""
-    base = _bpe_oracle(n_merges)
-    cut = base.rindex("\n    SELECT * FROM (")
-    return base[:cut] + f""",
-    seglen AS (
-      SELECT w, CAST(count(*) AS BIGINT) AS n_syms
-      FROM state{n_merges} GROUP BY w
-    ),
-    docw AS (
-      SELECT doc_id, w
-      FROM (SELECT doc_id,
-                   unnest(string_split_regex(trim(lower(text)), '[^a-z]+')) AS w
-            FROM documents)
-      WHERE w <> ''
-    ),
-    per_doc AS (
-      SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_words,
-             CAST(sum(length(w)) AS BIGINT) AS n_chars,
-             CAST(sum(n_syms) AS BIGINT) AS n_tokens
-      FROM docw JOIN seglen USING (w)
-      GROUP BY doc_id
-    )"""
-
-
-def _bpe_encode_oracle(n_merges: int) -> str:
-    """Oracle for the production corpus encoder: the same unrolled
-    training iterations as :func:`_bpe_oracle`, then per-doc token
-    accounting by joining each document's word stream against the
-    final segmentation state (valid because rank-order encoding of an
-    in-corpus word equals its final training segmentation — merging
-    never creates new adjacency between older symbols)."""
-    return _bpe_encode_oracle_prefix(n_merges) + """
-    SELECT d.doc_id,
-           CAST(coalesce(p.n_words, 0) AS BIGINT) AS n_words,
-           CAST(coalesce(p.n_chars, 0) AS BIGINT) AS n_chars,
-           CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-           round(p.n_chars / CAST(p.n_tokens AS DOUBLE), 6) AS compression_ratio
-    FROM documents d LEFT JOIN per_doc p USING (doc_id)
-    ORDER BY doc_id
-    """
-
-
-def _unigram_dp_block(tag: str, ptab: str, mpl: int, max_len: int) -> str:
-    """One unrolled Viterbi-DP chain: position CTEs b{tag}_i holding
-    each word's best (val, path) prefix segmentation under piece
-    table ``ptab`` (ties: val DESC then path DESC — the Spark fold's
-    struct-max), then seg{tag} = each word read out at its own
-    length."""
-    ctes = [
-        f"""
-    b{tag}_0 AS (SELECT w, wc, 0.0 AS val, '' AS path FROM words)"""
-    ]
-    for i in range(1, max_len + 1):
-        branches = []
-        for jj in range(1, mpl + 1):
-            j = i - jj
-            if j < 0:
-                continue
-            branches.append(f"""
-        SELECT b.w, b.wc, b.val + p.score AS val,
-               b.path || '|' || substr(b.w, {j + 1}, {jj}) AS path
-        FROM b{tag}_{j} b JOIN {ptab} p
-          ON p.piece = substr(b.w, {j + 1}, {jj})
-        WHERE length(b.w) >= {i}""")
-        union = " UNION ALL ".join(branches)
-        ctes.append(f"""
-    b{tag}_{i} AS MATERIALIZED (
-      SELECT w, wc, val, path FROM (
-        SELECT w, wc, val, path,
-               row_number() OVER (PARTITION BY w
-                                  ORDER BY val DESC, path DESC) AS rn
-        FROM ({union})
-      ) WHERE rn = 1
-    )""")
-    finals = " UNION ALL ".join(
-        f"SELECT * FROM b{tag}_{i} WHERE length(w) = {i}"
-        for i in range(1, max_len + 1)
-    )
-    ctes.append(f"""
-    seg{tag} AS MATERIALIZED (SELECT * FROM ({finals}))""")
-    return ",".join(ctes)
-
-
-def _unigram_counts_block(tag: str) -> str:
-    return f"""
-    c{tag} AS MATERIALIZED (
-      SELECT piece, CAST(sum(wc) AS BIGINT) AS n
-      FROM (SELECT wc,
-                   unnest(list_filter(string_split(path, '|'),
-                                      x -> x <> '')) AS piece
-            FROM seg{tag})
-      GROUP BY piece
-    )"""
-
-
-def _unigram_oracle(
-    n_multi: int = 48, mpl: int = 4, iters: int = 2, topk: int = 10,
-    max_len: int = 12,
-) -> str:
-    """Unrolled Viterbi-EM replay of text.train_unigram_pieces: piece
-    candidates + initial log-frequency scores, ``iters`` (segment →
-    count → re-score/prune) blocks, a final eval segmentation under
-    the trained pieces, and the top-``topk`` usage readout."""
-    sql = [f"""
-    WITH words AS MATERIALIZED (
-      SELECT w, CAST(count(*) AS BIGINT) AS wc
-      FROM (SELECT unnest(string_split_regex(trim(lower(text)), '[^a-z]+')) AS w
-            FROM documents)
-      WHERE w <> '' GROUP BY w
-    ),
-    subs AS (
-      SELECT sub, CAST(sum(wc) AS BIGINT) AS cnt FROM (
-        SELECT wc, substr(w, CAST(i AS INTEGER), CAST(l AS INTEGER)) AS sub
-        FROM words,
-             unnest(range(1, {mpl} + 1)) AS t1(l),
-             unnest(range(1, greatest(length(w) - l + 1, 0) + 1)) AS t2(i)
-      ) GROUP BY sub
-    ),
-    sel AS (
-      SELECT sub, cnt FROM subs WHERE length(sub) = 1
-      UNION ALL
-      SELECT sub, cnt FROM (
-        SELECT sub, cnt,
-               row_number() OVER (ORDER BY cnt DESC, sub) AS rn
-        FROM subs WHERE length(sub) > 1
-      ) WHERE rn <= {n_multi}
-    ),
-    p0 AS MATERIALIZED (
-      SELECT sub AS piece, round(ln(cnt / t.total), 6) AS score
-      FROM sel, (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM sel) t
-    )"""]
-    for k in range(iters):
-        sql.append("," + _unigram_dp_block(f"i{k}", f"p{k}", mpl, max_len))
-        sql.append("," + _unigram_counts_block(f"i{k}"))
-        sql.append(f""",
-    p{k + 1} AS MATERIALIZED (
-      SELECT p.piece,
-             round(ln((CASE WHEN c.n IS NULL THEN 0.5 ELSE c.n END)
-                      / t.total), 6) AS score
-      FROM p{k} p
-      LEFT JOIN ci{k} c ON c.piece = p.piece
-      CROSS JOIN (SELECT CAST(sum(n) AS DOUBLE) AS total FROM ci{k}) t
-      WHERE c.n IS NOT NULL OR length(p.piece) = 1
-    )""")
-    sql.append("," + _unigram_dp_block("e", f"p{iters}", mpl, max_len))
-    sql.append("," + _unigram_counts_block("e"))
-    sql.append(f"""
-    SELECT c.piece, c.n AS n_uses, p.score
-    FROM ce c JOIN p{iters} p USING (piece)
-    ORDER BY n_uses DESC, c.piece LIMIT {topk}
-    """)
-    return "".join(sql)
-
-
-@query("unigram_tokenizer_stats", _unigram_oracle(48, 4, 2, 10, 12))
-def q_unigram_tokenizer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SentencePiece-style UNIGRAM-LM tokenizer training (r6, Kudo
-    2018 arXiv:1804.10959 — the other major tokenizer family next to
-    BPE): candidate pieces (all chars + top-48 substrings ≤ 4), two
-    Viterbi-EM iterations (segment the Zipf-bounded vocab under the
-    current log-prob scores via a codegen'd aggregate-fold DP, count
-    usage, re-score with pruning and the char coverage floor), then a
-    final eval segmentation — readout is the top-10 pieces by
-    corpus-weighted usage with their trained scores. The oracle
-    unrolls ALL THREE Viterbi passes position-by-position plus both
-    EM updates, so training replays hash-exactly across engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    pieces = text.train_unigram_pieces(docs, n_multi=48, iters=2)
-    # materialize the (vocab-bounded) segmentation before exploding:
-    # Generate would otherwise re-evaluate the interpreted DP fold per
-    # output row / per aggregate side — measured 6.3 s vs 0.4 s at
-    # sf0.1 (r6; same pathology as the BPE fold readout)
-    seg = text.unigram_segment_vocab(docs, pieces).localCheckpoint(
-        eager=True
-    )
-    counts = (
-        seg.select(F.explode("pieces").alias("piece"), "wc")
-        .groupBy("piece")
-        .agg(F.sum("wc").cast("long").alias("n_uses"))
-    )
-    ptab = spark.createDataFrame(pieces, "piece string, score double")
-    return (
-        counts.join(F.broadcast(ptab), "piece")
-        .select("piece", "n_uses", "score")
-        .orderBy(F.desc("n_uses"), "piece")
-        .limit(10)
-    )
-
-
-def _bpe_enc_cached(spark, sf_dir: str):
-    """Train-once/serve-many for the production BPE encode (r8): the
-    per-doc token-accounting frame is the artifact both the per-doc
-    ledger (`bpe_encode_corpus`) and the per-source fertility readout
-    (`tokenizer_fertility_by_source`) serve from — trained merges +
-    one linear encode pass, materialized once per (session, sf_dir)
-    as a parquet artifact (r9: was an evictable `.persist()`)."""
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        merges = text.bpe_train_merges_local(docs, n_merges=32)
-        return text.bpe_encode_corpus(docs, [(m[1], m[2]) for m in merges])
-
-    return _shared_artifact(spark, "bpe_enc", sf_dir, build)
-
-
-def _fertility_oracle(n_merges: int) -> str:
-    """Per-(source, lang) aggregate grafted onto the unrolled BPE
-    encode replay: same training + per-doc accounting CTE prefix
-    (:func:`_bpe_encode_oracle_prefix`), final readout swapped for
-    the corpus-level fertility table."""
-    return _bpe_encode_oracle_prefix(n_merges) + """
-    SELECT d.source, d.lang,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(p.n_words) AS BIGINT) AS n_words,
-           CAST(sum(p.n_chars) AS BIGINT) AS n_chars,
-           CAST(sum(p.n_tokens) AS BIGINT) AS n_tokens,
-           round(sum(p.n_tokens) / CAST(sum(p.n_words) AS DOUBLE), 6) AS fertility,
-           round(sum(p.n_chars) / CAST(sum(p.n_tokens) AS DOUBLE), 6) AS chars_per_token
-    FROM documents d LEFT JOIN per_doc p USING (doc_id)
-    GROUP BY d.source, d.lang
-    ORDER BY d.source, d.lang
-    """
-
-
-@query("tokenizer_fertility_by_source", _fertility_oracle(32))
-def q_tokenizer_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer FERTILITY audit (r8): per (source, lang), tokens per
-    word and chars per token under the trained 32-merge BPE — the
-    eval a tokenizer team runs before committing a vocab (high
-    fertility on a language = that language pays more sequence
-    length per content unit). Serves from the shared encode artifact
-    (`_bpe_enc_cached`); the readout is one skinny groupBy over the
-    per-doc ledger, so at 100 TB its cost is the ledger scan, not a
-    re-encode."""
-    enc = _bpe_enc_cached(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang"
-    )
-    return (
-        enc.join(docs, "doc_id")
-        .groupBy("source", "lang")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_words").cast("long").alias("n_words"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.round(
-                F.sum("n_tokens") / F.sum("n_words").cast("double"), 6
-            ).alias("fertility"),
-            F.round(
-                F.sum("n_chars") / F.sum("n_tokens").cast("double"), 6
-            ).alias("chars_per_token"),
-        )
-        .orderBy("source", "lang")
-    )
-
-
-@query("bpe_encode_corpus", _bpe_encode_oracle(32))
-def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION BPE pipeline (r6): train 32 merges with the
-    driver-side trainer (text.bpe_train_merges_local — the corpus
-    reduces once to its Zipf-bounded vocab, training is in-memory
-    with incremental pair counts), then encode EVERY document in one
-    linear Arrow-batched mapInPandas pass (text.bpe_encode_corpus —
-    rank-dict greedy, per-task word memo, broadcast merge table).
-    Unlike the expression-fold apply, this path works at 32k merges;
-    32 here is only what the unrolled SQL oracle can replay. Emits
-    per-doc token accounting + chars-per-token compression — the
-    tokenization ledger of a training-data pipeline."""
-    return _bpe_enc_cached(spark, sf_dir).orderBy("doc_id")
-
-
-def _unigram_encode_oracle(
-    n_multi: int, mpl: int, iters: int, max_len: int
-) -> str:
-    """Oracle for the production unigram corpus encoder: the same
-    unrolled Viterbi-EM training blocks as :func:`_unigram_oracle`
-    (so the trained piece table replays hash-exactly), then per-doc
-    token accounting by joining each document's word stream against
-    the final E-step segmentation — valid because the encoder's
-    Viterbi under the trained table IS the final E-step (same DP,
-    same tie-break)."""
-    base = _unigram_oracle(n_multi, mpl, iters, 10, max_len)
-    cut = base.rindex("\n    SELECT c.piece")
-    return base[:cut] + """,
-    seglen AS (
-      SELECT w,
-             CAST(len(list_filter(string_split(path, '|'),
-                                  x -> x <> '')) AS BIGINT) AS n_syms
-      FROM sege
-    ),
-    docw AS (
-      SELECT doc_id, w
-      FROM (SELECT doc_id,
-                   unnest(string_split_regex(trim(lower(text)), '[^a-z]+')) AS w
-            FROM documents)
-      WHERE w <> ''
-    ),
-    per_doc AS (
-      SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_words,
-             CAST(sum(length(w)) AS BIGINT) AS n_chars,
-             CAST(sum(n_syms) AS BIGINT) AS n_tokens
-      FROM docw JOIN seglen USING (w)
-      GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(coalesce(p.n_words, 0) AS BIGINT) AS n_words,
-           CAST(coalesce(p.n_chars, 0) AS BIGINT) AS n_chars,
-           CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-           round(p.n_chars / CAST(p.n_tokens AS DOUBLE), 6) AS compression_ratio
-    FROM documents d LEFT JOIN per_doc p USING (doc_id)
-    ORDER BY doc_id
-    """
-
-
-@query("unigram_encode_corpus", _unigram_encode_oracle(256, 6, 2, 16))
-def q_unigram_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION unigram-LM pipeline (r7, VERDICT r6 item 2): train
-    a 256-multi-piece table with the driver-side trainer
-    (text.train_unigram_pieces_local — the corpus reduces once to its
-    Zipf-bounded vocab, Viterbi-EM runs in memory; the distributed
-    expression-fold trainer is planner-bounded to ~tens of pieces),
-    then tokenize EVERY document in one linear Arrow-batched
-    mapInPandas pass (text.unigram_encode_corpus — broadcast piece
-    table, per-task word memo). The oracle unrolls all three Viterbi
-    passes plus both EM updates in SQL and reads the final E-step
-    segmentation back through each document's word stream, so both
-    training AND corpus encoding replay hash-exactly. Emits per-doc
-    token accounting + chars-per-token compression — the unigram
-    counterpart of bpe_encode_corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    pieces = text.train_unigram_pieces_local(
-        docs, n_multi=256, max_piece_len=6, iters=2
-    )
-    return text.unigram_encode_corpus(
-        docs, pieces, max_piece_len=6
-    ).orderBy("doc_id")
-
-
-@query("bpe_train_merges", _bpe_oracle(4))
-def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual BPE training LOOP (4 merges): per iteration the
-    vocab-table pair counts produce an argmax merge rule (driver gets
-    ONE row — k-means-style iteration), which re-segments every word
-    via a codegen'd greedy fold. The oracle unrolls the identical
-    four iterations in SQL (run-parity greedy in row form), so the
-    learned merge table is hash-exact across engines. See
-    text.bpe_train_merges for the scaling shape (corpus reduced once;
-    iterations touch only the Zipf-bounded vocab)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.bpe_train_merges(docs, n_merges=4).orderBy("merge_idx")
-
-
 @query(
     "event_transition_matrix",
     """
@@ -5931,57 +4117,6 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "shuffle_key", "pos", "shard")
         .orderBy("pos")
     )
-
-
-@query(
-    "quality_quantile_gate",
-    f"""
-    WITH scored AS (
-      SELECT doc_id, source,
-             round((len_score + alpha_ratio + stop_score + wl_score) / 4.0, 6) AS quality
-      FROM (
-        SELECT doc_id, source,
-               least(CAST(1.0 AS DOUBLE), length(text) / CAST(500.0 AS DOUBLE)) AS len_score,
-               length(regexp_replace(text, '[^A-Za-z ]', '', 'g'))
-                 / CAST(greatest(length(text), 1) AS DOUBLE) AS alpha_ratio,
-               least(CAST(1.0 AS DOUBLE),
-                     CAST(5.0 AS DOUBLE) * ({_SQL_STOPHITS}) / CAST(greatest(len(t), 1) AS DOUBLE)) AS stop_score,
-               CASE WHEN length(regexp_replace(text, '\\s+', '', 'g'))
-                           / CAST(greatest(len(t), 1) AS DOUBLE) BETWEEN 3 AND 12
-                    THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS wl_score
-        FROM (SELECT doc_id, source, text,
-                     string_split_regex(trim(lower(text)), '\\s+') AS t
-              FROM documents)
-      )
-    ),
-    ranked AS (
-      SELECT doc_id, source, quality,
-             round(percent_rank() OVER (
-               PARTITION BY source ORDER BY quality DESC, doc_id
-             ), 6) AS pr
-      FROM scored
-    )
-    SELECT doc_id, source, quality, pr
-    FROM ranked WHERE pr <= 0.5 ORDER BY doc_id
-    """,
-)
-def q_quality_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source quality quantile gate: keep each source's top half
-    by heuristic quality score (percent_rank <= 0.5 within source).
-
-    Absolute-threshold gates (gopher_quality) misfire when sources
-    have different score distributions — a web crawl's median beats a
-    forum dump's p90. Ranking WITHIN source normalizes that away; the
-    window is partitioned by source, so it shuffles on the same key as
-    every other per-source operator and never concentrates the corpus.
-    Ties broken by doc_id for a total order on both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    scored = text.with_quality_score(docs).select("doc_id", "source", "quality")
-    wr = Window.partitionBy("source").orderBy(F.desc("quality"), "doc_id")
-    ranked = scored.withColumn("pr", F.round(F.percent_rank().over(wr), 6))
-    return ranked.where(F.col("pr") <= 0.5).select(
-        "doc_id", "source", "quality", "pr"
-    ).orderBy("doc_id")
 
 
 @query(
@@ -6349,116 +4484,8 @@ def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — round 8: full Gopher repetition suite
+# EXT — line dedup, representatives, coresets, mixture epochs, WARC (r8)
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "gopher_repetition",
-    r"""
-    WITH base AS (
-      SELECT doc_id, coalesce(text, '') AS t FROM documents
-    ),
-    arrs AS (
-      SELECT doc_id,
-             list_filter(list_transform(string_split(t, chr(10)),
-                                        x -> trim(x)), x -> x <> '') AS ls,
-             list_filter(list_transform(string_split_regex(t, '\n{2,}'),
-                                        x -> trim(x)), x -> x <> '') AS ps,
-             list_filter(string_split_regex(lower(trim(t)), '\s+'),
-                         x -> x <> '') AS ws,
-             CAST(length(regexp_replace(lower(trim(t)), '\s', '', 'g'))
-                  AS BIGINT) AS n_chars
-      FROM base
-    ),
-    line_mass AS (
-      SELECT doc_id,
-             CAST(coalesce(sum((cnt - 1) * length(l)), 0) AS BIGINT) AS dupc,
-             CAST(coalesce(sum(cnt * length(l)), 0) AS BIGINT) AS totc
-      FROM (
-        SELECT doc_id, l, count(*) AS cnt
-        FROM (SELECT doc_id, unnest(ls) AS l FROM arrs)
-        GROUP BY doc_id, l
-      ) GROUP BY doc_id
-    ),
-    para_mass AS (
-      SELECT doc_id,
-             CAST(coalesce(sum((cnt - 1) * length(p)), 0) AS BIGINT) AS dupc,
-             CAST(coalesce(sum(cnt * length(p)), 0) AS BIGINT) AS totc
-      FROM (
-        SELECT doc_id, p, count(*) AS cnt
-        FROM (SELECT doc_id, unnest(ps) AS p FROM arrs)
-        GROUP BY doc_id, p
-      ) GROUP BY doc_id
-    ),
-    g2 AS (
-      SELECT doc_id, CAST(max(cnt * length(g)) AS BIGINT) AS mass
-      FROM (
-        SELECT doc_id, g, count(*) AS cnt FROM (
-          SELECT doc_id,
-                 unnest(list_transform(
-                   range(1, greatest(len(ws) - 1, 0) + 1),
-                   i -> array_to_string(list_slice(ws, i, i + 1), ' ')
-                 )) AS g
-          FROM arrs
-        ) GROUP BY doc_id, g
-      ) GROUP BY doc_id
-    ),
-    g3 AS (
-      SELECT doc_id, CAST(max(cnt * length(g)) AS BIGINT) AS mass
-      FROM (
-        SELECT doc_id, g, count(*) AS cnt FROM (
-          SELECT doc_id,
-                 unnest(list_transform(
-                   range(1, greatest(len(ws) - 2, 0) + 1),
-                   i -> array_to_string(list_slice(ws, i, i + 2), ' ')
-                 )) AS g
-          FROM arrs
-        ) GROUP BY doc_id, g
-      ) GROUP BY doc_id
-    )
-    SELECT a.doc_id,
-           CAST(len(a.ls) AS BIGINT) AS n_lines,
-           CASE WHEN len(a.ls) = 0 THEN 0.0
-                ELSE round((len(a.ls) - len(list_distinct(a.ls)))
-                           / CAST(len(a.ls) AS DOUBLE), 6) END
-             AS dup_line_frac,
-           CASE WHEN coalesce(lm.totc, 0) = 0 THEN 0.0
-                ELSE round(lm.dupc / CAST(lm.totc AS DOUBLE), 6) END
-             AS dup_line_char_frac,
-           CAST(len(a.ps) AS BIGINT) AS n_paras,
-           CASE WHEN len(a.ps) = 0 THEN 0.0
-                ELSE round((len(a.ps) - len(list_distinct(a.ps)))
-                           / CAST(len(a.ps) AS DOUBLE), 6) END
-             AS dup_para_frac,
-           CASE WHEN coalesce(pm.totc, 0) = 0 THEN 0.0
-                ELSE round(pm.dupc / CAST(pm.totc AS DOUBLE), 6) END
-             AS dup_para_char_frac,
-           CASE WHEN a.n_chars = 0 THEN 0.0
-                ELSE round(coalesce(g2.mass, 0)
-                           / CAST(a.n_chars AS DOUBLE), 6) END
-             AS top_2gram_char_frac,
-           CASE WHEN a.n_chars = 0 THEN 0.0
-                ELSE round(coalesce(g3.mass, 0)
-                           / CAST(a.n_chars AS DOUBLE), 6) END
-             AS top_3gram_char_frac
-    FROM arrs a
-    LEFT JOIN line_mass lm USING (doc_id)
-    LEFT JOIN para_mass pm USING (doc_id)
-    LEFT JOIN g2 USING (doc_id)
-    LEFT JOIN g3 USING (doc_id)
-    ORDER BY a.doc_id
-    """,
-)
-def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full Gopher repetition-filter suite (r8): duplicate-line /
-    duplicate-paragraph fractions by count and by character mass,
-    plus top word-{2,3}-gram character fractions — the boilerplate /
-    keyword-stuffing signals the token-level repetition stats miss
-    (Rae et al. 2021 Table A1). Zero-shuffle sorted-run folds per
-    row; the oracle recomputes via unnest+GROUP BY."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.gopher_repetition_stats(docs).orderBy("doc_id")
 
 
 @query(
@@ -6581,9 +4608,8 @@ def q_dup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _kcenter_oracle(k: int = 8) -> str:
-    """Unrolled greedy farthest-point replay (the classifier-oracle
-    pattern): one (distance-scan → argmax-pick → center-fetch) CTE
-    block per step, distances as 1 − round(cos, 6) exactly as the
+    """Unrolled greedy farthest-point replay: one (distance-scan →
+    argmax-pick → center-fetch) CTE block per step, distances as 1 − round(cos, 6) exactly as the
     Spark operator computes them."""
     parts = [
         "WITH p0 AS MATERIALIZED (SELECT min(vec_id) AS vid FROM embeddings)",
@@ -6637,220 +4663,6 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy schedule."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.kcenter_coreset(emb, k=8).orderBy("step")
-
-
-@query(
-    "pretraining_mix_audit",
-    """
-    WITH w AS (
-      SELECT doc_id, source,
-             md5(lower(trim(coalesce(text, '')))) AS fp,
-             list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                         x -> x <> '') AS words,
-             length(regexp_replace(lower(trim(text)), '\\s', '', 'g'))
-               AS n_chars
-      FROM documents
-    ),
-    sig AS (
-      SELECT doc_id, source, fp,
-             CAST(len(words) AS BIGINT) AS n_words,
-             (len(words) BETWEEN 20 AND 100000)
-             AND (round(CASE WHEN len(words) = 0 THEN 0.0
-                        ELSE n_chars / CAST(len(words) AS DOUBLE) END, 6)
-                  BETWEEN 2.0 AND 10.0)
-             AND (round(CASE WHEN len(words) = 0 THEN 0.0
-                        ELSE len(list_filter(words,
-                                 x -> regexp_matches(x, '[a-z]')))
-                             / CAST(len(words) AS DOUBLE) END, 6) >= 0.8)
-             AND (len(list_intersect(list_distinct(words),
-                  ['the','a','of','to','and','in','be','that'])) >= 2)
-               AS keep
-      FROM w
-    ),
-    winner AS (
-      SELECT fp, min(doc_id) AS win_id FROM sig WHERE keep GROUP BY fp
-    ),
-    ranked AS (
-      SELECT s.doc_id,
-             row_number() OVER (
-               PARTITION BY s.source
-               ORDER BY md5(CAST(s.doc_id AS VARCHAR)), s.doc_id
-             ) AS rk
-      FROM sig s JOIN winner ww ON s.fp = ww.fp AND s.doc_id = ww.win_id
-      WHERE s.keep
-    ),
-    status AS (
-      SELECT s.source, s.n_words,
-             CASE WHEN NOT s.keep THEN 'quality_fail'
-                  WHEN s.doc_id <> ww.win_id THEN 'dup_pruned'
-                  WHEN r.rk > 100 THEN 'quota_pruned'
-                  ELSE 'accepted' END AS st
-      FROM sig s
-      LEFT JOIN winner ww ON s.fp = ww.fp
-      LEFT JOIN ranked r ON s.doc_id = r.doc_id
-    )
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(coalesce(sum(CASE WHEN st = 'quality_fail' THEN 1 END), 0)
-                AS BIGINT) AS n_quality_fail,
-           CAST(coalesce(sum(CASE WHEN st = 'dup_pruned' THEN 1 END), 0)
-                AS BIGINT) AS n_dup_pruned,
-           CAST(coalesce(sum(CASE WHEN st = 'quota_pruned' THEN 1 END), 0)
-                AS BIGINT) AS n_quota_pruned,
-           CAST(coalesce(sum(CASE WHEN st = 'accepted' THEN 1 END), 0)
-                AS BIGINT) AS n_accepted,
-           CAST(coalesce(sum(CASE WHEN st = 'accepted' THEN n_words END), 0)
-                AS BIGINT) AS accepted_tokens
-    FROM status GROUP BY source ORDER BY source
-    """,
-)
-def q_pretraining_mix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END pretraining-mix audit (r8 flagship composition):
-    the full governance funnel one query — Gopher quality gate →
-    exact text dedup among survivors (min-id winner per fingerprint)
-    → per-source quota (deterministic md5-rank, cap 100) — read out
-    per source as the funnel breakdown (docs in, rejected at each
-    gate, accepted, accepted token mass). This is the report a data
-    curator signs off before a training run; every stage is the
-    scale-correct shape (zero-shuffle gate, map-side-combinable
-    fingerprint agg, per-source window — never corpus-global)."""
-    docs = load_table(spark, sf_dir, "documents")
-    flags = text.gopher_quality_flags(docs).select(
-        "doc_id", "keep", "n_words"
-    )
-    base = (
-        docs.select(
-            "doc_id",
-            "source",
-            F.md5(F.lower(F.trim(F.coalesce(F.col("text"), F.lit(""))))).alias(
-                "fp"
-            ),
-        )
-        .join(flags, "doc_id")
-    )
-    winner = (
-        base.where(F.col("keep"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("win_id"))
-    )
-    wq = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    ranked = (
-        base.where(F.col("keep"))
-        .join(winner, "fp")
-        .where(F.col("doc_id") == F.col("win_id"))
-        .withColumn("rk", F.row_number().over(wq))
-        .select("doc_id", "rk")
-    )
-    status = (
-        base.join(winner.select("fp", "win_id"), "fp", "left")
-        .join(ranked, "doc_id", "left")
-        .select(
-            "source",
-            "n_words",
-            F.when(~F.col("keep"), "quality_fail")
-            .when(F.col("doc_id") != F.col("win_id"), "dup_pruned")
-            .when(F.col("rk") > 100, "quota_pruned")
-            .otherwise("accepted")
-            .alias("st"),
-        )
-    )
-    cnt = lambda s: F.sum(  # noqa: E731
-        F.when(F.col("st") == s, 1).otherwise(0)
-    ).cast("long")
-    return (
-        status.groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            cnt("quality_fail").alias("n_quality_fail"),
-            cnt("dup_pruned").alias("n_dup_pruned"),
-            cnt("quota_pruned").alias("n_quota_pruned"),
-            cnt("accepted").alias("n_accepted"),
-            F.sum(
-                F.when(F.col("st") == "accepted", F.col("n_words")).otherwise(
-                    0
-                )
-            )
-            .cast("long")
-            .alias("accepted_tokens"),
-        )
-        .orderBy("source")
-    )
-
-
-def _classifier_sweep_oracle(iters: int = 3, lr: float = 10.0) -> str:
-    """Threshold-sweep readout over the same unrolled integer-GD
-    replay: per candidate cut, confusion counts and P/R/F1."""
-    base = _classifier_train_oracle(iters, lr)
-    cut = base.rindex("\n    SELECT CAST(y_micro / 1000000 AS BIGINT)")
-    return base[:cut] + """
-    , thr AS (SELECT unnest([100000, 300000, 500000, 700000, 900000]) AS t)
-    SELECT CAST(t AS BIGINT) AS thr_micro,
-           CAST(sum(CASE WHEN p_micro >= t AND y_micro = 1000000
-                    THEN 1 END) AS BIGINT) AS tp,
-           CAST(coalesce(sum(CASE WHEN p_micro >= t AND y_micro = 0
-                    THEN 1 END), 0) AS BIGINT) AS fp,
-           CAST(coalesce(sum(CASE WHEN p_micro < t AND y_micro = 1000000
-                    THEN 1 END), 0) AS BIGINT) AS fn,
-           round(sum(CASE WHEN p_micro >= t AND y_micro = 1000000 THEN 1
-                     ELSE 0 END)
-                 / CAST(nullif(sum(CASE WHEN p_micro >= t THEN 1 ELSE 0 END),
-                               0) AS DOUBLE), 6) AS precision,
-           round(sum(CASE WHEN p_micro >= t AND y_micro = 1000000 THEN 1
-                     ELSE 0 END)
-                 / CAST(nullif(sum(CASE WHEN y_micro = 1000000 THEN 1
-                                   ELSE 0 END), 0) AS DOUBLE), 6) AS recall
-    FROM probs CROSS JOIN thr GROUP BY t ORDER BY t
-    """
-
-
-@query("classifier_threshold_sweep", _classifier_sweep_oracle(3, 10.0))
-def q_classifier_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-gate THRESHOLD SWEEP (r8): precision/recall of the
-    trained classifier at five candidate cuts — the operating-point
-    table a curator reads next to the calibration bins before fixing
-    the filter threshold. Counts are exact integers; P/R are single
-    rounded divisions of integer sums (summation-order-proof like
-    the other r8 classifier readouts)."""
-    docs = load_table(spark, sf_dir, "documents")
-    labeled = docs.withColumn(
-        "y",
-        F.array_contains(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "spark"
-        ).cast("double"),
-    )
-    weights = _trained_classifier_weights(spark, sf_dir)
-    scored = text.hashed_classifier_score(docs, weights)
-    joined = scored.join(labeled.select("doc_id", "y"), "doc_id").select(
-        F.round(F.col("prob") * 1e6, 0).cast("long").alias("p_micro"),
-        (F.col("y") * 1e6).cast("long").alias("y_micro"),
-    )
-    thr = spark.createDataFrame(
-        [(t,) for t in (100000, 300000, 500000, 700000, 900000)],
-        "thr_micro long",
-    )
-    cj = joined.crossJoin(F.broadcast(thr))
-    pos_pred = F.col("p_micro") >= F.col("thr_micro")
-    is_pos = F.col("y_micro") == 1000000
-    tp = F.sum(F.when(pos_pred & is_pos, 1).otherwise(0))
-    fp = F.sum(F.when(pos_pred & ~is_pos, 1).otherwise(0))
-    fn = F.sum(F.when(~pos_pred & is_pos, 1).otherwise(0))
-    return (
-        cj.groupBy("thr_micro")
-        .agg(
-            tp.cast("long").alias("tp"),
-            fp.cast("long").alias("fp"),
-            fn.cast("long").alias("fn"),
-            F.round(
-                tp / F.nullif((tp + fp).cast("double"), F.lit(0.0)), 6
-            ).alias("precision"),
-            F.round(
-                tp / F.nullif((tp + fn).cast("double"), F.lit(0.0)), 6
-            ).alias("recall"),
-        )
-        .orderBy("thr_micro")
-    )
 
 
 @query(
@@ -6942,8 +4754,7 @@ def q_warc_ingest_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Common Crawl shards), reading out per-record URI / status /
     content-type / body byte length. The oracle computes the expected
     readout directly from the table, so a framing or envelope-split
-    bug anywhere in the parser breaks the hash — the from-spec
-    generator→decoder pattern the media queries established."""
+    bug anywhere in the parser breaks the hash."""
     from kissmetrics_to_database_spark.sources import warc as _warc
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -6982,53 +4793,6 @@ def q_warc_ingest_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return parsed.orderBy("doc_id")
-
-
-
-def _moji_sql() -> str:
-    """Oracle for encoding_repair built from the same fix table, with
-    every literal spelled as chr() calls (several sequences contain C1
-    controls that don't survive source encodings)."""
-    from kissmetrics_to_database_spark.operators.text import MOJIBAKE_FIXES
-
-    def lit(s: str) -> str:
-        return "(" + " || ".join(f"chr({ord(c)})" for c in s) + ")"
-
-    t = "coalesce(text, '')"
-    counts = " + ".join(
-        f"(length({t}) - length(replace({t}, {lit(bad)}, ''))) / {len(bad)}"
-        for bad, _ in MOJIBAKE_FIXES
-    )
-    fixed = t
-    for bad, good in MOJIBAKE_FIXES:
-        fixed = f"replace({fixed}, {lit(bad)}, {lit(good)})"
-    return f"""
-    SELECT doc_id,
-           CAST({counts} AS BIGINT) AS n_mojibake,
-           ({counts}) > 0 AS repaired,
-           CAST(length({fixed}) AS BIGINT) AS n_chars_fixed,
-           {fixed} AS text_fixed
-    FROM documents ORDER BY doc_id
-    """
-
-
-@query("encoding_repair_scan", _moji_sql())
-def q_encoding_repair_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mojibake audit + repair over the corpus (r8): ftfy-lite
-    cp1252-mojibake detection (marker counts via literal
-    length-difference arithmetic — zero regex dialect surface) and
-    chained-replace repair. Zero shuffle, fuses into the scan; the
-    oracle rebuilds the identical replace chain from the same fix
-    table."""
-    docs = load_table(spark, sf_dir, "documents")
-    out = text.encoding_repair(docs)
-    return out.select(
-        "doc_id",
-        "n_mojibake",
-        "repaired",
-        F.col("n_chars_fixed").cast("long").alias("n_chars_fixed"),
-        "text_fixed",
-    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -8759,9 +6523,9 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-purchase touch count is a window over the purchase, and one
     conditional global aggregate stacked into the touch-type rows. A
     purchase with no touch is its NULL-type group. Credit
-    arithmetic is exact BIGINT micro-units (r10, VERDICT r9 #1, the
-    r8 classifier rule): value snaps to cents, each per-(purchase,
-    type) share rounds ONCE to 1e-8 dollars BEFORE the sum, so the
+    arithmetic is exact BIGINT micro-units (r10, VERDICT r9 #1): value
+    snaps to cents, each per-(purchase, type) share rounds ONCE to
+    1e-8 dollars BEFORE the sum, so the
     aggregate is an order-independent integer sum with one terminal
     division — partition-layout-proof by construction."""
     ev = load_table(spark, sf_dir, "events").where(
@@ -9261,7 +7025,7 @@ def _ivf_route_centroids(
     spark: SparkSession, sf_dir: str, k: int = 8
 ) -> DataFrame:
     """Train-once/serve-many centroids for the IVF candidate routes
-    (the classifier-weights memo precedent): one kmeans_train_centroids
+    (a per-(sf_dir, k) memo): one kmeans_train_centroids
     (iters=2 — the exact Lloyd schedule the shared SQL replays) per
     (sf_dir, k), shared across the IVF-route queries. The one-sided
     decontamination route keeps k=8 (its cost |eval|·n/K is LINEAR

@@ -58,13 +58,13 @@ def _module_source_cache() -> dict[str, str]:
 def _referenced_modules(fn_src: str, module_names) -> list[str]:
     """Modules the function source USES: ``mod.attr`` access or an
     import statement naming the module — never a bare token (column
-    names like "text" collide with module names)."""
+    names like "text" can collide with module names)."""
     deps = []
     for name in module_names:
         pat = (
-            rf"\b{re.escape(name)}\s*\."          # text.bm25_search(...)
-            rf"|\bimport\s+{re.escape(name)}\b"    # import text
-            rf"|\b{re.escape(name)}\s+import\b"    # from ...text import f
+            rf"\b{re.escape(name)}\s*\."          # dedup.tokens(...)
+            rf"|\bimport\s+{re.escape(name)}\b"    # import dedup
+            rf"|\b{re.escape(name)}\s+import\b"    # from ...dedup import f
         )
         if re.search(pat, fn_src):
             deps.append(name)

@@ -11,8 +11,8 @@ source (one row per file — CC shards are ~1 GB by construction, under
 the 2 GB binaryFile ceiling; a >2 GB archive would need a splittable
 WARC InputFormat, noted not stubbed), and records stream out of an
 Arrow-batched ``mapInPandas`` kernel — parsing is embarrassingly
-parallel per file, no shuffle. Downstream composes with the existing
-HTML extraction / quality / dedup operators.
+parallel per file, no shuffle. The ``body`` column casts to the HTML
+string that downstream operators such as dedup read.
 
 Reference scope note: the reference ETL has no web-archive source
 (its S3 sync ships NDJSON, SyncBucket.php:36-45); this is part of the

@@ -93,13 +93,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["Scan parquet", "rangepartitioning"],
         ["CartesianProduct", "SortMergeJoin", "FlatMapCoGroupsInPandas"],
     ),
-    # r8: Gopher repetition suite — line/para masses are codegen'd
-    # array ops; the top-gram counts explode to the TF-IDF shape:
-    # (id, n, gram) hash agg with map-side combine, then an id join
-    "gopher_repetition": (
-        ["Generate", "hashpartitioning(doc_id"],
-        ["CartesianProduct"],
-    ),
     # r8: line dedup — explode (Generate) + line-key count agg +
     # doc rebuild agg; the dup-key join is an equi-join, no cartesian
     "ccnet_line_dedup": (
@@ -136,13 +129,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["BroadcastHashJoin"],
         ["CartesianProduct"],
     ),
-    # r8: fertility readout — serves from the shared encode artifact
-    # (InMemoryTableScan), one source/lang hash agg; no re-encode
-    # (no MapInPandas below the aggregate once the memo is warm)
-    "tokenizer_fertility_by_source": (
-        ["hashpartitioning(source"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
     # r8: tombstone propagation — trigger table broadcasts; the only
     # shuffles are the CC loop's and the per-cluster min agg
     "tombstone_cluster_scrub": (
@@ -154,18 +140,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "dbscan_clusters": (
         ["hashpartitioning"],
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
-    # r8: phrase blocklist — codegen'd n-gram streams (Generate), no
-    # join anywhere; match-sized output
-    "phrase_blocklist_spans": (
-        ["Generate"],
-        ["CartesianProduct", "Join", "Exchange hashpartitioning"],
-    ),
-    # r8: lang-ID confusion — one lang-keyed agg + a gold-partitioned
-    # window; never a corpus-global single partition
-    "lang_id_confusion": (
-        ["hashpartitioning(gold"],
-        ["CartesianProduct", "SinglePartition"],
     ),
     # r8: matryoshka recall — per-d scored scans with broadcast
     # probes; the recall join broadcasts both top-k sets
@@ -185,28 +159,11 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["hashpartitioning"],
         ["CartesianProduct"],
     ),
-    # r8: blocklist gate — one map-only scan, no join/shuffle at all
-    # before the presentation sort
-    "blocklist_filter": (
-        ["rangepartitioning(doc_id"],
-        ["CartesianProduct", "Join", "hashpartitioning"],
-    ),
-    # r8: mix audit — the quota window partitions by source (never
-    # corpus-global); no cartesian anywhere
-    "pretraining_mix_audit": (
-        ["hashpartitioning(source"],
-        ["CartesianProduct"],
-    ),
     # r8: mixture planner — 1-row normalizer broadcasts (NLJ cross),
     # the per-source table never sort-merges
     "mixture_epochs_plan": (
         ["BroadcastNestedLoopJoin"],
         ["SortMergeJoin", "CartesianProduct"],
-    ),
-    # r8: threshold sweep — 5-row threshold table broadcasts
-    "classifier_threshold_sweep": (
-        ["BroadcastNestedLoopJoin"],
-        ["CartesianProduct"],
     ),
     # nearest-centroid: tiny centroid table broadcast to the corpus scan
     "nearest_centroid_confusion": (
@@ -217,30 +174,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "knn_label_vote": (
         ["BroadcastNestedLoopJoin", "BroadcastHashJoin"],
         ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # sequence packing: ONE shuffle, on the packing-bucket key; no joins
-    "pack_training_sequences": (
-        ["hashpartitioning(bucket"],
-        ["Join", "CartesianProduct"],
-    ),
-    # source mix: 1-row normalizer broadcast, not a single-partition window
-    "source_temperature_mix": (
-        ["BroadcastNestedLoopJoin Cross"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # chunking: per-row explode (Generate); only shuffle is the doc rollup
-    "chunk_documents_sliding": (
-        ["Generate", "hashpartitioning(doc_id"],
-        ["Join", "CartesianProduct"],
-    ),
-    # Gopher gate: pure per-row expressions + final sort — no join, no
-    # hash shuffle anywhere (the zero-shuffle corpus-cleaning claim)
-    "gopher_quality": ([], ["Join", "hashpartitioning", "CartesianProduct"]),
-    # unigram LM: vocab-sized model broadcasts into the scoring join;
-    # the token stream itself must never sort-merge
-    "unigram_logprob": (
-        ["BroadcastHashJoin"],
-        ["SortMergeJoin", "CartesianProduct"],
     ),
     # span dedup: winner-per-span via map-side-combinable min(struct)
     # aggregation on the md5 key (the Window present is the per-doc
@@ -277,12 +210,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["FlatMapGroupsInPandas", "hashpartitioning(cluster"],
         ["CartesianProduct", "SortMergeJoin"],
     ),
-    # CCNet terciles: cutoff table broadcasts back; deliberately no
-    # ntile window (a per-lang window total-orders the corpus)
-    "perplexity_buckets": (
-        ["BroadcastHashJoin"],
-        ["Window", "SortMergeJoin", "CartesianProduct"],
-    ),
     # filtered ANN: the (cell, label) predicate joins the inverted
     # list to BROADCAST probe-cells as a hash join — the label filter
     # is part of the join key, never a post-filter; the corpus never
@@ -290,12 +217,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "filtered_ann_topk": (
         ["BroadcastHashJoin", "Left keys [2]: [cell", "label"],
         ["CartesianProduct"],
-    ),
-    # hashed classifier: the (bucket, weight) model table must join
-    # broadcast — the corpus's only shuffle is the per-doc rollup
-    "hashed_ngram_classifier": (
-        ["BroadcastHashJoin", "hashpartitioning(doc_id"],
-        ["SortMergeJoin", "CartesianProduct"],
     ),
     # PageRank: node-keyed equi-joins per iteration + broadcast 1-row
     # node count for the teleport term; never a cartesian
@@ -353,12 +274,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["BroadcastNestedLoopJoin"],
         ["SortMergeJoin", "CartesianProduct"],
     ),
-    # zipf: token counts combine map-side, top-1000 via TakeOrdered,
-    # single-row closed-form regression
-    "vocab_zipf_fit": (
-        ["partial_count", "TakeOrderedAndProject"],
-        ["CartesianProduct"],
-    ),
     # decayed features: no window/sort — aggregations + a user-keyed
     # join (AQE broadcasts the skinny side at this scale)
     "user_decay_features": (
@@ -406,11 +321,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["Window", "BroadcastHashJoin"],
         ["CartesianProduct", "SortMergeJoin"],
     ),
-    # quantile gate: source-partitioned window, no join
-    "quality_quantile_gate": (
-        ["Window"],
-        ["CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin"],
-    ),
     # incremental ingest dedup: key equi-joins only (fingerprint set +
     # LSH band-key index) — nothing pairwise against the corpus
     "incremental_ingest_dedup": (
@@ -427,13 +337,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     # the corpus is never pair-joined
     "cluster_quality": (
         ["BroadcastHashJoin", "HashAggregate"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # BM25: top-k selection via TakeOrderedAndProject (per-partition
-    # local top-k, k×partitions merged on the driver) — the ranking
-    # window runs over only the k survivors, never the scored corpus
-    "bm25_search": (
-        ["TakeOrderedAndProject"],
         ["CartesianProduct", "SortMergeJoin"],
     ),
     # PMI: bigram/unigram counts combine map-side; totals broadcast as
@@ -532,14 +435,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["hashpartitioning(doc_id"],
         ["CartesianProduct", "SinglePartition"],
     ),
-    # production BPE encode (r9): SERVES from the shared encode
-    # parquet artifact — plain scan + presentation sort, no joins, no
-    # hash shuffle, and crucially NO re-encode (the one-Arrow-pass
-    # build shape is audited as op:bpe_encode_build)
-    "bpe_encode_corpus": (
-        ["Scan parquet", "rangepartitioning"],
-        ["Join", "hashpartitioning", "CartesianProduct", "MapInPandas"],
-    ),
     # URL canonicalization: pure codegen'd projection — zero joins,
     # zero hash shuffles
     "url_canonicalize": (
@@ -560,24 +455,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["SinglePartition", "CartesianProduct"],
     ),
     # --- round-7 additions ---
-    # unigram corpus encode mirrors the BPE encoder plan: training is
-    # a driver-side artifact built BEFORE the plan; the emitted plan
-    # is one Arrow pass — no joins, no hash shuffle
-    "unigram_encode_corpus": (
-        ["MapInPandas", "rangepartitioning"],
-        ["Join", "hashpartitioning", "CartesianProduct"],
-    ),
-    # FIM rewrite: pure codegen'd substring projection, map-only
-    "fim_transform": (
-        ["rangepartitioning"],
-        ["Join", "hashpartitioning", "CartesianProduct"],
-    ),
-    # main-content extraction: higher-order array expressions fuse
-    # into the scan — zero joins, zero hash shuffles
-    "html_main_content": (
-        ["rangepartitioning"],
-        ["Join", "hashpartitioning", "CartesianProduct"],
-    ),
     # JL projection recall: probes broadcast into the two brute-force
     # rankings (the declared cross shape) — no unbroadcast cartesian
     "random_projection_recall": (
@@ -712,7 +589,7 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
 # An unpartitioned `Window.orderBy(...)` forces EVERY input row through
 # one task (`Exchange SinglePartition` → `Sort` → `Window` in the
 # physical plan) — invisible at sf0.01, a one-executor bottleneck at
-# 100 TB (round-2 `bm25_search`, VERDICT #2).  Bounded inputs are fine:
+# 100 TB (a round-2 ranking query, VERDICT #2).  Bounded inputs are fine:
 # a window over a `TakeOrderedAndProject`/`CollectLimit` result ranks at
 # most k rows.  The audit scans every catalog query's formatted plan for
 # the SinglePartition→Sort→Window node chain; queries where that chain
@@ -879,14 +756,6 @@ def main() -> int:
 
         emb = load_table(spark, args.sf, "embeddings")
         return similarity.cosine_near_pairs(emb, 0.4)
-
-    def _bpe_encode_build_plan():
-        from kissmetrics_to_database_spark.operators import text
-        from kissmetrics_to_database_spark.session import load_table
-
-        docs = load_table(spark, args.sf, "documents")
-        merges = text.bpe_train_merges_local(docs, n_merges=32)
-        return text.bpe_encode_corpus(docs, [(m[1], m[2]) for m in merges])
 
     def _removed_positions_build_plan():
         from kissmetrics_to_database_spark.operators import dedup
@@ -1093,13 +962,6 @@ def main() -> int:
             ["FlatMapCoGroupsInPandas", "hashpartitioning(_cell",
              "BroadcastHashJoin"],
             ["CartesianProduct", "SortMergeJoin"],
-        ),
-        # BPE corpus encode build: ONE Arrow mapInPandas pass — no
-        # joins, no hash shuffle at all
-        "op:bpe_encode_build": (
-            _bpe_encode_build_plan,
-            ["MapInPandas"],
-            ["Join", "hashpartitioning", "CartesianProduct"],
         ),
         # exact-substring removed-positions build: gram winner via
         # map-side-combinable min(struct) agg on the gram hash
