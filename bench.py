@@ -51,7 +51,7 @@ from kissmetrics_to_database_spark.session import cache_tables, get_spark  # noq
 # Headline set: scan-heavy agg, star joins (incl. the join-heavy
 # TPC-H Q2/Q9/Q18/Q21 so regressions in the expensive plans are
 # visible round-over-round), iterative identity CC, near-dup suite,
-# similarity search, windows. Chosen to cover every subsystem while
+# windows. Chosen to cover every subsystem while
 # staying O(n log n) at any SF (no all-pairs ops).
 HEADLINE = [
     "tpch_q1_pricing_summary",
@@ -67,21 +67,15 @@ HEADLINE = [
     "broadcast_lookup_join",
     "minhash_lsh_near_dups",
     "simhash_near_dups",
-    "embedding_topk_bruteforce",
-    "embedding_topk_ivf",
-    "filtered_ann_topk",
     "time_proximity_pairs",
     "sessionization",
     "tumbling_window_hourly",
     "top_spenders_per_type",
     "asof_last_signup",
     "cube_agg",
-    "nearest_centroid_confusion",
-    # round-2 span dedup + clustering suite
+    # round-2 span dedup suite
     "span_dedup",
     "source_quota_cap",
-    "kmeans_clusters",
-    "semantic_dedup",
     # round-2 sketch suite (fixed-size-state operators)
     "cms_heavy_hitters",
     "hll_event_users",
@@ -122,28 +116,15 @@ HEADLINE = [
     # round-6 additions
     "exact_substring_spans",
     "exact_substring_rewrite",
-    "url_canonicalize",
-    "domain_quota_sample",
     "exact_substring_ingest_spans",
     "corpus_snapshot_diff",
     "decontamination_spans",
-    # round-7 additions
-    "random_projection_recall",
-    "embedding_cosine_near_dups",
     # round-8 additions
     "ccnet_line_dedup",
     "dup_cluster_representatives",
-    "kcenter_coreset",
     "mixture_epochs_plan",
-    "warc_ingest_extract",
     "edit_distance_pairs",
-    "semantic_decontamination",
-    "filtered_ann_recall",
-    "bitext_margin_mining",
     "tombstone_cluster_scrub",
-    "dbscan_clusters",
-    "matryoshka_recall",
-    "multiprobe_lsh_recall",
     "simhash_precision_eval",
     # round-9 additions
     "delta_time_travel",
@@ -164,13 +145,9 @@ HEADLINE = [
     "attribution_time_decay",
     "iceberg_mor_deletes",
     "delta_column_mapping",
-    "bitext_margin_mining_ann",
-    "bitext_ann_recall",
     "funnel_conversion",
     "dau_mau_stickiness",
     "iceberg_equality_deletes",
-    "semantic_decontamination_ann",
-    "semantic_decontamination_ann_recall",
     "delta_deletion_vectors",
     "ab_test_lift",
     # round-11 additions
@@ -178,11 +155,6 @@ HEADLINE = [
     "delta_writer_roundtrip",
     "delta_optimize_roundtrip",
     "iceberg_writer_roundtrip",
-    "semantic_decontamination_ann_shuffle",
-    "semantic_decontamination_ivf",
-    "semantic_decontamination_ivf_recall",
-    "bitext_margin_mining_ivf",
-    "bitext_ivf_recall",
     # round-11 continuation: lakehouse DML + Hudi + quality gate
     "delta_delete_dml",
     "delta_merge_dml",
@@ -209,96 +181,6 @@ HEADLINE = [
     "delta_dml_on_dv_and_mapped",
     "delta_dv_delete_native",
 ]
-
-
-def bench_trainers(spark, sf_dir: str) -> dict:
-    """Per-phase timings for the iterative-trainer queries (VERDICT
-    r5 item 4): one opaque number per query hides a serving-path
-    regression inside trainer scheduling jitter, so this tier times
-    TRAIN (artifact production, once — the amortized cost) and SERVE
-    (serving with the artifact, median of 3 noop-sink runs —
-    the 100 TB-relevant number; key regression tracking on serve_s).
-    """
-    from kissmetrics_to_database_spark.operators import similarity
-    from kissmetrics_to_database_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    # name -> (train() -> artifact, serve(artifact) -> DataFrame)
-    cases = {
-        "kmeans_clusters": (
-            lambda: similarity.kmeans_train_centroids(emb, k=8, iters=2),
-            lambda a: similarity.kmeans_lloyd(emb, k=8, iters=2, centroids=a),
-        ),
-    }
-    out = {}
-    for name, (train, serve) in cases.items():
-        t0 = time.perf_counter()
-        artifact = train()
-        train_s = round(time.perf_counter() - t0, 3)
-        entry = {"train_s": train_s}
-        if serve is not None:
-            serve(artifact).write.format("noop").mode("overwrite").save()  # warm
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                serve(artifact).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            entry["serve_s"] = round(statistics.median(runs), 3)
-        out[name] = entry
-    return out
-
-
-def bench_layout(spark, sf_dir: str) -> dict:
-    """IVF at-rest layout A/B (VERDICT r5 item 3): write the
-    cell-assigned embedding corpus ``partitionBy(cell)``, then scan it
-    twice — all cells vs an nprobe=2 ``read_ivf_cells`` pruned read
-    (PartitionFilters, see PLANS.md `op:ivf_layout_prune`). At 100 TB
-    the pruned scan touches nprobe cells' FILES only; the A/B records
-    that the pruning actually pays even at toy SF."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from kissmetrics_to_database_spark.operators import layout, similarity
-    from kissmetrics_to_database_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.where("vec_id < 8").select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    root = tempfile.mkdtemp(prefix="bench_ivf_layout_")
-    path = root + "/ivf"
-    try:
-        t0 = time.perf_counter()
-        layout.write_ivf_layout(similarity.ivf_assign(emb, cents), path)
-        write_s = round(time.perf_counter() - t0, 3)
-
-        agg = lambda df: df.agg(  # noqa: E731 — force vector column read
-            F.count("*"), F.sum(F.element_at("embedding", 1))
-        ).collect()
-        full = spark.read.parquet(path)
-        pruned = layout.read_ivf_cells(spark, path, [0, 1])
-        agg(full), agg(pruned)  # warm
-        full_t, pruned_t = [], []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            agg(full)
-            full_t.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            agg(pruned)
-            pruned_t.append(time.perf_counter() - t0)
-        n_cells = full.select("cell").distinct().count()
-        return {
-            "write_s": write_s,
-            "n_cells": n_cells,
-            "pruned_cells": 2,
-            "full_scan_s": round(statistics.median(full_t), 4),
-            "pruned_scan_s": round(statistics.median(pruned_t), 4),
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def time_queries(
@@ -420,9 +302,6 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
-    if not only:  # the fixed-cost tiers only belong to full runs
-        out["trainers"] = bench_trainers(spark, sf_dir)
-        out["layout"] = bench_layout(spark, sf_dir)
     emit_json_line(out, result_fd)
     spark.stop()
 

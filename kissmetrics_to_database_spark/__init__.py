@@ -4,7 +4,7 @@ A from-scratch Spark implementation of the data semantics of the
 reference tool ``jlcd/kissmetrics-to-database`` (a PHP S3→Redshift
 event loader), re-expressed as declarative DataFrame/SQL plans that
 Catalyst/Tungsten can optimize, plus the large-scale training-data
-operators (dedup, similarity search) a 100 TB pipeline needs.
+operators (dedup) a 100 TB pipeline needs.
 
 Design stance (SURVEY.md §7.1):
 - every transform is a pure ``DataFrame -> DataFrame`` function so the

@@ -1,9 +1,8 @@
 """Apache Avro object-container codec, from the PUBLIC specification.
 
 Iceberg manifests are Avro files; this container ships no Avro
-library, so — like the WARC reader — the format is implemented
-from its open spec (Avro 1.11.1, "Object Container Files"
-+ "Binary Encoding"). Scope is exactly what a metadata reader needs:
+library, so the format is implemented from its open spec (Avro
+1.11.1, "Object Container Files" + "Binary Encoding"). Scope is exactly what a metadata reader needs:
 
 - container: magic ``Obj\\x01``, file-metadata map (``avro.schema``
   JSON, ``avro.codec``), 16-byte sync marker, then blocks of

@@ -332,10 +332,9 @@ def jaccard_pairs(
     at small scale). Scores are rounded to 6 decimals so cross-engine
     float summation order can't flip a comparison.
 
-    Input invariant: ``candidates`` is canonically oriented, every
-    pair with ``id_a < id_b`` (the LSH and simhash generators emit it
-    so). Nothing here re-orients or filters it, so an unoriented
-    candidate set yields reversed and duplicate pairs.
+    ``candidates`` may hold a pair in either order, more than once, or
+    a doc paired with itself: each pair is scored once as
+    ``id_a < id_b`` and self-pairs are dropped.
     """
     sizes = token_df.groupBy(id_col).agg(F.count("*").alias("n"))
     ta = token_df.select(F.col(id_col).alias("id_a"), "token")
@@ -352,7 +351,14 @@ def jaccard_pairs(
         # waste, Σ df_a·df_b vs |pairs|·|tokens/doc| ≈ 11M).
         # Identical output: same |A∩B| per candidate pair;
         # zero-intersection pairs are absent either way.
-        pairs = candidates.select("id_a", "id_b").distinct()
+        pairs = (
+            candidates.select(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+            )
+            .where(F.col("id_a") != F.col("id_b"))
+            .distinct()
+        )
         inter = (
             pairs.join(ta, "id_a")
             .join(tb, ["id_b", "token"])
@@ -1082,9 +1088,8 @@ def lsh_recall_eval(
     rows_per_band: int = 2,
     thresholds: tuple[float, ...] = (0.5, 0.6, 0.7, 0.8),
 ) -> DataFrame:
-    """Index-quality eval for the LSH dedup path (the dedup-family
-    counterpart of ``ann_recall_at_k``): per Jaccard threshold, what
-    fraction of the EXACT near-dup pairs does the banded-LSH
+    """Index-quality eval for the LSH dedup path: per Jaccard
+    threshold, what fraction of the EXACT near-dup pairs does the banded-LSH
     candidate set recover?
 
     recall(t) = |{exact pairs ≥ t} ∩ candidates| / |{exact pairs ≥ t}|
@@ -1093,8 +1098,7 @@ def lsh_recall_eval(
     scheme catches high-similarity pairs with probability
     1-(1-s^r)^b), so the row at the operating threshold tells you
     whether to re-band. Exact ground truth is the all-pairs token
-    join — an EVAL to run on a sample at scale, never the corpus
-    (same contract as ann_recall_at_k).
+    join — an EVAL to run on a sample at scale, never the corpus.
 
     Returns (threshold, n_true, n_caught, recall) ordered by
     threshold.

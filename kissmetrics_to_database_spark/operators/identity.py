@@ -455,9 +455,9 @@ def _fold_arrow(
     if [f.name for f in files] == [_MAP_FILE]:
         tmp = path / f".{_MAP_FILE}.tmp"
         pq.write_table(table, tmp)
-        _fsync(tmp)
+        fsync_path(tmp)
         os.replace(tmp, path / _MAP_FILE)
-        _fsync(path)
+        fsync_path(path)
     else:
         staged = _sibling(path, "new")
         staged.mkdir(parents=True)
@@ -480,7 +480,7 @@ def _sibling(path: Path, tag: str) -> Path:
     return path.parent / f".{path.name}.{tag}"
 
 
-def _fsync(path: Path) -> None:
+def fsync_path(path: Path) -> None:
     """Flush a file's data, or a directory's entries, to disk."""
     fd = os.open(path, os.O_RDONLY)
     try:
@@ -494,13 +494,13 @@ def _swap(path: Path, staged: Path) -> None:
     files are on disk. The old map is parked beside it until the new
     one is in place."""
     for f in staged.iterdir():
-        _fsync(f)
-    _fsync(staged)
+        fsync_path(f)
+    fsync_path(staged)
     old = _sibling(path, "old")
     if path.exists():
         os.replace(path, old)
     os.replace(staged, path)
-    _fsync(path.parent)
+    fsync_path(path.parent)
     shutil.rmtree(old, ignore_errors=True)
 
 
@@ -511,7 +511,7 @@ def _recover_swap(path: Path) -> None:
     old, staged = _sibling(path, "old"), _sibling(path, "new")
     if old.exists() and not path.exists():
         os.replace(old, path)
-        _fsync(path.parent)
+        fsync_path(path.parent)
     shutil.rmtree(old, ignore_errors=True)
     shutil.rmtree(staged, ignore_errors=True)
 

@@ -72,40 +72,3 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def write_ivf_layout(
-    df: DataFrame,
-    path: str,
-    cell_col: str = "cell",
-) -> None:
-    """At-rest IVF layout (VERDICT r5 item 3): write a cell-assigned
-    corpus ``partitionBy(cell)`` so an ``nprobe``-cell query prunes
-    WHOLE FILES at planning time — query cost becomes O(nprobe cells),
-    not O(corpus). This is the difference SCALING.md promises between
-    scanning 100 TB and scanning the handful of cells a probe visits;
-    :func:`read_ivf_cells` + PLANS.md's ``PartitionFilters`` row prove
-    the pruning actually reaches the scan.
-
-    ``repartition(cell_col)`` first: each output task then owns whole
-    cells, so every cell directory gets a handful of large files
-    instead of (tasks × cells) fragments — the small-files failure
-    mode of naive partitionBy. At extreme scale combine with a
-    per-cell file-count target via repartition(n, cell_col).
-    """
-    (
-        df.repartition(F.col(cell_col))
-        .write.mode("overwrite")
-        .partitionBy(cell_col)
-        .parquet(path)
-    )
-
-
-def read_ivf_cells(spark, path: str, cells: list[int]) -> DataFrame:
-    """Read ONLY the given cells from an IVF layout. The IN-filter on
-    the partition column compiles to ``PartitionFilters`` on the
-    parquet scan (asserted in PLANS.md) — non-probed cells' files are
-    never opened, let alone read."""
-    return spark.read.parquet(path).where(
-        F.col("cell").isin([int(c) for c in cells])
-    )

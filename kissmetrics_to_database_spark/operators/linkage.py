@@ -370,7 +370,7 @@ def blocking_recall_eval(
     max_block: int = MAX_BLOCK,
 ) -> DataFrame:
     """Blocking-quality eval (the linkage counterpart of
-    lsh_recall_eval / ann_recall_at_k): of all record pairs in a
+    lsh_recall_eval): of all record pairs in a
     CONSTANT-SIZE eval slice (doc_id < eval_max_id) whose exact FS
     match weight clears each threshold, what fraction does the
     production blocked candidate path (union of max_block-guarded

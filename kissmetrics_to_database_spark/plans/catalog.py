@@ -17,7 +17,7 @@ Shared determinism rules (FIXTURES.md):
 
 Layout: CORE_* = reference-fidelity operators (SURVEY §2 row ids in
 each docstring); EXT_* = the training-data extension suite (dedup /
-similarity / analytics windows).
+analytics windows).
 """
 
 from __future__ import annotations
@@ -994,8 +994,7 @@ _VERIFIED_R01 = [
     "orderby_limit", "union_dedup", "set_difference", "sha2_bucket",
     "schema_evolution_union", "csv_scan", "exact_dedup_fingerprint",
     "minhash_signatures", "minhash_lsh_near_dups", "ngram_jaccard_pairs",
-    "simhash_signatures", "simhash_near_dups", "embedding_cosine_near_dups",
-    "embedding_topk_bruteforce", "embedding_topk_lsh", "embedding_topk_ivf",
+    "simhash_signatures", "simhash_near_dups",
     "hash_split_assignment", "stratified_sample",
 ]
 # Round-2 driver-green queries (CORRECTNESS_r02.json): the window
@@ -1009,7 +1008,6 @@ _VERIFIED_R02 = [
     "tumbling_window_hourly", "funnel_signup_purchase",
     "top_spenders_per_type", "near_dup_clusters", "time_proximity_pairs",
     "decontaminate_against_eval",
-    "nearest_centroid_confusion", "knn_label_vote",
     "tpch_q6_forecast_revenue",
     "correlated_subquery_above_avg", "intersect_users",
     "tpch_q2_min_cost_supplier", "tpch_q14_promo_revenue",
@@ -1032,14 +1030,14 @@ _VERIFIED_R02 = [
 _VERIFIED_R03 = [
     "corpus_source_profile", "stratified_sample",
     "identity_pagerank", "corrupt_json_repair",
-    "span_dedup", "source_quota_cap", "kmeans_clusters", "semantic_dedup",
+    "span_dedup", "source_quota_cap",
     "cms_heavy_hitters", "hll_event_users", "bloom_novel_docs",
     "weighted_doc_sample", "histogram_quantiles", "zorder_layout",
-    "event_burst_triangles", "hard_negative_mining",
+    "event_burst_triangles",
     "user_decay_features", "tombstone_scrub", "leakage_safe_split",
     "source_overlap_matrix", "behavior_sequences", "bpe_pair_counts",
     "event_transition_matrix", "epoch_shuffle",
-    "incremental_ingest_dedup", "ann_recall_at_k", "cluster_quality",
+    "incremental_ingest_dedup",
     "approx_aggregates",
 ]
 
@@ -1053,8 +1051,6 @@ _REVERIFY_BEHAVIOR_CHANGED = [
     # r9: queries whose own execution path changed this round (brand-new
     # queries are prioritized automatically and need no entry here).
     "edit_distance_pairs",     # r9: short-long boundary fix (ADVICE high)
-    "embedding_cosine_near_dups",  # r9: serves from shared ε-graph artifact
-    "dbscan_clusters",         # r9: consumes the shared ε-graph
     "minhash_lsh_near_dups",   # r9: pair memo → persisted parquet artifact
     "dup_cluster_representatives",  # r9: persisted pair artifact
     "near_dup_clusters",       # r9: persisted pair artifact
@@ -1067,7 +1063,6 @@ _REVERIFY_BEHAVIOR_CHANGED = [
     "ngram_jaccard_pairs",
     "span_dedup",
     "decontaminate_against_eval",
-    "semantic_dedup",
 ]
 
 

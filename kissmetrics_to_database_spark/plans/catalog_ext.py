@@ -1,9 +1,9 @@
 """Extension query catalog: training-data operators + analytics.
 
 The beyond-reference surface (BASELINE.json north star): dedup
-(exact / MinHash-LSH / Jaccard / SimHash), embedding similarity
-search, plus the TPC-H-style joins/aggregations and
-event-time windows that are the bench surface.
+(exact / MinHash-LSH / Jaccard / SimHash), plus the TPC-H-style
+joins/aggregations and event-time windows that are the bench
+surface.
 
 Registered into catalog.QUERIES / catalog.ORACLES via the same
 decorator; imported from catalog.py's tail.
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from kissmetrics_to_database_spark.operators import (
     dedup,
     interval,
-    similarity,
 )
 from kissmetrics_to_database_spark.plans.catalog import query
 from kissmetrics_to_database_spark.session import load_table
@@ -89,18 +88,6 @@ SQL_SIMHASH = f"""
   )
   GROUP BY doc_id
 """
-
-SQL_DOT = (
-    "list_sum(list_transform(range(1, len({a}) + 1),"
-    " i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
-)
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    return (
-        f"round({SQL_DOT.format(a=a, b=b)} / "
-        f"(sqrt({SQL_DOT.format(a=a, b=a)}) * sqrt({SQL_DOT.format(a=b, b=b)})), 6)"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -198,24 +185,6 @@ def _lsh_pairs_cached(spark, sf_dir: str):
     return _shared_artifact(spark, "lsh_pairs", sf_dir, build)
 
 
-def _cosine_pairs_cached(spark, sf_dir: str, threshold: float = 0.4):
-    """Shared t=0.4 ε-graph (r9, VERDICT r8 #1):
-    `embedding_cosine_near_dups` and `dbscan_clusters` consume the
-    IDENTICAL exact cosine pair set — the suite's single most
-    expensive computation (grid-blocked, but irreducibly O(n²) total
-    work at this threshold, see similarity.cosine_near_pairs). Built
-    once per (session, sf_dir), persisted to parquet; DBSCAN's
-    degree/CC stages then cost a skinny-artifact scan, not a second
-    pair generation."""
-
-    def build():
-        emb = load_table(spark, sf_dir, "embeddings")
-        return similarity.cosine_near_pairs(emb, threshold)
-
-    return _shared_artifact(
-        spark, f"cosine_pairs_t{threshold}", sf_dir, build
-    )
-
 @query(
     "minhash_lsh_near_dups",
     f"""
@@ -254,10 +223,9 @@ def q_minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH index-quality eval (the dedup counterpart of
-    ann_recall_at_k): per Jaccard threshold, the fraction of EXACT
-    near-dup pairs the banded candidate set recovers — the S-curve
-    observed, not assumed, so the (bands, rows) scheme can be re-cut
+    """LSH index-quality eval: per Jaccard threshold, the fraction
+    of EXACT near-dup pairs the banded candidate set recovers — the
+    S-curve observed, not assumed, so the (bands, rows) scheme can be re-cut
     when recall at the operating threshold drops. Ground truth is the
     all-pairs token join (an eval for samples, never the corpus).
     See dedup.lsh_recall_eval."""
@@ -399,26 +367,6 @@ def q_simhash_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "embedding_cosine_near_dups",
-    f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           {_sql_cosine('a.embedding', 'b.embedding')} AS score
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE {_sql_cosine('a.embedding', 'b.embedding')} >= 0.4
-    ORDER BY id_a, id_b
-    """,
-)
-def q_embedding_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (threshold 0.4), exact — the
-    fifth dedup modality (after exact / MinHash-LSH / Jaccard /
-    SimHash). Spark side uses lossless 1-D cell blocking instead of
-    the oracle's O(n²) cross join; results are provably identical.
-    Serves from the shared t=0.4 ε-graph artifact (r9) that
-    `dbscan_clusters` also consumes."""
-    return _cosine_pairs_cached(spark, sf_dir).orderBy("id_a", "id_b")
-
-
-@query(
     "edit_distance_pairs",
     """
     WITH S AS (SELECT doc_id, substr(text, greatest(1, len(text) - 127), 128) AS s
@@ -445,776 +393,6 @@ def q_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.edit_distance_pairs(docs, "doc_id", "text").orderBy(
         "id_a", "id_b"
     )
-
-
-# ---------------------------------------------------------------------------
-# EXT — similarity search
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "embedding_topk_bruteforce",
-    f"""
-    WITH pe AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 8),
-    scored AS (
-      SELECT p.probe_id, e.vec_id AS neighbor_id,
-             {_sql_cosine('e.embedding', 'p.pv')} AS score
-      FROM embeddings e CROSS JOIN pe p
-      WHERE e.vec_id <> p.probe_id
-    )
-    SELECT probe_id, neighbor_id, score, CAST(rnk AS BIGINT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    ORDER BY probe_id, rank
-    """,
-)
-def q_embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-5 cosine neighbors for 8 probe vectors, brute force.
-    Scores rounded to 6dp before ranking; ties break on neighbor id."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < 8)
-    out = similarity.brute_force_topk(emb, probes, k=5)
-    return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
-        "probe_id", "rank"
-    )
-
-
-@query(
-    "embedding_topk_lsh",
-    f"""
-    WITH hp AS (SELECT vec_id AS hid, embedding AS hv FROM embeddings WHERE vec_id < 4),
-    sig AS (
-      SELECT e.vec_id, e.embedding,
-             string_agg(CASE WHEN {SQL_DOT.format(a='e.embedding', b='h.hv')} >= 0
-                        THEN '1' ELSE '0' END, '' ORDER BY h.hid) AS bucket
-      FROM embeddings e CROSS JOIN hp h
-      GROUP BY e.vec_id, e.embedding
-    ),
-    pe AS (SELECT vec_id AS probe_id, embedding AS pv, bucket FROM sig WHERE vec_id < 16),
-    scored AS (
-      SELECT p.probe_id, s.vec_id AS neighbor_id,
-             {_sql_cosine('s.embedding', 'p.pv')} AS score
-      FROM sig s JOIN pe p ON s.bucket = p.bucket
-      WHERE s.vec_id <> p.probe_id
-    )
-    SELECT probe_id, neighbor_id, score, CAST(rnk AS BIGINT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    ORDER BY probe_id, rank
-    """,
-)
-def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-5 via random-hyperplane LSH (4 sign bits; hyperplanes =
-    first 4 corpus vectors for determinism). Candidates limited to the
-    probe's bucket — the scale path vs. brute force."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    hp_rows = (
-        emb.where(F.col("vec_id") < 4).orderBy("vec_id").select("embedding").collect()
-    )
-    hyperplanes = [[float(x) for x in r[0]] for r in hp_rows]
-    probes = emb.where(F.col("vec_id") < 16)
-    out = similarity.lsh_topk(emb, probes, hyperplanes, k=5)
-    return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
-        "probe_id", "rank"
-    )
-
-
-@query(
-    "multiprobe_lsh_recall",
-    f"""
-    WITH hp AS (SELECT vec_id AS hid, embedding AS hv FROM embeddings WHERE vec_id < 4),
-    sig AS (
-      SELECT e.vec_id, e.embedding,
-             string_agg(CASE WHEN {SQL_DOT.format(a='e.embedding', b='h.hv')} >= 0
-                        THEN '1' ELSE '0' END, '' ORDER BY h.hid) AS bucket
-      FROM embeddings e CROSS JOIN hp h
-      GROUP BY e.vec_id, e.embedding
-    ),
-    pe AS (SELECT vec_id AS probe_id, embedding AS pv, bucket FROM sig WHERE vec_id < 16),
-    pkeys AS (
-      SELECT probe_id, pv,
-             CASE WHEN i = 0 THEN bucket
-                  ELSE substr(bucket, 1, i - 1)
-                       || (CASE substr(bucket, i, 1) WHEN '1' THEN '0' ELSE '1' END)
-                       || substr(bucket, i + 1) END AS bucket,
-             CASE WHEN i = 0 THEN 1 ELSE 0 END AS is_home
-      FROM pe, unnest(range(0, 5)) AS u(i)
-    ),
-    scored AS (
-      SELECT p.probe_id, s.vec_id AS neighbor_id, p.is_home,
-             {_sql_cosine('s.embedding', 'p.pv')} AS score
-      FROM sig s JOIN pkeys p ON s.bucket = p.bucket
-      WHERE s.vec_id <> p.probe_id
-    ),
-    single AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT probe_id, neighbor_id,
-               row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, neighbor_id) AS rnk
-        FROM scored WHERE is_home = 1
-      ) WHERE rnk <= 5
-    ),
-    multi AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT probe_id, neighbor_id,
-               row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, neighbor_id) AS rnk
-        FROM scored
-      ) WHERE rnk <= 5
-    ),
-    bf AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT p.probe_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.probe_id
-                 ORDER BY {_sql_cosine('e.embedding', 'p.pv')} DESC, e.vec_id) AS rnk
-        FROM embeddings e CROSS JOIN (SELECT probe_id, pv FROM pe) p
-        WHERE e.vec_id <> p.probe_id
-      ) WHERE rnk <= 5
-    )
-    SELECT b.probe_id,
-           CAST(count(s.neighbor_id) AS BIGINT) AS n_hits_single,
-           round(count(s.neighbor_id) / 5.0, 6) AS recall_single,
-           CAST(count(m.neighbor_id) AS BIGINT) AS n_hits_multi,
-           round(count(m.neighbor_id) / 5.0, 6) AS recall_multi
-    FROM bf b
-    LEFT JOIN single s ON b.probe_id = s.probe_id AND b.neighbor_id = s.neighbor_id
-    LEFT JOIN multi m ON b.probe_id = m.probe_id AND b.neighbor_id = m.neighbor_id
-    GROUP BY b.probe_id ORDER BY b.probe_id
-    """,
-)
-def q_multiprobe_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTI-PROBE LSH recall eval (r8; Lv et al. 2007): per probe,
-    recall@5 of single-bucket hyperplane LSH vs the Hamming-1
-    multi-probe expansion (flip each of the 4 sign bits — b+1 bucket
-    lookups, zero extra index) against exact ground truth — the
-    measurement that justifies multi-probe's standard-practice
-    status: most of a second hash table's recall for none of its
-    storage. Same 4-hyperplane index as `embedding_topk_lsh`. See
-    similarity.lsh_multiprobe_topk."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    hp_rows = (
-        emb.where(F.col("vec_id") < 4)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    hyperplanes = [[float(x) for x in r[0]] for r in hp_rows]
-    probes = emb.where(F.col("vec_id") < 16)
-    single = similarity.lsh_topk(emb, probes, hyperplanes, k=5).select(
-        "probe_id", F.col("neighbor_id").alias("n_s")
-    )
-    multi = similarity.lsh_multiprobe_topk(
-        emb, probes, hyperplanes, k=5
-    ).select("probe_id", F.col("neighbor_id").alias("n_m"))
-    bf = similarity.brute_force_topk(emb, probes, k=5).select(
-        "probe_id", "neighbor_id"
-    )
-    joined = (
-        bf.join(
-            F.broadcast(single),
-            (bf["probe_id"] == single["probe_id"])
-            & (bf["neighbor_id"] == single["n_s"]),
-            "left",
-        )
-        .drop(single["probe_id"])
-        .join(
-            F.broadcast(multi),
-            (bf["probe_id"] == multi["probe_id"])
-            & (bf["neighbor_id"] == multi["n_m"]),
-            "left",
-        )
-        .drop(multi["probe_id"])
-    )
-    return (
-        joined.groupBy(bf["probe_id"])
-        .agg(
-            F.count("n_s").cast("long").alias("n_hits_single"),
-            F.round(F.count("n_s") / 5.0, 6).alias("recall_single"),
-            F.count("n_m").cast("long").alias("n_hits_multi"),
-            F.round(F.count("n_m") / 5.0, 6).alias("recall_multi"),
-        )
-        .orderBy("probe_id")
-    )
-
-
-@query(
-    "embedding_topk_ivf",
-    f"""
-    WITH cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-    assigned AS (
-      SELECT vec_id, embedding, cell FROM (
-        SELECT e.vec_id, e.embedding, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_sql_cosine('e.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings e CROSS JOIN cent c
-      ) WHERE r = 1
-    ),
-    probe_cells AS (
-      SELECT probe_id, pv, cell FROM (
-        SELECT p.vec_id AS probe_id, p.embedding AS pv, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY p.vec_id
-                 ORDER BY {_sql_cosine('p.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings p CROSS JOIN cent c
-        WHERE p.vec_id < 12
-      ) WHERE r <= 2
-    ),
-    scored AS (
-      SELECT pc.probe_id, a.vec_id AS neighbor_id,
-             {_sql_cosine('a.embedding', 'pc.pv')} AS score
-      FROM assigned a JOIN probe_cells pc ON a.cell = pc.cell
-      WHERE a.vec_id <> pc.probe_id
-    )
-    SELECT probe_id, neighbor_id, score, CAST(rnk AS BIGINT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    ORDER BY probe_id, rank
-    """,
-)
-def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-5 via an inverted-file (IVF) index: 8 deterministic
-    centroids, nprobe=2. The corpus-partitioned-by-cell layout is the
-    100 TB path — each probe touches two cells, not the corpus."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.where(F.col("vec_id") < 8)
-    probes = emb.where(F.col("vec_id") < 12)
-    out = similarity.ivf_topk(emb, probes, centroids, k=5, nprobe=2)
-    return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
-        "probe_id", "rank"
-    )
-
-
-@query(
-    "filtered_ann_topk",
-    f"""
-    WITH cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-    assigned AS (
-      SELECT vec_id, embedding, label, cell FROM (
-        SELECT e.vec_id, e.embedding, e.label, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_sql_cosine('e.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings e CROSS JOIN cent c
-      ) WHERE r = 1
-    ),
-    probe_cells AS (
-      SELECT probe_id, pv, plabel, cell FROM (
-        SELECT p.vec_id AS probe_id, p.embedding AS pv, p.label AS plabel,
-               c.cent_id AS cell,
-               row_number() OVER (PARTITION BY p.vec_id
-                 ORDER BY {_sql_cosine('p.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings p CROSS JOIN cent c
-        WHERE p.vec_id < 12
-      ) WHERE r <= 2
-    ),
-    scored AS (
-      SELECT pc.probe_id, a.vec_id AS neighbor_id,
-             {_sql_cosine('a.embedding', 'pc.pv')} AS score
-      FROM assigned a
-      JOIN probe_cells pc ON a.cell = pc.cell AND a.label = pc.plabel
-      WHERE a.vec_id <> pc.probe_id
-    )
-    SELECT probe_id, neighbor_id, score, CAST(rnk AS BIGINT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    ORDER BY probe_id, rank
-    """,
-)
-def q_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-filtered ANN: top-5 neighbors sharing the probe's
-    ``label``, with the predicate pushed into the inverted-list join
-    (join key = (cell, label)) — single-stage pre-filtering, never a
-    post-filter that could under-fill k. Same 8-centroid / nprobe=2
-    IVF as `embedding_topk_ivf`; the oracle mirrors the index
-    algorithm exactly, so results are bit-identical by construction.
-    Reference parity: the reference engine has no vector search; this
-    extends its equality-lookup surface
-    (KissmetricsToDatabase.php:623-635) to embedding space."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.where(F.col("vec_id") < 8)
-    probes = emb.where(F.col("vec_id") < 12)
-    out = similarity.ivf_topk_filtered(
-        emb, probes, centroids, k=5, nprobe=2, match_col="label"
-    )
-    return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
-        "probe_id", "rank"
-    )
-
-
-@query(
-    "filtered_ann_recall",
-    f"""
-    WITH cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-    assigned AS (
-      SELECT vec_id, embedding, label, cell FROM (
-        SELECT e.vec_id, e.embedding, e.label, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_sql_cosine('e.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings e CROSS JOIN cent c
-      ) WHERE r = 1
-    ),
-    probe_cells AS (
-      SELECT probe_id, pv, plabel, cell FROM (
-        SELECT p.vec_id AS probe_id, p.embedding AS pv, p.label AS plabel,
-               c.cent_id AS cell,
-               row_number() OVER (PARTITION BY p.vec_id
-                 ORDER BY {_sql_cosine('p.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings p CROSS JOIN cent c
-        WHERE p.vec_id < 12
-      ) WHERE r <= 2
-    ),
-    ivf AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT pc.probe_id, a.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY pc.probe_id
-                 ORDER BY {_sql_cosine('a.embedding', 'pc.pv')} DESC, a.vec_id) AS rnk
-        FROM assigned a
-        JOIN probe_cells pc ON a.cell = pc.cell AND a.label = pc.plabel
-        WHERE a.vec_id <> pc.probe_id
-      ) WHERE rnk <= 5
-    ),
-    pe AS (SELECT vec_id AS probe_id, embedding AS pv, label AS plabel
-           FROM embeddings WHERE vec_id < 12),
-    bf AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT p.probe_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.probe_id
-                 ORDER BY {_sql_cosine('e.embedding', 'p.pv')} DESC, e.vec_id) AS rnk
-        FROM embeddings e JOIN pe p ON e.label = p.plabel
-        WHERE e.vec_id <> p.probe_id
-      ) WHERE rnk <= 5
-    )
-    SELECT b.probe_id,
-           CAST(count(i.neighbor_id) AS BIGINT) AS n_hits,
-           round(count(i.neighbor_id) / 5.0, 6) AS recall_at_5
-    FROM bf b LEFT JOIN ivf i
-      ON b.probe_id = i.probe_id AND b.neighbor_id = i.neighbor_id
-    GROUP BY b.probe_id ORDER BY b.probe_id
-    """,
-)
-def q_filtered_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the FILTERED IVF path (r8) against exact
-    label-constrained brute force — the eval that certifies
-    single-stage pre-filtering actually fills k with the right
-    candidates (a post-filter design would show up here as
-    under-filled, low-recall probes). Same probes/centroids as
-    `filtered_ann_topk`; ground truth restricts the exact scan to
-    the probe's own label, exactly what the filtered index promises
-    to search."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.where(F.col("vec_id") < 8)
-    probes = emb.where(F.col("vec_id") < 12)
-    ivf = similarity.ivf_topk_filtered(
-        emb, probes, centroids, k=5, nprobe=2, match_col="label"
-    ).select("probe_id", F.col("neighbor_id").alias("n_ivf"))
-    p = probes.select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_vec"),
-        F.col("label").alias("_plabel"),
-    )
-    bf = (
-        emb.join(F.broadcast(p), on=[emb["label"] == p["_plabel"]])
-        .where(F.col("probe_id") != emb["vec_id"])
-        .select(
-            "probe_id",
-            emb["vec_id"].alias("neighbor_id"),
-            F.round(
-                similarity.cosine(F.col("probe_vec"), emb["embedding"]), 6
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    bf = (
-        bf.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("probe_id", "neighbor_id")
-    )
-    joined = bf.join(
-        F.broadcast(ivf),
-        (bf["probe_id"] == ivf["probe_id"]) & (bf["neighbor_id"] == ivf["n_ivf"]),
-        "left",
-    ).select(bf["probe_id"], "neighbor_id", "n_ivf")
-    return (
-        joined.groupBy("probe_id")
-        .agg(
-            F.count("n_ivf").cast("long").alias("n_hits"),
-            F.round(F.count("n_ivf") / 5.0, 6).alias("recall_at_5"),
-        )
-        .orderBy("probe_id")
-    )
-
-
-@query(
-    "bitext_margin_mining",
-    f"""
-    WITH dv AS (
-      SELECT d.doc_id AS id, d.lang, e.embedding AS v
-      FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-    ),
-    S AS (SELECT * FROM dv WHERE lang = 'en'),
-    T AS (SELECT * FROM dv WHERE lang <> 'en'),
-    sc AS (
-      SELECT s.id AS src_id, t.id AS tgt_id, t.lang AS tgt_lang,
-             CAST(round(1e6 * {SQL_DOT.format(a='s.v', b='t.v')}
-               / (sqrt({SQL_DOT.format(a='s.v', b='s.v')})
-                * sqrt({SQL_DOT.format(a='t.v', b='t.v')}))) AS BIGINT) AS ci
-      FROM S s CROSS JOIN T t
-    ),
-    ranked AS (
-      SELECT *,
-             row_number() OVER (PARTITION BY src_id, tgt_lang
-                                ORDER BY ci DESC, tgt_id) AS fr,
-             row_number() OVER (PARTITION BY tgt_id
-                                ORDER BY ci DESC, src_id) AS br
-      FROM sc
-    ),
-    sx AS (SELECT src_id, tgt_lang, sum(ci) AS s_sum
-           FROM ranked WHERE fr <= 4 GROUP BY src_id, tgt_lang),
-    sy AS (SELECT tgt_id, sum(ci) AS t_sum
-           FROM ranked WHERE br <= 4 GROUP BY tgt_id)
-    SELECT m.src_id, m.tgt_id, m.tgt_lang,
-           m.ci / 1e6 AS cosine,
-           round(8.0 * m.ci / (x.s_sum + y.t_sum), 6) AS margin
-    FROM (SELECT * FROM ranked WHERE fr = 1 AND br = 1) m
-    JOIN sx x ON m.src_id = x.src_id AND m.tgt_lang = x.tgt_lang
-    JOIN sy y ON m.tgt_id = y.tgt_id
-    WHERE round(8.0 * m.ci / (x.s_sum + y.t_sum), 6) >= 1.2
-    ORDER BY m.src_id, m.tgt_id
-    """,
-)
-def q_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-based BITEXT MINING (r8; Artetxe & Schwenk 2019 — the
-    LASER/CCMatrix multilingual pipeline): mutual-nearest-neighbor
-    en↔xx pairs from the shared embedding space, scored by the
-    ratio-margin that suppresses hub vectors, threshold 1.2 (115
-    mined pairs of 215 mutual-NN candidates at sf0.01). Every cosine
-    snaps to an integer before ranking/summation so the k-NN
-    normalizer sums are order-independent. See
-    similarity.margin_bitext_mining."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    emb = load_table(spark, sf_dir, "embeddings")
-    dv = docs.join(
-        emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
-    )
-    return similarity.margin_bitext_mining(
-        dv, "doc_id", "lang", "embedding", src_lang="en", k=4, threshold=1.2
-    ).orderBy("src_id", "tgt_id")
-
-
-# Shared CTE fragments for the ANN-routed bitext queries (r10): the
-# dv join, the exact-kernel pair set, and the multi-probe-LSH
-# candidate pipeline, each replayed verbatim in DuckDB.
-#
-# Index sizing (r10): the LSH bit count scales with corpus size —
-# b = 6 at ≤600 vectors, +2 per decade (6/8/10/12…) — the standard
-# log-n index-sizing rule that keeps BUCKET sizes (and therefore
-# candidate mass) near-constant as the corpus grows, instead of a
-# fixed-b index whose buckets grow linearly and push the bucket join
-# back toward all-pairs. Spark and the oracle compute b from the
-# same row count with the same thresholds.
-_LSH_B_SQL = (
-    "CASE WHEN n <= 600 THEN 6 WHEN n <= 6000 THEN 8 "
-    "WHEN n <= 60000 THEN 10 WHEN n <= 600000 THEN 12 ELSE 14 END"
-)
-
-
-def _lsh_bits(n: int) -> int:
-    for cap, b in ((600, 6), (6000, 8), (60000, 10), (600000, 12)):
-        if n <= cap:
-            return b
-    return 14
-
-
-_BITEXT_DV_SQL = """dv AS (
-      SELECT d.doc_id AS id, d.lang, e.embedding AS v
-      FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-    ),
-    params AS (
-      SELECT {b_expr} AS b FROM (SELECT count(*) AS n FROM embeddings)
-    )""".format(b_expr=_LSH_B_SQL)
-
-_BITEXT_EXACT_SQL = f"""xsc AS (
-      SELECT s.id AS src_id, t.id AS tgt_id, t.lang AS tgt_lang,
-             CAST(round(1e6 * {SQL_DOT.format(a='s.v', b='t.v')}
-               / (sqrt({SQL_DOT.format(a='s.v', b='s.v')})
-                * sqrt({SQL_DOT.format(a='t.v', b='t.v')}))) AS BIGINT) AS ci
-      FROM (SELECT * FROM dv WHERE lang = 'en') s
-      CROSS JOIN (SELECT * FROM dv WHERE lang <> 'en') t
-    ),
-    xranked AS (
-      SELECT *,
-             row_number() OVER (PARTITION BY src_id, tgt_lang
-                                ORDER BY ci DESC, tgt_id) AS fr,
-             row_number() OVER (PARTITION BY tgt_id
-                                ORDER BY ci DESC, src_id) AS br
-      FROM xsc
-    ),
-    xs AS (SELECT src_id, tgt_lang, sum(ci) AS s_sum
-           FROM xranked WHERE fr <= 4 GROUP BY src_id, tgt_lang),
-    xt AS (SELECT tgt_id, sum(ci) AS t_sum
-           FROM xranked WHERE br <= 4 GROUP BY tgt_id),
-    exact_pairs AS (
-      SELECT m.src_id, m.tgt_id, m.tgt_lang
-      FROM (SELECT * FROM xranked WHERE fr = 1 AND br = 1) m
-      JOIN xs x ON m.src_id = x.src_id AND m.tgt_lang = x.tgt_lang
-      JOIN xt y ON m.tgt_id = y.tgt_id
-      WHERE round(8.0 * m.ci / (x.s_sum + y.t_sum), 6) >= 1.2
-    )"""
-
-_BITEXT_ANN_SQL = f"""hp AS (
-      SELECT vec_id AS hid, embedding AS hv FROM embeddings
-      WHERE vec_id < (SELECT b FROM params)
-    ),
-    sig AS (
-      SELECT dv.id, dv.lang, dv.v,
-             string_agg(CASE WHEN {SQL_DOT.format(a='dv.v', b='h.hv')} >= 0
-                        THEN '1' ELSE '0' END, '' ORDER BY h.hid) AS bucket
-      FROM dv CROSS JOIN hp h
-      GROUP BY dv.id, dv.lang, dv.v
-    ),
-    combos AS (
-      SELECT i, j
-      FROM unnest(range(0, (SELECT b FROM params) + 1)) AS u(i),
-           unnest(range(0, (SELECT b FROM params) + 1)) AS v(j)
-      WHERE (i = 0 AND j = 0) OR (i > 0 AND j = 0) OR (i > 0 AND j > i)
-    ),
-    apk1 AS (
-      SELECT s.id AS src_id, s.v AS sv, c.j,
-             CASE WHEN c.i > 0 THEN
-               substr(s.bucket, 1, c.i - 1)
-               || (CASE substr(s.bucket, c.i, 1) WHEN '1' THEN '0' ELSE '1' END)
-               || substr(s.bucket, c.i + 1)
-             ELSE s.bucket END AS bkt1
-      FROM (SELECT * FROM sig WHERE lang = 'en') s, combos c
-    ),
-    apk AS (
-      SELECT src_id, sv,
-             CASE WHEN j > 0 THEN
-               substr(bkt1, 1, j - 1)
-               || (CASE substr(bkt1, j, 1) WHEN '1' THEN '0' ELSE '1' END)
-               || substr(bkt1, j + 1)
-             ELSE bkt1 END AS bucket
-      FROM apk1
-    ),
-    acand AS (
-      SELECT p.src_id, t.id AS tgt_id, t.lang AS tgt_lang,
-             CAST(round(1e6 * {SQL_DOT.format(a='p.sv', b='t.v')}
-               / (sqrt({SQL_DOT.format(a='p.sv', b='p.sv')})
-                * sqrt({SQL_DOT.format(a='t.v', b='t.v')}))) AS BIGINT) AS ci
-      FROM (SELECT * FROM sig WHERE lang <> 'en') t
-      JOIN apk p ON t.bucket = p.bucket
-    ),
-    aranked AS (
-      SELECT *,
-             row_number() OVER (PARTITION BY src_id, tgt_lang
-                                ORDER BY ci DESC, tgt_id) AS fr,
-             row_number() OVER (PARTITION BY tgt_id
-                                ORDER BY ci DESC, src_id) AS br
-      FROM acand
-    ),
-    asx AS (SELECT src_id, tgt_lang, sum(ci) AS s_sum
-            FROM aranked WHERE fr <= 4 GROUP BY src_id, tgt_lang),
-    aty AS (SELECT tgt_id, sum(ci) AS t_sum
-            FROM aranked WHERE br <= 4 GROUP BY tgt_id),
-    ann_pairs AS (
-      SELECT m.src_id, m.tgt_id, m.tgt_lang,
-             m.ci / 1e6 AS cosine,
-             round(8.0 * m.ci / (x.s_sum + y.t_sum), 6) AS margin
-      FROM (SELECT * FROM aranked WHERE fr = 1 AND br = 1) m
-      JOIN asx x ON m.src_id = x.src_id AND m.tgt_lang = x.tgt_lang
-      JOIN aty y ON m.tgt_id = y.tgt_id
-      WHERE round(8.0 * m.ci / (x.s_sum + y.t_sum), 6) >= 1.2
-    )"""
-
-
-def _bitext_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    emb = load_table(spark, sf_dir, "embeddings")
-    return docs.join(
-        emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
-    )
-
-
-def _bitext_hyperplanes(spark: SparkSession, sf_dir: str) -> list:
-    """First ``b`` corpus vectors as hyperplanes, with ``b`` sized
-    from the corpus count by the log-n rule (`_lsh_bits`) — the same
-    computation the oracle's params CTE does."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    b = _lsh_bits(emb.count())
-    rows = (
-        emb.where(F.col("vec_id") < b)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    return [[float(x) for x in r[0]] for r in rows]
-
-
-@query(
-    "bitext_margin_mining_ann",
-    f"""
-    WITH {_BITEXT_DV_SQL},
-    {_BITEXT_ANN_SQL}
-    SELECT src_id, tgt_id, tgt_lang, cosine, margin
-    FROM ann_pairs ORDER BY src_id, tgt_id
-    """,
-)
-def q_bitext_margin_mining_ann(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """ANN-candidates + EXACT-verify bitext mining (r10, VERDICT r9
-    #2 — the production route for the last perf-weak flag): candidate
-    en↔xx pairs come from a multi-probe hyperplane-LSH bucket join
-    (sign bits = the first b corpus vectors for determinism, with b
-    SIZED log-n from the corpus count — 6 at ≤600 vectors, +2 per
-    decade — so bucket sizes and candidate mass stay near-constant
-    as the corpus grows; the source side probes every bucket within
-    Hamming radius 2), and the margin pipeline — integer-snapped
-    cosine, candidate-k-NN normalizer sums, mutual-NN, threshold 1.2
-    — runs exactly on the candidates. Work scales with bucket
-    collision mass, never |src|x|tgt|; `bitext_ann_recall` measures
-    the approximation against the exact kernel at each SF's actual
-    operating point (near-uniform synthetic embeddings are sign-LSH's
-    documented worst case for recall). See
-    similarity.margin_bitext_mining_ann."""
-    return similarity.margin_bitext_mining_ann(
-        _bitext_dv(spark, sf_dir),
-        _bitext_hyperplanes(spark, sf_dir),
-        "doc_id",
-        "lang",
-        "embedding",
-        src_lang="en",
-        k=4,
-        threshold=1.2,
-        probe_radius=2,
-    ).orderBy("src_id", "tgt_id")
-
-
-@query(
-    "bitext_ann_recall",
-    f"""
-    WITH dv0 AS (
-      SELECT d.doc_id AS id, d.lang, e.embedding AS v
-      FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-    ),
-    params AS (
-      SELECT {_LSH_B_SQL} AS b
-      FROM (SELECT count(*) AS n FROM embeddings)
-    ),
-    dv AS (SELECT * FROM dv0 WHERE lang <> 'en' OR id < 2000),
-    {_BITEXT_EXACT_SQL},
-    {_BITEXT_ANN_SQL},
-    langs AS (
-      SELECT DISTINCT lang AS tgt_lang FROM dv WHERE lang <> 'en'
-    ),
-    e AS (SELECT tgt_lang, src_id, tgt_id FROM exact_pairs),
-    a AS (SELECT tgt_lang, src_id, tgt_id FROM ann_pairs),
-    hits AS (
-      SELECT e.tgt_lang,
-             CAST(count(*) AS BIGINT) AS n_common
-      FROM e JOIN a ON e.tgt_lang = a.tgt_lang
-          AND e.src_id = a.src_id AND e.tgt_id = a.tgt_id
-      GROUP BY e.tgt_lang
-    )
-    SELECT l.tgt_lang,
-           CAST(coalesce(ec.n, 0) AS BIGINT) AS n_exact,
-           CAST(coalesce(ac.n, 0) AS BIGINT) AS n_ann,
-           CAST(coalesce(h.n_common, 0) AS BIGINT) AS n_common,
-           round(coalesce(h.n_common, 0)
-                 / CAST(nullif(coalesce(ec.n, 0), 0) AS DOUBLE), 6)
-             AS recall,
-           round(coalesce(h.n_common, 0)
-                 / CAST(nullif(coalesce(ac.n, 0), 0) AS DOUBLE), 6)
-             AS precision
-    FROM langs l
-    LEFT JOIN (SELECT tgt_lang, count(*) AS n FROM e GROUP BY 1) ec
-      ON l.tgt_lang = ec.tgt_lang
-    LEFT JOIN (SELECT tgt_lang, count(*) AS n FROM a GROUP BY 1) ac
-      ON l.tgt_lang = ac.tgt_lang
-    LEFT JOIN hits h ON l.tgt_lang = h.tgt_lang
-    ORDER BY l.tgt_lang
-    """,
-)
-def q_bitext_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RECALL/PRECISION of the ANN-routed bitext miner vs the exact
-    kernel at the operating margin (r10, VERDICT r9 #2's "measured at
-    the operating point" bar — the lsh_recall_eval contract): per
-    target language, pair counts from both miners, their overlap, and
-    recall = |common|/|exact|, precision = |common|/|ann| (null when
-    a denominator is empty). The SOURCE side is a constant eval
-    slice (doc_id < 2000 — the whole corpus at small SF, fixed work
-    at scale: the linkage_blocking_recall contract), because the
-    ground truth here is the exact two-sided kernel; both miners see
-    the identical sliced universe and the SAME log-n-sized index as
-    production. Eval-regime by definition; the PRODUCTION path is
-    bitext_margin_mining_ann alone."""
-    dv = _bitext_dv(spark, sf_dir).where(
-        (F.col("lang") != "en") | (F.col("doc_id") < 2000)
-    )
-    langs = (
-        dv.where(F.col("lang") != "en")
-        .select(F.col("lang").alias("tgt_lang"))
-        .distinct()
-    )
-    # ONE readout pass over both miners (r14 optimization round,
-    # guide §1.2 — supersedes the r13 per-kernel localCheckpoints):
-    # tag each miner's pairs with a side flag, union, fold to one
-    # row per (lang, pair) carrying both flags, then count per lang —
-    # n_exact / n_ann / n_common come out of a single aggregation
-    # instead of three aggregations plus three joins, and each mining
-    # kernel is consumed exactly once (so the checkpoints that
-    # guarded against per-branch re-execution are unnecessary).
-    # Counts are over the identical pair sets — values unchanged.
-    exact = similarity.margin_bitext_mining(
-        dv, "doc_id", "lang", "embedding", src_lang="en", k=4, threshold=1.2
-    ).select("tgt_lang", "src_id", "tgt_id")
-    ann = similarity.margin_bitext_mining_ann(
-        dv,
-        _bitext_hyperplanes(spark, sf_dir),
-        "doc_id",
-        "lang",
-        "embedding",
-        src_lang="en",
-        k=4,
-        threshold=1.2,
-        probe_radius=2,
-    ).select("tgt_lang", "src_id", "tgt_id")
-    tagged = exact.withColumn("_e", F.lit(1)).withColumn(
-        "_a", F.lit(0)
-    ).unionByName(
-        ann.withColumn("_e", F.lit(0)).withColumn("_a", F.lit(1))
-    )
-    per_pair = tagged.groupBy("tgt_lang", "src_id", "tgt_id").agg(
-        F.max("_e").alias("_e"), F.max("_a").alias("_a")
-    )
-    counts = per_pair.groupBy("tgt_lang").agg(
-        F.sum("_e").alias("n_e"),
-        F.sum("_a").alias("n_a"),
-        F.sum(F.col("_e") * F.col("_a")).alias("n_c"),
-    )
-    out = langs.join(counts, "tgt_lang", "left").select(
-        "tgt_lang",
-        F.coalesce("n_e", F.lit(0)).cast("long").alias("n_exact"),
-        F.coalesce("n_a", F.lit(0)).cast("long").alias("n_ann"),
-        F.coalesce("n_c", F.lit(0)).cast("long").alias("n_common"),
-        F.round(
-            F.coalesce("n_c", F.lit(0))
-            / F.nullif(
-                F.coalesce("n_e", F.lit(0)), F.lit(0)
-            ).cast("double"),
-            6,
-        ).alias("recall"),
-        F.round(
-            F.coalesce("n_c", F.lit(0))
-            / F.nullif(
-                F.coalesce("n_a", F.lit(0)), F.lit(0)
-            ).cast("double"),
-            6,
-        ).alias("precision"),
-    )
-    return out.orderBy("tgt_lang")
 
 
 # ---------------------------------------------------------------------------
@@ -1856,418 +1034,6 @@ def q_decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RAW_COS_TE = (
-    f"{SQL_DOT.format(a='t.embedding', b='e.embedding')} / "
-    f"(sqrt({SQL_DOT.format(a='t.embedding', b='t.embedding')}) * "
-    f"sqrt({SQL_DOT.format(a='e.embedding', b='e.embedding')}))"
-)
-
-
-@query(
-    "semantic_decontamination",
-    f"""
-    WITH ev AS (SELECT vec_id AS eval_id, embedding FROM embeddings WHERE vec_id % 97 = 0),
-    tr AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 97 <> 0),
-    scored AS (
-      SELECT t.vec_id, e.eval_id, {_SQL_RAW_COS_TE} AS raw
-      FROM tr t CROSS JOIN ev e
-    ),
-    best AS (
-      SELECT vec_id, eval_id, raw,
-             row_number() OVER (PARTITION BY vec_id ORDER BY raw DESC, eval_id) AS rn
-      FROM scored
-    )
-    SELECT vec_id, eval_id AS nearest_eval_id,
-           round(raw, 6) AS max_eval_cosine,
-           raw >= 0.35 AS contaminated
-    FROM best WHERE rn = 1 ORDER BY vec_id
-    """,
-)
-def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEMANTIC benchmark decontamination (r8): the embedding-space
-    complement of the 5-gram gate — flags paraphrase-level eval
-    leakage token shingles cannot see. Same held-out convention as
-    `decontaminate_against_eval` (id % 97 = 0 is the benchmark); the
-    eval side broadcasts, the corpus is scanned once, and the
-    per-vector max is a partial aggregation, so the shuffle carries
-    one skinny row per corpus vector at any scale. See
-    similarity.semantic_decontamination."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = similarity.semantic_decontamination(
-        emb.where(F.col("vec_id") % 97 != 0),
-        emb.where(F.col("vec_id") % 97 == 0),
-        threshold=0.35,
-    )
-    return out.orderBy("vec_id")
-
-
-_SQL_DECON_ANN = f"""params AS (
-      SELECT {_LSH_B_SQL} AS b
-      FROM (SELECT count(*) AS n FROM embeddings)
-    ),
-    hp AS (
-      SELECT vec_id AS hid, embedding AS hv FROM embeddings
-      WHERE vec_id < (SELECT b FROM params)
-    ),
-    sig AS (
-      SELECT e.vec_id, e.embedding,
-             string_agg(CASE WHEN {SQL_DOT.format(a='e.embedding', b='h.hv')} >= 0
-                        THEN '1' ELSE '0' END, '' ORDER BY h.hid) AS bucket
-      FROM embeddings e CROSS JOIN hp h
-      GROUP BY e.vec_id, e.embedding
-    ),
-    combos AS (
-      SELECT i, j
-      FROM unnest(range(0, (SELECT b FROM params) + 1)) AS u(i),
-           unnest(range(0, (SELECT b FROM params) + 1)) AS v(j)
-      WHERE (i = 0 AND j = 0) OR (i > 0 AND j = 0) OR (i > 0 AND j > i)
-    ),
-    ek1 AS (
-      SELECT s.vec_id AS eval_id, s.embedding, c.j,
-             CASE WHEN c.i > 0 THEN
-               substr(s.bucket, 1, c.i - 1)
-               || (CASE substr(s.bucket, c.i, 1) WHEN '1' THEN '0' ELSE '1' END)
-               || substr(s.bucket, c.i + 1)
-             ELSE s.bucket END AS bkt1
-      FROM (SELECT * FROM sig WHERE vec_id % 97 = 0) s, combos c
-    ),
-    ek AS (
-      SELECT eval_id, embedding,
-             CASE WHEN j > 0 THEN
-               substr(bkt1, 1, j - 1)
-               || (CASE substr(bkt1, j, 1) WHEN '1' THEN '0' ELSE '1' END)
-               || substr(bkt1, j + 1)
-             ELSE bkt1 END AS bucket
-      FROM ek1
-    ),
-    trb AS (
-      SELECT vec_id, embedding, bucket FROM sig WHERE vec_id % 97 <> 0
-    ),
-    ascored AS (
-      SELECT t.vec_id, e.eval_id, {_SQL_RAW_COS_TE} AS raw
-      FROM trb t JOIN ek e ON t.bucket = e.bucket
-    ),
-    abest AS (
-      SELECT vec_id, eval_id, raw,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY raw DESC, eval_id) AS rn
-      FROM ascored
-    ),
-    ann_verdict AS (
-      SELECT s.vec_id, b.eval_id AS nearest_eval_id,
-             round(b.raw, 6) AS max_eval_cosine,
-             coalesce(b.raw >= 0.35, false) AS contaminated
-      FROM (SELECT vec_id FROM sig WHERE vec_id % 97 <> 0) s
-      LEFT JOIN (SELECT * FROM abest WHERE rn = 1) b USING (vec_id)
-    )"""
-
-
-@query(
-    "semantic_decontamination_ann",
-    f"""
-    WITH {_SQL_DECON_ANN}
-    SELECT vec_id, nearest_eval_id, max_eval_cosine, contaminated
-    FROM ann_verdict ORDER BY vec_id
-    """,
-)
-def q_semantic_decontamination_ann(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """ANN-routed semantic decontamination (r10, VERDICT r9 #2's
-    huge-eval sibling): each corpus vector scores only against eval
-    vectors sharing a multi-probe LSH bucket (6 sign bits, Hamming
-    radius 2 from the EVAL side — the small side fans out), with the
-    cosine and per-vector max exact on candidates; no-candidate rows
-    are clean by construction. This is the route SCALING.md names for
-    eval sets too big to broadcast-score exhaustively; recall at the
-    operating threshold is measured by
-    semantic_decontamination_ann_recall. See
-    similarity.semantic_decontamination_ann."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    hp = _bitext_hyperplanes(spark, sf_dir)
-    return similarity.semantic_decontamination_ann(
-        emb.where(F.col("vec_id") % 97 != 0),
-        emb.where(F.col("vec_id") % 97 == 0),
-        hp,
-        threshold=0.35,
-        probe_radius=2,
-    ).orderBy("vec_id")
-
-
-@query(
-    "semantic_decontamination_ann_shuffle",
-    f"""
-    WITH {_SQL_DECON_ANN}
-    SELECT vec_id, nearest_eval_id, max_eval_cosine, contaminated
-    FROM ann_verdict ORDER BY vec_id
-    """,
-)
-def q_semantic_decontamination_ann_shuffle(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The LARGE-eval regime of the ANN decontamination route (r11,
-    VERDICT r10 #4): identical semantics to
-    semantic_decontamination_ann — same oracle, same hash — but with
-    the broadcast size gate tripped (threshold 0), so the
-    eval-probe-keys × corpus bucket join runs as a plain shuffle
-    join. A genuinely huge eval set × ~37 probe combos with
-    embeddings attached will not broadcast; this is the plan that
-    regime gets, and PLANS.md asserts it contains no forced
-    broadcast of the probe side while the small regime keeps its
-    BroadcastHashJoin. See similarity.semantic_decontamination_ann
-    (broadcast_threshold_keys)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    hp = _bitext_hyperplanes(spark, sf_dir)
-    return similarity.semantic_decontamination_ann(
-        emb.where(F.col("vec_id") % 97 != 0),
-        emb.where(F.col("vec_id") % 97 == 0),
-        hp,
-        threshold=0.35,
-        probe_radius=2,
-        broadcast_threshold_keys=0,
-    ).orderBy("vec_id")
-
-
-@query(
-    "semantic_decontamination_ann_recall",
-    f"""
-    WITH {_SQL_DECON_ANN},
-    escored AS (
-      SELECT t.vec_id, {_SQL_RAW_COS_TE} AS raw
-      FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE vec_id % 97 <> 0 AND vec_id < 2000) t
-      CROSS JOIN (SELECT vec_id AS eval_id, embedding FROM embeddings
-                  WHERE vec_id % 97 = 0) e
-    ),
-    exact_flag AS (
-      SELECT vec_id, max(raw) >= 0.35 AS contaminated
-      FROM escored GROUP BY vec_id
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_corpus,
-           CAST(sum(CASE WHEN x.contaminated THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact,
-           CAST(sum(CASE WHEN a.contaminated THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_ann,
-           CAST(sum(CASE WHEN x.contaminated AND a.contaminated
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
-           round(sum(CASE WHEN x.contaminated AND a.contaminated
-                     THEN 1 ELSE 0 END)
-                 / CAST(nullif(sum(CASE WHEN x.contaminated THEN 1 ELSE 0
-                                   END), 0) AS DOUBLE), 6) AS recall,
-           round(sum(CASE WHEN x.contaminated AND a.contaminated
-                     THEN 1 ELSE 0 END)
-                 / CAST(nullif(sum(CASE WHEN a.contaminated THEN 1 ELSE 0
-                                   END), 0) AS DOUBLE), 6) AS precision
-    FROM exact_flag x JOIN ann_verdict a USING (vec_id)
-    """,
-)
-def q_semantic_decontamination_ann_recall(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Flag-level RECALL/PRECISION of the ANN decontamination route
-    vs the exact kernel at threshold 0.35 (r10) — the measured
-    operating point the r9 verdict asked for, on a constant CORPUS
-    slice (vec_id < 2000 — whole corpus at small SF, fixed work at
-    scale; the flags are per-row independent, so slice flags equal
-    full-run flags restricted). The index is the same log-n-sized
-    production index. Eval-regime by definition (the exact kernel
-    runs too); the production path is semantic_decontamination_ann
-    alone."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    tr = emb.where(
-        (F.col("vec_id") % 97 != 0) & (F.col("vec_id") < 2000)
-    )
-    ev = emb.where(F.col("vec_id") % 97 == 0)
-    hp = _bitext_hyperplanes(spark, sf_dir)
-    exact = similarity.semantic_decontamination(tr, ev, threshold=0.35).select(
-        "vec_id", F.col("contaminated").alias("c_e")
-    )
-    ann = similarity.semantic_decontamination_ann(
-        tr, ev, hp, threshold=0.35, probe_radius=2
-    ).select("vec_id", F.col("contaminated").alias("c_a"))
-    j = exact.join(ann, "vec_id")
-    ce = F.when(F.col("c_e"), 1).otherwise(0)
-    ca = F.when(F.col("c_a"), 1).otherwise(0)
-    both = F.when(F.col("c_e") & F.col("c_a"), 1).otherwise(0)
-    return j.agg(
-        F.count("*").cast("long").alias("n_corpus"),
-        F.sum(ce).cast("long").alias("n_exact"),
-        F.sum(ca).cast("long").alias("n_ann"),
-        F.sum(both).cast("long").alias("n_common"),
-        F.round(
-            F.sum(both) / F.nullif(F.sum(ce), F.lit(0)).cast("double"), 6
-        ).alias("recall"),
-        F.round(
-            F.sum(both) / F.nullif(F.sum(ca), F.lit(0)).cast("double"), 6
-        ).alias("precision"),
-    )
-
-
-@query(
-    "dbscan_clusters",
-    f"""
-    WITH RECURSIVE pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE {_sql_cosine('a.embedding', 'b.embedding')} >= 0.4
-    ),
-    adj AS (
-      SELECT id_a AS id, id_b AS nb FROM pairs
-      UNION ALL
-      SELECT id_b AS id, id_a AS nb FROM pairs
-    ),
-    core AS (
-      SELECT id FROM (SELECT id, count(*) AS deg FROM adj GROUP BY id)
-      WHERE deg >= 2
-    ),
-    cce AS (
-      SELECT p.id_a, p.id_b FROM pairs p
-      JOIN core x ON p.id_a = x.id JOIN core y ON p.id_b = y.id
-    ),
-    und AS (
-      SELECT id_a AS src, id_b AS dst FROM cce
-      UNION
-      SELECT id_b AS src, id_a AS dst FROM cce
-    ),
-    reach(node, r) AS (
-      SELECT src AS node, src AS r FROM und
-      UNION
-      SELECT und.src AS node, reach.r FROM und JOIN reach ON und.dst = reach.node
-    ),
-    comp AS (SELECT node, min(r) AS cl FROM reach GROUP BY node),
-    core_cl AS (
-      SELECT c.id, coalesce(m.cl, c.id) AS cluster_id
-      FROM core c LEFT JOIN comp m ON c.id = m.node
-    ),
-    border AS (
-      SELECT a.id, min(k.cluster_id) AS cluster_id
-      FROM adj a JOIN core_cl k ON a.nb = k.id
-      WHERE a.id NOT IN (SELECT id FROM core)
-      GROUP BY a.id
-    ),
-    labeled AS (
-      SELECT id, 'core' AS role, cluster_id FROM core_cl
-      UNION ALL
-      SELECT id, 'border' AS role, cluster_id FROM border
-    )
-    SELECT e.vec_id, coalesce(l.role, 'noise') AS role, l.cluster_id
-    FROM embeddings e LEFT JOIN labeled l ON e.vec_id = l.id
-    ORDER BY e.vec_id
-    """,
-)
-def q_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DBSCAN density clustering (r8; Ester et al. 1996) over the
-    embedding corpus: ε-neighborhood = cosine ≥ 0.4, min_pts = 3 —
-    core / border / noise roles with clusters as connected
-    components of core-core edges. The density complement of
-    `kmeans_clusters` (arbitrary-shaped dense regions, sparse points
-    stay NOISE, no k). Built entirely from the scale-correct
-    primitives: `cosine_near_pairs` ε-graph (never O(n²)), one
-    degree aggregation, CC on the tiny core-core edge set. Border
-    points attach to the min cluster id among core neighbors — the
-    deterministic version of the classic order-dependent assignment.
-    The ε-graph comes from the shared t=0.4 pair artifact (r9,
-    VERDICT r8 #1) that `embedding_cosine_near_dups` also serves
-    from — pair generation, the suite's costliest stage, runs once
-    per session. See similarity.dbscan_cosine."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.dbscan_cosine(
-        emb, eps_cos=0.4, min_pts=3,
-        pairs=_cosine_pairs_cached(spark, sf_dir),
-    ).orderBy("vec_id")
-
-
-# ---------------------------------------------------------------------------
-# EXT — label-aware similarity (classification over the embedding corpus)
-# ---------------------------------------------------------------------------
-
-SQL_LABEL_CENTROIDS = """
-  SELECT label, list(m ORDER BY i) AS centroid FROM (
-    SELECT label, i, round(avg(embedding[i]::DOUBLE), 6) AS m
-    FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)
-    GROUP BY label, i
-  ) GROUP BY label
-"""
-
-
-@query(
-    "nearest_centroid_confusion",
-    f"""
-    WITH cent AS ({SQL_LABEL_CENTROIDS}),
-    scored AS (
-      SELECT e.vec_id, CAST(e.label AS BIGINT) AS true_label,
-             CAST(c.label AS BIGINT) AS clabel,
-             {_sql_cosine('e.embedding', 'c.centroid')} AS score
-      FROM embeddings e CROSS JOIN cent c
-    ),
-    best AS (
-      SELECT vec_id, true_label, clabel AS assigned_label FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, clabel) AS r
-        FROM scored
-      ) WHERE r = 1
-    )
-    SELECT true_label, assigned_label, count(*) AS n
-    FROM best GROUP BY true_label, assigned_label
-    ORDER BY true_label, assigned_label
-    """,
-)
-def q_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid classification confusion matrix: per-label
-    mean vectors (element-wise avg, rounded 6dp), every vector
-    assigned to its argmax-cosine centroid (min-label tie-break).
-    Centroids broadcast → assignment is one shuffle-free corpus scan;
-    the confusion matrix is a tiny label×label aggregate."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = similarity.label_centroids(emb)
-    assigned = similarity.nearest_centroid_assign(emb, cent)
-    return (
-        assigned.groupBy("true_label", "assigned_label")
-        .agg(F.count("*").alias("n"))
-        .orderBy("true_label", "assigned_label")
-    )
-
-
-@query(
-    "knn_label_vote",
-    f"""
-    WITH p AS (
-      SELECT vec_id AS probe_id, embedding AS pv, CAST(label AS BIGINT) AS true_label
-      FROM embeddings WHERE vec_id % 23 = 0
-    ),
-    scored AS (
-      SELECT p.probe_id, p.true_label, e.vec_id AS nid,
-             CAST(e.label AS BIGINT) AS nlabel,
-             {_sql_cosine('e.embedding', 'p.pv')} AS score
-      FROM embeddings e CROSS JOIN p
-      WHERE e.vec_id <> p.probe_id
-    ),
-    top5 AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY score DESC, nid) AS rnk
-        FROM scored
-      ) WHERE rnk <= 5
-    ),
-    votes AS (
-      SELECT probe_id, true_label, nlabel, count(*) AS c
-      FROM top5 GROUP BY probe_id, true_label, nlabel
-    )
-    SELECT probe_id, true_label, nlabel AS predicted_label FROM (
-      SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY c DESC, nlabel) AS r
-      FROM votes
-    ) WHERE r = 1
-    ORDER BY probe_id
-    """,
-)
-def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-NN majority-vote label prediction for a deterministic probe
-    sample (vec_id % 23 = 0): modal label among each probe's nearest
-    cosine neighbors, vote ties → smaller label. Probes broadcast, so
-    cost is one corpus scan per batch regardless of corpus size."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") % 23 == 0)
-    return similarity.knn_label_vote(emb, probes, k=5).orderBy("probe_id")
-
-
 # ---------------------------------------------------------------------------
 # EXT — global span dedup + per-source quota cap (round 2)
 # ---------------------------------------------------------------------------
@@ -2357,119 +1123,7 @@ def q_source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXT — k-means clustering + SemDeDup (round 2)
-# ---------------------------------------------------------------------------
-
-# Unrolled Lloyd iterations (k=8, iters=2) shared by the kmeans and
-# SemDeDup oracles: c0 = first-8 init, a1/c1, a2/c2, final = assign
-# vs c2 — byte-for-byte the schedule kmeans_lloyd(k=8, iters=2) runs.
-SQL_KMEANS_CTES = """
-    e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    ),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
-             list_transform(v, x -> round(x, 6)) AS c
-      FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)
-    ),
-    a1 AS (
-      SELECT vec_id, v, cluster FROM (
-        SELECT e.vec_id, e.v, c0.cluster,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY round(list_distance(e.v, c0.c), 6), c0.cluster
-               ) AS rn
-        FROM e CROSS JOIN c0
-      ) WHERE rn = 1
-    ),
-    c1 AS (
-      SELECT cluster, array_agg(m ORDER BY pos) AS c FROM (
-        SELECT cluster, pos, round(avg(val), 6) AS m FROM (
-          SELECT cluster, unnest(range(1, len(v) + 1)) AS pos, unnest(v) AS val
-          FROM a1
-        ) GROUP BY cluster, pos
-      ) GROUP BY cluster
-    ),
-    a2 AS (
-      SELECT vec_id, v, cluster FROM (
-        SELECT e.vec_id, e.v, c1.cluster,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY round(list_distance(e.v, c1.c), 6), c1.cluster
-               ) AS rn
-        FROM e CROSS JOIN c1
-      ) WHERE rn = 1
-    ),
-    c2 AS (
-      SELECT cluster, array_agg(m ORDER BY pos) AS c FROM (
-        SELECT cluster, pos, round(avg(val), 6) AS m FROM (
-          SELECT cluster, unnest(range(1, len(v) + 1)) AS pos, unnest(v) AS val
-          FROM a2
-        ) GROUP BY cluster, pos
-      ) GROUP BY cluster
-    ),
-    final AS (
-      SELECT vec_id, cluster, d FROM (
-        SELECT e.vec_id, c2.cluster,
-               round(list_distance(e.v, c2.c), 6) AS d,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY round(list_distance(e.v, c2.c), 6), c2.cluster
-               ) AS rn
-        FROM e CROSS JOIN c2
-      ) WHERE rn = 1
-    )
-"""
-
-
-@query(
-    "kmeans_clusters",
-    f"""
-    WITH {SQL_KMEANS_CTES}
-    SELECT vec_id, cluster, d AS dist FROM final ORDER BY vec_id
-    """,
-)
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd's k-means (k=8, 2 update rounds) over the
-    embedding corpus — deterministic first-k init, broadcast-centroid
-    map-only assignment, skinny (cluster, pos) mean aggregation. The
-    clustering stage SemDeDup and IVF both stand on."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.kmeans_lloyd(emb, k=8, iters=2).orderBy("vec_id")
-
-
-@query(
-    "semantic_dedup",
-    f"""
-    WITH {SQL_KMEANS_CTES},
-    sd AS (
-      SELECT f.vec_id, f.cluster, e.v FROM final f JOIN e USING (vec_id)
-    ),
-    near AS (
-      SELECT a.vec_id, CAST(count(*) AS BIGINT) AS n_near
-      FROM sd a JOIN sd b ON a.cluster = b.cluster AND b.vec_id < a.vec_id
-      WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.4
-      GROUP BY a.vec_id
-    )
-    SELECT s.vec_id, s.cluster,
-           coalesce(n.n_near, 0)::BIGINT AS n_near,
-           coalesce(n.n_near, 0) = 0 AS keep
-    FROM sd s LEFT JOIN near n USING (vec_id) ORDER BY s.vec_id
-    """,
-)
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: k-means partition, then drop vectors with a
-    smaller-id same-cluster neighbor at cosine >= 0.4. The pair join
-    is equi-keyed on cluster, so cost stays Σ|cluster|² — k scales
-    with the corpus precisely so that bound holds at 100 TB."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(emb, k=8, iters=2, threshold=0.4).orderBy(
-        "vec_id"
-    )
-
-
-# ---------------------------------------------------------------------------
-# EXT — snapshot diff, URL canonicalization (round 2)
+# EXT — snapshot diff (round 2)
 # ---------------------------------------------------------------------------
 
 
@@ -2523,178 +1177,6 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")),
     )
     return selection.corpus_snapshot_diff(old, new).orderBy("status")
-
-
-# Deterministic synthetic URL per document (doc_id arithmetic) —
-# mixed-case hosts, default/explicit ports, tracking params, scrambled
-# param order, fragments: every branch of the canonicalizer.
-SQL_URL_GEN = """
-    gen AS (
-      SELECT doc_id,
-             (CASE WHEN doc_id % 3 = 0 THEN 'http' ELSE 'https' END)
-             || '://'
-             || (CASE doc_id % 5
-                   WHEN 0 THEN 'Example.COM'
-                   WHEN 1 THEN 'news.Example.co.uk'
-                   WHEN 2 THEN 'CDN.media.ORG'
-                   WHEN 3 THEN 'shop.example.com.au'
-                   ELSE 'blog.example.net' END)
-             || (CASE WHEN doc_id % 7 = 0
-                      THEN (CASE WHEN doc_id % 3 = 0 THEN ':80' ELSE ':443' END)
-                      WHEN doc_id % 7 = 1 THEN ':8080'
-                      ELSE '' END)
-             || (CASE WHEN doc_id % 13 = 0 THEN ''
-                      ELSE '/a/' || CAST(doc_id % 17 AS VARCHAR) END)
-             || (CASE doc_id % 4
-                   WHEN 0 THEN '?z=1&utm_source=tw&a=2'
-                   WHEN 1 THEN '?b=2&a=1'
-                   WHEN 2 THEN '?gclid=abc123'
-                   ELSE '' END)
-             || (CASE WHEN doc_id % 2 = 0 THEN '#sec' ELSE '' END) AS url
-      FROM documents
-    )
-"""
-
-# Canonicalization replayed from first principles in SQL — the same
-# regexes (RE2-safe) and list ops as operators/web.py.
-SQL_URL_PARSE = """
-    parsed AS (
-      SELECT doc_id, url,
-             lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-               AS scheme,
-             lower(regexp_replace(
-               regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1),
-               ':[0-9]+$', '')) AS host,
-             regexp_extract(
-               regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1),
-               ':([0-9]+)$', 1) AS port,
-             regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1)
-               AS path,
-             regexp_extract(url, '^[^#]*?\\?([^#]*)', 1) AS query
-      FROM gen
-    ),
-    dom AS (
-      SELECT *,
-             string_split(host, '.') AS hp,
-             CASE WHEN len(string_split(host, '.')) <= 1 THEN host
-                  WHEN array_to_string(list_slice(string_split(host, '.'), -2, -1), '.')
-                       IN ('co.uk', 'com.au', 'co.jp', 'com.br', 'org.uk')
-                  THEN array_to_string(list_slice(string_split(host, '.'), -3, -1), '.')
-                  ELSE array_to_string(list_slice(string_split(host, '.'), -2, -1), '.')
-             END AS registered_domain
-      FROM parsed
-    ),
-    canon AS (
-      SELECT doc_id, url, scheme, host, registered_domain,
-             scheme || '://' || host
-             || (CASE WHEN port <> ''
-                       AND NOT (scheme = 'http' AND port = '80')
-                       AND NOT (scheme = 'https' AND port = '443')
-                      THEN ':' || port ELSE '' END)
-             || (CASE WHEN path = '' THEN '/' ELSE path END)
-             || (CASE WHEN len(params) > 0
-                      THEN '?' || array_to_string(list_sort(params), '&')
-                      ELSE '' END) AS url_canonical
-      FROM (
-        SELECT *,
-               list_filter(
-                 string_split(query, '&'),
-                 x -> x <> '' AND NOT regexp_matches(
-                   x, '^(utm_[a-z0-9]+|gclid|fbclid|ref)=')
-               ) AS params
-        FROM dom
-      )
-    )
-"""
-
-
-def _gen_urls_spark(docs: DataFrame) -> DataFrame:
-    d = F.col("doc_id")
-    sch = F.when(d % 3 == 0, "http").otherwise("https")
-    host = (
-        F.when(d % 5 == 0, "Example.COM")
-        .when(d % 5 == 1, "news.Example.co.uk")
-        .when(d % 5 == 2, "CDN.media.ORG")
-        .when(d % 5 == 3, "shop.example.com.au")
-        .otherwise("blog.example.net")
-    )
-    prt = (
-        F.when((d % 7 == 0) & (d % 3 == 0), ":80")
-        .when(d % 7 == 0, ":443")
-        .when(d % 7 == 1, ":8080")
-        .otherwise("")
-    )
-    pth = F.when(d % 13 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("/a/"), (d % 17).cast("string"))
-    )
-    q = (
-        F.when(d % 4 == 0, "?z=1&utm_source=tw&a=2")
-        .when(d % 4 == 1, "?b=2&a=1")
-        .when(d % 4 == 2, "?gclid=abc123")
-        .otherwise("")
-    )
-    frg = F.when(d % 2 == 0, "#sec").otherwise("")
-    return docs.select(
-        "doc_id", F.concat(sch, F.lit("://"), host, prt, pth, q, frg).alias("url")
-    )
-
-
-@query(
-    "url_canonicalize",
-    f"""
-    WITH {SQL_URL_GEN}, {SQL_URL_PARSE}
-    SELECT doc_id, url, scheme, host, registered_domain, url_canonical
-    FROM canon ORDER BY doc_id
-    """,
-)
-def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-corpus URL canonicalization (r6): deterministic synthetic
-    URLs (mixed-case hosts, default vs explicit ports, UTM/click-id
-    tracking params in scrambled order, fragments, multi-part public
-    suffixes) parsed and canonicalized by web.canonicalize_urls —
-    pure codegen'd regexp/array expressions, byte-exact vs the
-    DuckDB replay. The dedup key every crawler derives first."""
-    from kissmetrics_to_database_spark.operators import web
-
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        web.canonicalize_urls(_gen_urls_spark(docs))
-        .select(
-            "doc_id", "url", "scheme", "host", "registered_domain",
-            "url_canonical",
-        )
-        .orderBy("doc_id")
-    )
-
-
-@query(
-    "domain_quota_sample",
-    f"""
-    WITH {SQL_URL_GEN}, {SQL_URL_PARSE},
-    ranked AS (
-      SELECT registered_domain,
-             row_number() OVER (
-               PARTITION BY registered_domain
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-             ) AS rk
-      FROM canon
-    )
-    SELECT registered_domain,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN rk <= 60 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-    FROM ranked GROUP BY registered_domain ORDER BY registered_domain
-    """,
-)
-def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-registered-domain cap (r6): deterministic md5-rank inside
-    each domain keeps ≤ 60 docs — the anti-over-representation gate
-    applied after URL canonicalization (web.domain_quota_cap; one
-    domain-keyed window, AQE-skew-safe for mega-domains)."""
-    from kissmetrics_to_database_spark.operators import web
-
-    docs = load_table(spark, sf_dir, "documents")
-    parsed = web.canonicalize_urls(_gen_urls_spark(docs))
-    return web.domain_quota_cap(parsed, cap=60).orderBy("registered_domain")
 
 
 # ---------------------------------------------------------------------------
@@ -3223,48 +1705,6 @@ def q_event_burst_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         tri.select(F.col("node").alias("event_id"), "n_triangles")
         .orderBy(F.col("n_triangles").desc(), "event_id")
         .limit(50)
-    )
-
-
-# ---------------------------------------------------------------------------
-# EXT — hard-negative mining (round 2)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "hard_negative_mining",
-    f"""
-    WITH p AS (
-      SELECT vec_id AS probe_id, embedding AS pv, label AS probe_label
-      FROM embeddings WHERE vec_id < 10
-    ),
-    scored AS (
-      SELECT p.probe_id, p.probe_label,
-             e.vec_id AS neighbor_id, e.label AS neighbor_label,
-             {_sql_cosine('p.pv', 'e.embedding')} AS score
-      FROM embeddings e CROSS JOIN p
-      WHERE e.vec_id <> p.probe_id AND e.label <> p.probe_label
-    )
-    SELECT probe_id, probe_label, neighbor_id, neighbor_label, score,
-           CAST(rnk AS BIGINT) AS rank
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY probe_id ORDER BY score DESC, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 3
-    ORDER BY probe_id, rank
-    """,
-)
-def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive hard negatives for 10 probe vectors: the 3 most
-    cosine-similar vectors with a DIFFERENT label. The training-pair
-    miner for embedding models — probes broadcast, corpus scanned
-    map-only, label inequality inside the join predicate so
-    same-label rows never rank."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe_ids = emb.where(F.col("vec_id") < 10).select("vec_id")
-    return similarity.hard_negative_mining(emb, probe_ids, k=3).orderBy(
-        "probe_id", "rank"
     )
 
 
@@ -4179,312 +2619,8 @@ def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _sql_cos_slice(a: str, b: str, d: int) -> str:
-    dot = (
-        f"list_sum(list_transform(range(1, {d} + 1),"
-        f" i -> {{x}}[i]::DOUBLE * {{y}}[i]::DOUBLE))"
-    )
-    return (
-        f"round({dot.format(x=a, y=b)} / "
-        f"(sqrt({dot.format(x=a, y=a)}) * sqrt({dot.format(x=b, y=b)})), 6)"
-    )
-
-
-def _matryoshka_oracle(dims=(8, 16, 32, 64)) -> str:
-    approx = " UNION ALL ".join(
-        f"""
-      SELECT {d} AS dims, probe_id, neighbor_id FROM (
-        SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.vec_id
-                 ORDER BY {_sql_cos_slice('e.embedding', 'p.embedding', d)} DESC,
-                          e.vec_id) AS rnk
-        FROM embeddings e CROSS JOIN
-             (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 12) p
-        WHERE e.vec_id <> p.vec_id
-      ) WHERE rnk <= 5"""
-        for d in dims
-    )
-    return f"""
-    WITH approx AS ({approx}),
-    pe AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings
-           WHERE vec_id < 12),
-    bf AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT p.probe_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.probe_id
-                 ORDER BY {_sql_cosine('e.embedding', 'p.pv')} DESC, e.vec_id)
-                 AS rnk
-        FROM embeddings e CROSS JOIN pe p
-        WHERE e.vec_id <> p.probe_id
-      ) WHERE rnk <= 5
-    )
-    SELECT a.dims, b.probe_id,
-           CAST(count(a2.neighbor_id) AS BIGINT) AS n_hits,
-           round(count(a2.neighbor_id) / 5.0, 6) AS recall_at_5
-    FROM (SELECT DISTINCT dims FROM approx) a
-    CROSS JOIN bf b
-    LEFT JOIN approx a2
-      ON a2.dims = a.dims AND a2.probe_id = b.probe_id
-     AND a2.neighbor_id = b.neighbor_id
-    GROUP BY a.dims, b.probe_id ORDER BY a.dims, b.probe_id
-    """
-
-
-@query("matryoshka_recall", _matryoshka_oracle())
-def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka / truncated-dimension recall eval (r8; Kusupati et
-    al. 2022): recall@5 of brute-force search over the FIRST d
-    coordinates (d = 8, 16, 32, 64) against full-dim ground truth —
-    the eval that decides how far an MRL-style embedding can be
-    truncated for cheap first-stage retrieval (d=64 is the identity
-    sanity row, recall 1.0 by construction). Same broadcast recall
-    join as `random_projection_recall`; one scored scan per d over
-    the 12-probe sample."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < 12)
-    bf = similarity.brute_force_topk(emb, probes, k=5).select(
-        "probe_id", "neighbor_id"
-    )
-    parts = []
-    for d in (8, 16, 32, 64):
-        sl = lambda df: df.select(  # noqa: E731
-            "vec_id", F.slice("embedding", 1, d).alias("embedding")
-        )
-        approx = similarity.brute_force_topk(sl(emb), sl(probes), k=5).select(
-            F.lit(d).cast("long").alias("dims"),
-            "probe_id",
-            F.col("neighbor_id").alias("hit"),
-        )
-        parts.append(approx)
-    all_approx = parts[0]
-    for p in parts[1:]:
-        all_approx = all_approx.unionByName(p)
-    # the dims axis is the LITERAL (8, 16, 32, 64) — deriving it via
-    # all_approx.select("dims").distinct() re-ran all four truncated
-    # scoring kernels a second time just to rediscover the constants
-    # (r14 optimization round, guide §1.2). Identical axis: every d
-    # is always present in the union by construction.
-    dims_df = emb.sparkSession.createDataFrame(
-        [(d,) for d in (8, 16, 32, 64)], "d long"
-    )
-    joined = bf.crossJoin(F.broadcast(dims_df)).join(
-        F.broadcast(all_approx),
-        (F.col("d") == all_approx["dims"])
-        & (bf["probe_id"] == all_approx["probe_id"])
-        & (bf["neighbor_id"] == all_approx["hit"]),
-        "left",
-    ).select(F.col("d"), bf["probe_id"], "hit")
-    return (
-        joined.groupBy(F.col("d").alias("dims"), "probe_id")
-        .agg(
-            F.count("hit").cast("long").alias("n_hits"),
-            F.round(F.count("hit") / 5.0, 6).alias("recall_at_5"),
-        )
-        .orderBy("dims", "probe_id")
-    )
-
-
-@query(
-    "random_projection_recall",
-    f"""
-    WITH proj AS (
-      SELECT vec_id,
-             list_transform(range(0, 16), k ->
-               round(list_sum(list_transform(range(0, len(embedding)), j ->
-                 embedding[j + 1]::DOUBLE *
-                 (CASE WHEN ((j * 2654435761 + k * 40503 + 1) % 97) % 2 = 0
-                       THEN 1.0 ELSE -1.0 END)
-               )) * 0.25, 6)) AS pv
-      FROM embeddings
-    ),
-    pp AS (SELECT vec_id AS probe_id, pv AS ppv FROM proj WHERE vec_id < 12),
-    approx AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT p.probe_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.probe_id
-                 ORDER BY {_sql_cosine('e.pv', 'p.ppv')} DESC, e.vec_id) AS rnk
-        FROM proj e CROSS JOIN pp p
-        WHERE e.vec_id <> p.probe_id
-      ) WHERE rnk <= 5
-    ),
-    pe AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings
-           WHERE vec_id < 12),
-    bf AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT p.probe_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.probe_id
-                 ORDER BY {_sql_cosine('e.embedding', 'p.pv')} DESC, e.vec_id)
-                 AS rnk
-        FROM embeddings e CROSS JOIN pe p
-        WHERE e.vec_id <> p.probe_id
-      ) WHERE rnk <= 5
-    )
-    SELECT b.probe_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           round(count(a.neighbor_id) / 5.0, 6) AS recall_at_5
-    FROM bf b LEFT JOIN approx a
-      ON b.probe_id = a.probe_id AND b.neighbor_id = a.neighbor_id
-    GROUP BY b.probe_id ORDER BY b.probe_id
-    """,
-)
-def q_random_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JL random-projection quality eval (r7): project the 64-dim
-    corpus to 16 dims with the deterministic ±1 sign-hash matrix
-    (similarity.random_project), run the same brute-force top-5 in
-    the PROJECTED space, and score recall@5 against the exact top-5 —
-    the measurement that decides whether the 4× FLOP cut is safe as
-    the candidate-generation front of an ANN stack. The oracle
-    replays the projection fold (exact 0.25 scale), both rankings,
-    and the recall join."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < 12)
-    projected = similarity.random_project(emb, m=16)
-    p_corpus = projected.select("vec_id", F.col("proj").alias("embedding"))
-    p_probes = p_corpus.where(F.col("vec_id") < 12)
-    approx = similarity.brute_force_topk(p_corpus, p_probes, k=5).select(
-        "probe_id", "neighbor_id"
-    )
-    exact = similarity.brute_force_topk(emb, probes, k=5).select(
-        "probe_id", "neighbor_id"
-    )
-    return (
-        exact.join(
-            # k·|probes| rows — broadcast the approx side so the
-            # recall join never sort-merges (Catalyst can't see the
-            # tiny cardinality through the ranking windows)
-            F.broadcast(approx.withColumnRenamed("neighbor_id", "hit")),
-            (exact.probe_id == approx.probe_id)
-            & (F.col("neighbor_id") == F.col("hit")),
-            "left",
-        )
-        .drop(approx.probe_id)
-        .groupBy("probe_id")
-        .agg(
-            F.count("hit").cast("long").alias("n_hits"),
-            F.round(F.count("hit") / 5.0, 6).alias("recall_at_5"),
-        )
-        .orderBy("probe_id")
-    )
-
-
-@query(
-    "ann_recall_at_k",
-    f"""
-    WITH cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-    assigned AS (
-      SELECT vec_id, embedding, cell FROM (
-        SELECT e.vec_id, e.embedding, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_sql_cosine('e.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings e CROSS JOIN cent c
-      ) WHERE r = 1
-    ),
-    probe_cells AS (
-      SELECT probe_id, pv, cell FROM (
-        SELECT p.vec_id AS probe_id, p.embedding AS pv, c.cent_id AS cell,
-               row_number() OVER (PARTITION BY p.vec_id
-                 ORDER BY {_sql_cosine('p.embedding', 'c.cvec')} DESC, c.cent_id) AS r
-        FROM embeddings p CROSS JOIN cent c
-        WHERE p.vec_id < 12
-      ) WHERE r <= 2
-    ),
-    ivf AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT pc.probe_id, a.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY pc.probe_id
-                 ORDER BY {_sql_cosine('a.embedding', 'pc.pv')} DESC, a.vec_id) AS rnk
-        FROM assigned a JOIN probe_cells pc ON a.cell = pc.cell
-        WHERE a.vec_id <> pc.probe_id
-      ) WHERE rnk <= 5
-    ),
-    pe AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 12),
-    bf AS (
-      SELECT probe_id, neighbor_id FROM (
-        SELECT p.probe_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.probe_id
-                 ORDER BY {_sql_cosine('e.embedding', 'p.pv')} DESC, e.vec_id) AS rnk
-        FROM embeddings e CROSS JOIN pe p
-        WHERE e.vec_id <> p.probe_id
-      ) WHERE rnk <= 5
-    )
-    SELECT b.probe_id,
-           CAST(count(i.neighbor_id) AS BIGINT) AS n_hits,
-           round(count(i.neighbor_id) / 5.0, 6) AS recall_at_5
-    FROM bf b LEFT JOIN ivf i
-      ON b.probe_id = i.probe_id AND b.neighbor_id = i.neighbor_id
-    GROUP BY b.probe_id ORDER BY b.probe_id
-    """,
-)
-def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN index quality evaluation: recall@5 of the IVF index
-    (nprobe=2) against exact brute-force ground truth, per probe.
-
-    The eval every production ANN deployment runs before trusting an
-    index: ground truth comes from the exact scorer on a probe SAMPLE
-    (12 probes here; a fixed sample at 100 TB — brute force over the
-    sample is k·|corpus| work, embarrassingly parallel), the index
-    answers the same probes, and recall is the per-probe overlap of
-    the two top-k sets. Sub-1.0 recall rows localize exactly which
-    probes the cell layout fails (their true neighbors sit outside
-    the probed cells) — the signal for retuning nprobe/k-cells. Both
-    sides use rounded scores with id tie-breaks, so the metric is
-    deterministic on both engines."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.where(F.col("vec_id") < 8)
-    probes = emb.where(F.col("vec_id") < 12)
-    ivf = similarity.ivf_topk(emb, probes, centroids, k=5, nprobe=2).select(
-        "probe_id", F.col("neighbor_id").alias("n_ivf")
-    )
-    bf = similarity.brute_force_topk(emb, probes, k=5).select(
-        "probe_id", "neighbor_id"
-    )
-    # the index answer set is probes×k rows — broadcast it (the
-    # optimizer can't infer post-top-k cardinality and would SMJ)
-    joined = bf.join(
-        F.broadcast(ivf),
-        (bf["probe_id"] == ivf["probe_id"]) & (bf["neighbor_id"] == ivf["n_ivf"]),
-        "left",
-    ).select(bf["probe_id"], "neighbor_id", "n_ivf")
-    return (
-        joined.groupBy("probe_id")
-        .agg(
-            F.count("n_ivf").cast("long").alias("n_hits"),
-            F.round(F.count("n_ivf") / 5.0, 6).alias("recall_at_5"),
-        )
-        .orderBy("probe_id")
-    )
-
-
-@query(
-    "cluster_quality",
-    f"""
-    WITH {SQL_KMEANS_CTES},
-    per AS (
-      SELECT cluster, CAST(count(*) AS BIGINT) AS n,
-             round(avg(d), 6) AS mean_dist
-      FROM final GROUP BY cluster
-    ),
-    sep AS (
-      SELECT a.cluster, round(min(list_distance(a.c, b.c)), 6) AS min_sep
-      FROM c2 a JOIN c2 b ON a.cluster <> b.cluster
-      GROUP BY a.cluster
-    )
-    SELECT p.cluster, p.n, p.mean_dist, s.min_sep,
-           round(p.mean_dist / s.min_sep, 6) AS compactness_ratio
-    FROM per p JOIN sep s USING (cluster) ORDER BY p.cluster
-    """,
-)
-def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cluster compactness/separation diagnostics over the k-means
-    partition (k=8, 2 rounds) — the gate before trusting the
-    clustering for IVF cells or SemDeDup blocks. See
-    similarity.kmeans_cluster_quality for the scale shape."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.kmeans_cluster_quality(emb, k=8, iters=2)
-
-
 # ---------------------------------------------------------------------------
-# EXT — line dedup, representatives, coresets, mixture epochs, WARC (r8)
+# EXT — line dedup, representatives, mixture epochs (r8)
 # ---------------------------------------------------------------------------
 
 
@@ -4607,64 +2743,6 @@ def q_dup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _kcenter_oracle(k: int = 8) -> str:
-    """Unrolled greedy farthest-point replay: one (distance-scan →
-    argmax-pick → center-fetch) CTE block per step, distances as 1 − round(cos, 6) exactly as the
-    Spark operator computes them."""
-    parts = [
-        "WITH p0 AS MATERIALIZED (SELECT min(vec_id) AS vid FROM embeddings)",
-        "c0 AS MATERIALIZED (SELECT embedding AS v FROM embeddings"
-        " WHERE vec_id = (SELECT vid FROM p0))",
-    ]
-    for j in range(1, k):
-        froms = ", ".join(f"c{i}" for i in range(j))
-        dists = ", ".join(
-            f"1 - {_sql_cosine('e.embedding', f'c{i}.v')}" for i in range(j)
-        )
-        mind = dists if j == 1 else f"least({dists})"
-        chosen = ", ".join(f"(SELECT vid FROM p{i})" for i in range(j))
-        parts.append(
-            f"d{j} AS (SELECT e.vec_id, {mind} AS mind "
-            f"FROM embeddings e, {froms} "
-            f"WHERE e.vec_id NOT IN ({chosen}))"
-        )
-        parts.append(
-            f"p{j} AS MATERIALIZED (SELECT vec_id AS vid, mind FROM d{j} "
-            "ORDER BY mind DESC, vec_id LIMIT 1)"
-        )
-        parts.append(
-            f"c{j} AS MATERIALIZED (SELECT embedding AS v FROM embeddings "
-            f"WHERE vec_id = (SELECT vid FROM p{j}))"
-        )
-    rows = ["SELECT CAST(0 AS BIGINT) AS step, "
-            "(SELECT vid FROM p0) AS vec_id, 0.0 AS dist"]
-    for j in range(1, k):
-        rows.append(
-            f"SELECT CAST({j} AS BIGINT), (SELECT vid FROM p{j}), "
-            f"(SELECT mind FROM p{j})"
-        )
-    return (
-        ",\n    ".join(parts)
-        + "\n    SELECT * FROM (\n    "
-        + "\n    UNION ALL ".join(rows)
-        + "\n    ) ORDER BY step"
-    )
-
-
-@query("kcenter_coreset", _kcenter_oracle(8))
-def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy k-center coreset selection (r8): 8 farthest-point
-    traversal steps under cosine distance over the embeddings table —
-    the diversity-sampling baseline for training-data selection
-    (picks mode-covering exemplars instead of oversampling dense
-    regions; Gonzalez 1985 2-approximation). Driver-resident model
-    (≤ k vectors broadcast as literals), one map-only scan +
-    TakeOrdered(1) per step; oracle replays the identical unrolled
-    greedy schedule."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.kcenter_coreset(emb, k=8).orderBy("step")
-
-
 @query(
     "mixture_epochs_plan",
     """
@@ -4731,68 +2809,6 @@ def q_mixture_epochs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-@query(
-    "warc_ingest_extract",
-    """
-    SELECT doc_id,
-           'https://example.com/doc/' || doc_id AS target_uri,
-           CAST(200 AS INTEGER) AS http_status,
-           'text/html' AS content_type,
-           CAST(octet_length(encode('<html><body>' || coalesce(text, '')
-                                    || '</body></html>')) AS BIGINT)
-             AS body_bytes
-    FROM documents ORDER BY doc_id
-    """,
-)
-def q_warc_ingest_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC round-trip (r8): serialize the documents table into
-    spec-exact WARC response records (HTML body, HTTP envelope,
-    CRLF/Content-Length framing) and re-ingest them through the REAL
-    parser (`sources/warc.py` — the same kernel `read_warc` runs on
-    Common Crawl shards), reading out per-record URI / status /
-    content-type / body byte length. The oracle computes the expected
-    readout directly from the table, so a framing or envelope-split
-    bug anywhere in the parser breaks the hash."""
-    from kissmetrics_to_database_spark.sources import warc as _warc
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % 8).alias("grp")
-    )
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blob = _warc.warc_bytes_for_docs(
-                list(zip(pdf["doc_id"], pdf["text"]))
-            )
-            out = {
-                "doc_id": [],
-                "target_uri": [],
-                "http_status": [],
-                "content_type": [],
-                "body_bytes": [],
-            }
-            for rec in _warc.parse_warc_bytes(blob):
-                out["doc_id"].append(
-                    int(rec["target_uri"].rsplit("/", 1)[1])
-                )
-                out["target_uri"].append(rec["target_uri"])
-                out["http_status"].append(rec["http_status"])
-                out["content_type"].append(rec["content_type"])
-                out["body_bytes"].append(len(rec["body"]))
-            yield pd.DataFrame(out)
-
-    parsed = docs.repartition(8, "grp").mapInPandas(
-        run,
-        schema=(
-            "doc_id long, target_uri string, http_status int, "
-            "content_type string, body_bytes long"
-        ),
-    )
-    return parsed.orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -5733,9 +3749,8 @@ def q_avro_scan_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro DATA-file ingest (r9): the documents table round-trips
     through 8 real Avro object containers (from-spec codec) and a
     distributed binaryFile + Arrow-kernel scan with driver-side
-    header schema inference (`sources/avro_files.read_avro_files` —
-    the WARC shape: one linear decode per shard, embarrassingly
-    parallel). The oracle aggregates the base table directly, so any
+    header schema inference (`sources/avro_files.read_avro_files`:
+    one linear decode per shard, embarrassingly parallel). The oracle aggregates the base table directly, so any
     encode/decode/inference bug breaks the hash."""
     from kissmetrics_to_database_spark.sources import avro_files
 
@@ -6999,425 +5014,6 @@ def q_delta_cdf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("_change_type")
     )
-
-
-# ---------------------------------------------------------------------------
-# EXT — trained-IVF candidate routes for the two-sided ANN kernels
-# (r11, VERDICT r10 #3): the kmeans/IVF family as a DATA-ADAPTIVE
-# candidate generator for bitext mining and semantic decontamination,
-# measured on the same constant eval slices as the sign-LSH routes so
-# the generator choice is evidence, not inference.
-# ---------------------------------------------------------------------------
-
-_IVF_ROUTE_CENTROIDS: dict[tuple, DataFrame] = {}
-
-
-def _ivf_cells(n: int) -> int:
-    """K sizing for the two-sided IVF route: K = 2^b with the SAME
-    log-n bit rule as `_lsh_bits`, so cells hold the same
-    near-constant mass as the LSH route's buckets. With K fixed the
-    bitext candidate join goes quadratic (both sides grow); with
-    this rule candidate mass per source stays ~constant."""
-    return 2 ** _lsh_bits(int(n))
-
-
-def _ivf_route_centroids(
-    spark: SparkSession, sf_dir: str, k: int = 8
-) -> DataFrame:
-    """Train-once/serve-many centroids for the IVF candidate routes
-    (a per-(sf_dir, k) memo): one kmeans_train_centroids
-    (iters=2 — the exact Lloyd schedule the shared SQL replays) per
-    (sf_dir, k), shared across the IVF-route queries. The one-sided
-    decontamination route keeps k=8 (its cost |eval|·n/K is LINEAR
-    in the corpus — K there is a recall knob, and k=8 shares the
-    kmeans family's artifact); the two-sided bitext route sizes
-    K = _ivf_cells(n) log-n. Training is deterministic, so the memo
-    cannot change results."""
-    key = (sf_dir, int(k))
-    if key not in _IVF_ROUTE_CENTROIDS:
-        # training cost is n×K×iters centroid scorings — repartition
-        # so it runs at cluster parallelism regardless of the input
-        # file layout (the testdata ships one row group per table)
-        emb = load_table(spark, sf_dir, "embeddings").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        _IVF_ROUTE_CENTROIDS[key] = similarity.kmeans_train_centroids(
-            emb, k=int(k), iters=2
-        )
-    return _IVF_ROUTE_CENTROIDS[key]
-
-
-# Parameterized Lloyd replay for the log-n-K bitext route: the SAME
-# unrolled k-means CTE block, with the init LIMIT driven by the
-# kparams CTE (the 2^b rule, computed from the corpus count exactly
-# as Spark computes _ivf_cells).
-_SQL_KPARAMS = """kparams AS (
-      SELECT CASE WHEN n <= 600 THEN 64 WHEN n <= 6000 THEN 256
-                  WHEN n <= 60000 THEN 1024 WHEN n <= 600000 THEN 4096
-                  ELSE 16384 END AS kk
-      FROM (SELECT count(*) AS n FROM embeddings)
-    )"""
-
-
-def _sql_decon_ivf(corpus_where: str) -> str:
-    """DuckDB replay of the IVF-candidate decontamination route:
-    trained c2 centroids (shared Lloyd CTEs), cosine-argmax cell per
-    corpus vector (round-6, min-cluster tie-break), top-2 probe cells
-    per eval vector, one cell equi-join, then the exact-verify tail
-    byte-for-byte from the LSH-route oracle."""
-    return f"""{SQL_KMEANS_CTES},
-    ivf_corpus AS (
-      SELECT vec_id, embedding FROM embeddings WHERE {corpus_where}
-    ),
-    ivf_eval AS (
-      SELECT vec_id AS eval_id, embedding FROM embeddings
-      WHERE vec_id % 97 = 0
-    ),
-    cassign AS (
-      SELECT vec_id, embedding, cell FROM (
-        SELECT t.vec_id, t.embedding, c.cluster AS cell,
-               row_number() OVER (
-                 PARTITION BY t.vec_id
-                 ORDER BY {_sql_cosine('t.embedding', 'c.c')} DESC, c.cluster
-               ) AS rn
-        FROM ivf_corpus t CROSS JOIN c2 c
-      ) WHERE rn = 1
-    ),
-    eprobe AS (
-      SELECT eval_id, embedding, cell FROM (
-        SELECT p.eval_id, p.embedding, c.cluster AS cell,
-               row_number() OVER (
-                 PARTITION BY p.eval_id
-                 ORDER BY {_sql_cosine('p.embedding', 'c.c')} DESC, c.cluster
-               ) AS rn
-        FROM ivf_eval p CROSS JOIN c2 c
-      ) WHERE rn <= 2
-    ),
-    iscored AS (
-      SELECT t.vec_id, e.eval_id, {_SQL_RAW_COS_TE} AS raw
-      FROM cassign t JOIN eprobe e ON t.cell = e.cell
-    ),
-    ibest AS (
-      SELECT vec_id, eval_id, raw,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY raw DESC, eval_id) AS rn
-      FROM iscored
-    ),
-    ivf_verdict AS (
-      SELECT s.vec_id, b.eval_id AS nearest_eval_id,
-             round(b.raw, 6) AS max_eval_cosine,
-             coalesce(b.raw >= 0.35, false) AS contaminated
-      FROM ivf_corpus s
-      LEFT JOIN (SELECT * FROM ibest WHERE rn = 1) b USING (vec_id)
-    )"""
-
-
-@query(
-    "semantic_decontamination_ivf",
-    f"""
-    WITH {_sql_decon_ivf("vec_id % 97 <> 0")}
-    SELECT vec_id, nearest_eval_id, max_eval_cosine, contaminated
-    FROM ivf_verdict ORDER BY vec_id
-    """,
-)
-def q_semantic_decontamination_ivf(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TRAINED-IVF candidate route for semantic decontamination (r11,
-    VERDICT r10 #3): same exact-verify tail as the LSH route, but
-    candidates come from a data-adaptive inverted file — corpus
-    vectors live in their nearest-trained-centroid cell, eval vectors
-    probe their 2 best cells. Random sign-LSH hyperplanes have no
-    locality to exploit on near-uniform embeddings (the r10 routes'
-    measured 0.37 flag recall); trained centroids adapt to the data's
-    actual density. semantic_decontamination_ivf_recall measures both
-    generators on the same slice. See
-    similarity.semantic_decontamination_ivf."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.semantic_decontamination_ivf(
-        emb.where(F.col("vec_id") % 97 != 0),
-        emb.where(F.col("vec_id") % 97 == 0),
-        _ivf_route_centroids(spark, sf_dir),
-        threshold=0.35,
-        nprobe=2,
-    ).orderBy("vec_id")
-
-
-@query(
-    "semantic_decontamination_ivf_recall",
-    f"""
-    WITH {_sql_decon_ivf("vec_id % 97 <> 0 AND vec_id < 2000")},
-    escored AS (
-      SELECT t.vec_id, {_SQL_RAW_COS_TE} AS raw
-      FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE vec_id % 97 <> 0 AND vec_id < 2000) t
-      CROSS JOIN (SELECT vec_id AS eval_id, embedding FROM embeddings
-                  WHERE vec_id % 97 = 0) e
-    ),
-    exact_flag AS (
-      SELECT vec_id, max(raw) >= 0.35 AS contaminated
-      FROM escored GROUP BY vec_id
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_corpus,
-           CAST(sum(CASE WHEN x.contaminated THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact,
-           CAST(sum(CASE WHEN a.contaminated THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_ivf,
-           CAST(sum(CASE WHEN x.contaminated AND a.contaminated
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
-           round(sum(CASE WHEN x.contaminated AND a.contaminated
-                     THEN 1 ELSE 0 END)
-                 / CAST(nullif(sum(CASE WHEN x.contaminated THEN 1 ELSE 0
-                                   END), 0) AS DOUBLE), 6) AS recall,
-           round(sum(CASE WHEN x.contaminated AND a.contaminated
-                     THEN 1 ELSE 0 END)
-                 / CAST(nullif(sum(CASE WHEN a.contaminated THEN 1 ELSE 0
-                                   END), 0) AS DOUBLE), 6) AS precision
-    FROM exact_flag x JOIN ivf_verdict a USING (vec_id)
-    """,
-)
-def q_semantic_decontamination_ivf_recall(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Flag-level RECALL/PRECISION of the IVF decontamination route
-    vs the exact kernel at threshold 0.35 (r11, VERDICT r10 #3's
-    done-bar: IVF recall rows alongside the LSH numbers on the same
-    slice). Same constant corpus slice (vec_id < 2000) and the same
-    trained index as production; eval-regime by definition — the
-    production path is semantic_decontamination_ivf alone."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    tr = emb.where((F.col("vec_id") % 97 != 0) & (F.col("vec_id") < 2000))
-    ev = emb.where(F.col("vec_id") % 97 == 0)
-    exact = similarity.semantic_decontamination(
-        tr, ev, threshold=0.35
-    ).select("vec_id", F.col("contaminated").alias("c_e"))
-    ivf = similarity.semantic_decontamination_ivf(
-        tr, ev, _ivf_route_centroids(spark, sf_dir), threshold=0.35, nprobe=2
-    ).select("vec_id", F.col("contaminated").alias("c_a"))
-    j = exact.join(ivf, "vec_id")
-    ce = F.when(F.col("c_e"), 1).otherwise(0)
-    ca = F.when(F.col("c_a"), 1).otherwise(0)
-    both = F.when(F.col("c_e") & F.col("c_a"), 1).otherwise(0)
-    return j.agg(
-        F.count("*").cast("long").alias("n_corpus"),
-        F.sum(ce).cast("long").alias("n_exact"),
-        F.sum(ca).cast("long").alias("n_ivf"),
-        F.sum(both).cast("long").alias("n_common"),
-        F.round(
-            F.sum(both) / F.nullif(F.sum(ce), F.lit(0)).cast("double"), 6
-        ).alias("recall"),
-        F.round(
-            F.sum(both) / F.nullif(F.sum(ca), F.lit(0)).cast("double"), 6
-        ).alias("precision"),
-    )
-
-
-# IVF candidate CTEs for the bitext route: target vectors in their
-# home cell, source vectors probing their 2 best cells, then the
-# candidate margin tail byte-for-byte from the LSH-route oracle.
-# References a `dv` CTE the enclosing query defines (full or sliced).
-_BITEXT_IVF_SQL = f"""tassign AS (
-      SELECT id AS tgt_id, lang AS tgt_lang, v, cell FROM (
-        SELECT t.id, t.lang, t.v, c.cluster AS cell,
-               row_number() OVER (
-                 PARTITION BY t.id
-                 ORDER BY {_sql_cosine('t.v', 'c.c')} DESC, c.cluster
-               ) AS rn
-        FROM (SELECT * FROM dv WHERE lang <> 'en') t CROSS JOIN c2 c
-      ) WHERE rn = 1
-    ),
-    sprobe AS (
-      SELECT id AS src_id, v, cell FROM (
-        SELECT s.id, s.v, c.cluster AS cell,
-               row_number() OVER (
-                 PARTITION BY s.id
-                 ORDER BY {_sql_cosine('s.v', 'c.c')} DESC, c.cluster
-               ) AS rn
-        FROM (SELECT * FROM dv WHERE lang = 'en') s CROSS JOIN c2 c
-      ) WHERE rn <= 2
-    ),
-    icand AS (
-      SELECT p.src_id, t.tgt_id, t.tgt_lang,
-             CAST(round(1e6 * {SQL_DOT.format(a='p.v', b='t.v')}
-               / (sqrt({SQL_DOT.format(a='p.v', b='p.v')})
-                * sqrt({SQL_DOT.format(a='t.v', b='t.v')}))) AS BIGINT) AS ci
-      FROM tassign t JOIN sprobe p ON t.cell = p.cell
-    ),
-    iranked AS (
-      SELECT *,
-             row_number() OVER (PARTITION BY src_id, tgt_lang
-                                ORDER BY ci DESC, tgt_id) AS fr,
-             row_number() OVER (PARTITION BY tgt_id
-                                ORDER BY ci DESC, src_id) AS br
-      FROM icand
-    ),
-    isx AS (SELECT src_id, tgt_lang, sum(ci) AS s_sum
-            FROM iranked WHERE fr <= 4 GROUP BY src_id, tgt_lang),
-    ity AS (SELECT tgt_id, sum(ci) AS t_sum
-            FROM iranked WHERE br <= 4 GROUP BY tgt_id),
-    ivf_pairs AS (
-      SELECT m.src_id, m.tgt_id, m.tgt_lang,
-             m.ci / 1e6 AS cosine,
-             round(8.0 * m.ci / (x.s_sum + y.t_sum), 6) AS margin
-      FROM (SELECT * FROM iranked WHERE fr = 1 AND br = 1) m
-      JOIN isx x ON m.src_id = x.src_id AND m.tgt_lang = x.tgt_lang
-      JOIN ity y ON m.tgt_id = y.tgt_id
-      WHERE round(8.0 * m.ci / (x.s_sum + y.t_sum), 6) >= 1.2
-    )"""
-
-
-SQL_KMEANS_CTES_LOGN = _SQL_KPARAMS + "," + SQL_KMEANS_CTES.replace(
-    "LIMIT 8", "LIMIT (SELECT kk FROM kparams)"
-)
-
-
-@query(
-    "bitext_margin_mining_ivf",
-    f"""
-    WITH {SQL_KMEANS_CTES_LOGN},
-    dv AS (
-      SELECT d.doc_id AS id, d.lang, e2.embedding AS v
-      FROM documents d JOIN embeddings e2 ON d.doc_id = e2.vec_id
-    ),
-    {_BITEXT_IVF_SQL}
-    SELECT src_id, tgt_id, tgt_lang, cosine, margin
-    FROM ivf_pairs ORDER BY src_id, tgt_id
-    """,
-)
-def q_bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRAINED-IVF candidate route for margin bitext mining (r11,
-    VERDICT r10 #3): the Artetxe & Schwenk exact-verify margin tail
-    on candidates from a data-adaptive inverted file (targets in
-    their home cell, sources probing 2 cells) instead of sign-LSH
-    buckets. bitext_ivf_recall measures this generator against the
-    exact kernel on the same slice as bitext_ann_recall. See
-    similarity.margin_bitext_mining_ivf."""
-    emb_n = load_table(spark, sf_dir, "embeddings").count()
-    return similarity.margin_bitext_mining_ivf(
-        _bitext_dv(spark, sf_dir),
-        _ivf_route_centroids(spark, sf_dir, _ivf_cells(emb_n)),
-        "doc_id",
-        "lang",
-        "embedding",
-        src_lang="en",
-        k=4,
-        threshold=1.2,
-        nprobe=2,
-    ).orderBy("src_id", "tgt_id")
-
-
-@query(
-    "bitext_ivf_recall",
-    f"""
-    WITH {SQL_KMEANS_CTES_LOGN},
-    dv0 AS (
-      SELECT d.doc_id AS id, d.lang, e2.embedding AS v
-      FROM documents d JOIN embeddings e2 ON d.doc_id = e2.vec_id
-    ),
-    dv AS (SELECT * FROM dv0 WHERE lang <> 'en' OR id < 2000),
-    {_BITEXT_EXACT_SQL},
-    {_BITEXT_IVF_SQL},
-    langs AS (
-      SELECT DISTINCT lang AS tgt_lang FROM dv WHERE lang <> 'en'
-    ),
-    ep AS (SELECT tgt_lang, src_id, tgt_id FROM exact_pairs),
-    ip AS (SELECT tgt_lang, src_id, tgt_id FROM ivf_pairs),
-    hits AS (
-      SELECT ep.tgt_lang,
-             CAST(count(*) AS BIGINT) AS n_common
-      FROM ep JOIN ip ON ep.tgt_lang = ip.tgt_lang
-          AND ep.src_id = ip.src_id AND ep.tgt_id = ip.tgt_id
-      GROUP BY ep.tgt_lang
-    )
-    SELECT l.tgt_lang,
-           CAST(coalesce(ec.n, 0) AS BIGINT) AS n_exact,
-           CAST(coalesce(ac.n, 0) AS BIGINT) AS n_ivf,
-           CAST(coalesce(h.n_common, 0) AS BIGINT) AS n_common,
-           round(coalesce(h.n_common, 0)
-                 / CAST(nullif(coalesce(ec.n, 0), 0) AS DOUBLE), 6)
-             AS recall,
-           round(coalesce(h.n_common, 0)
-                 / CAST(nullif(coalesce(ac.n, 0), 0) AS DOUBLE), 6)
-             AS precision
-    FROM langs l
-    LEFT JOIN (SELECT tgt_lang, count(*) AS n FROM ep GROUP BY 1) ec
-      ON l.tgt_lang = ec.tgt_lang
-    LEFT JOIN (SELECT tgt_lang, count(*) AS n FROM ip GROUP BY 1) ac
-      ON l.tgt_lang = ac.tgt_lang
-    LEFT JOIN hits h ON l.tgt_lang = h.tgt_lang
-    ORDER BY l.tgt_lang
-    """,
-)
-def q_bitext_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RECALL/PRECISION of the IVF-routed bitext miner vs the exact
-    kernel (r11, VERDICT r10 #3's done-bar): identical slice and
-    methodology to bitext_ann_recall — per target language, pair
-    counts from both miners, overlap, recall = |common|/|exact|,
-    precision = |common|/|ivf| — so the IVF rows sit directly
-    alongside the LSH rows. The index is the same trained k=8
-    centroid table as production."""
-    dv = _bitext_dv(spark, sf_dir).where(
-        (F.col("lang") != "en") | (F.col("doc_id") < 2000)
-    )
-    langs = (
-        dv.where(F.col("lang") != "en")
-        .select(F.col("lang").alias("tgt_lang"))
-        .distinct()
-    )
-    # ONE readout pass over both miners — the bitext_ann_recall
-    # tagged-union fold (r14 optimization round, guide §1.2;
-    # supersedes the r13 localCheckpoints: each kernel is consumed
-    # exactly once now). Counts over identical pair sets — values
-    # unchanged.
-    exact = similarity.margin_bitext_mining(
-        dv, "doc_id", "lang", "embedding", src_lang="en", k=4, threshold=1.2
-    ).select("tgt_lang", "src_id", "tgt_id")
-    emb_n = load_table(spark, sf_dir, "embeddings").count()
-    ivf = similarity.margin_bitext_mining_ivf(
-        dv,
-        _ivf_route_centroids(spark, sf_dir, _ivf_cells(emb_n)),
-        "doc_id",
-        "lang",
-        "embedding",
-        src_lang="en",
-        k=4,
-        threshold=1.2,
-        nprobe=2,
-    ).select("tgt_lang", "src_id", "tgt_id")
-    tagged = exact.withColumn("_e", F.lit(1)).withColumn(
-        "_a", F.lit(0)
-    ).unionByName(
-        ivf.withColumn("_e", F.lit(0)).withColumn("_a", F.lit(1))
-    )
-    per_pair = tagged.groupBy("tgt_lang", "src_id", "tgt_id").agg(
-        F.max("_e").alias("_e"), F.max("_a").alias("_a")
-    )
-    counts = per_pair.groupBy("tgt_lang").agg(
-        F.sum("_e").alias("n_e"),
-        F.sum("_a").alias("n_a"),
-        F.sum(F.col("_e") * F.col("_a")).alias("n_c"),
-    )
-    out = langs.join(counts, "tgt_lang", "left").select(
-        "tgt_lang",
-        F.coalesce("n_e", F.lit(0)).cast("long").alias("n_exact"),
-        F.coalesce("n_a", F.lit(0)).cast("long").alias("n_ivf"),
-        F.coalesce("n_c", F.lit(0)).cast("long").alias("n_common"),
-        F.round(
-            F.coalesce("n_c", F.lit(0))
-            / F.nullif(
-                F.coalesce("n_e", F.lit(0)), F.lit(0)
-            ).cast("double"),
-            6,
-        ).alias("recall"),
-        F.round(
-            F.coalesce("n_c", F.lit(0))
-            / F.nullif(
-                F.coalesce("n_a", F.lit(0)), F.lit(0)
-            ).cast("double"),
-            6,
-        ).alias("precision"),
-    )
-    return out.orderBy("tgt_lang")
 
 
 _DELTA_OPT_FIX: dict = {}

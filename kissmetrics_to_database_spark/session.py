@@ -52,7 +52,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 # Dimension tables small enough to always broadcast at any SF
@@ -171,11 +170,11 @@ def cache_tables(
     (before an ``ORDER BY``). Larger tables are spread round-robin over
     their split count.
 
-    A single-partition cache serializes map-heavy kernels: single-
-    partition ``documents``/``embeddings`` caches at sf0.1 slowed the
-    shingling, HTML segmentation and PassJoin kernels on 32 cores.
-    Those are curation kernels; no registered benchmark workload runs
-    them, and ROADMAP item 7 retires them.
+    A single-partition cache serializes map-heavy kernels: a single-
+    partition ``documents`` cache at sf0.1 slowed the shingling and
+    PassJoin kernels on 32 cores. Those are curation kernels; no
+    registered benchmark workload runs them, and ROADMAP item 8
+    retires them.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     app_id = _session_key(spark)

@@ -3,10 +3,9 @@
 Avro is the row format of the Kafka/Hadoop interchange world (and of
 Iceberg manifests — `functions/avroc.py` exists for those); this
 source makes ``.avro`` DATA files a first-class ingest format beside
-NDJSON/CSV/parquet/ORC/WARC: ``binaryFile`` lists the shards, an
+NDJSON/CSV/parquet/ORC: ``binaryFile`` lists the shards, an
 Arrow-batched ``mapInPandas`` kernel decodes each container on the
-executor that holds it — embarrassingly parallel per file, the WARC
-scan shape. At 100 TB the unit of parallelism is the file (Avro
+executor that holds it — embarrassingly parallel per file. At 100 TB the unit of parallelism is the file (Avro
 containers are block-compressed row streams; a shard layout of many
 ~128 MB files is the norm), and the decode is one linear pass each.
 

@@ -26,6 +26,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kissmetrics_to_database_spark.operators.identity import fsync_path
+
 _NUM_RE = re.compile(r"(\d+)")
 
 
@@ -55,7 +57,9 @@ class Watermark:
 
     advance() only after the downstream write commits — at-least-once,
     matching the reference's advance-after-commit / rollback-on-failure
-    contract."""
+    contract. Each write is fsynced before and after its rename, so
+    after an OS crash the file holds the old value or the new one,
+    never nothing, like the identity map swapped in beside it."""
 
     path: str | Path
 
@@ -70,13 +74,18 @@ class Watermark:
         p.parent.mkdir(parents=True, exist_ok=True)
         tmp = p.with_suffix(".tmp")
         tmp.write_text(json.dumps({"last_file": os.path.basename(filename)}))
+        fsync_path(tmp)
         tmp.replace(p)  # atomic on POSIX
+        fsync_path(p.parent)
 
     def rollback(self, filename: str | None) -> None:
         """Restore the session-start value (reference: rollback to the
         file recorded when the run began on DB failure, KTD:742-745)."""
         if filename is None:
-            Path(self.path).unlink(missing_ok=True)
+            p = Path(self.path)
+            p.unlink(missing_ok=True)
+            if p.parent.exists():
+                fsync_path(p.parent)
         else:
             self.advance(filename)
 

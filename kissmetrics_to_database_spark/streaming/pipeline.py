@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -357,7 +357,7 @@ def _check_epoch_regression(
     spark: SparkSession, table_dir: str, epoch_id: int
 ) -> None:
     """Epoch-regression guard shared by every epoch-versioned state
-    sink (HLL / SCD2 / domain-quota / gram-index).
+    sink (HLL / SCD2 / gram-index).
 
     Raise iff a version with epoch STRICTLY GREATER than this batch's
     exists: a fresh checkpoint dir restarts epoch ids at 0 while a
@@ -727,132 +727,6 @@ def stream_exact_substring_ingest(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.json(source_dir)
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def domain_quota_apply_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    state_dir: str,
-    cap: int,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply one micro-batch to an epoch-versioned per-domain quota
-    ledger (the foreachBatch body of :func:`stream_domain_quota`,
-    module-level so replay is testable): canonicalize the batch's
-    URLs, rank batch documents inside each registered domain by the
-    deterministic md5-of-id hash (the batch `domain_quota_cap`
-    ordering), admit a document iff the domain's accepted count so
-    far (ledger) plus its in-batch rank stays within ``cap``, then
-    write the updated ledger as ``v=<epoch>``.
-
-    IDEMPOTENT under replay by the state contract every durable sink
-    here shares: the prior ledger is the newest version with epoch
-    STRICTLY BELOW this batch, verdicts are a pure function of
-    (batch, prior ledger), the epoch's own version dir is
-    overwritten, and epoch regression raises. First-come-first-served
-    across batches is the semantics a crawler wants: earlier
-    arrivals hold their slots; replays re-derive identical verdicts.
-
-    Ledger size = |domains| rows (web-scale: millions — a skinny
-    table, nowhere near corpus-sized). Returns the verdict frame
-    (id, url_canonical, registered_domain, accepted).
-    """
-    from kissmetrics_to_database_spark.operators import web
-
-    sess = batch_df.sparkSession
-    _check_epoch_regression(sess, state_dir, epoch_id)
-    prior = _latest_state_version(sess, state_dir, below=epoch_id)
-    if prior is None:
-        ledger = sess.createDataFrame(
-            [], "registered_domain string, n_accepted long"
-        )
-    else:
-        ledger = sess.read.parquet(prior)
-
-    canon = web.canonicalize_urls(batch_df, url_col=url_col).select(
-        id_col, "url_canonical", "registered_domain"
-    )
-    w = Window.partitionBy("registered_domain").orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
-    ranked = canon.withColumn("_rk", F.row_number().over(w))
-    verdicts = (
-        ranked.join(ledger, "registered_domain", "left")
-        .withColumn(
-            "accepted",
-            F.coalesce(F.col("n_accepted"), F.lit(0)) + F.col("_rk")
-            <= F.lit(cap),
-        )
-        .select(id_col, "url_canonical", "registered_domain", "accepted")
-    )
-    new_counts = (
-        verdicts.where(F.col("accepted"))
-        .groupBy("registered_domain")
-        .agg(F.count("*").cast("long").alias("_new"))
-    )
-    updated = (
-        ledger.join(new_counts, "registered_domain", "full_outer")
-        .select(
-            "registered_domain",
-            (
-                F.coalesce(F.col("n_accepted"), F.lit(0))
-                + F.coalesce(F.col("_new"), F.lit(0))
-            )
-            .cast("long")
-            .alias("n_accepted"),
-        )
-    )
-    updated.write.mode("overwrite").parquet(
-        f"{state_dir.rstrip('/')}/v={epoch_id}"
-    )
-    _prune_state_versions(sess, state_dir, keep=2)
-    return verdicts
-
-
-def stream_domain_quota(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    schema: T.StructType,
-    state_dir: str,
-    cap: int,
-    sink: Callable[[DataFrame, int], None],
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Streaming per-domain document quotas (r7) — the ingest-time
-    version of the batch `domain_quota_sample` governance gate: a
-    file-source stream of (id, url) observations, each micro-batch
-    admitted first-come-first-served against a durable per-domain
-    ledger so no domain ever exceeds ``cap`` documents ACROSS the
-    whole ingest history, not just within one batch. Composes the
-    URL canonicalizer, the deterministic hash-rank, and the
-    epoch-versioned state contract (prior strictly below, replay
-    rebuilds identical verdicts, regression guard) shared by the
-    HLL/SCD2/gram-index sinks.
-    """
-    stream_reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        stream_reader = stream_reader.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-    stream = stream_reader.json(source_dir)
-
-    def _apply(batch_df: DataFrame, eid: int) -> None:
-        sink(
-            domain_quota_apply_epoch(
-                batch_df, eid, state_dir, cap, url_col, id_col
-            ),
-            eid,
-        )
-
     return (
         stream.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)

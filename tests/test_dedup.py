@@ -53,6 +53,21 @@ def test_jaccard_matches_python(spark):
             assert abs(got[(a, b)] - expected) < 1e-9
 
 
+def test_jaccard_pairs_orients_unoriented_candidates(spark):
+    # a candidate set holding (a, b), (b, a) and (a, a) scores the
+    # same rows as the oriented set: each pair once, no self-pair
+    tok = dedup.distinct_tokens(_docs_df(spark), "doc_id", "text")
+    oriented = spark.createDataFrame([(0, 1), (2, 3), (0, 5)], "id_a long, id_b long")
+    messy = spark.createDataFrame(
+        [(0, 1), (1, 0), (3, 2), (2, 3), (5, 0), (0, 0), (4, 4)],
+        "id_a long, id_b long",
+    )
+    want = sorted(map(tuple, dedup.jaccard_pairs(tok, "doc_id", oriented).collect()))
+    got = sorted(map(tuple, dedup.jaccard_pairs(tok, "doc_id", messy).collect()))
+    assert got == want
+    assert [(a, b) for a, b, _ in want] == [(0, 1), (0, 5), (2, 3)]
+
+
 def test_minhash_lsh_finds_planted_near_dups(spark):
     pairs = {
         (r["id_a"], r["id_b"])

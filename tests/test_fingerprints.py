@@ -43,3 +43,18 @@ def test_live_closure_reaches_modules_two_levels_down():
     assert "dedup" in direct and "identity" not in direct
     cone = fp._transitive_closure(["linkage"], srcs, {})
     assert "dedup" in cone and "identity" in cone
+
+
+def test_edges_come_from_code_not_prose():
+    # docstrings and comments name modules ("the scd.py pattern" in
+    # dedup, the lock and schema_evolution prose in sink) without
+    # using them; a query that reaches linkage only through helpers of
+    # its catalog module still has it in its cone
+    from kissmetrics_to_database_spark.plans import catalog
+
+    srcs = fp._module_source_cache()
+    assert "scd" not in fp._referenced_modules(srcs["dedup"], srcs)
+    assert "lock" not in fp._referenced_modules(srcs["sink"], srcs)
+    fn = catalog.QUERIES["record_linkage_pairs"]
+    direct = fp._query_modules(fn, {}, srcs)
+    assert "linkage" in fp._transitive_closure(direct, srcs, {})

@@ -94,61 +94,3 @@ def test_zordered_single_column_sort_lacks_y_locality(spark, tmp_path):
         for f in sorted(glob.glob(out + "/part-*.parquet"))
     ]
     assert all(s == 63 for s in spans)
-
-
-def _formatted(df):
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def test_ivf_layout_partition_pruning(spark, tmp_path):
-    from kissmetrics_to_database_spark.operators import similarity
-    from kissmetrics_to_database_spark.session import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = emb.where("vec_id < 8").select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    assigned = similarity.ivf_assign(emb, cents)
-    out = str(tmp_path / "ivf")
-    layout.write_ivf_layout(assigned, out)
-
-    # one directory per cell, hive-style
-    dirs = sorted(glob.glob(out + "/cell=*"))
-    cells = sorted(int(d.rsplit("=", 1)[1]) for d in dirs)
-    assert cells == sorted(
-        r["cell"] for r in assigned.select("cell").distinct().collect()
-    )
-
-    pruned = layout.read_ivf_cells(spark, out, [cells[0], cells[1]])
-    expect = assigned.where(F.col("cell").isin([cells[0], cells[1]]))
-    assert sorted(r["vec_id"] for r in pruned.collect()) == sorted(
-        r["vec_id"] for r in expect.collect()
-    )
-
-    # the filter must reach the scan as PartitionFilters — file-level
-    # pruning, not a post-scan filter
-    plan = _formatted(pruned)
-    assert "PartitionFilters: [" in plan
-    assert f"IN ({cells[0]},{cells[1]})" in plan.replace(", ", ",")
-
-
-def test_ivf_layout_one_file_per_cell(spark, tmp_path):
-    from kissmetrics_to_database_spark.operators import similarity
-    from kissmetrics_to_database_spark.session import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = emb.where("vec_id < 8").select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    assigned = similarity.ivf_assign(emb, cents)
-    out = str(tmp_path / "ivf2")
-    layout.write_ivf_layout(assigned, out)
-    for d in glob.glob(out + "/cell=*"):
-        files = [f for f in glob.glob(d + "/*.parquet")]
-        assert len(files) == 1, f"expected 1 file per cell, got {files}"

@@ -1,5 +1,6 @@
 """Every package module is reachable by imports from the entry modules,
-and every import of a package module is used.
+every import of a package module is used, and every table in
+``session.TABLES`` is read by a catalog query.
 
 Static checks (no Spark). The first parses each module, follows every
 ``import`` and ``from ... import`` (those nested inside functions too)
@@ -9,7 +10,8 @@ can call it. The second fails on an import that binds a package
 module to a name the importing scope never reads: such an import is
 an edge the first check counts, so it could keep a dead module
 "reachable". An import kept for its side effect carries
-``# noqa: F401``.
+``# noqa: F401``. The third fails on a table name that no
+``load_table(...)`` call under ``plans/`` passes as a string.
 """
 
 from __future__ import annotations
@@ -134,3 +136,27 @@ def test_every_package_module_import_is_used():
         for line, local in _unused_module_imports(name, path, modules)
     }
     assert sorted(unused) == []
+
+
+def _load_table_names(path: Path) -> set[str]:
+    """String arguments of the ``load_table(...)`` calls in ``path``."""
+    out = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Call) and (
+            getattr(node.func, "id", None) == "load_table"
+            or getattr(node.func, "attr", None) == "load_table"
+        ):
+            out.update(
+                a.value for a in node.args
+                if isinstance(a, ast.Constant) and isinstance(a.value, str)
+            )
+    return out
+
+
+def test_every_session_table_is_read_by_a_query():
+    # a table in session.TABLES is loaded by every oracle run and
+    # cached by every warm bench; one that no query reads is dead
+    from kissmetrics_to_database_spark.session import TABLES
+
+    read = set().union(*map(_load_table_names, (ROOT / "plans").glob("*.py")))
+    assert sorted(set(TABLES) - read) == []

@@ -70,77 +70,6 @@ def test_banded_interval_join_matches_quadratic(spark, rows, gap_us):
     assert got == expected
 
 
-def test_cosine_near_pairs_grid_subblocking_exact(spark):
-    """r8 degenerate-regime fix: with rows_per_block small enough to
-    force B>1 sub-blocks per cell, the (cell, blk(a), blk(b)) grid
-    must still produce every qualifying pair exactly once — same
-    result as B=1 and as brute force."""
-    import random
-
-    from kissmetrics_to_database_spark.operators import similarity
-
-    rng = random.Random(8)
-    data = [
-        (i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(60)
-    ]
-    df = spark.createDataFrame(data, "vec_id long, embedding array<double>")
-    fine = sorted(
-        tuple(r)
-        for r in similarity.cosine_near_pairs(
-            df, 0.2, rows_per_block=7
-        ).collect()
-    )
-    coarse = sorted(
-        tuple(r)
-        for r in similarity.cosine_near_pairs(
-            df, 0.2, rows_per_block=10**6
-        ).collect()
-    )
-    assert fine == coarse and len(fine) > 0
-    assert len(set((a, b) for a, b, _ in fine)) == len(fine)  # no dup pairs
-
-
-@given(
-    st.lists(
-        st.lists(
-            st.integers(min_value=-5, max_value=5), min_size=4, max_size=4
-        ).filter(lambda v: any(v)),  # no zero vectors (undefined cosine)
-        min_size=2,
-        max_size=12,
-    ),
-    st.sampled_from([0.3, 0.5, 0.9, 0.99]),
-)
-@settings(max_examples=5, deadline=None)
-def test_cosine_near_pairs_matches_brute_force(spark, vecs, threshold):
-    """Cell-blocked cosine near-dup pairs == the O(n²) brute force —
-    pins the lossless-blocking recall proof (similarity.py) with
-    randomized vectors and thresholds."""
-    import math
-
-    from kissmetrics_to_database_spark.operators import similarity
-
-    data = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(data, "vec_id long, embedding array<double>")
-    got = {
-        (r["id_a"], r["id_b"]): r["score"]
-        for r in similarity.cosine_near_pairs(df, threshold).collect()
-    }
-    expected = {}
-    for ia, va in data:
-        for ib, vb in data:
-            if ia >= ib:
-                continue
-            dot = sum(x * y for x, y in zip(va, vb))
-            score = round(
-                dot
-                / (math.sqrt(sum(x * x for x in va)) * math.sqrt(sum(x * x for x in vb))),
-                6,
-            )
-            if score >= threshold:
-                expected[(ia, ib)] = score
-    assert got == expected
-
-
 @given(
     st.lists(
         st.tuples(
@@ -340,28 +269,3 @@ def test_exact_substring_invariants(spark, docs_toks):
         assert r["n_kept"] + r["n_removed"] == r["n_tokens"]
         assert r["n_removed"] == span_sum.get(r["doc_id"], 0)
         assert len([t for t in r["text_rewritten"].split() if t]) == r["n_kept"]
-
-
-@given(
-    st.integers(min_value=0, max_value=10**6),
-    st.sampled_from(["http", "https", "ftp"]),
-    st.sampled_from(
-        ["Example.COM", "news.site.co.uk", "localhost", "A.B.C.example.net"]
-    ),
-    st.sampled_from(["", ":80", ":443", ":8080"]),
-    st.sampled_from(["", "/", "/Path/X", "/a/b/c"]),
-    st.sampled_from(
-        ["", "?a=1", "?utm_source=x", "?z=9&a=1&gclid=g", "?b=2&a=1&a=0"]
-    ),
-    st.sampled_from(["", "#frag"]),
-)
-@settings(max_examples=12, deadline=None)
-def test_url_canonicalize_idempotent(spark, n, sch, host, port, path, q, frag):
-    from kissmetrics_to_database_spark.operators import web
-
-    url = f"{sch}://{host}{port}{path}{q}{frag}"
-    df = spark.createDataFrame([(n, url)], ["doc_id", "url"])
-    c1 = web.canonicalize_urls(df).collect()[0]["url_canonical"]
-    df2 = spark.createDataFrame([(n, c1)], ["doc_id", "url"])
-    c2 = web.canonicalize_urls(df2).collect()[0]["url_canonical"]
-    assert c2 == c1  # canonical form is a fixed point

@@ -50,6 +50,28 @@ def test_watermark_roundtrip(tmp_path):
     assert wm.read() is None
 
 
+def test_watermark_write_is_fsynced(tmp_path, monkeypatch):
+    # an advance that reaches disk only by rename can come back empty
+    # or stale after an OS crash; the file and its directory must be
+    # fsynced, the file before the rename and the directory after it
+    synced = []
+    real_fsync = os.fsync
+
+    def spy(fd):
+        synced.append(os.fstat(fd).st_ino)
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", spy)
+    path = tmp_path / "state" / "watermark.json"
+    wm = ndjson.Watermark(path)
+    wm.advance("/data/7.json")
+    wm.rollback("3.json")
+    assert wm.read() == "3.json"
+    assert path.stat().st_ino in synced
+    assert path.parent.stat().st_ino in synced
+    assert len(synced) == 4  # file and directory, per write
+
+
 def test_read_ndjson_incremental(spark, tmp_path):
     import json as _json
 

@@ -964,96 +964,6 @@ def test_stream_exact_substring_ingest_multi_batch_and_replay_guard(
     assert seen2 == []
 
 
-def test_stream_domain_quota_caps_across_batches(spark, tmp_path):
-    # r7: the per-domain ledger must cap ACROSS micro-batches (FCFS —
-    # earlier arrivals hold their slots) and replaying an epoch must
-    # re-derive identical verdicts and state
-    src = tmp_path / "dq_src"
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-        ]
-    )
-    state_dir = str(tmp_path / "dq_state")
-    out: dict[int, list] = {}
-
-    def sink(df, eid):
-        out[eid] = df.orderBy("doc_id").collect()
-
-    # batch 0: 3 docs on example.com, 1 on other.net (cap = 4)
-    (src / "1.json").write_text(
-        "\n".join(
-            json.dumps({"doc_id": i, "url": u})
-            for i, u in [
-                (0, "https://example.com/a"),
-                (1, "https://example.com/b"),
-                (2, "https://example.com/c"),
-                (3, "https://other.net/x"),
-            ]
-        )
-    )
-    q = sp.stream_domain_quota(
-        spark, str(src), str(tmp_path / "dq_ckpt"), schema,
-        state_dir, cap=4, sink=sink, max_files_per_trigger=1,
-    )
-    q.processAllAvailable()
-    assert all(r["accepted"] for r in out[0])  # under cap everywhere
-
-    # batch 1: 3 more example.com docs -> only 1 slot left
-    (src / "2.json").write_text(
-        "\n".join(
-            json.dumps({"doc_id": i, "url": f"https://example.com/p{i}"})
-            for i in (10, 11, 12)
-        )
-    )
-    q.processAllAvailable()
-    q.stop()
-    accepted_b1 = [r for r in out[1] if r["accepted"]]
-    assert len(accepted_b1) == 1  # 3 already held + 1 = cap 4
-    # the ledger holds the capped count
-    ledger = {
-        r["registered_domain"]: r["n_accepted"]
-        for r in spark.read.parquet(
-            sp._latest_state_version(spark, state_dir)
-        ).collect()
-    }
-    assert ledger["example.com"] == 4
-    assert ledger["other.net"] == 1
-
-    # replay epoch 1: identical verdicts, identical ledger
-    batch1 = spark.createDataFrame(
-        [(i, f"https://example.com/p{i}") for i in (10, 11, 12)],
-        schema,
-    )
-    replay = sp.domain_quota_apply_epoch(
-        batch1, 1, state_dir, cap=4
-    ).orderBy("doc_id").collect()
-    assert [
-        (r["doc_id"], r["accepted"]) for r in replay
-    ] == [(r["doc_id"], r["accepted"]) for r in out[1]]
-    ledger2 = {
-        r["registered_domain"]: r["n_accepted"]
-        for r in spark.read.parquet(
-            sp._latest_state_version(spark, state_dir)
-        ).collect()
-    }
-    assert ledger2 == ledger
-
-
-def test_stream_domain_quota_epoch_regression_guard(spark, tmp_path):
-    import pytest
-
-    state_dir = str(tmp_path / "dq_state2")
-    batch = spark.createDataFrame(
-        [(1, "https://a.com/x")], "doc_id long, url string"
-    )
-    sp.domain_quota_apply_epoch(batch, 5, state_dir, cap=10)
-    with pytest.raises(RuntimeError, match="epoch regression"):
-        sp.domain_quota_apply_epoch(batch, 2, state_dir, cap=10)
-
-
 def test_identity_lake_sink_replay_no_duplicate_events(spark, tmp_path):
     """VERDICT r7 #4: the lake-side events append must be exactly-once
     under foreachBatch replay — a re-fired epoch overwrites its own
@@ -1080,35 +990,6 @@ def test_identity_lake_sink_replay_no_duplicate_events(spark, tmp_path):
         ).collect()
     }
     assert comp == {"u1": "a1", "a1": "a1", "u3": "a1"}
-
-
-def test_domain_quota_self_replay_and_regression(spark, tmp_path):
-    """ADVICE r7: a crash-replay of the FIRST micro-batch (its own
-    v=0 fully written, checkpoint not committed) must proceed and
-    rebuild identical verdicts — only a STRICTLY LATER version is a
-    true epoch regression."""
-    import pytest
-
-    state = str(tmp_path / "quota_state")
-    batch = spark.createDataFrame(
-        [(i, f"https://d{i % 3}.example.com/p{i}") for i in range(9)],
-        "doc_id long, url string",
-    )
-    v1 = sorted(
-        tuple(r)
-        for r in sp.domain_quota_apply_epoch(batch, 0, state, cap=2).collect()
-    )
-    # self-replay: v=0 exists with _SUCCESS, no prior below 0 — must
-    # NOT raise, must return the same verdicts
-    v2 = sorted(
-        tuple(r)
-        for r in sp.domain_quota_apply_epoch(batch, 0, state, cap=2).collect()
-    )
-    assert v1 == v2
-    # advance, then a true regression (later epoch exists) raises
-    sp.domain_quota_apply_epoch(batch, 1, state, cap=2).collect()
-    with pytest.raises(RuntimeError, match="epoch regression"):
-        sp.domain_quota_apply_epoch(batch, 0, state, cap=2).collect()
 
 
 def test_stream_lands_in_delta_and_iceberg_exactly_once(spark, tmp_path):

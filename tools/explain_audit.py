@@ -85,14 +85,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["LeftAnti", "GreaterThanOrEqual(o_orderdate,"],
         ["CartesianProduct"],
     ),
-    # cosine near-dup (r9): SERVES from the shared t=0.4 ε-graph
-    # parquet artifact — the plan must be a plain artifact scan with
-    # NO pair recompute (the cogroup kernel shape is audited at build
-    # time as op:cosine_near_pairs_build)
-    "embedding_cosine_near_dups": (
-        ["Scan parquet", "rangepartitioning"],
-        ["CartesianProduct", "SortMergeJoin", "FlatMapCoGroupsInPandas"],
-    ),
     # r8: line dedup — explode (Generate) + line-key count agg +
     # doc rebuild agg; the dup-key join is an equi-join, no cartesian
     "ccnet_line_dedup": (
@@ -109,49 +101,11 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["Generate", "ShuffledHashJoin"],
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
-    # r8: semantic decontamination — eval side broadcasts (NLJ cross
-    # over the tiny eval set), per-vector max is a hash agg; the
-    # corpus never sort-merges
-    "semantic_decontamination": (
-        ["BroadcastNestedLoopJoin", "hashpartitioning(vec_id"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # r8: bitext mining — one hash partition by target language into
-    # the Arrow BLAS kernel (src side replicates via broadcast NLJ);
-    # pairs never enter a shuffle, no corpus-global window
-    "bitext_margin_mining": (
-        ["FlatMapGroupsInPandas", "hashpartitioning(tgt_lang"],
-        ["CartesianProduct", "SinglePartition", "SortMergeJoin"],
-    ),
-    # r8: filtered-ANN recall — both the index answers and the exact
-    # ground truth broadcast into the recall join; no cartesian
-    "filtered_ann_recall": (
-        ["BroadcastHashJoin"],
-        ["CartesianProduct"],
-    ),
     # r8: tombstone propagation — trigger table broadcasts; the only
     # shuffles are the CC loop's and the per-cluster min agg
     "tombstone_cluster_scrub": (
         ["BroadcastHashJoin"],
         ["CartesianProduct"],
-    ),
-    # r8: DBSCAN — ε-graph via the cell-blocked pair join; degree,
-    # core, and border steps are equi-joins/aggregations only
-    "dbscan_clusters": (
-        ["hashpartitioning"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
-    # r8: matryoshka recall — per-d scored scans with broadcast
-    # probes; the recall join broadcasts both top-k sets
-    "matryoshka_recall": (
-        ["BroadcastNestedLoopJoin"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # r8: multi-probe recall — bucket equi-joins with broadcast
-    # probe fan-out; recall joins broadcast
-    "multiprobe_lsh_recall": (
-        ["BroadcastHashJoin"],
-        ["CartesianProduct", "SortMergeJoin"],
     ),
     # r8: simhash precision — pigeonhole block join + candidate-
     # restricted jaccard; no cartesian
@@ -164,16 +118,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "mixture_epochs_plan": (
         ["BroadcastNestedLoopJoin"],
         ["SortMergeJoin", "CartesianProduct"],
-    ),
-    # nearest-centroid: tiny centroid table broadcast to the corpus scan
-    "nearest_centroid_confusion": (
-        ["BroadcastNestedLoopJoin"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # k-NN vote: probes broadcast (NLJ), label/truth joins broadcast-hash
-    "knn_label_vote": (
-        ["BroadcastNestedLoopJoin", "BroadcastHashJoin"],
-        ["CartesianProduct", "SortMergeJoin"],
     ),
     # span dedup: winner-per-span via map-side-combinable min(struct)
     # aggregation on the md5 key (the Window present is the per-doc
@@ -190,33 +134,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "source_quota_cap": (
         ["row_number", "hashpartitioning(source"],
         ["Join", "CartesianProduct"],
-    ),
-    # k-means: centroids collapse to one broadcast row (NLJ) and the
-    # argmin folds in-expression — the vectors are NEVER exchanged
-    # (no hashpartitioning on the vector id); the only shuffles are
-    # the skinny (cluster, pos) centroid means
-    # (r6: training is eager — collect-and-recreate centroids — so
-    # the audited lazy plan is the pure SERVE plan: scan → broadcast
-    # packed centroids → map-only assignment. The training shuffle is
-    # audited separately as op:kmeans_train_update.)
-    "kmeans_clusters": (
-        ["BroadcastNestedLoopJoin"],
-        ["SortMergeJoin", "CartesianProduct", "hashpartitioning(vec_id"],
-    ),
-    # SemDeDup (r7): pairs never shuffle — one cluster-keyed exchange
-    # feeds the tiled-BLAS pairwise kernel; the only join left is the
-    # k-row broadcast centroid assignment
-    "semantic_dedup": (
-        ["FlatMapGroupsInPandas", "hashpartitioning(cluster"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # filtered ANN: the (cell, label) predicate joins the inverted
-    # list to BROADCAST probe-cells as a hash join — the label filter
-    # is part of the join key, never a post-filter; the corpus never
-    # sort-merges against the probe side
-    "filtered_ann_topk": (
-        ["BroadcastHashJoin", "Left keys [2]: [cell", "label"],
-        ["CartesianProduct"],
     ),
     # PageRank: node-keyed equi-joins per iteration + broadcast 1-row
     # node count for the teleport term; never a cartesian
@@ -267,12 +184,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "event_burst_triangles": (
         ["LeftSemi", "TakeOrderedAndProject"],
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
-    # hard negatives: probes broadcast (NLJ with the label-inequality
-    # predicate); corpus never sort-merges
-    "hard_negative_mining": (
-        ["BroadcastNestedLoopJoin"],
-        ["SortMergeJoin", "CartesianProduct"],
     ),
     # decayed features: no window/sort — aggregations + a user-keyed
     # join (AQE broadcasts the skinny side at this scale)
@@ -326,18 +237,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "incremental_ingest_dedup": (
         ["HashAggregate"],
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
-    # ANN recall eval: probe sides broadcast; no cartesian product
-    # (the probe 'cross' is a broadcast of a 12-row sample)
-    "ann_recall_at_k": (
-        ["BroadcastHashJoin"],
-        ["CartesianProduct", "SortMergeJoin"],
-    ),
-    # cluster diagnostics: broadcast assignment + k-row centroid join;
-    # the corpus is never pair-joined
-    "cluster_quality": (
-        ["BroadcastHashJoin", "HashAggregate"],
-        ["CartesianProduct", "SortMergeJoin"],
     ),
     # PMI: bigram/unigram counts combine map-side; totals broadcast as
     # 1-row NLJ; top-50 via TakeOrdered (never a materialized global
@@ -435,17 +334,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
         ["hashpartitioning(doc_id"],
         ["CartesianProduct", "SinglePartition"],
     ),
-    # URL canonicalization: pure codegen'd projection — zero joins,
-    # zero hash shuffles
-    "url_canonicalize": (
-        [],
-        ["Join", "hashpartitioning", "CartesianProduct"],
-    ),
-    # per-domain quota: ONE domain-keyed window, no joins
-    "domain_quota_sample": (
-        ["hashpartitioning(registered_domain"],
-        ["Join", "CartesianProduct", "SinglePartition"],
-    ),
     # winnowing containment: the only join is the frequency-capped fp
     # equi-join (small enough to broadcast at this SF; at scale it is
     # a hash-partitioned equi-join on fp) — never cartesian, never a
@@ -453,13 +341,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "winnow_containment": (
         ["TakeOrderedAndProject"],
         ["SinglePartition", "CartesianProduct"],
-    ),
-    # --- round-7 additions ---
-    # JL projection recall: probes broadcast into the two brute-force
-    # rankings (the declared cross shape) — no unbroadcast cartesian
-    "random_projection_recall": (
-        ["BroadcastNestedLoopJoin"],
-        ["SortMergeJoin", "CartesianProduct"],
     ),
     # --- round-9 additions ---
     # FS record linkage: candidates from blocked EQUI-joins
@@ -520,47 +401,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     "delta_column_mapping": (
         ["hashpartitioning"],
         ["Join", "CartesianProduct"],
-    ),
-    # ANN bitext: candidates from a bucket EQUI-join (the whole point
-    # — the exact kernel's per-language product is gone); windows are
-    # candidate-keyed
-    "bitext_margin_mining_ann": (
-        ["hashpartitioning"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
-    # ANN decontamination, SMALL-eval regime: probe keys under the
-    # size gate broadcast into the bucket equi-join; corpus scanned once
-    "semantic_decontamination_ann": (
-        ["BroadcastHashJoin", "hashpartitioning"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
-    # r11 (VERDICT r10 #4), LARGE-eval regime: over the gate the
-    # probe side is pinned shuffle_hash (size stats on an exploded
-    # side underestimate — the optimizer could still wrongly
-    # broadcast); the bucket join must be a ShuffledHashJoin with NO
-    # broadcast of the probe side anywhere
-    "semantic_decontamination_ann_shuffle": (
-        ["ShuffledHashJoin", "hashpartitioning"],
-        [
-            "BroadcastHashJoin Inner",
-            "CartesianProduct",
-            "BroadcastNestedLoopJoin",
-        ],
-    ),
-    # r11 (VERDICT r10 #3) trained-IVF candidate routes: centroid
-    # assignment is a broadcast-NLJ cross against the 8-row centroid
-    # table (tiny by construction) folded into ONE id-keyed
-    # aggregation (no corpus-scale join-back); the CANDIDATE join is
-    # a cell equi-join — probe keys broadcast under the size gate —
-    # and the corpus never enters a cartesian. SMJ allowed only in
-    # the candidate-keyed verify tail (the ann-route precedent).
-    "semantic_decontamination_ivf": (
-        ["BroadcastHashJoin", "hashpartitioning"],
-        ["CartesianProduct"],
-    ),
-    "bitext_margin_mining_ivf": (
-        ["hashpartitioning"],
-        ["CartesianProduct"],
     ),
     # funnel: the step timestamps are user-keyed windows, no join; the
     # only unpartitioned window is the 4-row readout (allowlisted below)
@@ -702,61 +542,8 @@ def main() -> int:
     # (min(struct) compiles to SortAggregate, not HashAggregate —
     # struct buffers aren't hash-aggregatable — but the partial/final
     # split is what matters for shuffle volume.)
-    # IVF at-rest layout: the nprobe cell filter must reach the
-    # parquet scan as PartitionFilters (FILE-level pruning — query
-    # cost O(nprobe cells), not O(corpus); VERDICT r5 item 3). The
-    # layout is written to a temp dir from the sf testdata first.
-    def _ivf_layout_plan():
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from kissmetrics_to_database_spark.operators import layout, similarity
-        from kissmetrics_to_database_spark.session import load_table
-
-        emb = load_table(spark, args.sf, "embeddings")
-        cents = emb.where("vec_id < 8").select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cent_vec"),
-        )
-        path = tempfile.mkdtemp(prefix="ivf_layout_audit_") + "/ivf"
-        layout.write_ivf_layout(similarity.ivf_assign(emb, cents), path)
-        return layout.read_ivf_cells(spark, path, [0, 1])
-
-    # one Lloyd update step (what each eager training iteration runs):
-    # the only shuffle is the SKINNY (cluster, pos) centroid-mean
-    # aggregation — the corpus vectors are never exchanged
-    def _kmeans_update_plan():
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from kissmetrics_to_database_spark.operators import similarity
-        from kissmetrics_to_database_spark.session import load_table
-
-        emb = load_table(spark, args.sf, "embeddings")
-        wk = Window.orderBy("vec_id")
-        cents = emb.orderBy("vec_id").limit(8).select(
-            (F.row_number().over(wk) - 1).alias("cluster"),
-            F.transform(
-                F.col("embedding"), lambda x: F.round(x.cast("double"), 6)
-            ).alias("_c"),
-        )
-        assigned = similarity.kmeans_assign(emb, cents)
-        return (
-            assigned.select("cluster", F.posexplode("_v").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), 6).alias("m"))
-        )
-
     # r9: the artifact BUILD plans (catalog queries now serve these
     # from parquet — the scale-critical shapes live in the builders)
-    def _cosine_pairs_build_plan():
-        from kissmetrics_to_database_spark.operators import similarity
-        from kissmetrics_to_database_spark.session import load_table
-
-        emb = load_table(spark, args.sf, "embeddings")
-        return similarity.cosine_near_pairs(emb, 0.4)
-
     def _removed_positions_build_plan():
         from kissmetrics_to_database_spark.operators import dedup
         from kissmetrics_to_database_spark.session import load_table
@@ -954,15 +741,6 @@ def main() -> int:
         )
 
     operator_checks = {
-        # cosine ε-graph build: (cell, i, j)-keyed COGROUP feeds the
-        # tiled-BLAS pair kernel — rows shuffle, pairs never do; the
-        # only join is the broadcast of the skinny per-cell counts
-        "op:cosine_near_pairs_build": (
-            _cosine_pairs_build_plan,
-            ["FlatMapCoGroupsInPandas", "hashpartitioning(_cell",
-             "BroadcastHashJoin"],
-            ["CartesianProduct", "SortMergeJoin"],
-        ),
         # exact-substring removed-positions build: gram winner via
         # map-side-combinable min(struct) agg on the gram hash
         # r14: corpus-wide gram winner/count are WINDOW aggregates
@@ -983,16 +761,6 @@ def main() -> int:
             _dedup_fp_plan,
             ["partial_min", "hashpartitioning(md5hash"],
             ["Window", "row_number"],
-        ),
-        "op:kmeans_train_update": (
-            _kmeans_update_plan,
-            ["hashpartitioning(cluster"],
-            ["hashpartitioning(vec_id", "SortMergeJoin", "CartesianProduct"],
-        ),
-        "op:ivf_layout_prune": (
-            _ivf_layout_plan,
-            ["PartitionFilters: [cell#", " IN (0,1)]"],
-            ["CartesianProduct"],
         ),
         # EM sufficient statistic: the DISTRIBUTED half of the
         # linkage trainer — blocked candidate equi-joins feeding one
@@ -1094,51 +862,6 @@ def main() -> int:
             n_fail += 0 if ok else 1
             lines.append(f"| {name} | absent `{m}` | {'ok' if ok else 'FAIL'} |")
             print(("ok   " if ok else "FAIL "), name, ":: NOT", m)
-
-    # r8: cosine pair-grid RUNTIME invariants (a plan-string check
-    # can't see group sizes). At the catalog's degenerate threshold
-    # 0.4 the 1-D cells carry no selectivity (w≈1.10 on a [-1,1]
-    # coordinate → 2-4 cells), so the B×B sub-grid must be doing the
-    # work: the grid must fan the corpus out well past the raw cell
-    # count, and no task's home group may exceed ~2× rows_per_block
-    # (hash-imbalance slack) — i.e. no single worker ever holds the
-    # corpus, whatever the threshold.
-    def _cosine_grid_stats():
-        from pyspark.sql import functions as F
-
-        from kissmetrics_to_database_spark.operators.similarity import (
-            _cosine_pair_grid,
-        )
-        from kissmetrics_to_database_spark.session import load_table
-
-        emb = load_table(spark, args.sf, "embeddings")
-        n = emb.count()
-        L = 64
-        _, home = _cosine_pair_grid(emb, 0.4, "vec_id", "embedding", L)
-        sizes = home.groupBy("_cell", "_i", "_j").count()
-        row = sizes.agg(
-            F.max("count").alias("mx"), F.count("*").alias("tasks")
-        ).collect()[0]
-        n_cells = sizes.select("_cell").distinct().count()
-        return n, L, int(row["mx"]), int(row["tasks"]), n_cells
-
-    n_vec, L, grid_mx, grid_tasks, grid_cells = _cosine_grid_stats()
-    for label, ok in [
-        (
-            f"grid splits cells: tasks {grid_tasks} > cells {grid_cells} "
-            f"and >= ceil(n/L) = {-(-n_vec // L)}",
-            grid_tasks > grid_cells and grid_tasks >= -(-n_vec // L),
-        ),
-        (
-            f"max home rows/task {grid_mx} <= 2*rows_per_block {2 * L}",
-            grid_mx <= 2 * L,
-        ),
-    ]:
-        n_fail += 0 if ok else 1
-        lines.append(
-            f"| op:cosine_pair_grid | {label} | {'ok' if ok else 'FAIL'} |"
-        )
-        print(("ok   " if ok else "FAIL "), "op:cosine_pair_grid ::", label)
 
     for name, (must, must_not) in CHECKS.items():
         plan = formatted_plan(catalog.QUERIES[name](spark, args.sf))

@@ -6,7 +6,7 @@ curve needs one decade more. This builds an sf1.0-SHAPED dataset by
 replicating sf0.1 ten times with consistent key strides:
 
 - every entity key (custkey, orderkey, partkey, suppkey, event_id,
-  user_id, doc_id, vec_id) shifts by copy * (max_key + 1), and every
+  user_id, doc_id) shifts by copy * (max_key + 1), and every
   FOREIGN key shifts by the same stride, so join fan-outs and per-key
   densities are IDENTICAL to sf0.1 — only cardinalities grow 10x
   (rows AND distinct keys, the way a real corpus grows);
@@ -16,8 +16,6 @@ replicating sf0.1 ten times with consistent key strides:
   are NEAR-duplicates (a realistic ~10-member near-dup cluster
   density for a web corpus) rather than exact duplicates that would
   trivialize exact dedup; n_chars is recomputed;
-- embeddings replicate unperturbed (ANN result sets gain exact ties,
-  which is irrelevant for the runtime curve);
 - timestamps replicate unchanged: volume growth shows up as 10x
   density per time window, not a longer history.
 
@@ -53,7 +51,6 @@ STRIDED = {
     },
     "events": {"event_id": "event_id", "user_id": "user_id"},
     "documents": {"doc_id": "doc_id"},
-    "embeddings": {"vec_id": "vec_id"},
 }
 
 # entity -> (table, key column) to measure the stride from
@@ -65,7 +62,6 @@ ENTITY_SOURCE = {
     "event_id": ("events", "event_id"),
     "user_id": ("events", "user_id"),
     "doc_id": ("documents", "doc_id"),
-    "vec_id": ("embeddings", "vec_id"),
 }
 
 

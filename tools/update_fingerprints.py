@@ -8,10 +8,12 @@ rot; this tool mechanizes the policy (VERDICT r3 item 8):
 fingerprint(query) = md5 of
   - the query function's own source text,
   - its oracle SQL (or the literal "<no-oracle>"),
-  - the full source of every operator/source module whose name the
-    function body references (scanned against a fixed module list —
-    an operator edit therefore changes the fingerprint of exactly the
-    queries that call into it).
+  - the full source of every operator/source module the function's
+    code imports or uses, directly or through the module-level helpers
+    of its catalog module, and of their own imports in turn (the
+    syntax-tree cone of `plans/fingerprints.py` — an operator edit
+    therefore changes the fingerprint of exactly the queries that call
+    into it).
 
 Run at the START of a round, BEFORE making changes, so the committed
 snapshot (`tools/query_fingerprints.json`) captures the state the
